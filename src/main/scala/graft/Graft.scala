@@ -33,11 +33,12 @@ object Graft {
     // feed aggregates or totally-ordered outputs). Lived only in the
     // bench session in r17; moved HERE in r18 so the measured
     // configuration is the verified one and library consumers get the
-    // same plans (the r17 verdict's ask). Unconditional: getOption
-    // cannot distinguish "unset" from the registered default, and a
-    // consumer who needs it false can set it after init.
-    spark.conf.set(
-      "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
+    // same plans (the r17 verdict's ask). Set only when the consumer
+    // has not set it: an explicit value, `false` included, is theirs.
+    val cachedPlanConf =
+      "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning"
+    if (!spark.sessionState.conf.contains(cachedPlanConf))
+      spark.conf.set(cachedPlanConf, "true")
     // opt-in ANN routing (spark.graft.ann.autoRoute): same injection the
     // extensions path does, for sessions created without extensions
     val em = spark.sessionState.experimentalMethods

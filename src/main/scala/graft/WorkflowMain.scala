@@ -1,5 +1,9 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+
+import com.fasterxml.jackson.core.JacksonException
+import com.fasterxml.jackson.databind.{DeserializationFeature, ObjectMapper}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
@@ -31,25 +35,55 @@ object WorkflowMain {
 
   /** Execute a workflow request; returns the response JSON line. */
   def run(spark: SparkSession, reqPath: String, indexPath: String,
-      k: Int = 10): String =
-    runReq(spark,
-      spark.read.option("multiLine", "true").json(reqPath).head(),
-      indexPath, k)
+      k: Int = 10): String = {
+    val p = new org.apache.hadoop.fs.Path(reqPath)
+    val in = p.getFileSystem(spark.sparkContext.hadoopConfiguration).open(p)
+    val body = try new String(in.readAllBytes(), "UTF-8") finally in.close()
+    runJson(spark, body, indexPath, k)
+  }
 
   /** The same contract over an in-memory request body — the form
     * [[WorkflowServer]] serves per POST. */
   def runJson(spark: SparkSession, body: String, indexPath: String,
-      k: Int = 10): String = {
-    import spark.implicits._
-    runReq(spark, spark.read.json(spark.createDataset(Seq(body))).head(),
-      indexPath, k)
+      k: Int = 10): String =
+    runReq(spark, parse(body), indexPath, k)
+
+  /** A workflow request: `{"name": …, "elements": [...], "alpha": …?}`. */
+  private final case class Request(
+      name: String, elements: Seq[String], alpha: Option[Double])
+
+  private val json = new ObjectMapper()
+    .enable(DeserializationFeature.FAIL_ON_TRAILING_TOKENS)
+
+  /** Parse a request body on the driver (Jackson, which Spark already
+    * ships; a Spark JSON read costs two jobs per request). A body that
+    * is not one JSON object, or lacks a string `name` or an array of
+    * string `elements`, is an IllegalArgumentException: the server's
+    * 400. */
+  private def parse(body: String): Request = {
+    val root = try json.readTree(body) catch {
+      case e: JacksonException => throw new IllegalArgumentException(
+        s"malformed workflow request: ${e.getOriginalMessage}")
+    }
+    if (root == null || !root.isObject)
+      throw new IllegalArgumentException(
+        "workflow request must be a JSON object")
+    val name = Option(root.get("name")).filter(_.isTextual)
+      .getOrElse(throw new IllegalArgumentException(
+        "workflow request needs a string 'name'"))
+    val elements = Option(root.get("elements"))
+      .filter(e => e.isArray && e.elements().asScala.forall(_.isTextual))
+      .getOrElse(throw new IllegalArgumentException(
+        "workflow request needs 'elements', an array of strings"))
+    Request(name.asText, elements.elements().asScala.map(_.asText).toSeq,
+      Option(root.get("alpha")).filter(_.isNumber).map(_.asDouble))
   }
 
   private def runReq(spark: SparkSession,
-      req: org.apache.spark.sql.Row, indexPath: String, k: Int): String = {
+      req: Request, indexPath: String, k: Int): String = {
     Graft.init(spark)
-    val name = req.getAs[String]("name")
-    val elements = req.getSeq[String](req.fieldIndex("elements"))
+    val name = req.name
+    val elements = req.elements
     def esc(s: String) = s.replace("\\", "\\\\").replace("\"", "\\\"")
     name match {
       case "index" =>
@@ -83,7 +117,7 @@ object WorkflowMain {
               org.apache.spark.sql.types.BinaryType)
             data.withColumn("vector", Graft.unpackVector(col("vector")))
           else data
-        val alpha = scala.util.Try(req.getAs[Double]("alpha")).getOrElse(0.5)
+        val alpha = req.alpha.getOrElse(0.5)
         // the whole element list is served by ONE batch plan (shared
         // postings pass, per-qid bounds + heap top-k) instead of one
         // job per element; rankings are bit-identical per element

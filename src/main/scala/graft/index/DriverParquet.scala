@@ -1,10 +1,13 @@
 package graft.index
 
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.parquet.example.data.Group
-import org.apache.parquet.hadoop.ParquetReader
+import org.apache.parquet.format.converter.ParquetMetadataConverter
+import org.apache.parquet.hadoop.{Footer, ParquetReader}
 import org.apache.parquet.hadoop.example.GroupReadSupport
-import org.apache.spark.sql.SparkSession
+import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.spark.sql.{DataFrameReader, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetFooterReader, ParquetToSparkSchemaConverter}
 
 /** Driver-side reads of BOUNDED index metadata (single-row `_stats`
   * sidecars, k-row codebooks): every index load used to pay a full
@@ -29,12 +32,7 @@ object DriverParquet {
     val p = new Path(dir)
     val conf = spark.sparkContext.hadoopConfiguration
     val fs = p.getFileSystem(conf)
-    val files = fs.listStatus(p).map(_.getPath)
-      .filter { f =>
-        val n = f.getName
-        n.endsWith(".parquet") && !n.startsWith("_") && !n.startsWith(".")
-      }
-      .sortBy(_.getName)
+    val files = dataFiles(fs.listStatus(p))
     files.iterator.flatMap { f =>
       val reader = ParquetReader
         .builder(new GroupReadSupport(), f)
@@ -44,6 +42,32 @@ object DriverParquet {
       finally reader.close()
     }.toVector
   }
+
+  /** The parquet data files of a directory listing, by name. */
+  def dataFiles(listing: Array[FileStatus]): Seq[Path] =
+    listing.toSeq.map(_.getPath)
+      .filter { f =>
+        val n = f.getName
+        n.endsWith(".parquet") && !n.startsWith("_") && !n.startsWith(".")
+      }
+      .sortBy(_.getName)
+
+  /** A parquet reader whose schema is read on the driver from
+    * `sample`'s footer, with Spark's own footer conversion — the schema
+    * a plain read infers from one file (`mergeSchema` off), without the
+    * Spark job that inference runs. Partition columns are still
+    * discovered from the paths. Without a sample file it is a plain
+    * reader. */
+  def reader(spark: SparkSession, sample: Option[Path]): DataFrameReader =
+    sample.fold(spark.read) { f =>
+      val conf = spark.sparkContext.hadoopConfiguration
+      val footer = ParquetFooterReader.readFooter(
+        HadoopInputFile.fromPath(f, conf),
+        ParquetMetadataConverter.SKIP_ROW_GROUPS)
+      spark.read.schema(ParquetFileFormat.readSchemaFromFooter(
+        new Footer(f, footer),
+        new ParquetToSparkSchemaConverter(spark.sessionState.conf)))
+    }
 
   /** A float-array column (Spark's 3-level LIST encoding:
     * `optional group f (LIST) { repeated group list

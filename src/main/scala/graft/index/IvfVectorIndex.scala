@@ -42,8 +42,9 @@ class IvfVectorIndex private (
     val model: Ivf.Model,
     val pqModel: Option[Pq.Model]) {
 
-  /** The CURRENT committed snapshot, resolved now: file listing and
-    * schema come from the newest manifest, and the returned plan
+  /** The CURRENT committed snapshot: file listing and schema come from
+    * the newest manifest (resolved once per snapshot and reused,
+    * [[Manifests.dataFrame]]), and the returned plan
     * stays valid through [[Manifests.DefaultRetain]]−1 subsequent
     * maintenance commits (snapshot isolation for concurrent
     * readers). */
@@ -530,9 +531,7 @@ object IvfVectorIndex {
       maxRecordsPerFile: Long = 5000000L): IvfVectorIndex = {
     val spark = docs.sparkSession
     // a build REPLACES the path (the pre-manifest overwrite semantics)
-    val root = new org.apache.hadoop.fs.Path(path)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(root)) fs.delete(root, true)
+    Manifests.reset(spark, path)
     val assigned = Ivf.assign(docs, vecCol, model)
       .withColumnRenamed(vecCol, "vector")
       .withColumnRenamed(idCol, "docid")
@@ -596,6 +595,17 @@ object IvfVectorIndex {
     }
   }
 
+  /** The centroids stored in a codebook directory, in cluster order.
+    * k-row codebooks are read on the driver (no Spark job per load —
+    * two jobs plus their scheduling gaps per IVF construction before,
+    * r17 optimization round). */
+  private[graft] def readCentroids(
+      spark: SparkSession, dir: String): Array[Array[Float]] =
+    DriverParquet.groups(spark, dir)
+      .sortBy(_.getInteger("cluster", 0))
+      .map(g => DriverParquet.floatArray(g, "centroid"))
+      .toArray
+
   /** Open an index, recovering the persisted codebook(s) of the
     * current snapshot; rolls an interrupted shard merge forward
     * first ([[Manifests.completeMerge]]) so a crashed merge window
@@ -610,13 +620,7 @@ object IvfVectorIndex {
     val cdir = s"$path/_books/$book/centroids"
     if (!fs.exists(new org.apache.hadoop.fs.Path(cdir)))
       throw new IndexNotFoundException(s"No IVF codebook at $cdir")
-    // k-row codebooks: driver-direct reads (no Spark job per load —
-    // two jobs plus their scheduling gaps per IVF construction before,
-    // r17 optimization round). Same sort keys as the former orderBy.
-    val rows = DriverParquet.groups(spark, cdir)
-      .sortBy(_.getInteger("cluster", 0))
-    val centroids = rows.map(g => DriverParquet.floatArray(g, "centroid"))
-      .toArray
+    val centroids = readCentroids(spark, cdir)
     val pqDir = s"$path/_books/$book/pq"
     val pq =
       if (!fs.exists(new org.apache.hadoop.fs.Path(pqDir))) None

@@ -30,7 +30,7 @@ class LshVectorIndex private (
     val lsh: HyperplaneLsh) {
 
   /** The CURRENT committed snapshot ([[IvfVectorIndex.df]]'s
-    * contract: resolved now, pinned through
+    * contract: resolved once per snapshot, pinned through
     * [[Manifests.DefaultRetain]]−1 further maintenance commits). */
   def df: DataFrame =
     Manifests.dataFrame(spark, path, Manifests.require(spark, path))
@@ -191,9 +191,7 @@ object LshVectorIndex {
       lsh: HyperplaneLsh,
       maxRecordsPerFile: Long = 5000000L): LshVectorIndex = {
     val spark = docs.sparkSession
-    val root = new org.apache.hadoop.fs.Path(path)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(root)) fs.delete(root, true)
+    Manifests.reset(spark, path)
     val gen = Manifests.genDirName(1L)
     AnnLsh.bucketize(docs, vecCol, lsh)
       .withColumnRenamed(vecCol, "vector")
@@ -215,7 +213,9 @@ object LshVectorIndex {
     if (!idr.isNullAt(0))
       graft.operators.IndexMerge.resetRange(
         spark, path, idr.getLong(0), idr.getLong(1))
-    val out = fs.create(metaPath(path), true)
+    val meta = metaPath(path)
+    val out = meta.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      .create(meta, true)
     out.write(
       s"""{"dim":${lsh.dim},"nbits":${lsh.nbits},"seed":${lsh.seed}}"""
         .getBytes("UTF-8"))

@@ -158,8 +158,19 @@ object Manifests {
     scala.Predef.require(fs.rename(tmp, new Path(dir, manifestName(n))),
       s"manifest commit lost a race at $path (single-writer contract " +
       "violated?)")
+    Snapshots.invalidate(path)
     reap(spark, path, retain)
     m
+  }
+
+  /** Delete the index root so a rebuild over an existing path replaces
+    * the index whole (its manifest store restarts at generation 1),
+    * and forget the path's resolved snapshot. */
+  def reset(spark: SparkSession, path: String): Unit = {
+    val root = new Path(path)
+    val fs = fsOf(spark, path)
+    if (fs.exists(root)) fs.delete(root, true)
+    Snapshots.invalidate(path)
   }
 
   /** Expire old manifests and the storage only they reference. Skipped
@@ -227,11 +238,32 @@ object Manifests {
     * SUBSET of older generations (the untouched clusters) — those
     * partial gens contribute a partition-column whitelist predicate
     * that Catalyst prunes with at planning time, so the replaced
-    * partitions' files are listed but never read. */
+    * partitions' files are listed but never read.
+    *
+    * The resolved DataFrame is reused ([[Snapshots]]): a later call for
+    * the same session and path returns it as long as the committed
+    * manifest and the manifest file's length and mtime are unchanged,
+    * which, generations being write-once, means the same files. A
+    * [[commit]] or a rebuild's [[reset]] drops the path's entry; a
+    * commit made elsewhere changes the key. Only a manifest whose file
+    * is already gone (expired) is resolved without reuse. */
   def dataFrame(
       spark: SparkSession, path: String, m: Manifest): DataFrame = {
     scala.Predef.require(m.parts.nonEmpty,
       s"index manifest ${m.n} at $path lists no data")
+    val file = new Path(new Path(path, Dir), manifestName(m.n))
+    val fs = fsOf(spark, path)
+    if (!fs.exists(file)) resolveDataFrame(spark, path, m)
+    else {
+      val st = fs.getFileStatus(file)
+      Snapshots.resolve(spark, path,
+        (m, st.getLen, st.getModificationTime))(
+        resolveDataFrame(spark, path, m))
+    }
+  }
+
+  private def resolveDataFrame(
+      spark: SparkSession, path: String, m: Manifest): DataFrame = {
     import org.apache.spark.sql.functions.{col, lit}
     val head = m.parts.head
     val sub = head.substring(head.indexOf('/') + 1)
@@ -247,7 +279,13 @@ object Manifests {
       case (g, ps) =>
         (g, ps, listParts(spark, path, g).toSet == ps.toSet)
     }
-    val base = spark.read.option("basePath", path)
+    // the schema comes from one footer in the first generation, as a
+    // plain read would infer it from one file
+    val first = new Path(path, listed.head._2.min)
+    val base = DriverParquet
+      .reader(spark, DriverParquet.dataFiles(
+        fsOf(spark, path).listStatus(first)).headOption)
+      .option("basePath", path)
       .parquet(listed.map { case (g, _, _) => s"$path/$g" }: _*)
     val pruned =
       if (listed.forall(_._3)) base

@@ -1,6 +1,8 @@
 package graft.index
 
-import org.apache.hadoop.fs.{FileSystem, Path}
+import java.io.FileNotFoundException
+
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.internal.Logging
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -139,8 +141,8 @@ class VectorIndex private (
     * pointer file to half-write or truncate, so readers can never
     * observe a torn commit (they see either N or N+1, nothing else). */
   def currentVersion: Option[Long] =
-    if (!fs.exists(new Path(path))) None
-    else fs.listStatus(new Path(path)).toSeq
+    (try fs.listStatus(new Path(path)).toSeq
+    catch { case _: FileNotFoundException => Nil })
       .map(_.getPath.getName)
       .collect { case CommitMarker(v) => v.toLong }
       .maxOption
@@ -171,41 +173,65 @@ class VectorIndex private (
     out.write(json.getBytes("UTF-8")); out.close()
   }
 
-  def exists: Boolean = fs.exists(dataPath)
+  /** The current version's data directory and its file listing (one
+    * listing of the root, one of the directory), or None when the index
+    * has no data. */
+  private def listing: Option[(Path, Array[FileStatus])] = {
+    val dir = versionPath(currentVersion.getOrElse(0L))
+    try Some((dir, fs.listStatus(dir)))
+    catch { case _: FileNotFoundException => None }
+  }
 
-  private def requireExists(op: String): Unit =
-    if (!exists) throw new IndexNotFoundException(
-      s"Index '${config.className}' at $path does not exist (op: $op)")
+  def exists: Boolean = listing.isDefined
 
-  /** The index contents as a DataFrame. */
-  def df: DataFrame = { requireExists("read"); spark.read.parquet(dataPath.toString) }
+  /** The current version as a DataFrame, or None when there is none. */
+  private def current: Option[DataFrame] = listing.map { case (dir, files) =>
+    val key = (dir.getName, files.toVector
+      .map(st => (st.getPath.getName, st.getLen, st.getModificationTime))
+      .sorted)
+    Snapshots.resolve(spark, path, key)(
+      DriverParquet.reader(spark, DriverParquet.dataFiles(files).headOption)
+        .parquet(dir.toString))
+  }
+
+  private def snapshot(op: String): DataFrame =
+    current.getOrElse(throw new IndexNotFoundException(
+      s"Index '${config.className}' at $path does not exist (op: $op)"))
+
+  /** The index contents as a DataFrame. The current version is resolved
+    * once and the DataFrame reused ([[Snapshots]]) while the version
+    * directory's listing (file names, lengths and mtimes) is unchanged:
+    * a destructive op commits a new `data_vN` directory and an append
+    * adds files to the live one, so either one changes the key and the
+    * next call resolves afresh. A DataFrame taken earlier keeps the file
+    * list it was resolved with. */
+  def df: DataFrame = snapshot("read")
 
   /** Next docid = dense count so far (reference `config["offset"]`,
     * weaviate.py:67,149; observable postcondition test_weaviate.py:141). */
-  def offset: Long =
-    if (!exists) 0L
-    else df.agg(coalesce(max("docid") + 1, lit(0L))).head().getLong(0)
+  def offset: Long = current.fold(0L)(offsetOf)
 
-  def count(): Long = { requireExists("count"); df.count() }
+  private def offsetOf(data: DataFrame): Long =
+    data.agg(coalesce(max("docid") + 1, lit(0L))).head().getLong(0)
+
+  def count(): Long = snapshot("count").count()
 
   /** Full rebuild: docids start at 0 (weaviate.py:132-133). Input:
     * (uid, vector, …props) — docid is engine-assigned, dense by uid. */
-  def index(docs: DataFrame): VectorIndex = writeRows(docs, 0L, overwrite = true)
+  def index(docs: DataFrame): VectorIndex =
+    writeRows(docs, 0L, config.packed, overwrite = true)
 
   /** Append: docids continue from the current offset (weaviate.py:135-149). */
   def append(docs: DataFrame): VectorIndex = {
-    requireExists("append")
-    writeRows(docs, offset, overwrite = false)
+    val data = snapshot("append")
+    writeRows(docs, offsetOf(data), isPacked(data), overwrite = false)
   }
 
-  /** The layout incoming vectors must land in: the STORED column type
-    * when the index already has data (so an index opened with a
-    * mismatched config can't mix layouts in one directory), else the
-    * configured preference. */
-  private def packedTarget(forOverwrite: Boolean): Boolean =
-    if (!forOverwrite && exists)
-      df.schema("vector").dataType == org.apache.spark.sql.types.BinaryType
-    else config.packed
+  /** Whether the STORED vectors are packed: incoming vectors land in the
+    * stored layout, so an index opened with a mismatched config can't
+    * mix layouts in one directory. */
+  private def isPacked(data: DataFrame): Boolean =
+    data.schema("vector").dataType == BinaryType
 
   /** Conform `docs`' vector column to the target layout. */
   private def conformLayout(docs: DataFrame, packed: Boolean): DataFrame =
@@ -226,8 +252,9 @@ class VectorIndex private (
   private def idOrder(docs: DataFrame) =
     col("uid") +: docs.columns.filter(_ != "uid").sorted.toIndexedSeq.map(col)
 
-  private def writeRows(docs: DataFrame, base: Long, overwrite: Boolean): VectorIndex = {
-    val packedDocs = conformLayout(docs, packedTarget(overwrite))
+  private def writeRows(docs: DataFrame, base: Long, packed: Boolean,
+      overwrite: Boolean): VectorIndex = {
+    val packedDocs = conformLayout(docs, packed)
     val withId = Ids.withDenseId(
       packedDocs, "docid", idOrder(packedDocs), offset = base)
     val cols = col("docid") +: packedDocs.columns.toIndexedSeq.map(col)
@@ -246,18 +273,18 @@ class VectorIndex private (
     * set-oriented fix for the reference's N+1 loop (weaviate.py:167-173,
     * TODO at :170-171 wishing for an `IN` operator). */
   def delete(ids: Seq[Long]): VectorIndex = {
-    requireExists("delete")
+    val data = snapshot("delete")
     import spark.implicits._
     val idsDf = ids.toDF("docid")
-    replaceData(df.join(broadcast(idsDf), Seq("docid"), "left_anti"))
+    replaceData(data.join(broadcast(idsDf), Seq("docid"), "left_anti"))
     this
   }
 
   /** Delete by uid (the id space txtai exposes to users). */
   def deleteUids(uids: Seq[String]): VectorIndex = {
-    requireExists("delete")
+    val data = snapshot("delete")
     import spark.implicits._
-    replaceData(df.join(broadcast(uids.toDF("uid")), Seq("uid"), "left_anti"))
+    replaceData(data.join(broadcast(uids.toDF("uid")), Seq("uid"), "left_anti"))
     this
   }
 
@@ -266,12 +293,12 @@ class VectorIndex private (
     * deleting the uid removes it entirely). New rows get fresh docids
     * continuing from the current offset. */
   def upsert(docs: DataFrame): VectorIndex = {
-    requireExists("upsert")
-    val base = offset
-    val conformed = conformLayout(docs, packedTarget(forOverwrite = false))
-    val incoming = Ids.withDenseId(conformed, "docid", idOrder(conformed), offset = base)
+    val data = snapshot("upsert")
+    val conformed = conformLayout(docs, isPacked(data))
+    val incoming = Ids.withDenseId(conformed, "docid", idOrder(conformed),
+        offset = offsetOf(data))
       .select((col("docid") +: conformed.columns.toIndexedSeq.map(col)): _*)
-    val unioned = df.unionByName(incoming, allowMissingColumns = true)
+    val unioned = data.unionByName(incoming, allowMissingColumns = true)
     val w = Window.partitionBy("uid").orderBy(desc("docid"))
     replaceData(
       unioned.withColumn("__rn", row_number().over(w))
@@ -284,9 +311,8 @@ class VectorIndex private (
     * stored layout: packed-binary indexes score via the packed kernel
     * (same math, no array assembly). */
   def search(queryVec: Array[Float], k: Int): DataFrame = {
-    requireExists("search")
-    val data = df
-    if (data.schema("vector").dataType == org.apache.spark.sql.types.BinaryType) {
+    val data = snapshot("search")
+    if (isPacked(data)) {
       data
         .withColumn("score",
           graft.Graft.cosineSimPacked(col("vector"),
@@ -298,10 +324,8 @@ class VectorIndex private (
 
   /** Batch search — fixes the reference's queries[0]-only limitation
     * (weaviate.py:177). */
-  def searchBatch(queries: DataFrame, qVecCol: String, qidCol: String, k: Int): DataFrame = {
-    requireExists("search")
-    Knn.searchBatch(df, "vector", "docid", queries, qVecCol, qidCol, k)
-  }
+  def searchBatch(queries: DataFrame, qVecCol: String, qidCol: String, k: Int): DataFrame =
+    Knn.searchBatch(snapshot("search"), "vector", "docid", queries, qVecCol, qidCol, k)
 
   /** Drop-in compat shape of the reference's `search(queries, limit)`
     * (weaviate.py:175-201): takes a list of query vectors but serves
@@ -310,7 +334,6 @@ class VectorIndex private (
     * Native callers should use [[search]]/[[searchBatch]]. */
   def searchCompat(
       queries: Seq[Array[Float]], limit: Int): Seq[Seq[(Long, Double)]] = {
-    requireExists("search")
     val hits = search(queries.head, limit)
       .select("docid", "score")
       .collect()
@@ -322,21 +345,17 @@ class VectorIndex private (
   /** Real persistence (the reference warns and does nothing,
     * weaviate.py:208-224): copy the current version to another path as
     * a fresh v0 index (pointer + config metadata included). */
-  def save(dest: String): Unit = {
-    requireExists("save")
-    val destIdx = new VectorIndex(spark, dest, config)
-    destIdx.replaceData(df)
-  }
+  def save(dest: String): Unit =
+    new VectorIndex(spark, dest, config).replaceData(snapshot("save"))
 
   /** Compact the index's data files: every `append` adds a file set,
     * and at scale the accumulated small files dominate scan planning
     * (the classic small-files problem). One rewrite into
     * `ceil(count / rowsPerFile)` evenly-sized files; contents unchanged. */
   def compact(rowsPerFile: Long = 5000000L): VectorIndex = {
-    requireExists("compact")
-    val n = count()
-    val files = math.max(1, math.ceil(n.toDouble / rowsPerFile).toInt)
-    replaceData(df.repartition(files))
+    val data = snapshot("compact")
+    val files = math.max(1, math.ceil(data.count().toDouble / rowsPerFile).toInt)
+    replaceData(data.repartition(files))
     this
   }
 
@@ -376,7 +395,10 @@ class VectorIndex private (
     }
   }
 
-  def drop(): Unit = if (exists) fs.delete(new Path(path), true)
+  def drop(): Unit = {
+    if (exists) fs.delete(new Path(path), true)
+    Snapshots.invalidate(path)
+  }
 }
 
 object VectorIndex extends Logging {

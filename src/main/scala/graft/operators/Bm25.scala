@@ -1306,9 +1306,7 @@ object Bm25Index {
     // a rebuild over an existing path replaces the index whole
     // (pre-r17 behavior via mode=overwrite; now an explicit reset so
     // the manifest store restarts at generation 1)
-    val root = new org.apache.hadoop.fs.Path(path)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(root)) fs.delete(root, true)
+    graft.index.Manifests.reset(spark, path)
     val gen = graft.index.Manifests.genDirName(1L)
     Bm25.postings(docs, textCol, idCol)
       .withColumn("bucket", pmod(hash(col("term")), lit(nb)))

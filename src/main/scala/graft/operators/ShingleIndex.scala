@@ -549,9 +549,7 @@ object ShingleIndex {
       else nBuckets
     // a rebuild over an existing path replaces the index whole (r17:
     // explicit reset so the manifest store restarts at generation 1)
-    val root = new org.apache.hadoop.fs.Path(path)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(root)) fs.delete(root, true)
+    graft.index.Manifests.reset(spark, path)
     val gen = graft.index.Manifests.genDirName(1L)
     val idx = new ShingleIndex(spark, path, 0L, ngram, nb, hashKeys)
     idx.keyed(docs, idCol, textCol)

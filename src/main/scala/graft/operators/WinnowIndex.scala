@@ -316,9 +316,7 @@ object WinnowIndex {
     else nBuckets
     // a rebuild over an existing path replaces the index whole (r17:
     // explicit reset so the manifest store restarts at generation 1)
-    val root = new org.apache.hadoop.fs.Path(path)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(root)) fs.delete(root, true)
+    graft.index.Manifests.reset(spark, path)
     val gen = graft.index.Manifests.genDirName(1L)
     val idx = new WinnowIndex(spark, path, 0L, k, w, dfCap, nb)
     idx.fps(docs, idCol, textCol)

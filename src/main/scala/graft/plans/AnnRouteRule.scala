@@ -1,7 +1,7 @@
 package graft.plans
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.expressions.{Alias, Attribute, Descending, Expression, In, Literal, SortOrder}
+import org.apache.spark.sql.catalyst.expressions.{Alias, Attribute, Descending, Expression, In, InSet, Literal, PredicateHelper, SortOrder}
 import org.apache.spark.sql.catalyst.plans.logical.{Filter, GlobalLimit, LocalLimit, LogicalPlan, Project, Sort}
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.catalyst.util.ArrayData
@@ -33,7 +33,8 @@ import graft.operators.Ivf
   * appends it to `experimentalMethods.extraOptimizations`). Codebooks
   * are cached per path — the sidecar read happens once per index, not
   * per query. */
-case class AnnRouteRule(spark: SparkSession) extends Rule[LogicalPlan] {
+case class AnnRouteRule(spark: SparkSession)
+    extends Rule[LogicalPlan] with PredicateHelper {
 
   override def apply(plan: LogicalPlan): LogicalPlan =
     if (!spark.conf.getOption("spark.graft.ann.autoRoute")
@@ -63,10 +64,15 @@ case class AnnRouteRule(spark: SparkSession) extends Rule[LogicalPlan] {
 
   /** Inject `cluster IN (probes)` above the scan when the (possibly
     * filtered) child is a parquet relation with a `cluster` column and
-    * an IVF codebook sidecar. */
+    * an IVF codebook sidecar. `above` holds the conjuncts of the
+    * Filters passed on the way down: when they already carry this
+    * query's probe predicate the relation is routed, and nothing
+    * changes — the rule runs in a fixed-point batch, so it must be
+    * idempotent. */
   private def routeScan(
       child: LogicalPlan,
-      qVec: Array[Float]): Option[LogicalPlan] = child match {
+      qVec: Array[Float],
+      above: Seq[Expression] = Nil): Option[LogicalPlan] = child match {
     case rel @ LogicalRelation(fs: HadoopFsRelation, _, _, _, _) =>
       for {
         clusterAttr <- rel.output.find(a =>
@@ -75,16 +81,28 @@ case class AnnRouteRule(spark: SparkSession) extends Rule[LogicalPlan] {
           .map(p => AnnRouteRule.indexRoot(p.toString))
         model <- AnnRouteRule.codebook(spark, path)
         if model.dim == qVec.length
-      } yield {
-        val nprobe = spark.conf
+        nprobe = spark.conf
           .getOption("spark.graft.ann.nprobe").map(_.toInt).getOrElse(2)
-        val probes = model.nearest(qVec, nprobe)
-        Filter(In(clusterAttr, probes.map(Literal(_))), rel)
-      }
-    case f @ Filter(_, inner) =>
-      routeScan(inner, qVec).map(r => f.copy(child = r))
+        probes = model.nearest(qVec, nprobe)
+        if !above.exists(isProbe(_, clusterAttr, probes.toSet))
+      } yield Filter(In(clusterAttr, probes.map(Literal(_))), rel)
+    case f @ Filter(cond, inner) =>
+      routeScan(inner, qVec, above ++ splitConjunctivePredicates(cond))
+        .map(r => f.copy(child = r))
     case _ => None
   }
+
+  /** `e` is `cluster IN (probes)` (or its InSet form). */
+  private def isProbe(
+      e: Expression, cluster: Attribute, probes: Set[Int]): Boolean =
+    e match {
+      case In(a: Attribute, list) if a.semanticEquals(cluster) =>
+        list.forall(_.isInstanceOf[Literal]) &&
+          list.map(_.asInstanceOf[Literal].value).toSet == probes
+      case InSet(a: Attribute, set) if a.semanticEquals(cluster) =>
+        set == probes
+      case _ => false
+    }
 }
 
 object AnnRouteRule {
@@ -119,8 +137,7 @@ object AnnRouteRule {
         val cp = new org.apache.hadoop.fs.Path(cdir)
         if (!cp.getFileSystem(conf).exists(cp)) None
         else Some(Ivf.Model(
-          spark.read.parquet(cp.toString).orderBy("cluster").collect()
-            .map(_.getSeq[Float](1).toArray)))
+          graft.index.IvfVectorIndex.readCentroids(spark, cdir)))
       } catch { case _: Exception => None }
     })
 

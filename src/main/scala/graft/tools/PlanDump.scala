@@ -53,9 +53,9 @@ object PlanDump {
         val df = graft.SparkEntry.queries(name)(spark, sfDir)
         val txt = df.queryExecution.explainString(
           org.apache.spark.sql.execution.FormattedMode)
-        // listener events arrive async; let the bus drain before
+        // listener events arrive async: drain the bus before
         // snapshotting the construction-executed plans
-        Thread.sleep(1000)
+        org.apache.spark.sql.graftshim.Shim.waitUntilEmpty(spark)
         val subs = executed.synchronized(executed.toVector)
         val body = txt + subs.zipWithIndex.map { case ((fn, p), i) =>
           s"\n\n===== construction-executed plan ${i + 1} ($fn) =====\n$p"

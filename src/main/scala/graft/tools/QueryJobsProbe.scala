@@ -61,8 +61,8 @@ object QueryJobsProbe {
         val dt = (System.nanoTime() - t0) / 1e9
         println(f"[probe] $name run $i (${if (warm) "warm" else "MEASURED"}): $dt%.3f s")
       }
-      // listener events arrive async; give the bus a moment to drain
-      Thread.sleep(1500)
+      // listener events arrive async: drain the bus first
+      org.apache.spark.sql.graftshim.Shim.waitUntilEmpty(spark)
       println(f"[probe] $name measured-run jobs (${rows.size}):")
       rows.sortBy(_._1).foreach { case (id, ms, site) =>
         println(f"  job $id%4d  $ms%6d ms  $site")

@@ -3,8 +3,9 @@ package graftshim
 
 import org.apache.spark.sql.catalyst.expressions.Expression
 
-/** Minimal bridge to `private[sql]` Spark internals (Column <-> Expression
-  * conversion and the session FunctionRegistry). Lives under
+/** Minimal bridge to `private[sql]` / `private[spark]` Spark internals
+  * (Column <-> Expression conversion, the session FunctionRegistry and
+  * the listener bus). Lives under
   * `org.apache.spark.sql` for access; the standard pattern for libraries
   * that ship native Catalyst expressions.
   */
@@ -21,6 +22,13 @@ object Shim {
     * released by the ContextCleaner when the consumer drops them). */
   def cacheIsEmpty(spark: SparkSession): Boolean =
     spark.asInstanceOf[classic.SparkSession].sharedState.cacheManager.isEmpty
+
+  /** Block until the listener bus has delivered every event posted so
+    * far (`SparkContext.listenerBus` is `private[spark]`): a listener's
+    * view of the actions that already returned is then complete, with
+    * no sleep to guess how long delivery takes. */
+  def waitUntilEmpty(spark: SparkSession): Unit =
+    spark.sparkContext.listenerBus.waitUntilEmpty()
 
   /** Register a native expression builder under `name` (idempotent and
     * silent: re-registering an already-present function would log a

@@ -28,6 +28,18 @@ class GraftExtensionsSpec extends SparkTestBase {
     }
   }
 
+  test("Graft.init leaves a consumer's explicit cached-plan conf alone " +
+    "and sets it only when unset") {
+    val key = "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning"
+    val mine = spark.newSession()
+    mine.conf.set(key, "false")
+    Graft.init(mine)
+    assert(mine.conf.get(key) == "false")
+    val fresh = spark.newSession()
+    Graft.init(fresh)
+    assert(fresh.conf.get(key) == "true")
+  }
+
   test("media triage structs fully materialize: ivf_meta/webm_meta " +
     "schemas match their returned row arity (no field-pruning mask)") {
     Graft.init(spark)

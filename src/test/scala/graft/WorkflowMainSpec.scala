@@ -116,4 +116,16 @@ class WorkflowMainSpec extends SparkTestBase {
       WorkflowMain.run(spark, bad, "/tmp/unused")
     }
   }
+
+  test("request bodies parse on the driver: malformed, nameless or " +
+    "non-string bodies are IllegalArgumentException (the server's 400)") {
+    Seq("this is not json", "", "[1, 2]", """{"elements": ["x"]}""",
+      """{"name": 5, "elements": ["x"]}""", """{"name": "search"}""",
+      """{"name": "search", "elements": [1]}""",
+      """{"name": "search", "elements": ["x"]} trailing""").foreach { body =>
+      intercept[IllegalArgumentException] {
+        WorkflowMain.runJson(spark, body, "/tmp/unused")
+      }
+    }
+  }
 }

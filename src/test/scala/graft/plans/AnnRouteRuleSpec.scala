@@ -116,4 +116,25 @@ class AnnRouteRuleSpec extends SparkTestBase {
       assert(got == want && got.head == 7L)
     }
   }
+
+  test("the rule is idempotent: re-applied to its own output it changes " +
+    "nothing, and the optimized plan carries one cluster probe") {
+    val idx = buildIndex()
+    val query = Knn.search(idx.df, "vector", "docid", q, 5)
+    def probes(p: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan) =
+      p.flatMap(_.expressions).flatMap(_.collect {
+        case in: org.apache.spark.sql.catalyst.expressions.In
+          if in.value.references.exists(_.name == "cluster") => in
+      }).length
+    val plain = query.queryExecution.optimizedPlan
+    withRouting(nprobe = 3) {
+      val rule = AnnRouteRule(spark)
+      val once = rule(plain)
+      assert(probes(once) == 1, once.treeString)
+      assert(rule(once) == once, "a second pass must change nothing")
+      val optimized =
+        Knn.search(idx.df, "vector", "docid", q, 5).queryExecution.optimizedPlan
+      assert(probes(optimized) == 1, optimized.treeString)
+    }
+  }
 }
