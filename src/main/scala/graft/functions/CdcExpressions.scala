@@ -1,9 +1,7 @@
 package graft.functions
 
 import graft.operators.{Cdc, MediaFixtures}
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow}
 import org.apache.spark.sql.types._
 
 /** cdc_chunks(bytes, min, avg, max) -> array<struct<offset, length,
@@ -11,7 +9,7 @@ import org.apache.spark.sql.types._
   * content ids ([[Cdc.chunks]]) — the binary-dedup primitive. Null
   * in → null out; empty blob → empty array. */
 case class CdcChunks(child: Expression, minSize: Int, avgSize: Int,
-    maxSize: Int) extends UnaryExpression {
+    maxSize: Int) extends KernelExpression {
   require(Integer.bitCount(avgSize) == 1 && minSize >= 1 &&
     minSize <= avgSize && avgSize <= maxSize,
     s"bad sizes $minSize/$avgSize/$maxSize")
@@ -20,22 +18,8 @@ case class CdcChunks(child: Expression, minSize: Int, avgSize: Int,
     ArrayType(CdcChunks.chunkSchema, containsNull = false)
   override def prettyName: String = "cdc_chunks"
   override def nullable: Boolean = true
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case BinaryType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires binary, got ${other.simpleString}")
-  }
-
-  override def nullSafeEval(input: Any): Any =
-    CdcChunks.compute(input.asInstanceOf[Array[Byte]], minSize, avgSize,
-      maxSize)
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => s"""
-      |${ev.value} = graft.functions.CdcChunks$$.MODULE$$.compute(
-      |  $c, $minSize, $avgSize, $maxSize);
-      |${ev.isNull} = ${ev.value} == null;
-      |""".stripMargin)
+  override def kernel: Kernel =
+    Kernel(CdcChunks, "compute", minSize, avgSize, maxSize)
 
   override protected def withNewChildInternal(c: Expression): Expression =
     copy(child = c)
@@ -64,22 +48,11 @@ object CdcChunks {
 
 /** cdc_media_for_id(id) -> binary ([[MediaFixtures.cdcMediaFor]] —
   * pool-assembled blobs with genuine cross-doc shared content). */
-case class CdcMediaBytes(child: Expression) extends UnaryExpression {
+case class CdcMediaBytes(child: Expression) extends KernelExpression {
 
   override def dataType: DataType = BinaryType
   override def prettyName: String = "cdc_media_for_id"
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case LongType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires bigint, got ${other.simpleString}")
-  }
-
-  override def nullSafeEval(input: Any): Any =
-    MediaFixtures.cdcMediaFor(input.asInstanceOf[Long])
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      c => s"graft.operators.MediaFixtures$$.MODULE$$.cdcMediaFor($c)")
+  override def kernel: Kernel = Kernel(MediaFixtures, "cdcMediaFor")
 
   override protected def withNewChildInternal(c: Expression): Expression =
     copy(child = c)

@@ -1,33 +1,19 @@
 package graft.functions
 
 import graft.operators.{Charset, MediaFixtures}
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
 /** sniff_charset(bytes) -> string: the browser-order charset verdict
   * ([[Charset.sniff]]) — utf-16le/utf-16be by BOM, binary on NUL,
   * ascii, utf-8 via strict DFA validation, windows-1252 fallback. */
-case class SniffCharset(child: Expression) extends UnaryExpression {
+case class SniffCharset(child: Expression) extends KernelExpression {
 
   override def dataType: DataType = StringType
   override def prettyName: String = "sniff_charset"
   override def nullable: Boolean = true
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case BinaryType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires binary, got ${other.simpleString}")
-  }
-
-  override def nullSafeEval(input: Any): Any =
-    UTF8String.fromString(Charset.sniff(input.asInstanceOf[Array[Byte]]))
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c =>
-      s"org.apache.spark.unsafe.types.UTF8String.fromString(" +
-        s"graft.operators.Charset$$.MODULE$$.sniff($c))")
+  override def kernel: Kernel = Kernel(Charset, "sniff")
 
   override protected def withNewChildInternal(c: Expression): Expression =
     copy(child = c)
@@ -37,25 +23,12 @@ case class SniffCharset(child: Expression) extends UnaryExpression {
   * charset ([[Charset.decode]]) — total for text (WHATWG 1252 maps
   * every byte), null for binary payloads and broken UTF-16; never a
   * U+FFFD. */
-case class DecodeCharset(child: Expression) extends UnaryExpression {
+case class DecodeCharset(child: Expression) extends KernelExpression {
 
   override def dataType: DataType = StringType
   override def prettyName: String = "decode_charset"
   override def nullable: Boolean = true
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case BinaryType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires binary, got ${other.simpleString}")
-  }
-
-  override def nullSafeEval(input: Any): Any =
-    DecodeCharset.compute(input.asInstanceOf[Array[Byte]])
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => s"""
-      |${ev.value} = graft.functions.DecodeCharset$$.MODULE$$.compute($c);
-      |${ev.isNull} = ${ev.value} == null;
-      |""".stripMargin)
+  override def kernel: Kernel = Kernel(DecodeCharset, "compute")
 
   override protected def withNewChildInternal(c: Expression): Expression =
     copy(child = c)
@@ -72,22 +45,11 @@ object DecodeCharset {
 /** fix_mojibake(s) -> string: undo UTF-8-read-as-windows-1252 double
   * encoding, bounded at two rounds ([[Charset.fixMojibake]]); clean
   * text — including genuinely non-Western text — is a fixed point. */
-case class FixMojibake(child: Expression) extends UnaryExpression {
+case class FixMojibake(child: Expression) extends KernelExpression {
 
   override def dataType: DataType = StringType
   override def prettyName: String = "fix_mojibake"
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires string, got ${other.simpleString}")
-  }
-
-  override def nullSafeEval(input: Any): Any =
-    FixMojibake.compute(input.asInstanceOf[UTF8String])
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      c => s"graft.functions.FixMojibake$$.MODULE$$.compute($c)")
+  override def kernel: Kernel = Kernel(FixMojibake, "compute")
 
   override protected def withNewChildInternal(c: Expression): Expression =
     copy(child = c)
@@ -101,22 +63,11 @@ object FixMojibake {
 
 /** enc_media_for_id(id) -> binary ([[MediaFixtures.encMediaFor]] —
   * one closed-form sentence through five transfer encodings). */
-case class EncMediaBytes(child: Expression) extends UnaryExpression {
+case class EncMediaBytes(child: Expression) extends KernelExpression {
 
   override def dataType: DataType = BinaryType
   override def prettyName: String = "enc_media_for_id"
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case LongType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires bigint, got ${other.simpleString}")
-  }
-
-  override def nullSafeEval(input: Any): Any =
-    MediaFixtures.encMediaFor(input.asInstanceOf[Long])
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      c => s"graft.operators.MediaFixtures$$.MODULE$$.encMediaFor($c)")
+  override def kernel: Kernel = Kernel(MediaFixtures, "encMediaFor")
 
   override protected def withNewChildInternal(c: Expression): Expression =
     copy(child = c)

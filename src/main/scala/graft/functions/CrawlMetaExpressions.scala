@@ -1,9 +1,7 @@
 package graft.functions
 
 import graft.operators.{MediaFixtures, Sitemap, Zstd}
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow}
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
@@ -14,25 +12,12 @@ import org.apache.spark.unsafe.types.UTF8String
   * requirement, checksum flag, leading skippable frames counted
   * ([[Zstd.parse]]; block CONTENT is the documented codec seam).
   * Dirty bytes → null. */
-case class ZstdMeta(child: Expression) extends UnaryExpression {
+case class ZstdMeta(child: Expression) extends KernelExpression {
 
   override def dataType: DataType = ZstdMeta.schema
   override def prettyName: String = "zstd_meta"
   override def nullable: Boolean = true
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case BinaryType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires binary, got ${other.simpleString}")
-  }
-
-  override def nullSafeEval(input: Any): Any =
-    ZstdMeta.compute(input.asInstanceOf[Array[Byte]])
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => s"""
-      |${ev.value} = graft.functions.ZstdMeta$$.MODULE$$.compute($c);
-      |${ev.isNull} = ${ev.value} == null;
-      |""".stripMargin)
+  override def kernel: Kernel = Kernel(ZstdMeta, "compute")
 
   override protected def withNewChildInternal(c: Expression): Expression =
     copy(child = c)
@@ -58,22 +43,11 @@ object ZstdMeta {
 }
 
 /** zst_media_for_id(id) -> binary ([[MediaFixtures.zstMediaFor]]). */
-case class ZstMediaBytes(child: Expression) extends UnaryExpression {
+case class ZstMediaBytes(child: Expression) extends KernelExpression {
 
   override def dataType: DataType = BinaryType
   override def prettyName: String = "zst_media_for_id"
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case LongType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires bigint, got ${other.simpleString}")
-  }
-
-  override def nullSafeEval(input: Any): Any =
-    MediaFixtures.zstMediaFor(input.asInstanceOf[Long])
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      c => s"graft.operators.MediaFixtures$$.MODULE$$.zstMediaFor($c)")
+  override def kernel: Kernel = Kernel(MediaFixtures, "zstMediaFor")
 
   override protected def withNewChildInternal(c: Expression): Expression =
     copy(child = c)
@@ -83,25 +57,12 @@ case class ZstMediaBytes(child: Expression) extends UnaryExpression {
   * ([[graft.operators.ZstdDecode.decompress]] — FSE, Huffman
   * literals, sequences, repeat offsets, checksums, multi-frame).
   * Malformed/dictionary input → null (the gunzip contract). */
-case class Unzstd(child: Expression) extends UnaryExpression {
+case class Unzstd(child: Expression) extends KernelExpression {
 
   override def dataType: DataType = BinaryType
   override def prettyName: String = "unzstd"
   override def nullable: Boolean = true
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case BinaryType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires binary, got ${other.simpleString}")
-  }
-
-  override def nullSafeEval(input: Any): Any =
-    Unzstd.compute(input.asInstanceOf[Array[Byte]])
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => s"""
-      |${ev.value} = graft.functions.Unzstd$$.MODULE$$.compute($c);
-      |${ev.isNull} = ${ev.value} == null;
-      |""".stripMargin)
+  override def kernel: Kernel = Kernel(Unzstd, "compute")
 
   override protected def withNewChildInternal(c: Expression): Expression =
     copy(child = c)
@@ -117,22 +78,11 @@ object Unzstd {
   * ([[MediaFixtures.zstFullMediaFor]] — raw/compressed blocks, real
   * LZ sequences through RLE/repeat-mode tables, checksums,
   * multi-frame and skippable variants). */
-case class ZstFullMediaBytes(child: Expression) extends UnaryExpression {
+case class ZstFullMediaBytes(child: Expression) extends KernelExpression {
 
   override def dataType: DataType = BinaryType
   override def prettyName: String = "zstfull_media_for_id"
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case LongType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires bigint, got ${other.simpleString}")
-  }
-
-  override def nullSafeEval(input: Any): Any =
-    MediaFixtures.zstFullMediaFor(input.asInstanceOf[Long])
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      c => s"graft.operators.MediaFixtures$$.MODULE$$.zstFullMediaFor($c)")
+  override def kernel: Kernel = Kernel(MediaFixtures, "zstFullMediaFor")
 
   override protected def withNewChildInternal(c: Expression): Expression =
     copy(child = c)
@@ -142,26 +92,13 @@ case class ZstFullMediaBytes(child: Expression) extends UnaryExpression {
   * sitemaps.org urlset/sitemapindex extraction — entity decoding,
   * CDATA, per-entry blocks, the 0.5 priority default ([[Sitemap
   * .parse]]). Dirty input → null. */
-case class SitemapEntries(child: Expression) extends UnaryExpression {
+case class SitemapEntries(child: Expression) extends KernelExpression {
 
   override def dataType: DataType =
     ArrayType(SitemapEntries.entrySchema, containsNull = false)
   override def prettyName: String = "sitemap_entries"
   override def nullable: Boolean = true
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires string, got ${other.simpleString}")
-  }
-
-  override def nullSafeEval(input: Any): Any =
-    SitemapEntries.compute(input.asInstanceOf[UTF8String])
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => s"""
-      |${ev.value} = graft.functions.SitemapEntries$$.MODULE$$.compute($c);
-      |${ev.isNull} = ${ev.value} == null;
-      |""".stripMargin)
+  override def kernel: Kernel = Kernel(SitemapEntries, "compute")
 
   override protected def withNewChildInternal(c: Expression): Expression =
     copy(child = c)
@@ -193,24 +130,11 @@ object SitemapEntries {
 
 /** sitemap_media_for_id(id) -> string ([[MediaFixtures
   * .sitemapMediaFor]] — urlset / sitemapindex cycling). */
-case class SitemapMediaText(child: Expression) extends UnaryExpression {
+case class SitemapMediaText(child: Expression) extends KernelExpression {
 
   override def dataType: DataType = StringType
   override def prettyName: String = "sitemap_media_for_id"
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case LongType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires bigint, got ${other.simpleString}")
-  }
-
-  override def nullSafeEval(input: Any): Any =
-    UTF8String.fromString(
-      MediaFixtures.sitemapMediaFor(input.asInstanceOf[Long]))
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c =>
-      s"org.apache.spark.unsafe.types.UTF8String.fromString(" +
-        s"graft.operators.MediaFixtures$$.MODULE$$.sitemapMediaFor($c))")
+  override def kernel: Kernel = Kernel(MediaFixtures, "sitemapMediaFor")
 
   override protected def withNewChildInternal(c: Expression): Expression =
     copy(child = c)
@@ -223,24 +147,11 @@ case class SitemapMediaText(child: Expression) extends UnaryExpression {
   * requires BOTH magics, zstd includes leading skippable frames,
   * mp3 by ID3 tag or frame sync, tar by the ustar magic at 257);
   * anything else is "unknown", never a throw. */
-case class MediaKind(child: Expression) extends UnaryExpression {
+case class MediaKind(child: Expression) extends KernelExpression {
 
   override def dataType: DataType = StringType
   override def prettyName: String = "media_kind"
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case BinaryType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires binary, got ${other.simpleString}")
-  }
-
-  override def nullSafeEval(input: Any): Any =
-    UTF8String.fromString(
-      MediaKind.kind(input.asInstanceOf[Array[Byte]]))
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c =>
-      s"org.apache.spark.unsafe.types.UTF8String.fromString(" +
-        s"graft.functions.MediaKind$$.MODULE$$.kind($c))")
+  override def kernel: Kernel = Kernel(MediaKind, "kind")
 
   override protected def withNewChildInternal(c: Expression): Expression =
     copy(child = c)

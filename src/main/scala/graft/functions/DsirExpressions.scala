@@ -17,26 +17,12 @@ import org.apache.spark.unsafe.types.UTF8String
   * one space (collision-free — tokens come from a space split).
   * Null text → null. */
 case class HashedNgramBuckets(child: Expression, buckets: Int)
-    extends UnaryExpression {
+    extends KernelExpression {
   require(buckets > 0, s"buckets must be positive, got $buckets")
 
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
   override def prettyName: String = "hashed_ngram_buckets"
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires string, got ${other.simpleString}")
-  }
-
-  override def nullSafeEval(input: Any): Any =
-    HashedNgramBuckets.compute(input.asInstanceOf[UTF8String], buckets)
-
-  override def doGenCode(
-      ctx: org.apache.spark.sql.catalyst.expressions.codegen.CodegenContext,
-      ev: org.apache.spark.sql.catalyst.expressions.codegen.ExprCode)
-      : org.apache.spark.sql.catalyst.expressions.codegen.ExprCode =
-    defineCodeGen(ctx, ev,
-      c => s"graft.functions.HashedNgramBuckets$$.MODULE$$.compute($c, $buckets)")
+  override def kernel: Kernel = Kernel(HashedNgramBuckets, "compute", buckets)
 
   override protected def withNewChildInternal(c: Expression): Expression =
     copy(child = c)

@@ -1,9 +1,7 @@
 package graft.functions
 
 import graft.operators.{Flac, MediaFixtures, WavPcm}
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.types._
 
 /** flac_wav(bytes) -> binary: REAL FLAC decode ([[Flac.decode]] —
@@ -15,25 +13,12 @@ import org.apache.spark.sql.types._
   * with no second audio-analysis path to keep consistent. Dirty or
   * out-of-subset bytes → null, never an exception — per-row codegen'd
   * kernel riding the scan, the 100 TB shape shared by all codecs. */
-case class FlacWav(child: Expression) extends UnaryExpression {
+case class FlacWav(child: Expression) extends KernelExpression {
 
   override def dataType: DataType = BinaryType
   override def prettyName: String = "flac_wav"
   override def nullable: Boolean = true
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case BinaryType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires binary, got ${other.simpleString}")
-  }
-
-  override def nullSafeEval(input: Any): Any =
-    FlacWav.compute(input.asInstanceOf[Array[Byte]])
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => s"""
-      |${ev.value} = graft.functions.FlacWav$$.MODULE$$.compute($c);
-      |${ev.isNull} = ${ev.value} == null;
-      |""".stripMargin)
+  override def kernel: Kernel = Kernel(FlacWav, "compute")
 
   override protected def withNewChildInternal(c: Expression): Expression =
     copy(child = c)
@@ -51,22 +36,11 @@ object FlacWav {
 /** flac_media_for_id(id) -> binary: the FLAC fixture bytes
   * ([[MediaFixtures.flacMediaFor]] — WAV-contract samples through the
   * real FLAC encoder). */
-case class FlacMediaBytes(child: Expression) extends UnaryExpression {
+case class FlacMediaBytes(child: Expression) extends KernelExpression {
 
   override def dataType: DataType = BinaryType
   override def prettyName: String = "flac_media_for_id"
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case LongType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires bigint, got ${other.simpleString}")
-  }
-
-  override def nullSafeEval(input: Any): Any =
-    MediaFixtures.flacMediaFor(input.asInstanceOf[Long])
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      c => s"graft.operators.MediaFixtures$$.MODULE$$.flacMediaFor($c)")
+  override def kernel: Kernel = Kernel(MediaFixtures, "flacMediaFor")
 
   override protected def withNewChildInternal(c: Expression): Expression =
     copy(child = c)

@@ -292,25 +292,11 @@ case class SimHash64(child: Expression)
   * Replaces the interpreted `aggregate(split(text, ''), ...)` HOF
   * formulation (per-character lambda invocations) with one tight loop
   * that stays inside whole-stage codegen via a static call. */
-case class Fingerprint(child: Expression) extends UnaryExpression {
+case class Fingerprint(child: Expression) extends KernelExpression {
 
   override def dataType: DataType = LongType
   override def prettyName: String = "fingerprint"
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires string, got ${other.simpleString}")
-  }
-
-  override def nullSafeEval(input: Any): Any =
-    Fingerprint.compute(input.asInstanceOf[UTF8String])
-
-  override def doGenCode(
-      ctx: org.apache.spark.sql.catalyst.expressions.codegen.CodegenContext,
-      ev: org.apache.spark.sql.catalyst.expressions.codegen.ExprCode)
-      : org.apache.spark.sql.catalyst.expressions.codegen.ExprCode =
-    defineCodeGen(ctx, ev,
-      c => s"graft.functions.Fingerprint$$.MODULE$$.compute($c)")
+  override def kernel: Kernel = Kernel(Fingerprint, "compute")
 
   override protected def withNewChildInternal(c: Expression): Expression =
     copy(child = c)

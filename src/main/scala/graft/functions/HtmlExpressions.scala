@@ -1,8 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -31,22 +29,11 @@ import org.apache.spark.unsafe.types.UTF8String
   * Map-only, codegen'd, no shuffle — extraction rides the scan at any
   * scale. Null input → null; non-HTML text passes through with only
   * the whitespace normalization. */
-case class HtmlText(child: Expression) extends UnaryExpression {
+case class HtmlText(child: Expression) extends KernelExpression {
 
   override def dataType: DataType = StringType
   override def prettyName: String = "html_text"
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires string, got ${other.simpleString}")
-  }
-
-  override def nullSafeEval(input: Any): Any =
-    HtmlText.compute(input.asInstanceOf[UTF8String])
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      c => s"graft.functions.HtmlText$$.MODULE$$.compute($c)")
+  override def kernel: Kernel = Kernel(HtmlText, "compute")
 
   override protected def withNewChildInternal(c: Expression): Expression =
     copy(child = c)

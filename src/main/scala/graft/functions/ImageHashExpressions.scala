@@ -1,9 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.types._
 
@@ -18,27 +16,14 @@ import org.apache.spark.sql.types._
   * (nearest neighbor). Channel count is preserved. Dirty bytes →
   * null. */
 case class ImageResize(child: Expression, dstW: Int, dstH: Int)
-    extends UnaryExpression {
+    extends KernelExpression {
   require(dstW >= 1 && dstW <= 4096 && dstH >= 1 && dstH <= 4096,
     s"target dims must be in [1, 4096], got ${dstW}x$dstH")
 
   override def dataType: DataType = BinaryType
   override def prettyName: String = "image_resize"
   override def nullable: Boolean = true
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case BinaryType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires binary, got ${other.simpleString}")
-  }
-
-  override def nullSafeEval(input: Any): Any =
-    ImageResize.compute(input.asInstanceOf[Array[Byte]], dstW, dstH)
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => s"""
-      |${ev.value} = graft.functions.ImageResize$$.MODULE$$.compute($c, $dstW, $dstH);
-      |${ev.isNull} = ${ev.value} == null;
-      |""".stripMargin)
+  override def kernel: Kernel = Kernel(ImageResize, "compute", dstW, dstH)
 
   override protected def withNewChildInternal(c: Expression): Expression =
     copy(child = c)
@@ -114,25 +99,12 @@ object ImageResize {
   * grid math is integer (floor boundaries `i*w/9`, floor-divide
   * averages) — bit-reproducible in SQL. Images narrower than the grid
   * (w < 9 or h < 8) and dirty bytes → null. */
-case class ImageDhash(child: Expression) extends UnaryExpression {
+case class ImageDhash(child: Expression) extends KernelExpression {
 
   override def dataType: DataType = ImageDhash.schema
   override def prettyName: String = "image_dhash"
   override def nullable: Boolean = true
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case BinaryType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires binary, got ${other.simpleString}")
-  }
-
-  override def nullSafeEval(input: Any): Any =
-    ImageDhash.compute(input.asInstanceOf[Array[Byte]])
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => s"""
-      |${ev.value} = graft.functions.ImageDhash$$.MODULE$$.compute($c);
-      |${ev.isNull} = ${ev.value} == null;
-      |""".stripMargin)
+  override def kernel: Kernel = Kernel(ImageDhash, "compute")
 
   override protected def withNewChildInternal(c: Expression): Expression =
     copy(child = c)

@@ -1,9 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow}
 import org.apache.spark.sql.types._
 
 /** image_quality(bytes) -> struct<width, height, channels, lum_sum,
@@ -26,25 +24,12 @@ import org.apache.spark.sql.types._
   * (299 R + 587 G + 114 B) / 1000 for >= 3 channels (alpha ignored),
   * the raw sample for gray/gray-alpha. Dirty or out-of-subset bytes
   * -> null, never a throw. */
-case class ImageQuality(child: Expression) extends UnaryExpression {
+case class ImageQuality(child: Expression) extends KernelExpression {
 
   override def dataType: DataType = ImageQuality.schema
   override def prettyName: String = "image_quality"
   override def nullable: Boolean = true
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case BinaryType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires binary, got ${other.simpleString}")
-  }
-
-  override def nullSafeEval(input: Any): Any =
-    ImageQuality.statsToRow(input.asInstanceOf[Array[Byte]])
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => s"""
-      |${ev.value} = graft.functions.ImageQuality$$.MODULE$$.statsToRow($c);
-      |${ev.isNull} = ${ev.value} == null;
-      |""".stripMargin)
+  override def kernel: Kernel = Kernel(ImageQuality, "statsToRow")
 
   override protected def withNewChildInternal(c: Expression): Expression =
     copy(child = c)

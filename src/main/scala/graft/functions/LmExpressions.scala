@@ -19,26 +19,12 @@ import org.apache.spark.unsafe.types.UTF8String
   * contain the separator (they come from a space split), so the
   * joined pair string is collision-free and `substring_index(bg,
   * ' ', 1)` recovers `prev` exactly. */
-case class TokenBigrams(child: Expression) extends UnaryExpression {
+case class TokenBigrams(child: Expression) extends KernelExpression {
 
   override def dataType: DataType =
     ArrayType(StringType, containsNull = false)
   override def prettyName: String = "token_bigrams"
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires string, got ${other.simpleString}")
-  }
-
-  override def nullSafeEval(input: Any): Any =
-    TokenBigrams.compute(input.asInstanceOf[UTF8String])
-
-  override def doGenCode(
-      ctx: org.apache.spark.sql.catalyst.expressions.codegen.CodegenContext,
-      ev: org.apache.spark.sql.catalyst.expressions.codegen.ExprCode)
-      : org.apache.spark.sql.catalyst.expressions.codegen.ExprCode =
-    defineCodeGen(ctx, ev,
-      c => s"graft.functions.TokenBigrams$$.MODULE$$.compute($c)")
+  override def kernel: Kernel = Kernel(TokenBigrams, "compute")
 
   override protected def withNewChildInternal(c: Expression): Expression =
     copy(child = c)

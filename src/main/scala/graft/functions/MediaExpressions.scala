@@ -2,9 +2,7 @@ package graft.functions
 
 import graft.operators.{MediaCodec, MediaFixtures}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -20,26 +18,13 @@ import org.apache.spark.unsafe.types.UTF8String
   * (a mapPartitions is an optimizer barrier; callers had to hand-order
   * filters before it). Dirty rows (unknown/truncated/corrupt bytes)
   * yield null, never an exception. */
-case class ParseMedia(child: Expression) extends UnaryExpression {
+case class ParseMedia(child: Expression) extends KernelExpression {
 
   override def dataType: DataType = ParseMedia.schema
   override def prettyName: String = "parse_media"
   // unparseable bytes → null even when the child is non-nullable
   override def nullable: Boolean = true
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case BinaryType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires binary, got ${other.simpleString}")
-  }
-
-  override def nullSafeEval(input: Any): Any =
-    ParseMedia.parseToRow(input.asInstanceOf[Array[Byte]])
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => s"""
-      |${ev.value} = graft.functions.ParseMedia$$.MODULE$$.parseToRow($c);
-      |${ev.isNull} = ${ev.value} == null;
-      |""".stripMargin)
+  override def kernel: Kernel = Kernel(ParseMedia, "parseToRow")
 
   override protected def withNewChildInternal(c: Expression): Expression =
     copy(child = c)
@@ -79,25 +64,12 @@ object ParseMedia {
   * integer statistics, as a codegen'd expression like [[ParseMedia]].
   * Integer sums (not float means) so the SQL oracle compares exactly.
   * Dirty bytes → null. */
-case class PngStats(child: Expression) extends UnaryExpression {
+case class PngStats(child: Expression) extends KernelExpression {
 
   override def dataType: DataType = PngStats.schema
   override def prettyName: String = "png_stats"
   override def nullable: Boolean = true
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case BinaryType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires binary, got ${other.simpleString}")
-  }
-
-  override def nullSafeEval(input: Any): Any =
-    PngStats.statsToRow(input.asInstanceOf[Array[Byte]])
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => s"""
-      |${ev.value} = graft.functions.PngStats$$.MODULE$$.statsToRow($c);
-      |${ev.isNull} = ${ev.value} == null;
-      |""".stripMargin)
+  override def kernel: Kernel = Kernel(PngStats, "statsToRow")
 
   override protected def withNewChildInternal(c: Expression): Expression =
     copy(child = c)
@@ -128,25 +100,12 @@ object PngStats {
   * JPEG entropy decode ([[graft.operators.JpegDc]]: marker walk,
   * canonical Huffman, DC prediction, dequant — the DC-only subset).
   * Dirty or out-of-subset bytes → null. */
-case class JpegStats(child: Expression) extends UnaryExpression {
+case class JpegStats(child: Expression) extends KernelExpression {
 
   override def dataType: DataType = PngStats.schema
   override def prettyName: String = "jpeg_stats"
   override def nullable: Boolean = true
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case BinaryType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires binary, got ${other.simpleString}")
-  }
-
-  override def nullSafeEval(input: Any): Any =
-    JpegStats.statsToRow(input.asInstanceOf[Array[Byte]])
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => s"""
-      |${ev.value} = graft.functions.JpegStats$$.MODULE$$.statsToRow($c);
-      |${ev.isNull} = ${ev.value} == null;
-      |""".stripMargin)
+  override def kernel: Kernel = Kernel(JpegStats, "statsToRow")
 
   override protected def withNewChildInternal(c: Expression): Expression =
     copy(child = c)
@@ -173,25 +132,12 @@ object JpegStats {
   * caller didn't pick. Dispatch is on the magic bytes (PNG signature
   * `\x89PNG` vs JPEG SOI `\xFF\xD8`), so each blob runs exactly one
   * decoder; unknown/corrupt/out-of-subset bytes → null, never a throw. */
-case class PixelStats(child: Expression) extends UnaryExpression {
+case class PixelStats(child: Expression) extends KernelExpression {
 
   override def dataType: DataType = PngStats.schema
   override def prettyName: String = "pixel_stats"
   override def nullable: Boolean = true
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case BinaryType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires binary, got ${other.simpleString}")
-  }
-
-  override def nullSafeEval(input: Any): Any =
-    PixelStats.statsToRow(input.asInstanceOf[Array[Byte]])
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => s"""
-      |${ev.value} = graft.functions.PixelStats$$.MODULE$$.statsToRow($c);
-      |${ev.isNull} = ${ev.value} == null;
-      |""".stripMargin)
+  override def kernel: Kernel = Kernel(PixelStats, "statsToRow")
 
   override protected def withNewChildInternal(c: Expression): Expression =
     copy(child = c)
@@ -245,25 +191,14 @@ object PixelStats {
   * external-codec seam, e.g. mp4/webm). Codegen'd, so the
   * decode-to-feature stage is not an optimizer barrier. */
 case class MediaFeatures(child: Expression, dim: Int)
-    extends UnaryExpression {
+    extends KernelExpression {
   require(dim >= 1 && dim <= 256, s"dim must be in [1,256], got $dim")
 
   override def dataType: DataType =
     ArrayType(FloatType, containsNull = false)
   override def prettyName: String = "media_features"
   override def nullable: Boolean = true
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case BinaryType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires binary, got ${other.simpleString}")
-  }
-
-  override def nullSafeEval(input: Any): Any =
-    MediaFeatures.compute(input.asInstanceOf[Array[Byte]], dim)
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      c => s"graft.functions.MediaFeatures$$.MODULE$$.compute($c, $dim)")
+  override def kernel: Kernel = Kernel(MediaFeatures, "compute", dim)
 
   override protected def withNewChildInternal(c: Expression): Expression =
     copy(child = c)
@@ -417,22 +352,11 @@ object MediaFeatures {
 
 /** jpeg_pixel_media_for_id(id) -> binary: the DC-only JPEG fixture
   * bytes ([[graft.operators.MediaFixtures.jpegPixelMediaFor]]). */
-case class JpegPixelMediaBytes(child: Expression) extends UnaryExpression {
+case class JpegPixelMediaBytes(child: Expression) extends KernelExpression {
 
   override def dataType: DataType = BinaryType
   override def prettyName: String = "jpeg_pixel_media_for_id"
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case LongType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires bigint, got ${other.simpleString}")
-  }
-
-  override def nullSafeEval(input: Any): Any =
-    MediaFixtures.jpegPixelMediaFor(input.asInstanceOf[Long])
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      c => s"graft.operators.MediaFixtures$$.MODULE$$.jpegPixelMediaFor($c)")
+  override def kernel: Kernel = Kernel(MediaFixtures, "jpegPixelMediaFor")
 
   override protected def withNewChildInternal(c: Expression): Expression =
     copy(child = c)
@@ -447,27 +371,14 @@ case class JpegPixelMediaBytes(child: Expression) extends UnaryExpression {
   * normalized float form feeds cosine kNN (image near-dup search over
   * REAL pixel content). Dirty bytes → null. */
 case class PngHistogram(child: Expression, bins: Int)
-    extends UnaryExpression {
+    extends KernelExpression {
   require(bins >= 1 && bins <= 256, s"bins must be in [1,256], got $bins")
 
   override def dataType: DataType =
     ArrayType(LongType, containsNull = false)
   override def prettyName: String = "png_histogram"
   override def nullable: Boolean = true
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case BinaryType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires binary, got ${other.simpleString}")
-  }
-
-  override def nullSafeEval(input: Any): Any =
-    PngHistogram.compute(input.asInstanceOf[Array[Byte]], bins)
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => s"""
-      |${ev.value} = graft.functions.PngHistogram$$.MODULE$$.compute($c, $bins);
-      |${ev.isNull} = ${ev.value} == null;
-      |""".stripMargin)
+  override def kernel: Kernel = Kernel(PngHistogram, "compute", bins)
 
   override protected def withNewChildInternal(c: Expression): Expression =
     copy(child = c)
@@ -509,25 +420,12 @@ object PngHistogram {
   * fmt validation, little-endian sample extraction) reduced to exact
   * integer statistics (sum + energy = Σv²), the audio twin of
   * [[PngStats]]. Dirty or out-of-subset bytes → null. */
-case class WavStats(child: Expression) extends UnaryExpression {
+case class WavStats(child: Expression) extends KernelExpression {
 
   override def dataType: DataType = WavStats.schema
   override def prettyName: String = "wav_stats"
   override def nullable: Boolean = true
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case BinaryType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires binary, got ${other.simpleString}")
-  }
-
-  override def nullSafeEval(input: Any): Any =
-    WavStats.statsToRow(input.asInstanceOf[Array[Byte]])
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => s"""
-      |${ev.value} = graft.functions.WavStats$$.MODULE$$.statsToRow($c);
-      |${ev.isNull} = ${ev.value} == null;
-      |""".stripMargin)
+  override def kernel: Kernel = Kernel(WavStats, "statsToRow")
 
   override protected def withNewChildInternal(c: Expression): Expression =
     copy(child = c)
@@ -561,22 +459,11 @@ object WavStats {
 
 /** wav_media_for_id(id) -> binary: the PCM16 WAV fixture bytes
   * ([[graft.operators.MediaFixtures.wavMediaFor]]). */
-case class WavMediaBytes(child: Expression) extends UnaryExpression {
+case class WavMediaBytes(child: Expression) extends KernelExpression {
 
   override def dataType: DataType = BinaryType
   override def prettyName: String = "wav_media_for_id"
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case LongType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires bigint, got ${other.simpleString}")
-  }
-
-  override def nullSafeEval(input: Any): Any =
-    MediaFixtures.wavMediaFor(input.asInstanceOf[Long])
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      c => s"graft.operators.MediaFixtures$$.MODULE$$.wavMediaFor($c)")
+  override def kernel: Kernel = Kernel(MediaFixtures, "wavMediaFor")
 
   override protected def withNewChildInternal(c: Expression): Expression =
     copy(child = c)
@@ -590,26 +477,13 @@ case class WavMediaBytes(child: Expression) extends UnaryExpression {
   * so zigzag/run-length/IDCT bugs that cancel in aggregate statistics
   * (sums are blind to where the energy landed) still break the match.
   * Dirty/unknown bytes → null. */
-case class DecodedPixels(child: Expression) extends UnaryExpression {
+case class DecodedPixels(child: Expression) extends KernelExpression {
 
   override def dataType: DataType =
     ArrayType(IntegerType, containsNull = false)
   override def prettyName: String = "decoded_pixels"
   override def nullable: Boolean = true
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case BinaryType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires binary, got ${other.simpleString}")
-  }
-
-  override def nullSafeEval(input: Any): Any =
-    DecodedPixels.compute(input.asInstanceOf[Array[Byte]])
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => s"""
-      |${ev.value} = graft.functions.DecodedPixels$$.MODULE$$.compute($c);
-      |${ev.isNull} = ${ev.value} == null;
-      |""".stripMargin)
+  override def kernel: Kernel = Kernel(DecodedPixels, "compute")
 
   override protected def withNewChildInternal(c: Expression): Expression =
     copy(child = c)
@@ -640,22 +514,11 @@ object DecodedPixels {
 /** jpeg_ac_media_for_id(id) -> binary: the full-baseline JPEG fixture
   * bytes with real AC coefficients
   * ([[graft.operators.MediaFixtures.jpegAcMediaFor]]). */
-case class JpegAcMediaBytes(child: Expression) extends UnaryExpression {
+case class JpegAcMediaBytes(child: Expression) extends KernelExpression {
 
   override def dataType: DataType = BinaryType
   override def prettyName: String = "jpeg_ac_media_for_id"
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case LongType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires bigint, got ${other.simpleString}")
-  }
-
-  override def nullSafeEval(input: Any): Any =
-    MediaFixtures.jpegAcMediaFor(input.asInstanceOf[Long])
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      c => s"graft.operators.MediaFixtures$$.MODULE$$.jpegAcMediaFor($c)")
+  override def kernel: Kernel = Kernel(MediaFixtures, "jpegAcMediaFor")
 
   override protected def withNewChildInternal(c: Expression): Expression =
     copy(child = c)
@@ -665,22 +528,11 @@ case class JpegAcMediaBytes(child: Expression) extends UnaryExpression {
   * full-baseline JPEG fixture bytes
   * ([[graft.operators.MediaFixtures.jpegSubMediaFor]] — 4:2:0/4:2:2/
   * 4:4:0 cycling by id, real interleaved MCUs). */
-case class JpegSubMediaBytes(child: Expression) extends UnaryExpression {
+case class JpegSubMediaBytes(child: Expression) extends KernelExpression {
 
   override def dataType: DataType = BinaryType
   override def prettyName: String = "jpeg_sub_media_for_id"
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case LongType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires bigint, got ${other.simpleString}")
-  }
-
-  override def nullSafeEval(input: Any): Any =
-    MediaFixtures.jpegSubMediaFor(input.asInstanceOf[Long])
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      c => s"graft.operators.MediaFixtures$$.MODULE$$.jpegSubMediaFor($c)")
+  override def kernel: Kernel = Kernel(MediaFixtures, "jpegSubMediaFor")
 
   override protected def withNewChildInternal(c: Expression): Expression =
     copy(child = c)
@@ -690,22 +542,11 @@ case class JpegSubMediaBytes(child: Expression) extends UnaryExpression {
   * full-baseline JPEG fixture bytes
   * ([[graft.operators.MediaFixtures.jpegRstMediaFor]] — DRI + cycling
   * RSTn every 1..5 MCUs, per-interval DC prediction). */
-case class JpegRstMediaBytes(child: Expression) extends UnaryExpression {
+case class JpegRstMediaBytes(child: Expression) extends KernelExpression {
 
   override def dataType: DataType = BinaryType
   override def prettyName: String = "jpeg_rst_media_for_id"
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case LongType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires bigint, got ${other.simpleString}")
-  }
-
-  override def nullSafeEval(input: Any): Any =
-    MediaFixtures.jpegRstMediaFor(input.asInstanceOf[Long])
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      c => s"graft.operators.MediaFixtures$$.MODULE$$.jpegRstMediaFor($c)")
+  override def kernel: Kernel = Kernel(MediaFixtures, "jpegRstMediaFor")
 
   override protected def withNewChildInternal(c: Expression): Expression =
     copy(child = c)
@@ -714,22 +555,11 @@ case class JpegRstMediaBytes(child: Expression) extends UnaryExpression {
 /** jpeg_prog_media_for_id(id) -> binary: the PROGRESSIVE (SOF2) JPEG
   * fixture bytes ([[graft.operators.MediaFixtures.jpegProgMediaFor]]
   * — 6-scan successive approximation, layout cycling by id). */
-case class JpegProgMediaBytes(child: Expression) extends UnaryExpression {
+case class JpegProgMediaBytes(child: Expression) extends KernelExpression {
 
   override def dataType: DataType = BinaryType
   override def prettyName: String = "jpeg_prog_media_for_id"
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case LongType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires bigint, got ${other.simpleString}")
-  }
-
-  override def nullSafeEval(input: Any): Any =
-    MediaFixtures.jpegProgMediaFor(input.asInstanceOf[Long])
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      c => s"graft.operators.MediaFixtures$$.MODULE$$.jpegProgMediaFor($c)")
+  override def kernel: Kernel = Kernel(MediaFixtures, "jpegProgMediaFor")
 
   override protected def withNewChildInternal(c: Expression): Expression =
     copy(child = c)
@@ -738,22 +568,11 @@ case class JpegProgMediaBytes(child: Expression) extends UnaryExpression {
 /** mixed_pixel_media_for_id(id) -> binary: the MIXED-format pixel
   * fixture bytes ([[graft.operators.MediaFixtures.mixedPixelMediaFor]]
   * — PNG even ids, JPEG odd ids, real pixels in both). */
-case class MixedPixelMediaBytes(child: Expression) extends UnaryExpression {
+case class MixedPixelMediaBytes(child: Expression) extends KernelExpression {
 
   override def dataType: DataType = BinaryType
   override def prettyName: String = "mixed_pixel_media_for_id"
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case LongType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires bigint, got ${other.simpleString}")
-  }
-
-  override def nullSafeEval(input: Any): Any =
-    MediaFixtures.mixedPixelMediaFor(input.asInstanceOf[Long])
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      c => s"graft.operators.MediaFixtures$$.MODULE$$.mixedPixelMediaFor($c)")
+  override def kernel: Kernel = Kernel(MediaFixtures, "mixedPixelMediaFor")
 
   override protected def withNewChildInternal(c: Expression): Expression =
     copy(child = c)
@@ -762,22 +581,11 @@ case class MixedPixelMediaBytes(child: Expression) extends UnaryExpression {
 /** pixel_media_for_id(id) -> binary: the pixel-bearing PNG fixture
   * bytes ([[graft.operators.MediaFixtures.pixelMediaFor]]) — the
   * codegen'd writer half of the pixel pipeline. */
-case class PixelMediaBytes(child: Expression) extends UnaryExpression {
+case class PixelMediaBytes(child: Expression) extends KernelExpression {
 
   override def dataType: DataType = BinaryType
   override def prettyName: String = "pixel_media_for_id"
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case LongType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires bigint, got ${other.simpleString}")
-  }
-
-  override def nullSafeEval(input: Any): Any =
-    MediaFixtures.pixelMediaFor(input.asInstanceOf[Long])
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      c => s"graft.operators.MediaFixtures$$.MODULE$$.pixelMediaFor($c)")
+  override def kernel: Kernel = Kernel(MediaFixtures, "pixelMediaFor")
 
   override protected def withNewChildInternal(c: Expression): Expression =
     copy(child = c)
@@ -786,22 +594,11 @@ case class PixelMediaBytes(child: Expression) extends UnaryExpression {
 /** web_pixel_media_for_id(id) -> binary: the WEB-subset PNG fixture
   * bytes ([[graft.operators.MediaFixtures.webPixelMediaFor]] — all
   * five depth-8 color types, a third of them Adam7-interlaced). */
-case class WebPixelMediaBytes(child: Expression) extends UnaryExpression {
+case class WebPixelMediaBytes(child: Expression) extends KernelExpression {
 
   override def dataType: DataType = BinaryType
   override def prettyName: String = "web_pixel_media_for_id"
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case LongType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires bigint, got ${other.simpleString}")
-  }
-
-  override def nullSafeEval(input: Any): Any =
-    MediaFixtures.webPixelMediaFor(input.asInstanceOf[Long])
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      c => s"graft.operators.MediaFixtures$$.MODULE$$.webPixelMediaFor($c)")
+  override def kernel: Kernel = Kernel(MediaFixtures, "webPixelMediaFor")
 
   override protected def withNewChildInternal(c: Expression): Expression =
     copy(child = c)
@@ -812,22 +609,11 @@ case class WebPixelMediaBytes(child: Expression) extends UnaryExpression {
   * expression, so fixture attachment is not an optimizer barrier either —
   * scan-pushdown and whole-stage codegen survive the whole
   * generate → decode pipeline. */
-case class MediaBytes(child: Expression) extends UnaryExpression {
+case class MediaBytes(child: Expression) extends KernelExpression {
 
   override def dataType: DataType = BinaryType
   override def prettyName: String = "media_for_id"
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case LongType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires bigint, got ${other.simpleString}")
-  }
-
-  override def nullSafeEval(input: Any): Any =
-    MediaFixtures.mediaFor(input.asInstanceOf[Long])
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      c => s"graft.operators.MediaFixtures$$.MODULE$$.mediaFor($c)")
+  override def kernel: Kernel = Kernel(MediaFixtures, "mediaFor")
 
   override protected def withNewChildInternal(c: Expression): Expression =
     copy(child = c)
@@ -839,26 +625,13 @@ case class MediaBytes(child: Expression) extends UnaryExpression {
   * skipping, palette→luminance) reduced to exact per-frame integer
   * statistics — the multi-frame twin of [[PixelStats]]. Dirty or
   * out-of-subset bytes → null. */
-case class GifFrameStats(child: Expression) extends UnaryExpression {
+case class GifFrameStats(child: Expression) extends KernelExpression {
 
   override def dataType: DataType =
     ArrayType(GifFrameStats.frameSchema, containsNull = false)
   override def prettyName: String = "gif_frame_stats"
   override def nullable: Boolean = true
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case BinaryType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires binary, got ${other.simpleString}")
-  }
-
-  override def nullSafeEval(input: Any): Any =
-    GifFrameStats.compute(input.asInstanceOf[Array[Byte]])
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => s"""
-      |${ev.value} = graft.functions.GifFrameStats$$.MODULE$$.compute($c);
-      |${ev.isNull} = ${ev.value} == null;
-      |""".stripMargin)
+  override def kernel: Kernel = Kernel(GifFrameStats, "compute")
 
   override protected def withNewChildInternal(c: Expression): Expression =
     copy(child = c)
@@ -899,26 +672,13 @@ object GifFrameStats {
   * transparency show-through, disposal methods), the delta-frame
   * animation surface per-frame-independent [[GifFrameStats]] cannot
   * express. Dirty bytes → null. */
-case class GifCompositeStats(child: Expression) extends UnaryExpression {
+case class GifCompositeStats(child: Expression) extends KernelExpression {
 
   override def dataType: DataType =
     ArrayType(GifCompositeStats.frameSchema, containsNull = false)
   override def prettyName: String = "gif_composite_stats"
   override def nullable: Boolean = true
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case BinaryType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires binary, got ${other.simpleString}")
-  }
-
-  override def nullSafeEval(input: Any): Any =
-    GifCompositeStats.compute(input.asInstanceOf[Array[Byte]])
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => s"""
-      |${ev.value} = graft.functions.GifCompositeStats$$.MODULE$$.compute($c);
-      |${ev.isNull} = ${ev.value} == null;
-      |""".stripMargin)
+  override def kernel: Kernel = Kernel(GifCompositeStats, "compute")
 
   override protected def withNewChildInternal(c: Expression): Expression =
     copy(child = c)
@@ -954,22 +714,11 @@ object GifCompositeStats {
 /** gif_delta_media_for_id(id) -> binary: the delta-frame animated-GIF
   * fixture bytes ([[graft.operators.MediaFixtures.gifDeltaMediaFor]]
   * — sub-rect frames, transparency holes, disposal 1). */
-case class GifDeltaMediaBytes(child: Expression) extends UnaryExpression {
+case class GifDeltaMediaBytes(child: Expression) extends KernelExpression {
 
   override def dataType: DataType = BinaryType
   override def prettyName: String = "gif_delta_media_for_id"
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case LongType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires bigint, got ${other.simpleString}")
-  }
-
-  override def nullSafeEval(input: Any): Any =
-    MediaFixtures.gifDeltaMediaFor(input.asInstanceOf[Long])
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      c => s"graft.operators.MediaFixtures$$.MODULE$$.gifDeltaMediaFor($c)")
+  override def kernel: Kernel = Kernel(MediaFixtures, "gifDeltaMediaFor")
 
   override protected def withNewChildInternal(c: Expression): Expression =
     copy(child = c)
@@ -978,22 +727,11 @@ case class GifDeltaMediaBytes(child: Expression) extends UnaryExpression {
 /** wav_gain_media_for_id(id) -> binary: the gain-variant audio-dedup
   * fixture bytes ([[graft.operators.MediaFixtures.wavGainMediaFor]] —
   * the same recording at four amplitude levels + unique metadata). */
-case class WavGainMediaBytes(child: Expression) extends UnaryExpression {
+case class WavGainMediaBytes(child: Expression) extends KernelExpression {
 
   override def dataType: DataType = BinaryType
   override def prettyName: String = "wav_gain_media_for_id"
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case LongType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires bigint, got ${other.simpleString}")
-  }
-
-  override def nullSafeEval(input: Any): Any =
-    MediaFixtures.wavGainMediaFor(input.asInstanceOf[Long])
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      c => s"graft.operators.MediaFixtures$$.MODULE$$.wavGainMediaFor($c)")
+  override def kernel: Kernel = Kernel(MediaFixtures, "wavGainMediaFor")
 
   override protected def withNewChildInternal(c: Expression): Expression =
     copy(child = c)
@@ -1002,22 +740,11 @@ case class WavGainMediaBytes(child: Expression) extends UnaryExpression {
 /** bmp_media_for_id(id) -> binary: the pixel-bearing BMP fixture
   * bytes ([[graft.operators.MediaFixtures.bmpMediaFor]] — both row
   * orders, every padding residue). */
-case class BmpMediaBytes(child: Expression) extends UnaryExpression {
+case class BmpMediaBytes(child: Expression) extends KernelExpression {
 
   override def dataType: DataType = BinaryType
   override def prettyName: String = "bmp_media_for_id"
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case LongType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires bigint, got ${other.simpleString}")
-  }
-
-  override def nullSafeEval(input: Any): Any =
-    MediaFixtures.bmpMediaFor(input.asInstanceOf[Long])
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      c => s"graft.operators.MediaFixtures$$.MODULE$$.bmpMediaFor($c)")
+  override def kernel: Kernel = Kernel(MediaFixtures, "bmpMediaFor")
 
   override protected def withNewChildInternal(c: Expression): Expression =
     copy(child = c)
@@ -1026,22 +753,11 @@ case class BmpMediaBytes(child: Expression) extends UnaryExpression {
 /** webp_pixel_media_for_id(id) -> binary: the pixel-bearing LOSSLESS
   * WebP fixture ([[graft.operators.MediaFixtures.webpPixelMediaFor]]
   * — real VP8L streams cycling transforms/cache/LZ77/meta-groups). */
-case class WebpPixelMediaBytes(child: Expression) extends UnaryExpression {
+case class WebpPixelMediaBytes(child: Expression) extends KernelExpression {
 
   override def dataType: DataType = BinaryType
   override def prettyName: String = "webp_pixel_media_for_id"
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case LongType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires bigint, got ${other.simpleString}")
-  }
-
-  override def nullSafeEval(input: Any): Any =
-    MediaFixtures.webpPixelMediaFor(input.asInstanceOf[Long])
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      c => s"graft.operators.MediaFixtures$$.MODULE$$.webpPixelMediaFor($c)")
+  override def kernel: Kernel = Kernel(MediaFixtures, "webpPixelMediaFor")
 
   override protected def withNewChildInternal(c: Expression): Expression =
     copy(child = c)
@@ -1049,22 +765,11 @@ case class WebpPixelMediaBytes(child: Expression) extends UnaryExpression {
 
 /** gif_media_for_id(id) -> binary: the animated-GIF fixture bytes
   * ([[graft.operators.MediaFixtures.gifMediaFor]]). */
-case class GifMediaBytes(child: Expression) extends UnaryExpression {
+case class GifMediaBytes(child: Expression) extends KernelExpression {
 
   override def dataType: DataType = BinaryType
   override def prettyName: String = "gif_media_for_id"
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case LongType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires bigint, got ${other.simpleString}")
-  }
-
-  override def nullSafeEval(input: Any): Any =
-    MediaFixtures.gifMediaFor(input.asInstanceOf[Long])
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      c => s"graft.operators.MediaFixtures$$.MODULE$$.gifMediaFor($c)")
+  override def kernel: Kernel = Kernel(MediaFixtures, "gifMediaFor")
 
   override protected def withNewChildInternal(c: Expression): Expression =
     copy(child = c)
@@ -1078,27 +783,14 @@ case class GifMediaBytes(child: Expression) extends UnaryExpression {
   * Only complete windows are emitted (the trailing partial window is
   * dropped); dirty or out-of-subset bytes → null. */
 case class WavWindows(child: Expression, winFrames: Int)
-    extends UnaryExpression {
+    extends KernelExpression {
   require(winFrames >= 2, s"winFrames must be >= 2, got $winFrames")
 
   override def dataType: DataType =
     ArrayType(WavWindows.windowSchema, containsNull = false)
   override def prettyName: String = "wav_windows"
   override def nullable: Boolean = true
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case BinaryType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires binary, got ${other.simpleString}")
-  }
-
-  override def nullSafeEval(input: Any): Any =
-    WavWindows.compute(input.asInstanceOf[Array[Byte]], winFrames)
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => s"""
-      |${ev.value} = graft.functions.WavWindows$$.MODULE$$.compute($c, $winFrames);
-      |${ev.isNull} = ${ev.value} == null;
-      |""".stripMargin)
+  override def kernel: Kernel = Kernel(WavWindows, "compute", winFrames)
 
   override protected def withNewChildInternal(c: Expression): Expression =
     copy(child = c)
@@ -1157,7 +849,7 @@ object WavWindows {
   * can see — the direct form keeps engine and oracle term-for-term
   * identical). Dirty or out-of-subset bytes → null. */
 case class WavSpectral(child: Expression, winFrames: Int)
-    extends UnaryExpression {
+    extends KernelExpression {
   require(winFrames >= 4 && winFrames % 2 == 0,
     s"winFrames must be even and >= 4, got $winFrames")
 
@@ -1165,20 +857,7 @@ case class WavSpectral(child: Expression, winFrames: Int)
     ArrayType(WavSpectral.windowSchema, containsNull = false)
   override def prettyName: String = "wav_spectral"
   override def nullable: Boolean = true
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case BinaryType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires binary, got ${other.simpleString}")
-  }
-
-  override def nullSafeEval(input: Any): Any =
-    WavSpectral.compute(input.asInstanceOf[Array[Byte]], winFrames)
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => s"""
-      |${ev.value} = graft.functions.WavSpectral$$.MODULE$$.compute($c, $winFrames);
-      |${ev.isNull} = ${ev.value} == null;
-      |""".stripMargin)
+  override def kernel: Kernel = Kernel(WavSpectral, "compute", winFrames)
 
   override protected def withNewChildInternal(c: Expression): Expression =
     copy(child = c)
@@ -1247,7 +926,7 @@ object WavSpectral {
   * oracle — same term-for-term DFT — compares on the 1e-6 grid.
   * Dirty bytes → null. */
 case class WavSpectralFlux(child: Expression, winFrames: Int)
-    extends UnaryExpression {
+    extends KernelExpression {
   require(winFrames >= 4 && winFrames % 2 == 0,
     s"winFrames must be even and >= 4, got $winFrames")
 
@@ -1255,20 +934,7 @@ case class WavSpectralFlux(child: Expression, winFrames: Int)
     ArrayType(WavSpectralFlux.fluxSchema, containsNull = false)
   override def prettyName: String = "wav_spectral_flux"
   override def nullable: Boolean = true
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case BinaryType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires binary, got ${other.simpleString}")
-  }
-
-  override def nullSafeEval(input: Any): Any =
-    WavSpectralFlux.compute(input.asInstanceOf[Array[Byte]], winFrames)
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => s"""
-      |${ev.value} = graft.functions.WavSpectralFlux$$.MODULE$$.compute($c, $winFrames);
-      |${ev.isNull} = ${ev.value} == null;
-      |""".stripMargin)
+  override def kernel: Kernel = Kernel(WavSpectralFlux, "compute", winFrames)
 
   override protected def withNewChildInternal(c: Expression): Expression =
     copy(child = c)
@@ -1334,26 +1000,13 @@ object WavSpectralFlux {
   * shot-boundary/scene-cut signal of a video ingest pipeline, one row
   * per frame pair (frame = the later index). Pairs whose dims differ
   * are skipped (no comparable raster); dirty bytes → null. */
-case class GifFrameDiffs(child: Expression) extends UnaryExpression {
+case class GifFrameDiffs(child: Expression) extends KernelExpression {
 
   override def dataType: DataType =
     ArrayType(GifFrameDiffs.diffSchema, containsNull = false)
   override def prettyName: String = "gif_frame_diffs"
   override def nullable: Boolean = true
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case BinaryType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires binary, got ${other.simpleString}")
-  }
-
-  override def nullSafeEval(input: Any): Any =
-    GifFrameDiffs.compute(input.asInstanceOf[Array[Byte]])
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => s"""
-      |${ev.value} = graft.functions.GifFrameDiffs$$.MODULE$$.compute($c);
-      |${ev.isNull} = ${ev.value} == null;
-      |""".stripMargin)
+  override def kernel: Kernel = Kernel(GifFrameDiffs, "compute")
 
   override protected def withNewChildInternal(c: Expression): Expression =
     copy(child = c)
@@ -1394,26 +1047,13 @@ object GifFrameDiffs {
   * ([[GifFrameStats]]' codec) as raw bytes — the input shape for
   * frame-level dedup/fingerprinting across a video corpus. Dirty
   * bytes → null. */
-case class GifFrameBytes(child: Expression) extends UnaryExpression {
+case class GifFrameBytes(child: Expression) extends KernelExpression {
 
   override def dataType: DataType =
     ArrayType(GifFrameBytes.frameSchema, containsNull = false)
   override def prettyName: String = "gif_frame_bytes"
   override def nullable: Boolean = true
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case BinaryType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires binary, got ${other.simpleString}")
-  }
-
-  override def nullSafeEval(input: Any): Any =
-    GifFrameBytes.compute(input.asInstanceOf[Array[Byte]])
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => s"""
-      |${ev.value} = graft.functions.GifFrameBytes$$.MODULE$$.compute($c);
-      |${ev.isNull} = ${ev.value} == null;
-      |""".stripMargin)
+  override def kernel: Kernel = Kernel(GifFrameBytes, "compute")
 
   override protected def withNewChildInternal(c: Expression): Expression =
     copy(child = c)
@@ -1449,25 +1089,12 @@ object GifFrameBytes {
   * audio dedup: two files whose containers differ (metadata chunks,
   * chunk order) but whose samples match hash identically here, where
   * a byte-level file hash would miss them. Dirty bytes → null. */
-case class WavPcmBytes(child: Expression) extends UnaryExpression {
+case class WavPcmBytes(child: Expression) extends KernelExpression {
 
   override def dataType: DataType = WavPcmBytes.schema
   override def prettyName: String = "wav_pcm_bytes"
   override def nullable: Boolean = true
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case BinaryType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires binary, got ${other.simpleString}")
-  }
-
-  override def nullSafeEval(input: Any): Any =
-    WavPcmBytes.compute(input.asInstanceOf[Array[Byte]])
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => s"""
-      |${ev.value} = graft.functions.WavPcmBytes$$.MODULE$$.compute($c);
-      |${ev.isNull} = ${ev.value} == null;
-      |""".stripMargin)
+  override def kernel: Kernel = Kernel(WavPcmBytes, "compute")
 
   override protected def withNewChildInternal(c: Expression): Expression =
     copy(child = c)
@@ -1500,22 +1127,11 @@ object WavPcmBytes {
   * fixture ([[graft.operators.MediaFixtures.wavTaggedMediaFor]]) —
   * PCM content seeded by id % 8, but a per-id LIST metadata chunk
   * spliced into the container so the FILE bytes are all distinct. */
-case class WavTaggedMediaBytes(child: Expression) extends UnaryExpression {
+case class WavTaggedMediaBytes(child: Expression) extends KernelExpression {
 
   override def dataType: DataType = BinaryType
   override def prettyName: String = "wav_tagged_media_for_id"
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case LongType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires bigint, got ${other.simpleString}")
-  }
-
-  override def nullSafeEval(input: Any): Any =
-    MediaFixtures.wavTaggedMediaFor(input.asInstanceOf[Long])
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      c => s"graft.operators.MediaFixtures$$.MODULE$$.wavTaggedMediaFor($c)")
+  override def kernel: Kernel = Kernel(MediaFixtures, "wavTaggedMediaFor")
 
   override protected def withNewChildInternal(c: Expression): Expression =
     copy(child = c)
@@ -1523,22 +1139,11 @@ case class WavTaggedMediaBytes(child: Expression) extends UnaryExpression {
 
 /** avi_media_for_id(id) -> binary: the MJPEG-AVI container-video
   * fixture bytes ([[graft.operators.MediaFixtures.aviMediaFor]]). */
-case class AviMediaBytes(child: Expression) extends UnaryExpression {
+case class AviMediaBytes(child: Expression) extends KernelExpression {
 
   override def dataType: DataType = BinaryType
   override def prettyName: String = "avi_media_for_id"
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case LongType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires bigint, got ${other.simpleString}")
-  }
-
-  override def nullSafeEval(input: Any): Any =
-    MediaFixtures.aviMediaFor(input.asInstanceOf[Long])
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      c => s"graft.operators.MediaFixtures$$.MODULE$$.aviMediaFor($c)")
+  override def kernel: Kernel = Kernel(MediaFixtures, "aviMediaFor")
 
   override protected def withNewChildInternal(c: Expression): Expression =
     copy(child = c)
@@ -1546,22 +1151,11 @@ case class AviMediaBytes(child: Expression) extends UnaryExpression {
 
 /** avi_av_media_for_id(id) -> binary: the mixed-track audio+video AVI
   * fixture bytes ([[graft.operators.MediaFixtures.aviAvMediaFor]]). */
-case class AviAvMediaBytes(child: Expression) extends UnaryExpression {
+case class AviAvMediaBytes(child: Expression) extends KernelExpression {
 
   override def dataType: DataType = BinaryType
   override def prettyName: String = "avi_av_media_for_id"
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case LongType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires bigint, got ${other.simpleString}")
-  }
-
-  override def nullSafeEval(input: Any): Any =
-    MediaFixtures.aviAvMediaFor(input.asInstanceOf[Long])
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      c => s"graft.operators.MediaFixtures$$.MODULE$$.aviAvMediaFor($c)")
+  override def kernel: Kernel = Kernel(MediaFixtures, "aviAvMediaFor")
 
   override protected def withNewChildInternal(c: Expression): Expression =
     copy(child = c)
@@ -1574,25 +1168,12 @@ case class AviAvMediaBytes(child: Expression) extends UnaryExpression {
   * JPEG/PCM decode ([[graft.operators.Avi.meta]]), the AVI face of
   * `webm_meta`/`ivf_meta` for the crawl census. Null for non-AVI or
   * structurally broken bytes. */
-case class AviMetaExpr(child: Expression) extends UnaryExpression {
+case class AviMetaExpr(child: Expression) extends KernelExpression {
 
   override def dataType: DataType = AviMetaExpr.schema
   override def nullable: Boolean = true
   override def prettyName: String = "avi_meta"
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case BinaryType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires binary, got ${other.simpleString}")
-  }
-
-  override def nullSafeEval(input: Any): Any =
-    AviMetaExpr.compute(input.asInstanceOf[Array[Byte]])
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => s"""
-      ${ev.value} = graft.functions.AviMetaExpr$$.MODULE$$.compute($c);
-      ${ev.isNull} = (${ev.value} == null);
-    """)
+  override def kernel: Kernel = Kernel(AviMetaExpr, "compute")
 
   override protected def withNewChildInternal(c: Expression): Expression =
     copy(child = c)
@@ -1628,25 +1209,12 @@ object AviMetaExpr {
   * to exact integer statistics. Dirty bytes, out-of-subset streams,
   * or a missing audio track → null (the query contract is the MIXED
   * container; video-only stats are [[AviFrameStats]]). */
-case class AviAvFeatures(child: Expression) extends UnaryExpression {
+case class AviAvFeatures(child: Expression) extends KernelExpression {
 
   override def dataType: DataType = AviAvFeatures.schema
   override def prettyName: String = "avi_av_features"
   override def nullable: Boolean = true
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case BinaryType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires binary, got ${other.simpleString}")
-  }
-
-  override def nullSafeEval(input: Any): Any =
-    AviAvFeatures.compute(input.asInstanceOf[Array[Byte]])
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => s"""
-      |${ev.value} = graft.functions.AviAvFeatures$$.MODULE$$.compute($c);
-      |${ev.isNull} = ${ev.value} == null;
-      |""".stripMargin)
+  override def kernel: Kernel = Kernel(AviAvFeatures, "compute")
 
   override protected def withNewChildInternal(c: Expression): Expression =
     copy(child = c)
@@ -1701,27 +1269,14 @@ object AviAvFeatures {
   * the resampled audio flows through every WAV kernel unchanged. Dirty
   * bytes → null. */
 case class WavResample(child: Expression, dstRate: Int)
-    extends UnaryExpression {
+    extends KernelExpression {
   require(dstRate > 0 && dstRate <= 1000000,
     s"dstRate must be in (0, 1e6], got $dstRate")
 
   override def dataType: DataType = BinaryType
   override def prettyName: String = "wav_resample"
   override def nullable: Boolean = true
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case BinaryType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires binary, got ${other.simpleString}")
-  }
-
-  override def nullSafeEval(input: Any): Any =
-    WavResample.compute(input.asInstanceOf[Array[Byte]], dstRate)
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => s"""
-      |${ev.value} = graft.functions.WavResample$$.MODULE$$.compute($c, $dstRate);
-      |${ev.isNull} = ${ev.value} == null;
-      |""".stripMargin)
+  override def kernel: Kernel = Kernel(WavResample, "compute", dstRate)
 
   override protected def withNewChildInternal(c: Expression): Expression =
     copy(child = c)
@@ -1739,28 +1294,14 @@ object WavResample {
   * sign·(|v|·peak/maxAbs) contract), so normalized audio flows
   * through every WAV kernel unchanged. Dirty bytes → null. */
 case class WavNormalize(child: Expression, targetPeak: Int)
-    extends UnaryExpression {
+    extends KernelExpression {
   require(targetPeak >= 1 && targetPeak <= 32767,
     s"targetPeak must be in [1, 32767], got $targetPeak")
 
   override def dataType: DataType = BinaryType
   override def prettyName: String = "wav_normalize"
   override def nullable: Boolean = true
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case BinaryType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires binary, got ${other.simpleString}")
-  }
-
-  override def nullSafeEval(input: Any): Any =
-    WavNormalize.compute(input.asInstanceOf[Array[Byte]], targetPeak)
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => s"""
-      |${ev.value} = graft.functions.WavNormalize$$.MODULE$$.compute(
-      |  $c, $targetPeak);
-      |${ev.isNull} = ${ev.value} == null;
-      |""".stripMargin)
+  override def kernel: Kernel = Kernel(WavNormalize, "compute", targetPeak)
 
   override protected def withNewChildInternal(c: Expression): Expression =
     copy(child = c)
@@ -1772,25 +1313,12 @@ object WavNormalize {
     graft.operators.WavPcm.normalize(bytes, targetPeak).orNull
 }
 
-case class AviAudioWav(child: Expression) extends UnaryExpression {
+case class AviAudioWav(child: Expression) extends KernelExpression {
 
   override def dataType: DataType = BinaryType
   override def prettyName: String = "avi_audio_wav"
   override def nullable: Boolean = true
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case BinaryType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires binary, got ${other.simpleString}")
-  }
-
-  override def nullSafeEval(input: Any): Any =
-    AviAudioWav.compute(input.asInstanceOf[Array[Byte]])
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => s"""
-      |${ev.value} = graft.functions.AviAudioWav$$.MODULE$$.compute($c);
-      |${ev.isNull} = ${ev.value} == null;
-      |""".stripMargin)
+  override def kernel: Kernel = Kernel(AviAudioWav, "compute")
 
   override protected def withNewChildInternal(c: Expression): Expression =
     copy(child = c)
@@ -1818,26 +1346,13 @@ object AviAudioWav {
   * RAW component samples (all channels), so the oracle re-derives it
   * straight from the block contract. Dirty or out-of-subset bytes →
   * null. */
-case class AviFrameStats(child: Expression) extends UnaryExpression {
+case class AviFrameStats(child: Expression) extends KernelExpression {
 
   override def dataType: DataType =
     ArrayType(AviFrameStats.frameSchema, containsNull = false)
   override def prettyName: String = "avi_frame_stats"
   override def nullable: Boolean = true
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case BinaryType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires binary, got ${other.simpleString}")
-  }
-
-  override def nullSafeEval(input: Any): Any =
-    AviFrameStats.compute(input.asInstanceOf[Array[Byte]])
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => s"""
-      |${ev.value} = graft.functions.AviFrameStats$$.MODULE$$.compute($c);
-      |${ev.isNull} = ${ev.value} == null;
-      |""".stripMargin)
+  override def kernel: Kernel = Kernel(AviFrameStats, "compute")
 
   override protected def withNewChildInternal(c: Expression): Expression =
     copy(child = c)
@@ -1878,26 +1393,13 @@ object AviFrameStats {
   * the scene-cut signal of [[GifFrameDiffs]] applied to container
   * video. One row per frame pair (frame = the later index); pairs
   * whose dims differ are skipped; dirty bytes → null. */
-case class AviFrameDiffs(child: Expression) extends UnaryExpression {
+case class AviFrameDiffs(child: Expression) extends KernelExpression {
 
   override def dataType: DataType =
     ArrayType(GifFrameDiffs.diffSchema, containsNull = false)
   override def prettyName: String = "avi_frame_diffs"
   override def nullable: Boolean = true
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case BinaryType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires binary, got ${other.simpleString}")
-  }
-
-  override def nullSafeEval(input: Any): Any =
-    AviFrameDiffs.compute(input.asInstanceOf[Array[Byte]])
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => s"""
-      |${ev.value} = graft.functions.AviFrameDiffs$$.MODULE$$.compute($c);
-      |${ev.isNull} = ${ev.value} == null;
-      |""".stripMargin)
+  override def kernel: Kernel = Kernel(AviFrameDiffs, "compute")
 
   override protected def withNewChildInternal(c: Expression): Expression =
     copy(child = c)

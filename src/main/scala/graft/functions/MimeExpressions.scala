@@ -1,9 +1,7 @@
 package graft.functions
 
 import graft.operators.{MediaFixtures, Mime}
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -12,25 +10,12 @@ import org.apache.spark.unsafe.types.UTF8String
   * unfolding, RFC 2047 encoded-word decoding, base64/quoted-printable
   * reversal, multipart traversal; `text` is the join of the
   * text/plain leaves ([[Mime.parse]]). Dirty bytes → null. */
-case class MimeMessage(child: Expression) extends UnaryExpression {
+case class MimeMessage(child: Expression) extends KernelExpression {
 
   override def dataType: DataType = MimeMessage.schema
   override def prettyName: String = "mime_message"
   override def nullable: Boolean = true
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case BinaryType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires binary, got ${other.simpleString}")
-  }
-
-  override def nullSafeEval(input: Any): Any =
-    MimeMessage.compute(input.asInstanceOf[Array[Byte]])
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => s"""
-      |${ev.value} = graft.functions.MimeMessage$$.MODULE$$.compute($c);
-      |${ev.isNull} = ${ev.value} == null;
-      |""".stripMargin)
+  override def kernel: Kernel = Kernel(MimeMessage, "compute")
 
   override protected def withNewChildInternal(c: Expression): Expression =
     copy(child = c)
@@ -62,22 +47,11 @@ object MimeMessage {
 
 /** eml_media_for_id(id) -> binary ([[MediaFixtures.emlMediaFor]] —
   * QP / multipart+base64 / plain messages cycling by id). */
-case class EmlMediaBytes(child: Expression) extends UnaryExpression {
+case class EmlMediaBytes(child: Expression) extends KernelExpression {
 
   override def dataType: DataType = BinaryType
   override def prettyName: String = "eml_media_for_id"
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case LongType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires bigint, got ${other.simpleString}")
-  }
-
-  override def nullSafeEval(input: Any): Any =
-    MediaFixtures.emlMediaFor(input.asInstanceOf[Long])
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      c => s"graft.operators.MediaFixtures$$.MODULE$$.emlMediaFor($c)")
+  override def kernel: Kernel = Kernel(MediaFixtures, "emlMediaFor")
 
   override protected def withNewChildInternal(c: Expression): Expression =
     copy(child = c)

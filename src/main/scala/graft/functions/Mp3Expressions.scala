@@ -1,9 +1,7 @@
 package graft.functions
 
 import graft.operators.{MediaFixtures, Mp3}
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -13,25 +11,12 @@ import org.apache.spark.unsafe.types.UTF8String
   * payload entropy decode stays behind the external-codec seam; the
   * metadata a pipeline filters on is fully real. Dirty bytes →
   * null. */
-case class Mp3Meta(child: Expression) extends UnaryExpression {
+case class Mp3Meta(child: Expression) extends KernelExpression {
 
   override def dataType: DataType = Mp3Meta.schema
   override def prettyName: String = "mp3_meta"
   override def nullable: Boolean = true
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case BinaryType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires binary, got ${other.simpleString}")
-  }
-
-  override def nullSafeEval(input: Any): Any =
-    Mp3Meta.compute(input.asInstanceOf[Array[Byte]])
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => s"""
-      |${ev.value} = graft.functions.Mp3Meta$$.MODULE$$.compute($c);
-      |${ev.isNull} = ${ev.value} == null;
-      |""".stripMargin)
+  override def kernel: Kernel = Kernel(Mp3Meta, "compute")
 
   override protected def withNewChildInternal(c: Expression): Expression =
     copy(child = c)
@@ -60,22 +45,11 @@ object Mp3Meta {
 
 /** mp3_media_for_id(id) -> binary: the MP3 fixture bytes
   * ([[MediaFixtures.mp3MediaFor]]). */
-case class Mp3MediaBytes(child: Expression) extends UnaryExpression {
+case class Mp3MediaBytes(child: Expression) extends KernelExpression {
 
   override def dataType: DataType = BinaryType
   override def prettyName: String = "mp3_media_for_id"
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case LongType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires bigint, got ${other.simpleString}")
-  }
-
-  override def nullSafeEval(input: Any): Any =
-    MediaFixtures.mp3MediaFor(input.asInstanceOf[Long])
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      c => s"graft.operators.MediaFixtures$$.MODULE$$.mp3MediaFor($c)")
+  override def kernel: Kernel = Kernel(MediaFixtures, "mp3MediaFor")
 
   override protected def withNewChildInternal(c: Expression): Expression =
     copy(child = c)
@@ -83,22 +57,11 @@ case class Mp3MediaBytes(child: Expression) extends UnaryExpression {
 
 /** ulaw_media_for_id(id) -> binary: the G.711 µ-law WAV fixture bytes
   * ([[MediaFixtures.ulawMediaFor]]). */
-case class UlawMediaBytes(child: Expression) extends UnaryExpression {
+case class UlawMediaBytes(child: Expression) extends KernelExpression {
 
   override def dataType: DataType = BinaryType
   override def prettyName: String = "ulaw_media_for_id"
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case LongType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires bigint, got ${other.simpleString}")
-  }
-
-  override def nullSafeEval(input: Any): Any =
-    MediaFixtures.ulawMediaFor(input.asInstanceOf[Long])
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      c => s"graft.operators.MediaFixtures$$.MODULE$$.ulawMediaFor($c)")
+  override def kernel: Kernel = Kernel(MediaFixtures, "ulawMediaFor")
 
   override protected def withNewChildInternal(c: Expression): Expression =
     copy(child = c)
@@ -106,22 +69,11 @@ case class UlawMediaBytes(child: Expression) extends UnaryExpression {
 
 /** webp_media_for_id(id) -> binary: the WebP container fixture bytes
   * ([[MediaFixtures.webpMediaFor]] — VP8 /VP8L/VP8X cycling). */
-case class WebpMediaBytes(child: Expression) extends UnaryExpression {
+case class WebpMediaBytes(child: Expression) extends KernelExpression {
 
   override def dataType: DataType = BinaryType
   override def prettyName: String = "webp_media_for_id"
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case LongType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires bigint, got ${other.simpleString}")
-  }
-
-  override def nullSafeEval(input: Any): Any =
-    MediaFixtures.webpMediaFor(input.asInstanceOf[Long])
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      c => s"graft.operators.MediaFixtures$$.MODULE$$.webpMediaFor($c)")
+  override def kernel: Kernel = Kernel(MediaFixtures, "webpMediaFor")
 
   override protected def withNewChildInternal(c: Expression): Expression =
     copy(child = c)

@@ -1,9 +1,7 @@
 package graft.functions
 
 import graft.operators.{Mp3Fixtures, Mp3Pcm, WavPcm}
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.types._
 
@@ -17,25 +15,12 @@ import org.apache.spark.sql.types._
   * dedup) serves MP3 crawl audio unchanged. Dirty, truncated or
   * out-of-honest-subset bytes (unshipped Huffman table, Layer I/II,
   * free format) → null, never a throw. */
-case class Mp3Wav(child: Expression) extends UnaryExpression {
+case class Mp3Wav(child: Expression) extends KernelExpression {
 
   override def dataType: DataType = BinaryType
   override def prettyName: String = "mp3_wav"
   override def nullable: Boolean = true
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case BinaryType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires binary, got ${other.simpleString}")
-  }
-
-  override def nullSafeEval(input: Any): Any =
-    Mp3Wav.compute(input.asInstanceOf[Array[Byte]])
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => s"""
-      |${ev.value} = graft.functions.Mp3Wav$$.MODULE$$.compute($c);
-      |${ev.isNull} = ${ev.value} == null;
-      |""".stripMargin)
+  override def kernel: Kernel = Kernel(Mp3Wav, "compute")
 
   override protected def withNewChildInternal(c: Expression): Expression =
     copy(child = c)
@@ -55,25 +40,12 @@ object Mp3Wav {
   * pin the conformance invariants (granule bit-exactness, reservoir
   * behavior, sample math) in the oracle hash — a decode regression
   * anywhere in the chain changes these values. */
-case class Mp3Conformance(child: Expression) extends UnaryExpression {
+case class Mp3Conformance(child: Expression) extends KernelExpression {
 
   override def dataType: DataType = Mp3Conformance.schema
   override def prettyName: String = "mp3_conformance"
   override def nullable: Boolean = true
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case BinaryType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires binary, got ${other.simpleString}")
-  }
-
-  override def nullSafeEval(input: Any): Any =
-    Mp3Conformance.compute(input.asInstanceOf[Array[Byte]])
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => s"""
-      |${ev.value} = (InternalRow) graft.functions.Mp3Conformance$$.MODULE$$.compute($c);
-      |${ev.isNull} = ${ev.value} == null;
-      |""".stripMargin)
+  override def kernel: Kernel = Kernel(Mp3Conformance, "compute")
 
   override protected def withNewChildInternal(c: Expression): Expression =
     copy(child = c)
@@ -106,25 +78,12 @@ object Mp3Conformance {
   * rather than guessing, and this expression turns that honest
   * boundary into a per-file number a curation pipeline can filter and
   * aggregate on. */
-case class Mp3CoverageExpr(child: Expression) extends UnaryExpression {
+case class Mp3CoverageExpr(child: Expression) extends KernelExpression {
 
   override def dataType: DataType = Mp3CoverageExpr.schema
   override def prettyName: String = "mp3_coverage"
   override def nullable: Boolean = true
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case BinaryType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires binary, got ${other.simpleString}")
-  }
-
-  override def nullSafeEval(input: Any): Any =
-    Mp3CoverageExpr.compute(input.asInstanceOf[Array[Byte]])
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => s"""
-      |${ev.value} = (InternalRow) graft.functions.Mp3CoverageExpr$$.MODULE$$.compute($c);
-      |${ev.isNull} = ${ev.value} == null;
-      |""".stripMargin)
+  override def kernel: Kernel = Kernel(Mp3CoverageExpr, "compute")
 
   override protected def withNewChildInternal(c: Expression): Expression =
     copy(child = c)
@@ -155,22 +114,11 @@ object Mp3CoverageExpr {
   * the LSF code-sharing aliases 17/22/25) with claimed-but-unemitted
   * big values — parseable side info, deliberately undecodable
   * payload. */
-case class Mp3CoverageMediaBytes(child: Expression) extends UnaryExpression {
+case class Mp3CoverageMediaBytes(child: Expression) extends KernelExpression {
 
   override def dataType: DataType = BinaryType
   override def prettyName: String = "mp3_coverage_media_for_id"
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case LongType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires bigint, got ${other.simpleString}")
-  }
-
-  override def nullSafeEval(input: Any): Any =
-    Mp3Fixtures.mp3CoverageMediaFor(input.asInstanceOf[Long])
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      c => s"graft.operators.Mp3Fixtures$$.MODULE$$.mp3CoverageMediaFor($c)")
+  override def kernel: Kernel = Kernel(Mp3Fixtures, "mp3CoverageMediaFor")
 
   override protected def withNewChildInternal(c: Expression): Expression =
     copy(child = c)
@@ -181,22 +129,11 @@ case class Mp3CoverageMediaBytes(child: Expression) extends UnaryExpression {
   * writer-assembled content streams ([[Mp3Fixtures]]). Distinct from
   * `mp3_media_for_id` (the header-triage filler fixtures of
   * [[Mp3Expressions]], whose payloads are not decodable). */
-case class Mp3PcmMediaBytes(child: Expression) extends UnaryExpression {
+case class Mp3PcmMediaBytes(child: Expression) extends KernelExpression {
 
   override def dataType: DataType = BinaryType
   override def prettyName: String = "mp3_pcm_media_for_id"
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case LongType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires bigint, got ${other.simpleString}")
-  }
-
-  override def nullSafeEval(input: Any): Any =
-    Mp3Fixtures.mp3MediaFor(input.asInstanceOf[Long])
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      c => s"graft.operators.Mp3Fixtures$$.MODULE$$.mp3MediaFor($c)")
+  override def kernel: Kernel = Kernel(Mp3Fixtures, "mp3MediaFor")
 
   override protected def withNewChildInternal(c: Expression): Expression =
     copy(child = c)

@@ -1,9 +1,7 @@
 package graft.functions
 
 import graft.operators.{MediaFixtures, Mp4}
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -13,26 +11,13 @@ import org.apache.spark.unsafe.types.UTF8String
   * JPEG entropy decode per MJPEG sample, reduced to the SAME per-frame
   * stats shape as `avi_frame_stats` — one codegen'd kernel riding the
   * scan, dirty bytes → null. */
-case class Mp4FrameStats(child: Expression) extends UnaryExpression {
+case class Mp4FrameStats(child: Expression) extends KernelExpression {
 
   override def dataType: DataType =
     ArrayType(AviFrameStats.frameSchema, containsNull = false)
   override def prettyName: String = "mp4_frame_stats"
   override def nullable: Boolean = true
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case BinaryType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires binary, got ${other.simpleString}")
-  }
-
-  override def nullSafeEval(input: Any): Any =
-    Mp4FrameStats.compute(input.asInstanceOf[Array[Byte]])
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => s"""
-      |${ev.value} = graft.functions.Mp4FrameStats$$.MODULE$$.compute($c);
-      |${ev.isNull} = ${ev.value} == null;
-      |""".stripMargin)
+  override def kernel: Kernel = Kernel(Mp4FrameStats, "compute")
 
   override protected def withNewChildInternal(c: Expression): Expression =
     copy(child = c)
@@ -65,25 +50,12 @@ object Mp4FrameStats {
   * triage surface: an `avc1`/`mp4a` track the sandbox cannot
   * entropy-decode still yields fourcc, dims, channels/rate, timescale,
   * duration and sample count from the real box walk. */
-case class Mp4Meta(child: Expression) extends UnaryExpression {
+case class Mp4Meta(child: Expression) extends KernelExpression {
 
   override def dataType: DataType = ArrayType(Mp4Meta.trackSchema, containsNull = false)
   override def prettyName: String = "mp4_meta"
   override def nullable: Boolean = true
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case BinaryType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires binary, got ${other.simpleString}")
-  }
-
-  override def nullSafeEval(input: Any): Any =
-    Mp4Meta.compute(input.asInstanceOf[Array[Byte]])
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => s"""
-      |${ev.value} = graft.functions.Mp4Meta$$.MODULE$$.compute($c);
-      |${ev.isNull} = ${ev.value} == null;
-      |""".stripMargin)
+  override def kernel: Kernel = Kernel(Mp4Meta, "compute")
 
   override protected def withNewChildInternal(c: Expression): Expression =
     copy(child = c)
@@ -124,22 +96,11 @@ object Mp4Meta {
 
 /** mp4_media_for_id(id) -> binary: the MJPEG-MP4 fixture bytes
   * ([[MediaFixtures.mp4MediaFor]]). */
-case class Mp4MediaBytes(child: Expression) extends UnaryExpression {
+case class Mp4MediaBytes(child: Expression) extends KernelExpression {
 
   override def dataType: DataType = BinaryType
   override def prettyName: String = "mp4_media_for_id"
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case LongType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires bigint, got ${other.simpleString}")
-  }
-
-  override def nullSafeEval(input: Any): Any =
-    MediaFixtures.mp4MediaFor(input.asInstanceOf[Long])
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      c => s"graft.operators.MediaFixtures$$.MODULE$$.mp4MediaFor($c)")
+  override def kernel: Kernel = Kernel(MediaFixtures, "mp4MediaFor")
 
   override protected def withNewChildInternal(c: Expression): Expression =
     copy(child = c)
@@ -147,22 +108,11 @@ case class Mp4MediaBytes(child: Expression) extends UnaryExpression {
 
 /** mp4_multi_media_for_id(id) -> binary: the multi-track MP4 metadata
   * fixture bytes ([[MediaFixtures.mp4MultiMediaFor]]). */
-case class Mp4MultiMediaBytes(child: Expression) extends UnaryExpression {
+case class Mp4MultiMediaBytes(child: Expression) extends KernelExpression {
 
   override def dataType: DataType = BinaryType
   override def prettyName: String = "mp4_multi_media_for_id"
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case LongType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires bigint, got ${other.simpleString}")
-  }
-
-  override def nullSafeEval(input: Any): Any =
-    MediaFixtures.mp4MultiMediaFor(input.asInstanceOf[Long])
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      c => s"graft.operators.MediaFixtures$$.MODULE$$.mp4MultiMediaFor($c)")
+  override def kernel: Kernel = Kernel(MediaFixtures, "mp4MultiMediaFor")
 
   override protected def withNewChildInternal(c: Expression): Expression =
     copy(child = c)

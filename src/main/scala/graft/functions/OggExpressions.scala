@@ -1,9 +1,7 @@
 package graft.functions
 
 import graft.operators.{MediaFixtures, Ogg}
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -12,25 +10,12 @@ import org.apache.spark.unsafe.types.UTF8String
   * CRC-32 verified (Ogg polynomial, crc field zeroed), lacing-table
   * packet accounting, and Vorbis/Opus identification from the BOS
   * packet ([[Ogg.parse]]). Dirty bytes → null. */
-case class OggMeta(child: Expression) extends UnaryExpression {
+case class OggMeta(child: Expression) extends KernelExpression {
 
   override def dataType: DataType = OggMeta.schema
   override def prettyName: String = "ogg_meta"
   override def nullable: Boolean = true
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case BinaryType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires binary, got ${other.simpleString}")
-  }
-
-  override def nullSafeEval(input: Any): Any =
-    OggMeta.compute(input.asInstanceOf[Array[Byte]])
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => s"""
-      |${ev.value} = graft.functions.OggMeta$$.MODULE$$.compute($c);
-      |${ev.isNull} = ${ev.value} == null;
-      |""".stripMargin)
+  override def kernel: Kernel = Kernel(OggMeta, "compute")
 
   override protected def withNewChildInternal(c: Expression): Expression =
     copy(child = c)
@@ -57,22 +42,11 @@ object OggMeta {
 
 /** ogg_media_for_id(id) -> binary ([[MediaFixtures.oggMediaFor]] —
   * Vorbis/Opus alternating, closed-form page/packet/granule shapes). */
-case class OggMediaBytes(child: Expression) extends UnaryExpression {
+case class OggMediaBytes(child: Expression) extends KernelExpression {
 
   override def dataType: DataType = BinaryType
   override def prettyName: String = "ogg_media_for_id"
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case LongType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires bigint, got ${other.simpleString}")
-  }
-
-  override def nullSafeEval(input: Any): Any =
-    MediaFixtures.oggMediaFor(input.asInstanceOf[Long])
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      c => s"graft.operators.MediaFixtures$$.MODULE$$.oggMediaFor($c)")
+  override def kernel: Kernel = Kernel(MediaFixtures, "oggMediaFor")
 
   override protected def withNewChildInternal(c: Expression): Expression =
     copy(child = c)

@@ -1,9 +1,7 @@
 package graft.functions
 
 import graft.operators.{MediaFixtures, ParquetMeta}
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow}
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
@@ -13,25 +11,12 @@ import org.apache.spark.unsafe.types.UTF8String
   * of a parquet BLOB via a real Thrift compact-protocol decode of
   * FileMetaData ([[ParquetMeta.parse]]) — no table mount, no column
   * reads, just the tail bytes. Dirty bytes → null. */
-case class ParquetMetaExpr(child: Expression) extends UnaryExpression {
+case class ParquetMetaExpr(child: Expression) extends KernelExpression {
 
   override def dataType: DataType = ParquetMetaExpr.schema
   override def prettyName: String = "parquet_meta"
   override def nullable: Boolean = true
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case BinaryType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires binary, got ${other.simpleString}")
-  }
-
-  override def nullSafeEval(input: Any): Any =
-    ParquetMetaExpr.compute(input.asInstanceOf[Array[Byte]])
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => s"""
-      |${ev.value} = graft.functions.ParquetMetaExpr$$.MODULE$$.compute($c);
-      |${ev.isNull} = ${ev.value} == null;
-      |""".stripMargin)
+  override def kernel: Kernel = Kernel(ParquetMetaExpr, "compute")
 
   override protected def withNewChildInternal(c: Expression): Expression =
     copy(child = c)
@@ -61,22 +46,11 @@ object ParquetMetaExpr {
 
 /** parquet_media_for_id(id) -> binary ([[MediaFixtures
   * .parquetMediaFor]] — footer-complete parquet blobs). */
-case class ParquetMediaBytes(child: Expression) extends UnaryExpression {
+case class ParquetMediaBytes(child: Expression) extends KernelExpression {
 
   override def dataType: DataType = BinaryType
   override def prettyName: String = "parquet_media_for_id"
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case LongType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires bigint, got ${other.simpleString}")
-  }
-
-  override def nullSafeEval(input: Any): Any =
-    MediaFixtures.parquetMediaFor(input.asInstanceOf[Long])
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      c => s"graft.operators.MediaFixtures$$.MODULE$$.parquetMediaFor($c)")
+  override def kernel: Kernel = Kernel(MediaFixtures, "parquetMediaFor")
 
   override protected def withNewChildInternal(c: Expression): Expression =
     copy(child = c)

@@ -1,9 +1,7 @@
 package graft.functions
 
 import graft.operators.{MediaFixtures, Pdf}
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -13,25 +11,12 @@ import org.apache.spark.unsafe.types.UTF8String
   * ([[Pdf.text]]). One parse serves both fields. Encrypted files,
   * xref streams, and non-Flate filters are out of subset → null, as
   * are dirty bytes. */
-case class PdfText(child: Expression) extends UnaryExpression {
+case class PdfText(child: Expression) extends KernelExpression {
 
   override def dataType: DataType = PdfText.schema
   override def prettyName: String = "pdf_text"
   override def nullable: Boolean = true
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case BinaryType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires binary, got ${other.simpleString}")
-  }
-
-  override def nullSafeEval(input: Any): Any =
-    PdfText.compute(input.asInstanceOf[Array[Byte]])
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => s"""
-      |${ev.value} = graft.functions.PdfText$$.MODULE$$.compute($c);
-      |${ev.isNull} = ${ev.value} == null;
-      |""".stripMargin)
+  override def kernel: Kernel = Kernel(PdfText, "compute")
 
   override protected def withNewChildInternal(c: Expression): Expression =
     copy(child = c)
@@ -53,22 +38,11 @@ object PdfText {
 
 /** pdf_media_for_id(id) -> binary ([[MediaFixtures.pdfMediaFor]] —
   * complete spec-valid PDFs, Flate on odd ids). */
-case class PdfMediaBytes(child: Expression) extends UnaryExpression {
+case class PdfMediaBytes(child: Expression) extends KernelExpression {
 
   override def dataType: DataType = BinaryType
   override def prettyName: String = "pdf_media_for_id"
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case LongType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires bigint, got ${other.simpleString}")
-  }
-
-  override def nullSafeEval(input: Any): Any =
-    MediaFixtures.pdfMediaFor(input.asInstanceOf[Long])
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      c => s"graft.operators.MediaFixtures$$.MODULE$$.pdfMediaFor($c)")
+  override def kernel: Kernel = Kernel(MediaFixtures, "pdfMediaFor")
 
   override protected def withNewChildInternal(c: Expression): Expression =
     copy(child = c)
@@ -80,26 +54,13 @@ case class PdfMediaBytes(child: Expression) extends UnaryExpression {
   * JPEG files — route to jpeg_stats/pixel decode); Flate payloads
   * come out as raw samples. Dirty bytes or an unsupported image
   * filter → null (never a partial inventory). */
-case class PdfImages(child: Expression) extends UnaryExpression {
+case class PdfImages(child: Expression) extends KernelExpression {
 
   override def dataType: DataType =
     ArrayType(PdfImages.imageSchema, containsNull = false)
   override def prettyName: String = "pdf_images"
   override def nullable: Boolean = true
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case BinaryType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires binary, got ${other.simpleString}")
-  }
-
-  override def nullSafeEval(input: Any): Any =
-    PdfImages.compute(input.asInstanceOf[Array[Byte]])
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => s"""
-      |${ev.value} = graft.functions.PdfImages$$.MODULE$$.compute($c);
-      |${ev.isNull} = ${ev.value} == null;
-      |""".stripMargin)
+  override def kernel: Kernel = Kernel(PdfImages, "compute")
 
   override protected def withNewChildInternal(c: Expression): Expression =
     copy(child = c)
@@ -138,22 +99,11 @@ object PdfImages {
   * the one-number integrity/energy statistic for an opaque binary
   * column (and the pixel sum of a raw 8-bit sample payload, e.g. a
   * Flate image out of [[PdfImages]]). Null in → null out. */
-case class ByteSum(child: Expression) extends UnaryExpression {
+case class ByteSum(child: Expression) extends KernelExpression {
 
   override def dataType: DataType = LongType
   override def prettyName: String = "byte_sum"
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case BinaryType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires binary, got ${other.simpleString}")
-  }
-
-  override def nullSafeEval(input: Any): Any =
-    ByteSum.compute(input.asInstanceOf[Array[Byte]])
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      c => s"graft.functions.ByteSum$$.MODULE$$.compute($c)")
+  override def kernel: Kernel = Kernel(ByteSum, "compute")
 
   override protected def withNewChildInternal(c: Expression): Expression =
     copy(child = c)
@@ -172,22 +122,11 @@ object ByteSum {
 /** pdfimg_media_for_id(id) -> binary ([[MediaFixtures.pdfImgMediaFor]]
   * — image-bearing PDFs: a DCTDecode JPEG per even jid, a Flate gray
   * raster per odd jid, closed-form pixel contracts throughout). */
-case class PdfImgMediaBytes(child: Expression) extends UnaryExpression {
+case class PdfImgMediaBytes(child: Expression) extends KernelExpression {
 
   override def dataType: DataType = BinaryType
   override def prettyName: String = "pdfimg_media_for_id"
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case LongType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires bigint, got ${other.simpleString}")
-  }
-
-  override def nullSafeEval(input: Any): Any =
-    MediaFixtures.pdfImgMediaFor(input.asInstanceOf[Long])
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      c => s"graft.operators.MediaFixtures$$.MODULE$$.pdfImgMediaFor($c)")
+  override def kernel: Kernel = Kernel(MediaFixtures, "pdfImgMediaFor")
 
   override protected def withNewChildInternal(c: Expression): Expression =
     copy(child = c)

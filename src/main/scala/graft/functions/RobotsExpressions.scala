@@ -1,9 +1,7 @@
 package graft.functions
 
 import graft.operators.Robots
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -15,25 +13,11 @@ import org.apache.spark.unsafe.types.UTF8String
   * compliant crawler may keep. Unparseable robots.txt → allowed (the
   * protocol default). */
 case class RobotsAllowed(left: Expression, right: Expression)
-    extends BinaryExpression {
+    extends BinaryKernelExpression {
 
   override def dataType: DataType = BooleanType
   override def prettyName: String = "robots_allowed"
-  override def checkInputDataTypes(): TypeCheckResult =
-    (left.dataType, right.dataType) match {
-      case (StringType, StringType) => TypeCheckResult.TypeCheckSuccess
-      case (l, r) => TypeCheckResult.TypeCheckFailure(
-        s"$prettyName requires (string, string), got " +
-          s"${l.simpleString}, ${r.simpleString}")
-    }
-
-  override def nullSafeEval(robots: Any, path: Any): Any =
-    RobotsAllowed.compute(robots.asInstanceOf[UTF8String],
-      path.asInstanceOf[UTF8String])
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (r, p) =>
-      s"graft.functions.RobotsAllowed$$.MODULE$$.compute($r, $p)")
+  override def kernel: Kernel = Kernel(RobotsAllowed, "compute")
 
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): Expression =

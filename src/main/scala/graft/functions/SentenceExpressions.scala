@@ -1,33 +1,20 @@
 package graft.functions
 
 import graft.operators.Sentences
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
 /** sentence_split(text) -> array<string>: rule-based sentence
   * boundaries with the abbreviation/decimal guards
   * ([[Sentences.split]]). Null in → null out. */
-case class SentenceSplit(child: Expression) extends UnaryExpression {
+case class SentenceSplit(child: Expression) extends KernelExpression {
 
   override def dataType: DataType =
     ArrayType(StringType, containsNull = false)
   override def prettyName: String = "sentence_split"
   override def nullable: Boolean = true
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires string, got ${other.simpleString}")
-  }
-
-  override def nullSafeEval(input: Any): Any =
-    SentenceSplit.compute(input.asInstanceOf[UTF8String])
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      c => s"graft.functions.SentenceSplit$$.MODULE$$.compute($c)")
+  override def kernel: Kernel = Kernel(SentenceSplit, "compute")
 
   override protected def withNewChildInternal(c: Expression): Expression =
     copy(child = c)

@@ -1,9 +1,7 @@
 package graft.functions
 
 import graft.operators.{MediaFixtures, Subtitles}
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -11,26 +9,13 @@ import org.apache.spark.unsafe.types.UTF8String
   * SRT/WebVTT cue parsing (format auto-detected by the WEBVTT magic)
   * with integer-millisecond timings; a malformed timing line fails
   * the file ([[Subtitles.parse]]). Dirty input → null. */
-case class SubtitleCues(child: Expression) extends UnaryExpression {
+case class SubtitleCues(child: Expression) extends KernelExpression {
 
   override def dataType: DataType =
     ArrayType(SubtitleCues.cueSchema, containsNull = false)
   override def prettyName: String = "subtitle_cues"
   override def nullable: Boolean = true
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires string, got ${other.simpleString}")
-  }
-
-  override def nullSafeEval(input: Any): Any =
-    SubtitleCues.compute(input.asInstanceOf[UTF8String])
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => s"""
-      |${ev.value} = graft.functions.SubtitleCues$$.MODULE$$.compute($c);
-      |${ev.isNull} = ${ev.value} == null;
-      |""".stripMargin)
+  override def kernel: Kernel = Kernel(SubtitleCues, "compute")
 
   override protected def withNewChildInternal(c: Expression): Expression =
     copy(child = c)
@@ -63,24 +48,11 @@ object SubtitleCues {
 
 /** subtitle_media_for_id(id) -> string ([[MediaFixtures
   * .subtitleMediaFor]] — SRT/VTT alternating, closed-form cues). */
-case class SubtitleMediaText(child: Expression) extends UnaryExpression {
+case class SubtitleMediaText(child: Expression) extends KernelExpression {
 
   override def dataType: DataType = StringType
   override def prettyName: String = "subtitle_media_for_id"
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case LongType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires bigint, got ${other.simpleString}")
-  }
-
-  override def nullSafeEval(input: Any): Any =
-    UTF8String.fromString(
-      MediaFixtures.subtitleMediaFor(input.asInstanceOf[Long]))
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c =>
-      s"org.apache.spark.unsafe.types.UTF8String.fromString(" +
-        s"graft.operators.MediaFixtures$$.MODULE$$.subtitleMediaFor($c))")
+  override def kernel: Kernel = Kernel(MediaFixtures, "subtitleMediaFor")
 
   override protected def withNewChildInternal(c: Expression): Expression =
     copy(child = c)

@@ -1,9 +1,7 @@
 package graft.functions
 
 import graft.operators.{MediaFixtures, Tar}
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, GenericInternalRow, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -12,26 +10,13 @@ import org.apache.spark.unsafe.types.UTF8String
   * flipped byte fails the file instead of desynchronizing later
   * offsets ([[Tar.entries]]). Compose with gunzip() for `.tar.gz`.
   * Dirty bytes → null. */
-case class TarEntries(child: Expression) extends UnaryExpression {
+case class TarEntries(child: Expression) extends KernelExpression {
 
   override def dataType: DataType =
     ArrayType(TarEntries.entrySchema, containsNull = false)
   override def prettyName: String = "tar_entries"
   override def nullable: Boolean = true
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case BinaryType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires binary, got ${other.simpleString}")
-  }
-
-  override def nullSafeEval(input: Any): Any =
-    TarEntries.compute(input.asInstanceOf[Array[Byte]])
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => s"""
-      |${ev.value} = graft.functions.TarEntries$$.MODULE$$.compute($c);
-      |${ev.isNull} = ${ev.value} == null;
-      |""".stripMargin)
+  override def kernel: Kernel = Kernel(TarEntries, "compute")
 
   override protected def withNewChildInternal(c: Expression): Expression =
     copy(child = c)
@@ -65,28 +50,12 @@ object TarEntries {
 /** tar_extract(bytes, name) -> binary: one regular file's bytes by
   * exact name ([[Tar.extract]]). Missing names → null. */
 case class TarExtract(left: Expression, right: Expression)
-    extends BinaryExpression {
+    extends BinaryKernelExpression {
 
   override def dataType: DataType = BinaryType
   override def prettyName: String = "tar_extract"
   override def nullable: Boolean = true
-  override def checkInputDataTypes(): TypeCheckResult =
-    (left.dataType, right.dataType) match {
-      case (BinaryType, StringType) => TypeCheckResult.TypeCheckSuccess
-      case (l, r) => TypeCheckResult.TypeCheckFailure(
-        s"$prettyName requires (binary, string), got " +
-          s"${l.simpleString}, ${r.simpleString}")
-    }
-
-  override def nullSafeEval(b: Any, n: Any): Any =
-    TarExtract.compute(b.asInstanceOf[Array[Byte]],
-      n.asInstanceOf[UTF8String])
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (b, n) => s"""
-      |${ev.value} = graft.functions.TarExtract$$.MODULE$$.compute($b, $n);
-      |${ev.isNull} = ${ev.value} == null;
-      |""".stripMargin)
+  override def kernel: Kernel = Kernel(TarExtract, "compute")
 
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): Expression =
@@ -101,22 +70,11 @@ object TarExtract {
 
 /** targz_media_for_id(id) -> binary ([[MediaFixtures.tarGzMediaFor]]
   * — a gzipped ustar archive with closed-form text entries). */
-case class TarGzMediaBytes(child: Expression) extends UnaryExpression {
+case class TarGzMediaBytes(child: Expression) extends KernelExpression {
 
   override def dataType: DataType = BinaryType
   override def prettyName: String = "targz_media_for_id"
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case LongType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires bigint, got ${other.simpleString}")
-  }
-
-  override def nullSafeEval(input: Any): Any =
-    MediaFixtures.tarGzMediaFor(input.asInstanceOf[Long])
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      c => s"graft.operators.MediaFixtures$$.MODULE$$.tarGzMediaFor($c)")
+  override def kernel: Kernel = Kernel(MediaFixtures, "tarGzMediaFor")
 
   override protected def withNewChildInternal(c: Expression): Expression =
     copy(child = c)

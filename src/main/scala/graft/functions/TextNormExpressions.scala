@@ -1,8 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -22,22 +20,11 @@ import org.apache.spark.unsafe.types.UTF8String
   * against ICU's on real combining sequences.
   *
   * Map-only, codegen'd, no shuffle: the 100 TB shape. */
-case class NormalizeText(child: Expression) extends UnaryExpression {
+case class NormalizeText(child: Expression) extends KernelExpression {
 
   override def dataType: DataType = StringType
   override def prettyName: String = "normalize_text"
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires string, got ${other.simpleString}")
-  }
-
-  override def nullSafeEval(input: Any): Any =
-    NormalizeText.compute(input.asInstanceOf[UTF8String])
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      c => s"graft.functions.NormalizeText$$.MODULE$$.compute($c)")
+  override def kernel: Kernel = Kernel(NormalizeText, "compute")
 
   override protected def withNewChildInternal(c: Expression): Expression =
     copy(child = c)

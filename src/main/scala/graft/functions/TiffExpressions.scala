@@ -1,9 +1,7 @@
 package graft.functions
 
 import graft.operators.{MediaFixtures, Tiff}
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -13,25 +11,12 @@ import org.apache.spark.unsafe.types.UTF8String
   * ([[Tiff.parseExif]] — both byte orders, IFD0 + the Exif-private
   * sub-IFD). Orientation is the field image pipelines MUST read
   * before any pixel op. No-EXIF or dirty bytes → null. */
-case class JpegExif(child: Expression) extends UnaryExpression {
+case class JpegExif(child: Expression) extends KernelExpression {
 
   override def dataType: DataType = JpegExif.schema
   override def prettyName: String = "jpeg_exif"
   override def nullable: Boolean = true
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case BinaryType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires binary, got ${other.simpleString}")
-  }
-
-  override def nullSafeEval(input: Any): Any =
-    JpegExif.compute(input.asInstanceOf[Array[Byte]])
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => s"""
-      |${ev.value} = graft.functions.JpegExif$$.MODULE$$.compute($c);
-      |${ev.isNull} = ${ev.value} == null;
-      |""".stripMargin)
+  override def kernel: Kernel = Kernel(JpegExif, "compute")
 
   override protected def withNewChildInternal(c: Expression): Expression =
     copy(child = c)
@@ -58,22 +43,11 @@ object JpegExif {
 }
 
 /** tiff_media_for_id(id) -> binary ([[MediaFixtures.tiffMediaFor]]). */
-case class TiffMediaBytes(child: Expression) extends UnaryExpression {
+case class TiffMediaBytes(child: Expression) extends KernelExpression {
 
   override def dataType: DataType = BinaryType
   override def prettyName: String = "tiff_media_for_id"
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case LongType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires bigint, got ${other.simpleString}")
-  }
-
-  override def nullSafeEval(input: Any): Any =
-    MediaFixtures.tiffMediaFor(input.asInstanceOf[Long])
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      c => s"graft.operators.MediaFixtures$$.MODULE$$.tiffMediaFor($c)")
+  override def kernel: Kernel = Kernel(MediaFixtures, "tiffMediaFor")
 
   override protected def withNewChildInternal(c: Expression): Expression =
     copy(child = c)
@@ -83,22 +57,11 @@ case class TiffMediaBytes(child: Expression) extends UnaryExpression {
   * ([[MediaFixtures.tiffPixelMediaFor]] — closed-form pixels through
   * gray/inverted-gray/RGB, none/PackBits, multi-strip, both byte
   * orders). */
-case class TiffPixelMediaBytes(child: Expression) extends UnaryExpression {
+case class TiffPixelMediaBytes(child: Expression) extends KernelExpression {
 
   override def dataType: DataType = BinaryType
   override def prettyName: String = "tiffpx_media_for_id"
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case LongType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires bigint, got ${other.simpleString}")
-  }
-
-  override def nullSafeEval(input: Any): Any =
-    MediaFixtures.tiffPixelMediaFor(input.asInstanceOf[Long])
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      c => s"graft.operators.MediaFixtures$$.MODULE$$.tiffPixelMediaFor($c)")
+  override def kernel: Kernel = Kernel(MediaFixtures, "tiffPixelMediaFor")
 
   override protected def withNewChildInternal(c: Expression): Expression =
     copy(child = c)
@@ -106,22 +69,11 @@ case class TiffPixelMediaBytes(child: Expression) extends UnaryExpression {
 
 /** tiffext_media_for_id(id) -> binary: SEGMENTED-grammar TIFF
   * (tiled/planar/16-bit variants, [[MediaFixtures.tiffExtMediaFor]]). */
-case class TiffExtMediaBytes(child: Expression) extends UnaryExpression {
+case class TiffExtMediaBytes(child: Expression) extends KernelExpression {
 
   override def dataType: DataType = BinaryType
   override def prettyName: String = "tiffext_media_for_id"
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case LongType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires bigint, got ${other.simpleString}")
-  }
-
-  override def nullSafeEval(input: Any): Any =
-    MediaFixtures.tiffExtMediaFor(input.asInstanceOf[Long])
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      c => s"graft.operators.MediaFixtures$$.MODULE$$.tiffExtMediaFor($c)")
+  override def kernel: Kernel = Kernel(MediaFixtures, "tiffExtMediaFor")
 
   override protected def withNewChildInternal(c: Expression): Expression =
     copy(child = c)
@@ -130,22 +82,11 @@ case class TiffExtMediaBytes(child: Expression) extends UnaryExpression {
 /** g4_media_for_id(id) -> binary: EXTERNAL CCITT Group 4 fixture bytes
   * ([[graft.operators.G4Fixtures]] — real libtiff encodes, never
   * engine-written). */
-case class G4MediaBytes(child: Expression) extends UnaryExpression {
+case class G4MediaBytes(child: Expression) extends KernelExpression {
 
   override def dataType: DataType = BinaryType
   override def prettyName: String = "g4_media_for_id"
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case LongType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires bigint, got ${other.simpleString}")
-  }
-
-  override def nullSafeEval(input: Any): Any =
-    graft.operators.G4Fixtures.fileFor(input.asInstanceOf[Long])
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      c => s"graft.operators.G4Fixtures$$.MODULE$$.fileFor($c)")
+  override def kernel: Kernel = Kernel(graft.operators.G4Fixtures, "fileFor")
 
   override protected def withNewChildInternal(c: Expression): Expression =
     copy(child = c)
@@ -154,22 +95,11 @@ case class G4MediaBytes(child: Expression) extends UnaryExpression {
 /** tiffjpeg_media_for_id(id) -> binary: JPEG-in-TIFF (Compression 7)
   * with a REAL decodable baseline JPEG strip
   * ([[MediaFixtures.tiffJpegFor]]). */
-case class TiffJpegMediaBytes(child: Expression) extends UnaryExpression {
+case class TiffJpegMediaBytes(child: Expression) extends KernelExpression {
 
   override def dataType: DataType = BinaryType
   override def prettyName: String = "tiffjpeg_media_for_id"
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case LongType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires bigint, got ${other.simpleString}")
-  }
-
-  override def nullSafeEval(input: Any): Any =
-    MediaFixtures.tiffJpegFor(input.asInstanceOf[Long])
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      c => s"graft.operators.MediaFixtures$$.MODULE$$.tiffJpegFor($c)")
+  override def kernel: Kernel = Kernel(MediaFixtures, "tiffJpegFor")
 
   override protected def withNewChildInternal(c: Expression): Expression =
     copy(child = c)
@@ -177,22 +107,11 @@ case class TiffJpegMediaBytes(child: Expression) extends UnaryExpression {
 
 /** jpeg_exif_media_for_id(id) -> binary
   * ([[MediaFixtures.jpegExifMediaFor]] — decodable JPEG + APP1). */
-case class JpegExifMediaBytes(child: Expression) extends UnaryExpression {
+case class JpegExifMediaBytes(child: Expression) extends KernelExpression {
 
   override def dataType: DataType = BinaryType
   override def prettyName: String = "jpeg_exif_media_for_id"
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case LongType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires bigint, got ${other.simpleString}")
-  }
-
-  override def nullSafeEval(input: Any): Any =
-    MediaFixtures.jpegExifMediaFor(input.asInstanceOf[Long])
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      c => s"graft.operators.MediaFixtures$$.MODULE$$.jpegExifMediaFor($c)")
+  override def kernel: Kernel = Kernel(MediaFixtures, "jpegExifMediaFor")
 
   override protected def withNewChildInternal(c: Expression): Expression =
     copy(child = c)

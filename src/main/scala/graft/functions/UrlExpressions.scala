@@ -1,8 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -69,25 +67,12 @@ private[functions] object UrlParse {
   * empty path at `/`. Path case is preserved (paths are
   * case-sensitive). Non-URL strings → null. Map-only and codegen'd —
   * a pure per-row kernel at any scale. */
-case class UrlNormalize(child: Expression) extends UnaryExpression {
+case class UrlNormalize(child: Expression) extends KernelExpression {
 
   override def dataType: DataType = StringType
   override def prettyName: String = "url_normalize"
   override def nullable: Boolean = true
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires string, got ${other.simpleString}")
-  }
-
-  override def nullSafeEval(input: Any): Any =
-    UrlNormalize.compute(input.asInstanceOf[UTF8String])
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => s"""
-      |${ev.value} = graft.functions.UrlNormalize$$.MODULE$$.compute($c);
-      |${ev.isNull} = ${ev.value} == null;
-      |""".stripMargin)
+  override def kernel: Kernel = Kernel(UrlNormalize, "compute")
 
   override protected def withNewChildInternal(c: Expression): Expression =
     copy(child = c)
@@ -130,25 +115,12 @@ object UrlNormalize {
   * embedded subset of the multi-label suffix list (`co.uk`, `com.au`,
   * …). Accepts a full URL or a bare host. Null for unparseable
   * input. */
-case class UrlDomain(child: Expression) extends UnaryExpression {
+case class UrlDomain(child: Expression) extends KernelExpression {
 
   override def dataType: DataType = StringType
   override def prettyName: String = "url_domain"
   override def nullable: Boolean = true
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires string, got ${other.simpleString}")
-  }
-
-  override def nullSafeEval(input: Any): Any =
-    UrlDomain.compute(input.asInstanceOf[UTF8String])
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => s"""
-      |${ev.value} = graft.functions.UrlDomain$$.MODULE$$.compute($c);
-      |${ev.isNull} = ${ev.value} == null;
-      |""".stripMargin)
+  override def kernel: Kernel = Kernel(UrlDomain, "compute")
 
   override protected def withNewChildInternal(c: Expression): Expression =
     copy(child = c)

@@ -1,9 +1,7 @@
 package graft.functions
 
 import graft.operators.{Vorbis, VorbisEnc, WavPcm}
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.types._
 
 /** vorbis_wav(bytes) -> binary: REAL Ogg/Vorbis packet decode
@@ -16,25 +14,12 @@ import org.apache.spark.sql.types._
   * dedup) serves Ogg/Vorbis crawl audio unchanged. Dirty, truncated
   * or out-of-honest-subset bytes (floor0, two block sizes, Opus) →
   * null, never a throw. */
-case class VorbisWav(child: Expression) extends UnaryExpression {
+case class VorbisWav(child: Expression) extends KernelExpression {
 
   override def dataType: DataType = BinaryType
   override def prettyName: String = "vorbis_wav"
   override def nullable: Boolean = true
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case BinaryType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires binary, got ${other.simpleString}")
-  }
-
-  override def nullSafeEval(input: Any): Any =
-    VorbisWav.compute(input.asInstanceOf[Array[Byte]])
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => s"""
-      |${ev.value} = graft.functions.VorbisWav$$.MODULE$$.compute($c);
-      |${ev.isNull} = ${ev.value} == null;
-      |""".stripMargin)
+  override def kernel: Kernel = Kernel(VorbisWav, "compute")
 
   override protected def withNewChildInternal(c: Expression): Expression =
     copy(child = c)
@@ -54,22 +39,11 @@ object VorbisWav {
   * fixture streams ([[VorbisEnc.fixture]] — real headers, codebooks,
   * floor/residue packets; rate and packet count closed-form in the
   * id so the oracle can state the stream dimensions). */
-case class OggVorbisMediaBytes(child: Expression) extends UnaryExpression {
+case class OggVorbisMediaBytes(child: Expression) extends KernelExpression {
 
   override def dataType: DataType = BinaryType
   override def prettyName: String = "ogg_vorbis_media_for_id"
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case LongType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires bigint, got ${other.simpleString}")
-  }
-
-  override def nullSafeEval(input: Any): Any =
-    OggVorbisMediaBytes.compute(input.asInstanceOf[Long])
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      c => s"graft.functions.OggVorbisMediaBytes$$.MODULE$$.compute($c)")
+  override def kernel: Kernel = Kernel(OggVorbisMediaBytes, "compute")
 
   override protected def withNewChildInternal(c: Expression): Expression =
     copy(child = c)
@@ -87,25 +61,12 @@ object OggVorbisMediaBytes {
   * SAME synthesis loop as `vorbis_wav`, headers from the Matroska
   * CodecPrivate Xiph lacing, packets from the audio track's
   * SimpleBlocks — through the RIFF bridge. */
-case class WebmVorbisWav(child: Expression) extends UnaryExpression {
+case class WebmVorbisWav(child: Expression) extends KernelExpression {
 
   override def dataType: DataType = BinaryType
   override def prettyName: String = "webm_vorbis_wav"
   override def nullable: Boolean = true
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case BinaryType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires binary, got ${other.simpleString}")
-  }
-
-  override def nullSafeEval(input: Any): Any =
-    WebmVorbisWav.compute(input.asInstanceOf[Array[Byte]])
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => s"""
-      |${ev.value} = graft.functions.WebmVorbisWav$$.MODULE$$.compute($c);
-      |${ev.isNull} = ${ev.value} == null;
-      |""".stripMargin)
+  override def kernel: Kernel = Kernel(WebmVorbisWav, "compute")
 
   override protected def withNewChildInternal(c: Expression): Expression =
     copy(child = c)
@@ -126,22 +87,11 @@ object WebmVorbisWav {
   * `ogg_vorbis_media_for_id` — one stream, two containers, so the
   * decoded PCM must be identical and the two declared stats queries
   * share one oracle. */
-case class WebmVorbisMediaBytes(child: Expression) extends UnaryExpression {
+case class WebmVorbisMediaBytes(child: Expression) extends KernelExpression {
 
   override def dataType: DataType = BinaryType
   override def prettyName: String = "webm_vorbis_media_for_id"
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case LongType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires bigint, got ${other.simpleString}")
-  }
-
-  override def nullSafeEval(input: Any): Any =
-    WebmVorbisMediaBytes.compute(input.asInstanceOf[Long])
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      c => s"graft.functions.WebmVorbisMediaBytes$$.MODULE$$.compute($c)")
+  override def kernel: Kernel = Kernel(WebmVorbisMediaBytes, "compute")
 
   override protected def withNewChildInternal(c: Expression): Expression =
     copy(child = c)

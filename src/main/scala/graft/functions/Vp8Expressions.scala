@@ -1,31 +1,18 @@
 package graft.functions
 
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.types._
 
 /** vp8_media_for_id(id) -> binary: the embedded EXTERNAL lossy-WebP
   * conformance fixture bytes ([[graft.operators.Vp8Fixtures]] — real
   * libwebp/CPython files, never engine-written). */
-case class Vp8MediaBytes(child: Expression) extends UnaryExpression {
+case class Vp8MediaBytes(child: Expression) extends KernelExpression {
 
   override def dataType: DataType = BinaryType
   override def prettyName: String = "vp8_media_for_id"
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case LongType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires bigint, got ${other.simpleString}")
-  }
-
-  override def nullSafeEval(input: Any): Any =
-    graft.operators.Vp8Fixtures.fileFor(input.asInstanceOf[Long])
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      c => s"graft.operators.Vp8Fixtures$$.MODULE$$.fileFor($c)")
+  override def kernel: Kernel = Kernel(graft.operators.Vp8Fixtures, "fileFor")
 
   override protected def withNewChildInternal(c: Expression): Expression =
     copy(child = c)
@@ -38,7 +25,7 @@ case class Vp8MediaBytes(child: Expression) extends UnaryExpression {
   * policy, so an oracle can pin every sample. Null for VP8L-only or
   * malformed bytes. Codegen'd per-row kernel: the decode rides the
   * scan like every other media expression. */
-case class WebpYuv(child: Expression) extends UnaryExpression {
+case class WebpYuv(child: Expression) extends KernelExpression {
 
   override def dataType: DataType = ArrayType(StructType(Seq(
     StructField("plane", IntegerType, nullable = false),
@@ -47,20 +34,7 @@ case class WebpYuv(child: Expression) extends UnaryExpression {
     containsNull = false)
   override def nullable: Boolean = true
   override def prettyName: String = "webp_yuv"
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case BinaryType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires binary, got ${other.simpleString}")
-  }
-
-  override def nullSafeEval(input: Any): Any =
-    WebpYuv.compute(input.asInstanceOf[Array[Byte]])
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => s"""
-      ${ev.value} = graft.functions.WebpYuv$$.MODULE$$.compute($c);
-      ${ev.isNull} = (${ev.value} == null);
-    """)
+  override def kernel: Kernel = Kernel(WebpYuv, "compute")
 
   override protected def withNewChildInternal(c: Expression): Expression =
     copy(child = c)
@@ -70,22 +44,11 @@ case class WebpYuv(child: Expression) extends UnaryExpression {
   * a real libwebp keyframe followed by writer-assembled pure-MC
   * interframes with spec-constant MVs ([[graft.operators.Vp8Fixtures
   * .ivfFor]]). */
-case class Vp8IvfMediaBytes(child: Expression) extends UnaryExpression {
+case class Vp8IvfMediaBytes(child: Expression) extends KernelExpression {
 
   override def dataType: DataType = BinaryType
   override def prettyName: String = "vp8_ivf_media_for_id"
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case LongType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires bigint, got ${other.simpleString}")
-  }
-
-  override def nullSafeEval(input: Any): Any =
-    graft.operators.Vp8Fixtures.ivfFor(input.asInstanceOf[Long])
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      c => s"graft.operators.Vp8Fixtures$$.MODULE$$.ivfFor($c)")
+  override def kernel: Kernel = Kernel(graft.operators.Vp8Fixtures, "ivfFor")
 
   override protected def withNewChildInternal(c: Expression): Expression =
     copy(child = c)
@@ -98,7 +61,7 @@ case class Vp8IvfMediaBytes(child: Expression) extends UnaryExpression {
   * oracle can re-derive frame N from frame N-1 and the fixture's MV
   * constants. Null for malformed streams or any frame outside the
   * decoded subset. */
-case class Vp8IvfFrames(child: Expression) extends UnaryExpression {
+case class Vp8IvfFrames(child: Expression) extends KernelExpression {
 
   override def dataType: DataType = ArrayType(StructType(Seq(
     StructField("frame", IntegerType, nullable = false),
@@ -108,20 +71,7 @@ case class Vp8IvfFrames(child: Expression) extends UnaryExpression {
     containsNull = false)
   override def nullable: Boolean = true
   override def prettyName: String = "vp8_ivf_frames"
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case BinaryType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires binary, got ${other.simpleString}")
-  }
-
-  override def nullSafeEval(input: Any): Any =
-    Vp8IvfFrames.compute(input.asInstanceOf[Array[Byte]])
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => s"""
-      ${ev.value} = graft.functions.Vp8IvfFrames$$.MODULE$$.compute($c);
-      ${ev.isNull} = (${ev.value} == null);
-    """)
+  override def kernel: Kernel = Kernel(Vp8IvfFrames, "compute")
 
   override protected def withNewChildInternal(c: Expression): Expression =
     copy(child = c)
@@ -158,22 +108,12 @@ object Vp8IvfFrames {
 
 /** anim_media_for_id(id) -> binary: the embedded animated-WebP
   * conformance fixture bytes ([[graft.operators.AnimWebpFixtures]]). */
-case class AnimMediaBytes(child: Expression) extends UnaryExpression {
+case class AnimMediaBytes(child: Expression) extends KernelExpression {
 
   override def dataType: DataType = BinaryType
   override def prettyName: String = "anim_media_for_id"
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case LongType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires bigint, got ${other.simpleString}")
-  }
-
-  override def nullSafeEval(input: Any): Any =
-    graft.operators.AnimWebpFixtures.fileFor(input.asInstanceOf[Long])
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      c => s"graft.operators.AnimWebpFixtures$$.MODULE$$.fileFor($c)")
+  override def kernel: Kernel =
+    Kernel(graft.operators.AnimWebpFixtures, "fileFor")
 
   override protected def withNewChildInternal(c: Expression): Expression =
     copy(child = c)
@@ -184,7 +124,7 @@ case class AnimMediaBytes(child: Expression) extends UnaryExpression {
   * RGBA byte per frame snapshot) — [[graft.operators.Webp
   * .decodeAnimation]]'s full output surface, so an oracle can pin
   * every composited pixel. Null for stills/malformed bytes. */
-case class WebpAnim(child: Expression) extends UnaryExpression {
+case class WebpAnim(child: Expression) extends KernelExpression {
 
   override def dataType: DataType = ArrayType(StructType(Seq(
     StructField("frame", IntegerType, nullable = false),
@@ -193,20 +133,7 @@ case class WebpAnim(child: Expression) extends UnaryExpression {
     containsNull = false)
   override def nullable: Boolean = true
   override def prettyName: String = "webp_anim"
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case BinaryType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires binary, got ${other.simpleString}")
-  }
-
-  override def nullSafeEval(input: Any): Any =
-    WebpAnim.compute(input.asInstanceOf[Array[Byte]])
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => s"""
-      ${ev.value} = graft.functions.WebpAnim$$.MODULE$$.compute($c);
-      ${ev.isNull} = (${ev.value} == null);
-    """)
+  override def kernel: Kernel = Kernel(WebpAnim, "compute")
 
   override protected def withNewChildInternal(c: Expression): Expression =
     copy(child = c)
@@ -258,7 +185,7 @@ object WebpYuv {
   * of `mp3_coverage`: a crawl report can state its VP8
   * keyframe/interframe split without paying for pixel decode.
   * Null for non-IVF bytes or truncated frame tables. */
-case class IvfMeta(child: Expression) extends UnaryExpression {
+case class IvfMeta(child: Expression) extends KernelExpression {
 
   override def dataType: DataType = StructType(Seq(
     StructField("width", IntegerType, nullable = false),
@@ -268,20 +195,7 @@ case class IvfMeta(child: Expression) extends UnaryExpression {
     StructField("interframes", IntegerType, nullable = false)))
   override def nullable: Boolean = true
   override def prettyName: String = "ivf_meta"
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case BinaryType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires binary, got ${other.simpleString}")
-  }
-
-  override def nullSafeEval(input: Any): Any =
-    IvfMeta.compute(input.asInstanceOf[Array[Byte]])
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => s"""
-      ${ev.value} = graft.functions.IvfMeta$$.MODULE$$.compute($c);
-      ${ev.isNull} = (${ev.value} == null);
-    """)
+  override def kernel: Kernel = Kernel(IvfMeta, "compute")
 
   override protected def withNewChildInternal(c: Expression): Expression =
     copy(child = c)
@@ -310,22 +224,11 @@ object IvfMeta {
   * — the SAME pinned 3-frame VP8 sequence as `vp8_ivf_media_for_id`,
   * muxed through [[graft.operators.Webm.build]] with container-shape
   * variants cycling by id ([[graft.operators.Vp8Fixtures.webmFor]]). */
-case class WebmMediaBytes(child: Expression) extends UnaryExpression {
+case class WebmMediaBytes(child: Expression) extends KernelExpression {
 
   override def dataType: DataType = BinaryType
   override def prettyName: String = "webm_media_for_id"
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case LongType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires bigint, got ${other.simpleString}")
-  }
-
-  override def nullSafeEval(input: Any): Any =
-    graft.operators.Vp8Fixtures.webmFor(input.asInstanceOf[Long])
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      c => s"graft.operators.Vp8Fixtures$$.MODULE$$.webmFor($c)")
+  override def kernel: Kernel = Kernel(graft.operators.Vp8Fixtures, "webmFor")
 
   override protected def withNewChildInternal(c: Expression): Expression =
     copy(child = c)
@@ -340,7 +243,7 @@ case class WebmMediaBytes(child: Expression) extends UnaryExpression {
   * packet DECODE stays behind the documented Vorbis/Opus seam).
   * Null for non-EBML bytes or anything outside
   * [[graft.operators.Webm]]'s documented subset. */
-case class WebmMeta(child: Expression) extends UnaryExpression {
+case class WebmMeta(child: Expression) extends KernelExpression {
 
   override def dataType: DataType = StructType(Seq(
     StructField("doc_type", StringType, nullable = false),
@@ -362,20 +265,7 @@ case class WebmMeta(child: Expression) extends UnaryExpression {
     StructField("audio_blocks", IntegerType, nullable = false)))
   override def nullable: Boolean = true
   override def prettyName: String = "webm_meta"
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case BinaryType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires binary, got ${other.simpleString}")
-  }
-
-  override def nullSafeEval(input: Any): Any =
-    WebmMeta.compute(input.asInstanceOf[Array[Byte]])
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => s"""
-      ${ev.value} = graft.functions.WebmMeta$$.MODULE$$.compute($c);
-      ${ev.isNull} = (${ev.value} == null);
-    """)
+  override def kernel: Kernel = Kernel(WebmMeta, "compute")
 
   override protected def withNewChildInternal(c: Expression): Expression =
     copy(child = c)
@@ -400,7 +290,7 @@ object WebmMeta {
   * plane sample of every VP8 frame demuxed from a WebM container
   * (r13) — the [[Vp8IvfFrames]] surface through the Matroska path,
   * so the same SQL oracle pins both containers. */
-case class WebmFrames(child: Expression) extends UnaryExpression {
+case class WebmFrames(child: Expression) extends KernelExpression {
 
   override def dataType: DataType = ArrayType(StructType(Seq(
     StructField("frame", IntegerType, nullable = false),
@@ -410,20 +300,7 @@ case class WebmFrames(child: Expression) extends UnaryExpression {
     containsNull = false)
   override def nullable: Boolean = true
   override def prettyName: String = "webm_frames"
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case BinaryType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires binary, got ${other.simpleString}")
-  }
-
-  override def nullSafeEval(input: Any): Any =
-    WebmFrames.compute(input.asInstanceOf[Array[Byte]])
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => s"""
-      ${ev.value} = graft.functions.WebmFrames$$.MODULE$$.compute($c);
-      ${ev.isNull} = (${ev.value} == null);
-    """)
+  override def kernel: Kernel = Kernel(WebmFrames, "compute")
 
   override protected def withNewChildInternal(c: Expression): Expression =
     copy(child = c)
@@ -439,22 +316,12 @@ object WebmFrames {
 /** webm_subs_media_for_id(id) -> binary: the WebM fixture with a
   * subtitle track (r13) — video + 2-4 S_TEXT/UTF8 cues with
   * id-derived timings ([[graft.operators.Vp8Fixtures.webmSubsFor]]). */
-case class WebmSubsMediaBytes(child: Expression) extends UnaryExpression {
+case class WebmSubsMediaBytes(child: Expression) extends KernelExpression {
 
   override def dataType: DataType = BinaryType
   override def prettyName: String = "webm_subs_media_for_id"
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case LongType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires bigint, got ${other.simpleString}")
-  }
-
-  override def nullSafeEval(input: Any): Any =
-    graft.operators.Vp8Fixtures.webmSubsFor(input.asInstanceOf[Long])
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      c => s"graft.operators.Vp8Fixtures$$.MODULE$$.webmSubsFor($c)")
+  override def kernel: Kernel =
+    Kernel(graft.operators.Vp8Fixtures, "webmSubsFor")
 
   override protected def withNewChildInternal(c: Expression): Expression =
     copy(child = c)
@@ -464,7 +331,7 @@ case class WebmSubsMediaBytes(child: Expression) extends UnaryExpression {
   * the cues of a WebM's first S_TEXT subtitle track (r13) —
   * BlockGroup timecodes scaled to milliseconds, text decoded UTF-8.
   * Null when the container has no subtitle track or is malformed. */
-case class WebmSubtitles(child: Expression) extends UnaryExpression {
+case class WebmSubtitles(child: Expression) extends KernelExpression {
 
   override def dataType: DataType = ArrayType(StructType(Seq(
     StructField("idx", IntegerType, nullable = false),
@@ -474,20 +341,7 @@ case class WebmSubtitles(child: Expression) extends UnaryExpression {
     containsNull = false)
   override def nullable: Boolean = true
   override def prettyName: String = "webm_subtitles"
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case BinaryType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires binary, got ${other.simpleString}")
-  }
-
-  override def nullSafeEval(input: Any): Any =
-    WebmSubtitles.compute(input.asInstanceOf[Array[Byte]])
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => s"""
-      ${ev.value} = graft.functions.WebmSubtitles$$.MODULE$$.compute($c);
-      ${ev.isNull} = (${ev.value} == null);
-    """)
+  override def kernel: Kernel = Kernel(WebmSubtitles, "compute")
 
   override protected def withNewChildInternal(c: Expression): Expression =
     copy(child = c)

@@ -1,9 +1,7 @@
 package graft.functions
 
 import graft.operators.{MediaFixtures, Warc}
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -11,25 +9,12 @@ import org.apache.spark.unsafe.types.UTF8String
   * header parse, DEFLATE decode, CRC32 verification, multi-member
   * streams), output capped before allocation. The decompression step
   * of every WARC/WET CommonCrawl consumer. Dirty bytes → null. */
-case class Gunzip(child: Expression) extends UnaryExpression {
+case class Gunzip(child: Expression) extends KernelExpression {
 
   override def dataType: DataType = BinaryType
   override def prettyName: String = "gunzip"
   override def nullable: Boolean = true
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case BinaryType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires binary, got ${other.simpleString}")
-  }
-
-  override def nullSafeEval(input: Any): Any =
-    Gunzip.compute(input.asInstanceOf[Array[Byte]])
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => s"""
-      |${ev.value} = graft.functions.Gunzip$$.MODULE$$.compute($c);
-      |${ev.isNull} = ${ev.value} == null;
-      |""".stripMargin)
+  override def kernel: Kernel = Kernel(Gunzip, "compute")
 
   override protected def withNewChildInternal(c: Expression): Expression =
     copy(child = c)
@@ -45,26 +30,13 @@ object Gunzip {
   * content_length, payload>>: the ISO 28500 record walk with exact
   * Content-Length byte accounting — a length slip desynchronizes the
   * rest of the file and fails the parse. Dirty bytes → null. */
-case class WarcRecords(child: Expression) extends UnaryExpression {
+case class WarcRecords(child: Expression) extends KernelExpression {
 
   override def dataType: DataType =
     ArrayType(WarcRecords.recordSchema, containsNull = false)
   override def prettyName: String = "warc_records"
   override def nullable: Boolean = true
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case BinaryType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires binary, got ${other.simpleString}")
-  }
-
-  override def nullSafeEval(input: Any): Any =
-    WarcRecords.compute(input.asInstanceOf[Array[Byte]])
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => s"""
-      |${ev.value} = graft.functions.WarcRecords$$.MODULE$$.compute($c);
-      |${ev.isNull} = ${ev.value} == null;
-      |""".stripMargin)
+  override def kernel: Kernel = Kernel(WarcRecords, "compute")
 
   override protected def withNewChildInternal(c: Expression): Expression =
     copy(child = c)
@@ -101,22 +73,11 @@ object WarcRecords {
   * (warcinfo + response with a deterministic HTML page) — the
   * CommonCrawl file shape in miniature ([[MediaFixtures
   * .warcMediaFor]]). */
-case class WarcMediaBytes(child: Expression) extends UnaryExpression {
+case class WarcMediaBytes(child: Expression) extends KernelExpression {
 
   override def dataType: DataType = BinaryType
   override def prettyName: String = "warc_media_for_id"
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case LongType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires bigint, got ${other.simpleString}")
-  }
-
-  override def nullSafeEval(input: Any): Any =
-    MediaFixtures.warcMediaFor(input.asInstanceOf[Long])
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      c => s"graft.operators.MediaFixtures$$.MODULE$$.warcMediaFor($c)")
+  override def kernel: Kernel = Kernel(MediaFixtures, "warcMediaFor")
 
   override protected def withNewChildInternal(c: Expression): Expression =
     copy(child = c)
@@ -125,22 +86,11 @@ case class WarcMediaBytes(child: Expression) extends UnaryExpression {
 /** warczst_media_for_id(id) -> binary: the SAME two-record WARC but
   * zstd-framed — CommonCrawl's newer `.warc.zst` dump shape
   * ([[MediaFixtures.warcZstMediaFor]]). */
-case class WarcZstMediaBytes(child: Expression) extends UnaryExpression {
+case class WarcZstMediaBytes(child: Expression) extends KernelExpression {
 
   override def dataType: DataType = BinaryType
   override def prettyName: String = "warczst_media_for_id"
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case LongType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires bigint, got ${other.simpleString}")
-  }
-
-  override def nullSafeEval(input: Any): Any =
-    MediaFixtures.warcZstMediaFor(input.asInstanceOf[Long])
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      c => s"graft.operators.MediaFixtures$$.MODULE$$.warcZstMediaFor($c)")
+  override def kernel: Kernel = Kernel(MediaFixtures, "warcZstMediaFor")
 
   override protected def withNewChildInternal(c: Expression): Expression =
     copy(child = c)

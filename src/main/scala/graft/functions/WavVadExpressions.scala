@@ -1,9 +1,7 @@
 package graft.functions
 
 import graft.operators.{MediaFixtures, WavPcm}
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow}
 import org.apache.spark.sql.types._
 
 /** wav_vad(bytes, winFrames, thrAvg) -> array<struct<seg, start_win,
@@ -12,7 +10,7 @@ import org.apache.spark.sql.types._
   * verdicts, consecutive-window merge, clipped-sample counts. Dirty
   * bytes → null. */
 case class WavVad(child: Expression, winFrames: Int, thrAvg: Int)
-    extends UnaryExpression {
+    extends KernelExpression {
   require(winFrames >= 2 && thrAvg >= 0,
     s"winFrames=$winFrames thrAvg=$thrAvg")
 
@@ -20,21 +18,7 @@ case class WavVad(child: Expression, winFrames: Int, thrAvg: Int)
     ArrayType(WavVad.segmentSchema, containsNull = false)
   override def prettyName: String = "wav_vad"
   override def nullable: Boolean = true
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case BinaryType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires binary, got ${other.simpleString}")
-  }
-
-  override def nullSafeEval(input: Any): Any =
-    WavVad.compute(input.asInstanceOf[Array[Byte]], winFrames, thrAvg)
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => s"""
-      |${ev.value} = graft.functions.WavVad$$.MODULE$$.compute(
-      |  $c, $winFrames, $thrAvg);
-      |${ev.isNull} = ${ev.value} == null;
-      |""".stripMargin)
+  override def kernel: Kernel = Kernel(WavVad, "compute", winFrames, thrAvg)
 
   override protected def withNewChildInternal(c: Expression): Expression =
     copy(child = c)
@@ -69,22 +53,11 @@ object WavVad {
 /** wavvad_media_for_id(id) -> binary ([[MediaFixtures
   * .wavVadMediaFor]] — speech-shaped loud/quiet/clipped PCM under a
   * closed contract). */
-case class WavVadMediaBytes(child: Expression) extends UnaryExpression {
+case class WavVadMediaBytes(child: Expression) extends KernelExpression {
 
   override def dataType: DataType = BinaryType
   override def prettyName: String = "wavvad_media_for_id"
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case LongType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires bigint, got ${other.simpleString}")
-  }
-
-  override def nullSafeEval(input: Any): Any =
-    MediaFixtures.wavVadMediaFor(input.asInstanceOf[Long])
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      c => s"graft.operators.MediaFixtures$$.MODULE$$.wavVadMediaFor($c)")
+  override def kernel: Kernel = Kernel(MediaFixtures, "wavVadMediaFor")
 
   override protected def withNewChildInternal(c: Expression): Expression =
     copy(child = c)

@@ -1,9 +1,7 @@
 package graft.functions
 
 import graft.operators.Winnow
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -12,25 +10,14 @@ import org.apache.spark.unsafe.types.UTF8String
   * SQL-portable hash family, so the oracle recomputes every selected
   * fingerprint. Null in → null out. */
 case class WinnowFp(child: Expression, k: Int, w: Int)
-    extends UnaryExpression {
+    extends KernelExpression {
   require(k >= 1 && w >= 1, s"k=$k w=$w")
 
   override def dataType: DataType =
     ArrayType(WinnowFp.fpSchema, containsNull = false)
   override def prettyName: String = "winnow"
   override def nullable: Boolean = true
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires string, got ${other.simpleString}")
-  }
-
-  override def nullSafeEval(input: Any): Any =
-    WinnowFp.compute(input.asInstanceOf[UTF8String], k, w)
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      c => s"graft.functions.WinnowFp$$.MODULE$$.compute($c, $k, $w)")
+  override def kernel: Kernel = Kernel(WinnowFp, "compute", k, w)
 
   override protected def withNewChildInternal(c: Expression): Expression =
     copy(child = c)

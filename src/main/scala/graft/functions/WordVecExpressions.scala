@@ -128,29 +128,15 @@ case class VectorSumLong(
   * 1M-doc training probe). Tokens come from the `[a-z]+|[0-9]+`
   * tokenizer so they cannot contain the separator. */
 case class TokenWindowPairs(child: Expression, window: Int)
-    extends UnaryExpression {
+    extends KernelExpression {
   require(window >= 1 && window <= 16, s"window $window")
 
   override def dataType: DataType =
     ArrayType(StringType, containsNull = false)
   override def prettyName: String = "token_window_pairs"
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(StringType, _) => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires array<string>, got ${other.simpleString}")
-  }
-
-  override def nullSafeEval(input: Any): Any =
-    TokenWindowPairs.compute(
-      input.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData],
-      window)
-
-  override def doGenCode(
-      ctx: org.apache.spark.sql.catalyst.expressions.codegen.CodegenContext,
-      ev: org.apache.spark.sql.catalyst.expressions.codegen.ExprCode)
-      : org.apache.spark.sql.catalyst.expressions.codegen.ExprCode =
-    defineCodeGen(ctx, ev,
-      c => s"graft.functions.TokenWindowPairs$$.MODULE$$.compute($c, $window)")
+  // the kernel takes `ArrayData`, which does not name its element type
+  override def inputTypes: Seq[DataType] = Seq(ArrayType(StringType))
+  override def kernel: Kernel = Kernel(TokenWindowPairs, "compute", window)
 
   override protected def withNewChildInternal(c: Expression): Expression =
     copy(child = c)
@@ -192,27 +178,12 @@ object TokenWindowPairs {
   * form evaluates its lambda interpreted, and at 12M PPMI rows × 64
   * dims (~770M evals) it dominated the 1M-doc training probe. */
 case class RiContrib(left: Expression, right: Expression, dim: Int)
-    extends org.apache.spark.sql.catalyst.expressions.BinaryExpression {
+    extends BinaryKernelExpression {
   require(dim >= 1 && dim <= 4096, s"dim $dim")
 
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
   override def prettyName: String = "ri_contrib"
-  override def checkInputDataTypes(): TypeCheckResult =
-    (left.dataType, right.dataType) match {
-      case (StringType, LongType) => TypeCheckResult.TypeCheckSuccess
-      case other => TypeCheckResult.TypeCheckFailure(
-        s"$prettyName requires (string, bigint), got $other")
-    }
-
-  override def nullSafeEval(c: Any, p: Any): Any =
-    RiContrib.compute(c.asInstanceOf[UTF8String], p.asInstanceOf[Long], dim)
-
-  override def doGenCode(
-      ctx: org.apache.spark.sql.catalyst.expressions.codegen.CodegenContext,
-      ev: org.apache.spark.sql.catalyst.expressions.codegen.ExprCode)
-      : org.apache.spark.sql.catalyst.expressions.codegen.ExprCode =
-    defineCodeGen(ctx, ev, (c, p) =>
-      s"graft.functions.RiContrib$$.MODULE$$.compute($c, $p, $dim)")
+  override def kernel: Kernel = Kernel(RiContrib, "compute", dim)
 
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): Expression =

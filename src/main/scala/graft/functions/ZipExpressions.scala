@@ -1,9 +1,7 @@
 package graft.functions
 
 import graft.operators.{MediaFixtures, Zip}
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, GenericInternalRow, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -13,26 +11,13 @@ import org.apache.spark.unsafe.types.UTF8String
   * metadata-only: no payload is inflated, so triage over a 100 TB
   * archive column costs the directory bytes, not the data. Dirty
   * bytes → null. */
-case class ZipEntries(child: Expression) extends UnaryExpression {
+case class ZipEntries(child: Expression) extends KernelExpression {
 
   override def dataType: DataType =
     ArrayType(ZipEntries.entrySchema, containsNull = false)
   override def prettyName: String = "zip_entries"
   override def nullable: Boolean = true
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case BinaryType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires binary, got ${other.simpleString}")
-  }
-
-  override def nullSafeEval(input: Any): Any =
-    ZipEntries.compute(input.asInstanceOf[Array[Byte]])
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => s"""
-      |${ev.value} = graft.functions.ZipEntries$$.MODULE$$.compute($c);
-      |${ev.isNull} = ${ev.value} == null;
-      |""".stripMargin)
+  override def kernel: Kernel = Kernel(ZipEntries, "compute")
 
   override protected def withNewChildInternal(c: Expression): Expression =
     copy(child = c)
@@ -70,28 +55,12 @@ object ZipEntries {
   * exact-length check ([[Zip.extractEntry]]). Missing names,
   * unsupported methods, and corrupt payloads → null. */
 case class ZipExtract(left: Expression, right: Expression)
-    extends BinaryExpression {
+    extends BinaryKernelExpression {
 
   override def dataType: DataType = BinaryType
   override def prettyName: String = "zip_extract"
   override def nullable: Boolean = true
-  override def checkInputDataTypes(): TypeCheckResult =
-    (left.dataType, right.dataType) match {
-      case (BinaryType, StringType) => TypeCheckResult.TypeCheckSuccess
-      case (l, r) => TypeCheckResult.TypeCheckFailure(
-        s"$prettyName requires (binary, string), got " +
-          s"${l.simpleString}, ${r.simpleString}")
-    }
-
-  override def nullSafeEval(b: Any, n: Any): Any =
-    ZipExtract.compute(b.asInstanceOf[Array[Byte]],
-      n.asInstanceOf[UTF8String])
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (b, n) => s"""
-      |${ev.value} = graft.functions.ZipExtract$$.MODULE$$.compute($b, $n);
-      |${ev.isNull} = ${ev.value} == null;
-      |""".stripMargin)
+  override def kernel: Kernel = Kernel(ZipExtract, "compute")
 
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): Expression =
@@ -106,22 +75,11 @@ object ZipExtract {
 
 /** zip_media_for_id(id) -> binary ([[MediaFixtures.zipMediaFor]] —
   * stored/deflated archives by parity, closed-form entry text). */
-case class ZipMediaBytes(child: Expression) extends UnaryExpression {
+case class ZipMediaBytes(child: Expression) extends KernelExpression {
 
   override def dataType: DataType = BinaryType
   override def prettyName: String = "zip_media_for_id"
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case LongType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires bigint, got ${other.simpleString}")
-  }
-
-  override def nullSafeEval(input: Any): Any =
-    MediaFixtures.zipMediaFor(input.asInstanceOf[Long])
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      c => s"graft.operators.MediaFixtures$$.MODULE$$.zipMediaFor($c)")
+  override def kernel: Kernel = Kernel(MediaFixtures, "zipMediaFor")
 
   override protected def withNewChildInternal(c: Expression): Expression =
     copy(child = c)

@@ -43,6 +43,17 @@ object DriverParquet {
     }.toVector
   }
 
+  /** The one row of a one-row sidecar (an index's `_stats`). Throws
+    * `IllegalStateException` naming `dir` and the row count unless the
+    * sidecar holds exactly one row: an empty or duplicated sidecar is a
+    * broken index, never a row to pick. */
+  def single(spark: SparkSession, dir: String): Group =
+    groups(spark, dir) match {
+      case Vector(g) => g
+      case gs => throw new IllegalStateException(
+        s"expected exactly one row in the sidecar $dir, found ${gs.size}")
+    }
+
   /** The parquet data files of a directory listing, by name. */
   def dataFiles(listing: Array[FileStatus]): Seq[Path] =
     listing.toSeq.map(_.getPath)

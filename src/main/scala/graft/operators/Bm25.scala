@@ -1367,7 +1367,7 @@ object Bm25Index {
     // one-row sidecar: driver-direct read (no Spark job per load —
     // the index-routed query family constructs an index per query,
     // r17 optimization round). Re-read every call, never cached.
-    val st = graft.index.DriverParquet.groups(spark, s"$path/_stats").head
+    val st = graft.index.DriverParquet.single(spark, s"$path/_stats")
     new Bm25Index(spark, path, st.getLong("n", 0), st.getLong("sumdl", 0),
       st.getInteger("n_buckets", 0))
   }

@@ -602,7 +602,7 @@ object ShingleIndex {
       throw new graft.index.IndexNotFoundException(
         s"no shingle index at $path")
     // one-row sidecar: driver-direct read (no Spark job per load, r17)
-    val st = graft.index.DriverParquet.groups(spark, dir.toString).head
+    val st = graft.index.DriverParquet.single(spark, dir.toString)
     new ShingleIndex(spark, path, st.getLong("n_docs", 0),
       st.getInteger("ngram", 0), st.getInteger("n_buckets", 0),
       st.getBoolean("hash_keys", 0))

@@ -144,9 +144,9 @@ object SuffixArray {
             .partitionBy(col("doc")).orderBy(col("pos"))).as("r2"))
       if (curDense && curMax <= encodeLimit && j < levels - 1) {
         // (j < levels-1: the FINAL round always densifies directly —
-        // fin must be dense for the adjacency trick, so an encoded
-        // last round would just pay the same densification as a
-        // separate extra pass plus one more checkpoint)
+        // the final ranks must be dense for the adjacency trick, so an
+        // encoded last round would just pay the same densification as
+        // a separate extra pass plus one more checkpoint)
         // packed-pair round: mult = C+1 = curMax+2 distinct values of
         // r2+1 (r2 ranges over -1..curMax), so r·mult + (r2+1) is
         // injective and lexicographic. No distinct, no sort, no ids.
@@ -188,25 +188,19 @@ object SuffixArray {
         allSingleton = curMax + 1L == totalRows
     }
     // the adjacency trick below (class r joined with class r+1) needs
-    // DENSE final ranks; if the loop ended on an encoded round,
-    // densify once — the same equality classes (the encoding is
-    // injective) in the same order (it is monotone), so this is a
-    // pure re-labeling.
-    val fin =
-      if (curDense) cur
-      else {
-        val ids = Ids.withDenseId(
-          cur.select(col("r")).distinct(), "__nr", Seq(col("r")))
-        cur.join(ids, "r")
-          .select(col("doc"), col("pos"), col("__nr").as("r"))
-          .localCheckpoint()
-      } // ranks of the depth-2^j prefixes, dense 0..C-1
+    // DENSE final ranks, and cur always holds them here (dense 0..C-1,
+    // the ranks of the depth-2^j prefixes). The loop ends one of three
+    // ways: (a) the rounds run out — the last round (j = levels-1)
+    // fails the encoded branch's `j < levels - 1` guard, so it
+    // densifies; (b) the early stop, which is only tested after a
+    // dense round; (c) no round at all (empty corpus, or levels = 0),
+    // leaving r0's dense token ranks.
 
     // class census: size + deterministic representative + a member's
     // suffix length (all members shorter than D are identical, so any
     // length works for the least(len, cap) bound; for classes holding
     // a >= D suffix the bound is cap either way)
-    val classes = fin
+    val classes = cur
       .groupBy(col("r"))
       .agg(count(lit(1)).as("__cnt"),
         min(struct(col("doc"), col("pos"))).as("__rep"))
@@ -266,7 +260,7 @@ object SuffixArray {
     // scan + split + posexplode one more full time
     val docLen = r0.groupBy(col("doc"))
       .agg(count(lit(1)).as("__len"))
-    fin.join(perClass, "r")
+    cur.join(perClass, "r")
       .join(docLen, "doc")
       .withColumn("__suflen", col("__len") - col("pos"))
       .withColumn("rep_len", least(

@@ -366,7 +366,7 @@ object WinnowIndex {
       throw new graft.index.IndexNotFoundException(
         s"no winnow index at $path")
     // one-row sidecar: driver-direct read (no Spark job per load, r17)
-    val st = graft.index.DriverParquet.groups(spark, dir.toString).head
+    val st = graft.index.DriverParquet.single(spark, dir.toString)
     new WinnowIndex(spark, path, st.getLong("n_docs", 0),
       st.getInteger("k", 0), st.getInteger("w", 0),
       st.getInteger("df_cap", 0), st.getInteger("n_buckets", 0))

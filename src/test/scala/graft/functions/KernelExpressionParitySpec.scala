@@ -1,0 +1,184 @@
+package graft.functions
+
+import java.io.File
+import java.lang.reflect.Modifier
+
+import scala.util.{Failure, Success, Try}
+
+import graft.SparkTestBase
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure
+import org.apache.spark.sql.catalyst.expressions.{BoundReference, Expression, InterpretedUnsafeProjection}
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, GenerateUnsafeProjection}
+import org.apache.spark.sql.catalyst.util.GenericArrayData
+import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.types.UTF8String
+
+/** Every function built on [[KernelExpression]] / [[BinaryKernelExpression]]
+  * evaluates to the same rows interpreted and generated, generates the
+  * static kernel call, and keeps its `requires …` type-check message.
+  *
+  * The set is discovered from the compiled `graft.functions` package, so
+  * a new kernel function is covered without editing this table; only a
+  * function with literal `Int` arguments needs an entry in `withArgs`. */
+class KernelExpressionParitySpec extends SparkTestBase {
+
+  /** Builders for the functions whose constructors take literal args. */
+  private val withArgs: Map[Class[_], Seq[Expression] => Expression] = Map(
+    classOf[CdcChunks] -> (es => CdcChunks(es(0), 64, 256, 1024)),
+    classOf[HashedNgramBuckets] -> (es => HashedNgramBuckets(es(0), 1024)),
+    classOf[ImageResize] -> (es => ImageResize(es(0), 4, 3)),
+    classOf[MediaFeatures] -> (es => MediaFeatures(es(0), 16)),
+    classOf[PngHistogram] -> (es => PngHistogram(es(0), 8)),
+    classOf[WavWindows] -> (es => WavWindows(es(0), 64)),
+    classOf[WavSpectral] -> (es => WavSpectral(es(0), 64)),
+    classOf[WavSpectralFlux] -> (es => WavSpectralFlux(es(0), 64)),
+    classOf[WavResample] -> (es => WavResample(es(0), 8000)),
+    classOf[WavNormalize] -> (es => WavNormalize(es(0), 16000)),
+    classOf[WavVad] -> (es => WavVad(es(0), 64, 100)),
+    classOf[WinnowFp] -> (es => WinnowFp(es(0), 5, 4)),
+    classOf[TokenWindowPairs] -> (es => TokenWindowPairs(es(0), 2)),
+    classOf[RiContrib] -> (es => RiContrib(es(0), es(1), 8)))
+
+  /** Concrete kernel-call classes in the compiled package. */
+  private lazy val kernelClasses: Seq[Class[_]] = {
+    val dir = new File(classOf[KernelExpression].getProtectionDomain
+      .getCodeSource.getLocation.toURI).toPath.resolve("graft/functions").toFile
+    dir.listFiles.toSeq.map(_.getName)
+      .filter(n => n.endsWith(".class") && !n.contains("$"))
+      .map(n => Class.forName("graft.functions." + n.stripSuffix(".class")))
+      .filter(c => classOf[KernelCall].isAssignableFrom(c) &&
+        !Modifier.isAbstract(c.getModifiers))
+      .sortBy(_.getName)
+  }
+
+  private def build(c: Class[_], children: Seq[Expression]): KernelCall =
+    withArgs.get(c) match {
+      case Some(b) => b(children).asInstanceOf[KernelCall]
+      case None =>
+        val ctor = c.getConstructors.find(_.getParameterCount == children.size)
+          .getOrElse(fail(s"${c.getSimpleName}: no ${children.size}-child " +
+            "constructor; add it to withArgs"))
+        ctor.newInstance(children: _*).asInstanceOf[KernelCall]
+    }
+
+  /** The arity of a class: 2 for the two-input twin, 1 otherwise. */
+  private def arity(c: Class[_]): Int =
+    if (classOf[BinaryKernelExpression].isAssignableFrom(c)) 2 else 1
+
+  private def refs(types: Seq[DataType], nullable: Boolean): Seq[Expression] =
+    types.zipWithIndex.map { case (t, i) => BoundReference(i, t, nullable) }
+
+  private def placeholder(c: Class[_]): KernelCall =
+    build(c, Seq.fill(arity(c))(BoundReference(0, NullType, nullable = true)))
+
+  /** Every id-keyed fixture function's output of type `t` at id 1. */
+  private def fixtures(t: DataType): Seq[Any] =
+    kernelClasses.map(placeholder)
+      .filter(e => e.inputTypes == Seq(LongType) && e.dataType == t)
+      .flatMap { e =>
+        val f = build(e.getClass, refs(Seq(LongType), nullable = false))
+        Option(f.eval(InternalRow(1L)))
+      }
+
+  private val ids: Seq[Any] = Seq(0L, 1L, 7L)
+
+  /** Short strings (the last two are entry names of the id-1 tar and
+    * zip fixtures) and every string fixture. */
+  private lazy val strings: Seq[Any] = Seq("", "hello world. A second one!",
+    "HTTP://Example.COM:80/a/../b?q=1#frag", "<p>caf&eacute; &amp; x</p>",
+    "User-agent: *\nDisallow: /private\n", "/private/x", "cafÃ©",
+    "f_1_0.txt", "doc_1_0.txt").map(UTF8String.fromString) ++
+    fixtures(StringType)
+
+  private val tokenArrays: Seq[Any] = Seq(Seq("a", "b", "c", "d"), Seq.empty)
+    .map(ts => new GenericArrayData(ts.map(UTF8String.fromString).toArray[Any]))
+
+  /** Binary samples: garbage, every fixture's bytes, and one round of
+    * every bytes-to-bytes function over them (gunzip, unzstd, the audio
+    * decoders), so each decoder sees its own format among all others. */
+  private lazy val blobs: Seq[Any] = {
+    val base = Seq(Array.emptyByteArray, Array[Byte](1, 2, 3)) ++
+      fixtures(BinaryType).map(_.asInstanceOf[Array[Byte]]) ++
+      fixtures(StringType).map(_.toString.getBytes("UTF-8"))
+    val decoded = kernelClasses.map(placeholder)
+      .filter(e => e.inputTypes == Seq(BinaryType) && e.dataType == BinaryType)
+      .flatMap { e =>
+        val f = build(e.getClass, refs(Seq(BinaryType), nullable = false))
+        base.flatMap(b =>
+          Try(f.eval(InternalRow(b))).toOption.flatMap(Option(_)))
+      }.map(_.asInstanceOf[Array[Byte]])
+    (base ++ decoded).distinctBy(b => java.nio.ByteBuffer.wrap(b))
+  }
+
+  private def samples(t: DataType): Seq[Any] = t match {
+    case LongType => ids
+    case StringType => strings
+    case BinaryType => blobs
+    case ArrayType(StringType, _) => tokenArrays
+    case other => fail(s"no samples for $other")
+  }
+
+  private def outcome(f: => InternalRow): Try[Any] = Try(f.copy())
+
+  test("the discovered set is every single-kernel function") {
+    assert(kernelClasses.size == 132,
+      kernelClasses.map(_.getSimpleName).mkString(", "))
+  }
+
+  test("interpreted and generated projections give equal rows") {
+    for (c <- kernelClasses) {
+      val types = placeholder(c).inputTypes
+      val rows = types.map(t => null +: samples(t))
+        .foldLeft(Seq(Seq.empty[Any]))((acc, xs) =>
+          for (a <- acc; x <- xs) yield a :+ x)
+      for (nullable <- Seq(true, false)) {
+        val e = build(c, refs(types, nullable))
+        val interp = InterpretedUnsafeProjection.createProjection(Seq(e))
+        val gen = GenerateUnsafeProjection.generate(Seq(e))
+        for (r <- rows if nullable || !r.contains(null)) {
+          val in = InternalRow.fromSeq(r)
+          val (a, b) = (outcome(interp(in)), outcome(gen(in)))
+          val same = (a, b) match {
+            case (Success(x), Success(y)) => x == y
+            case (Failure(x), Failure(y)) =>
+              x.getClass == y.getClass && x.getMessage == y.getMessage
+            case _ => false
+          }
+          assert(same, s"${e.prettyName} nullable=$nullable on $r: $a vs $b")
+        }
+      }
+    }
+  }
+
+  test("generated code is the static kernel call") {
+    for (c <- kernelClasses) {
+      val e = build(c, refs(placeholder(c).inputTypes, nullable = true))
+      val code = e.genCode(new CodegenContext).code.toString
+      val k = e.kernel
+      val call = s"${k.owner.getClass.getName}.MODULE$$.${k.method}("
+      assert(code.contains(call), s"${e.prettyName}: $code")
+    }
+  }
+
+  test("a wrong-typed input keeps the `requires …` message") {
+    val messages = kernelClasses.map { c =>
+      val e = build(c, refs(Seq.fill(arity(c))(BooleanType), nullable = true))
+      val want = e.inputTypes.map(_.simpleString).mkString(", ")
+      val expected =
+        if (arity(c) == 1) s"${e.prettyName} requires $want, got boolean"
+        else s"${e.prettyName} requires ($want), got boolean, boolean"
+      val got = e.checkInputDataTypes()
+      assert(got == TypeCheckFailure(expected))
+      expected
+    }
+    // the exact wording, pinned once per input-type spelling
+    for (m <- Seq("parse_media requires binary, got boolean",
+        "mp3_media_for_id requires bigint, got boolean",
+        "html_text requires string, got boolean",
+        "token_window_pairs requires array<string>, got boolean",
+        "robots_allowed requires (string, string), got boolean, boolean",
+        "tar_extract requires (binary, string), got boolean, boolean"))
+      assert(messages.contains(m), m)
+  }
+}

@@ -71,4 +71,35 @@ class DriverParquetSpec extends AnyFunSuite {
     // sumdl = total token count over the corpus (3 + 3)
     assert(idx.sumdl === 6L)
   }
+
+  test("single: a sidecar without exactly one row fails loudly") {
+    import spark.implicits._
+    val empty = tmpDir("empty")
+    Seq.empty[(Long, Long)].toDF("n", "sumdl")
+      .coalesce(1).write.mode("overwrite").parquet(empty)
+    val e0 = intercept[IllegalStateException](DriverParquet.single(spark, empty))
+    assert(e0.getMessage.contains(empty) && e0.getMessage.contains("found 0"))
+    val one = tmpDir("one")
+    Seq((3L, 9L)).toDF("n", "sumdl")
+      .coalesce(1).write.mode("overwrite").parquet(one)
+    assert(DriverParquet.single(spark, one).getLong("sumdl", 0) === 9L)
+  }
+
+  test("an index whose _stats holds two part files refuses to load") {
+    import spark.implicits._
+    val docs = Seq((0L, "alpha beta"), (1L, "beta gamma"))
+      .toDF("doc_id", "text")
+    val path = tmpDir("bm25dup") + "/idx"
+    graft.operators.Bm25Index.build(docs, "text", "doc_id", path,
+      nBuckets = 4)
+    // a second one-row part file beside the committed one
+    val stats = new java.io.File(s"$path/_stats")
+    val part = stats.listFiles.find(_.getName.endsWith(".parquet")).get
+    java.nio.file.Files.copy(part.toPath,
+      new java.io.File(stats, "part-99999-extra.parquet").toPath)
+    val e = intercept[IllegalStateException](
+      graft.operators.Bm25Index.load(spark, path))
+    assert(e.getMessage.contains(s"$path/_stats"), e.getMessage)
+    assert(e.getMessage.contains("found 2"), e.getMessage)
+  }
 }
