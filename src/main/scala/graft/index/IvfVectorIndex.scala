@@ -3,7 +3,7 @@ package graft.index
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.operators.{Ivf, Knn, Pq}
+import graft.operators.{IndexMerge, Ivf, Knn, Pq}
 
 /** Vector index stored *partitioned by IVF cluster* — the k-means twin
   * of [[LshVectorIndex]], same 100 TB storage story: vectors land in
@@ -35,12 +35,45 @@ import graft.operators.{Ivf, Knn, Pq}
   * retrain loop lacked). Writers remain single-writer per index, as
   * for every lake in this engine. Codebooks version WITH the data
   * (`_books/…`, referenced by the manifest) so a pinned snapshot is
-  * read with exactly the book its rows were assigned under. */
+  * read with exactly the book its rows were assigned under.
+  *
+  * Append, compact and shard merge are the shared lifecycle
+  * ([[ManifestIndex]]): shards built with the SAME codebooks (IVF
+  * centroids and, when coded, the PQ books, bit-equal) assign vectors
+  * alike, so their generations are disjoint row sets of the same index
+  * and merge as directory moves — the 100 TB build shape: train the
+  * codebook once on a sample, broadcast it, build shard indexes in
+  * parallel (each a local sort + write), merge as metadata. */
 class IvfVectorIndex private (
     val spark: SparkSession,
     val path: String,
     val model: Ivf.Model,
-    val pqModel: Option[Pq.Model]) {
+    val pqModel: Option[Pq.Model])
+    extends ManifestIndex[IvfVectorIndex] {
+
+  protected def family: Manifests.Family = IvfVectorIndex.Storage
+
+  /** One file per cluster until clusters outgrow the target size. */
+  protected def idealPartitions: Int = model.centroids.length
+
+  /** Differing books assign the same vector to different clusters, and
+    * the merged partitions would lie. */
+  protected def requireMergeable(other: IvfVectorIndex): Unit = {
+    require(model.centroids.length == other.model.centroids.length &&
+      model.centroids.zip(other.model.centroids)
+        .forall { case (a, b) => java.util.Arrays.equals(a, b) },
+      "ivf merge: shards must be built with the SAME IVF codebook " +
+      "(bit-equal centroids) — differing books assign the same vector " +
+      "to different clusters and the merged partitions would lie")
+    require(pqModel.isDefined == other.pqModel.isDefined &&
+      pqModel.zip(other.pqModel).forall { case (a, b) =>
+        a.codebooks.length == b.codebooks.length &&
+        a.codebooks.zip(b.codebooks).forall { case (ba, bb) =>
+          ba.zip(bb).forall { case (ca, cb) =>
+            java.util.Arrays.equals(ca, cb) } }
+      },
+      "ivf merge: PQ codebooks must match (or both be absent)")
+  }
 
   /** The CURRENT committed snapshot: file listing and schema come from
     * the newest manifest (resolved once per snapshot and reused,
@@ -114,128 +147,16 @@ class IvfVectorIndex private (
     * claim; per-append replay protection stays the caller's job
     * ([[graft.streaming.BatchLedger]] on the streaming path). */
   def append(docs: DataFrame, vecCol: String, idCol: String): IvfVectorIndex = {
-    val m = Manifests.require(spark, path)
-    val assigned = Ivf.assign(docs, vecCol, model)
-      .withColumnRenamed(vecCol, "vector")
-      .withColumnRenamed(idCol, "docid")
-    val coded = pqModel match {
-      case Some(pq) => Pq.encode(assigned, "vector", pq)
-      case None => assigned
-    }
-    val gen = Manifests.genDirName(m.n + 1)
-    // repartition ON the cluster before partitionBy (r14/r16 lesson):
-    // without it every task writes a sliver into every cluster dir it
-    // holds rows for — tasks × clusters files per batch
-    coded.repartition(col("cluster"))
-      .sortWithinPartitions("cluster", "docid")
-      .write.mode("overwrite").partitionBy("cluster")
-      .parquet(s"$path/$gen")
-    Manifests.commit(spark, path, m.book,
-      m.parts ++ Manifests.listParts(spark, path, gen))
+    Manifests.appendGeneration(spark, path, family,
+      IvfVectorIndex.rows(docs, vecCol, idCol, model, pqModel))
     val Array(idr) = docs.agg(
       min(col(idCol).cast("long")), max(col(idCol).cast("long"))).collect()
     if (!idr.isNullAt(0))
-      graft.operators.IndexMerge.recordRange(
-        spark, path, idr.getLong(0), idr.getLong(1))
+      IndexMerge.recordRange(spark, path, idr.getLong(0), idr.getLong(1))
     this
   }
 
   def count(): Long = df.count()
-
-  /** Absorb `other` — a shard built with the SAME codebooks (IVF
-    * centroids and, when coded, the PQ books, bit-equal) — by pure
-    * directory moves: every shard assigns vectors with the shared
-    * book, so the shards' generations are disjoint row sets of the
-    * same index and merge as O(generations) renames (r17 — was
-    * O(files)). The 100 TB build shape: train the codebook once on a
-    * sample, broadcast it, build shard indexes in parallel (each a
-    * local sort + write), merge as metadata. */
-  def merge(other: IvfVectorIndex): IvfVectorIndex = mergeAll(Seq(other))
-
-  /** Multi-way [[merge]] (r15): docid-range claims validate ONCE over
-    * every source's `_ranges` ledger ([[graft.operators.IndexMerge
-    * .claimRangesAll]] — a PARTIAL overlap between shards throws
-    * instead of silently duplicating docids; indexes built before the
-    * ledger existed merge unchecked — unknowable). Crash protocol
-    * (r17): sources are owned by rename ([[graft.operators.IndexMerge
-    * .takeOwnership]] — closes the quiesce TOCTOU), a
-    * `_merge_pending` marker precedes the generation moves, and every
-    * [[IvfVectorIndex.load]] rolls an interrupted merge forward
-    * ([[Manifests.completeMerge]]); the destination's readers see the
-    * absorbed shards atomically at the manifest commit. */
-  def mergeAll(others: Seq[IvfVectorIndex],
-      compact: Boolean = false): IvfVectorIndex = {
-    if (others.isEmpty) return this
-    others.foreach { other =>
-      require(model.centroids.length == other.model.centroids.length &&
-        model.centroids.zip(other.model.centroids)
-          .forall { case (a, b) => java.util.Arrays.equals(a, b) },
-        "ivf merge: shards must be built with the SAME IVF codebook " +
-        "(bit-equal centroids) — differing books assign the same vector " +
-        "to different clusters and the merged partitions would lie")
-      require(pqModel.isDefined == other.pqModel.isDefined &&
-        pqModel.zip(other.pqModel).forall { case (a, b) =>
-          a.codebooks.length == b.codebooks.length &&
-          a.codebooks.zip(b.codebooks).forall { case (ba, bb) =>
-            ba.zip(bb).forall { case (ca, cb) =>
-              java.util.Arrays.equals(ca, cb) } }
-        },
-        "ivf merge: PQ codebooks must match (or both be absent)")
-    }
-    val dst = new org.apache.hadoop.fs.Path(path)
-    val fs = dst.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    graft.operators.IndexMerge.requireDistinctSources(
-      spark, path, others.map(_.path))
-    graft.operators.IndexMerge.requireQuiesced(
-      spark, path, others.map(_.path))
-    // settle ANY interrupted merge first (an older one, or this very
-    // merge's crashed run — settling it IS the resume)
-    Manifests.completeMerge(spark, path)
-    // ownership rename BEFORE the claims read (r17 — see
-    // [[graft.operators.IndexMerge.takeOwnership]]); a re-run of a
-    // completed merge sees neither tree: allowMissing keeps that
-    // idempotent
-    val owned = graft.operators.IndexMerge.takeOwnership(
-      spark, others.map(_.path), allowMissing = true)
-    try graft.operators.IndexMerge.claimRangesAll(spark, path, owned)
-    catch {
-      case e: Throwable => // refused before any move: hand back
-        others.foreach(o =>
-          graft.operators.IndexMerge.releaseOwnership(spark, o.path))
-        throw e
-    }
-    graft.operators.IndexMerge.writeMarker(
-      fs, dst, graft.operators.IndexMerge.joinSrcs(owned), Seq(0L))
-    Manifests.completeMerge(spark, path) // runs THIS merge to the end
-    others.foreach(o => graft.plans.AnnRouteRule.invalidate(o.path))
-    // opt-in post-step (r16) — see Bm25Index.mergeAll's note
-    if (compact && shouldCompact()) this.compact() else this
-  }
-
-  /** `(fileCount, bytes)` of the current snapshot's data tree — the
-    * part a many-shard merge or append cadence fragments. */
-  def storageFootprint(): (Long, Long) = {
-    val m = Manifests.require(spark, path)
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val stats = m.parts.flatMap { p =>
-      val d = new org.apache.hadoop.fs.Path(s"$path/$p")
-      if (fs.exists(d)) fs.listStatus(d).filter(_.isFile).toSeq
-      else Seq.empty
-    }
-    (stats.length.toLong, stats.map(_.getLen).sum)
-  }
-
-  /** The auto-compaction trigger ([[graft.operators.ShingleIndex
-    * .shouldCompact]]'s measured rule, ideal = one file per cluster
-    * until clusters outgrow the target file size). */
-  def shouldCompact(
-      slack: Double = 16.0,
-      targetFileBytes: Long = 256L << 20): Boolean = {
-    val (files, bytes) = storageFootprint()
-    graft.operators.IndexMerge.needsCompact(
-      files, bytes, model.centroids.length, slack, targetFileBytes)
-  }
 
   /** The drift RESPONDER — completes the loop [[graft.operators.Ivf
     * .drift]] opens: re-cluster ONLY the flagged clusters' rows and
@@ -284,51 +205,42 @@ class IvfVectorIndex private (
     drifted.zipWithIndex.foreach { case (g, i) =>
       patched(g) = local.centroids(i)
     }
-    commitRewrite(drifted, reassigned, patched)
+    commitRewrite(reassigned, Ivf.Model(patched), replacing(drifted))
   }
 
-  /** The snapshot commit shared by [[retrainInPlace]] and
-    * [[growClusters]] (r14 staged roll-forward, re-founded on
-    * [[Manifests]] in r17): the reassigned rows land whole in a fresh
-    * generation, the patched codebook in a fresh `_books` dir, and
-    * ONE manifest commit atomically (a) replaces every touched
-    * cluster's partitions, (b) drops a touched cluster that ended
-    * refinement with zero rows (routine k-means: a refined neighbor
-    * stole everything), and (c) swaps the codebook. A crash BEFORE
-    * the commit leaves the index untouched (the orphan generation is
-    * reaped later); there is no after-window to roll forward — the
-    * commit IS the point of completion. Concurrent readers pinned to
-    * the previous snapshot read it undisturbed. */
+  /** The snapshot commit shared by [[retrainInPlace]],
+    * [[growClusters]] and [[rebuild]] (r14 staged roll-forward,
+    * re-founded on [[Manifests]] in r17): the new codebook lands in a
+    * fresh `_books` dir, the reassigned rows whole in a fresh
+    * generation, and ONE manifest commit atomically (a) replaces
+    * every partition `keep` drops, (b) drops a touched cluster that
+    * ended refinement with zero rows (routine k-means: a refined
+    * neighbor stole everything), and (c) swaps the codebook. A crash
+    * BEFORE the commit leaves the index untouched (the orphan
+    * generation and book are reaped later); there is no after-window
+    * to roll forward — the commit IS the point of completion.
+    * Concurrent readers pinned to the previous snapshot read it
+    * undisturbed. */
   private def commitRewrite(
-      touched: Seq[Int],
       reassigned: DataFrame,
-      patched: Array[Array[Float]],
-      maxRecordsPerFile: Long = 5000000L): IvfVectorIndex = {
+      book: Ivf.Model,
+      keep: Manifests.Manifest => Seq[String],
+      maxRecordsPerFile: Long = Manifests.MaxRecordsPerFile)
+      : IvfVectorIndex = {
     val m = Manifests.require(spark, path)
-    val gen = Manifests.genDirName(m.n + 1)
-    // repartition ON the cluster before partitionBy (r16 — the r14
-    // postings-lake lesson applied to the rewrite): without it every
-    // read task writes a sliver into every staged cluster dir it
-    // holds rows for — tasks × clusters files, the measured cost
-    // driver of a many-partition grow (GrowScaleProbe); one shuffle
-    // of the touched rows buys whole-partition docid-sorted files.
-    // maxRecordsPerFile (r17, ADVICE r16) keeps a HOT cluster from
-    // becoming one oversized single file.
-    reassigned.repartition(col("cluster"))
-      .sortWithinPartitions("cluster", "docid")
-      .write.mode("overwrite")
-      .option("maxRecordsPerFile", maxRecordsPerFile)
-      .partitionBy("cluster")
-      .parquet(s"$path/$gen")
-    val book = Manifests.bookName(m.n + 1)
-    IvfVectorIndex.writeBook(spark, path, book, patched, pqModel)
-    val touchedSet = touched.toSet
-    val kept = m.parts.filterNot(p =>
-      touchedSet.contains(Manifests.partitionValueOf(p).toInt))
-    Manifests.commit(spark, path, Some(book),
-      kept ++ Manifests.listParts(spark, path, gen))
+    val name = Manifests.bookName(m.n + 1)
+    IvfVectorIndex.writeBook(spark, path, name, book.centroids, pqModel)
+    Manifests.writeGeneration(spark, path, family, reassigned, Some(m),
+      keep(m), Some(name), maxRecordsPerFile)
     graft.plans.AnnRouteRule.invalidate(path)
-    new IvfVectorIndex(spark, path, Ivf.Model(patched), pqModel)
+    new IvfVectorIndex(spark, path, book, pqModel)
+  }
+
+  /** The part lines of every cluster but `touched`. */
+  private def replacing(touched: Seq[Int])(m: Manifests.Manifest)
+      : Seq[String] = {
+    val t = touched.toSet
+    m.parts.filterNot(p => t.contains(Manifests.partitionValueOf(p).toInt))
   }
 
   /** The drift responder for NOVEL mass — GROW the codebook instead of
@@ -446,7 +358,7 @@ class IvfVectorIndex private (
       col("cluster").isin(touched.map(Integer.valueOf): _*))
     val reassigned = Ivf.assign(rows.drop("cluster"), "vector",
       patchedModel)
-    commitRewrite(touched, reassigned, patched)
+    commitRewrite(reassigned, patchedModel, replacing(touched))
   }
 
   /** RE-FIT the codebook to the current corpus and rewrite the whole
@@ -467,56 +379,41 @@ class IvfVectorIndex private (
     * snapshot protocol as every other rewrite (concurrent readers
     * pinned to the old book + old layout finish undisturbed). */
   def rebuild(newModel: Ivf.Model,
-      maxRecordsPerFile: Long = 5000000L): IvfVectorIndex = {
+      maxRecordsPerFile: Long = Manifests.MaxRecordsPerFile)
+      : IvfVectorIndex = {
     require(newModel.dim == model.dim,
       s"rebuild: dimension mismatch (${newModel.dim} vs ${model.dim})")
-    val reassigned = Ivf.assign(df.drop("cluster"), "vector", newModel)
-    val m = Manifests.require(spark, path)
-    val gen = Manifests.genDirName(m.n + 1)
-    reassigned.repartition(col("cluster"))
-      .sortWithinPartitions("cluster", "docid")
-      .write.mode("overwrite")
-      .option("maxRecordsPerFile", maxRecordsPerFile)
-      .partitionBy("cluster")
-      .parquet(s"$path/$gen")
-    val book = Manifests.bookName(m.n + 1)
-    IvfVectorIndex.writeBook(spark, path, book, newModel.centroids, pqModel)
-    Manifests.commit(spark, path, Some(book),
-      Manifests.listParts(spark, path, gen))
-    graft.plans.AnnRouteRule.invalidate(path)
-    new IvfVectorIndex(spark, path, newModel, pqModel)
-  }
-
-  /** Offline maintenance: rewrite the data files at the target file
-    * size (repeated appends leave one small file per append per
-    * cluster; small files tax every scan's task scheduling). The
-    * rewrite lands in a fresh generation and one manifest commit
-    * makes it the whole snapshot — CONCURRENT READERS pinned to the
-    * previous snapshot are undisturbed (r17; the pre-manifest
-    * directory swap was honest about not being reader-safe). */
-  def compact(maxRecordsPerFile: Long = 5000000L): IvfVectorIndex = {
-    val m = Manifests.require(spark, path)
-    val gen = Manifests.genDirName(m.n + 1)
-    // re-sort while rewriting: reading the old files yields arbitrary
-    // row order, and compaction must restore the docid-sorted layout
-    // the fetch-path row-group pruning depends on (see build); the
-    // cluster repartition folds a many-file partition into one task's
-    // whole-partition files
-    Manifests.dataFrame(spark, path, m)
-      .repartition(col("cluster"))
-      .sortWithinPartitions("cluster", "docid")
-      .write.mode("overwrite")
-      .option("maxRecordsPerFile", maxRecordsPerFile)
-      .partitionBy("cluster")
-      .parquet(s"$path/$gen")
-    Manifests.commit(spark, path, m.book,
-      Manifests.listParts(spark, path, gen))
-    graft.plans.AnnRouteRule.invalidate(path)
-    this
+    commitRewrite(Ivf.assign(df.drop("cluster"), "vector", newModel),
+      newModel, _ => Nil, maxRecordsPerFile)
   }
 }
 
 object IvfVectorIndex {
+
+  /** Cluster-partitioned, docid-sorted generations: parquet row-group
+    * min/max stats on docid are then disjoint ranges, so the shortlist
+    * re-rank ([[IvfVectorIndex.searchAdc]]) and candidate-vector
+    * fetches (Bm25Index.hybridSearch) prune to the few row groups
+    * holding their In(docid) set. A settled merge drops the routing
+    * rule's cached codebooks of the destination and of the absorbed
+    * sources. */
+  private[index] val Storage: Manifests.Family =
+    new Manifests.Family("cluster", "docid") {
+      override def settle(spark: SparkSession, path: String,
+          srcs: Seq[String], stats: Seq[Long]): Unit =
+        (path +: srcs.map(_.stripSuffix(IndexMerge.OwnedSuffix)))
+          .foreach(graft.plans.AnnRouteRule.invalidate)
+    }
+
+  /** `docs` as index rows: the stored codebook's cluster, the vector as
+    * `vector`, the id as `docid`, and the PQ `code` when coded. */
+  private def rows(docs: DataFrame, vecCol: String, idCol: String,
+      model: Ivf.Model, pqModel: Option[Pq.Model]): DataFrame = {
+    val assigned = Ivf.assign(docs, vecCol, model)
+      .withColumnRenamed(vecCol, "vector")
+      .withColumnRenamed(idCol, "docid")
+    pqModel.fold(assigned)(Pq.encode(assigned, "vector", _))
+  }
 
   /** Build from (docid, vector, …) rows with a trained codebook; pass
     * `pqModel` to also store m-byte PQ codes (the IVF+PQ layout). A
@@ -528,42 +425,22 @@ object IvfVectorIndex {
       path: String,
       model: Ivf.Model,
       pqModel: Option[Pq.Model] = None,
-      maxRecordsPerFile: Long = 5000000L): IvfVectorIndex = {
+      maxRecordsPerFile: Long = Manifests.MaxRecordsPerFile)
+      : IvfVectorIndex = {
     val spark = docs.sparkSession
     // a build REPLACES the path (the pre-manifest overwrite semantics)
     Manifests.reset(spark, path)
-    val assigned = Ivf.assign(docs, vecCol, model)
-      .withColumnRenamed(vecCol, "vector")
-      .withColumnRenamed(idCol, "docid")
-    val coded = pqModel match {
-      case Some(pq) => Pq.encode(assigned, "vector", pq)
-      case None => assigned
-    }
-    val gen = Manifests.genDirName(1L)
-    // docid-sorted files: parquet row-group min/max stats on docid are
-    // then disjoint ranges, so the shortlist re-rank (searchAdc) and
-    // candidate-vector fetches (Bm25Index.hybridSearch) prune to the
-    // few row groups holding their In(docid) set instead of decoding
-    // every group — unsorted files have near-full-range stats and
-    // prune nothing. The cluster repartition buys whole-partition
-    // files (one task per cluster, not tasks × clusters slivers).
-    coded.repartition(col("cluster"))
-      .sortWithinPartitions("cluster", "docid").write
-      .mode("overwrite")
-      .option("maxRecordsPerFile", maxRecordsPerFile)
-      .partitionBy("cluster")
-      .parquet(s"$path/$gen")
     val book = Manifests.bookName(1L)
     writeBook(spark, path, book, model.centroids, pqModel)
-    Manifests.commit(spark, path, Some(book),
-      Manifests.listParts(spark, path, gen))
+    Manifests.writeGeneration(spark, path, Storage,
+      rows(docs, vecCol, idCol, model, pqModel), None, Nil, Some(book),
+      maxRecordsPerFile)
     // fresh build: reset the docid-range ledger to this corpus's
     // interval (r15) — [[mergeAll]]'s shard-disjointness guard
     val Array(idr) = docs.agg(
       min(col(idCol).cast("long")), max(col(idCol).cast("long"))).collect()
     if (!idr.isNullAt(0))
-      graft.operators.IndexMerge.resetRange(
-        spark, path, idr.getLong(0), idr.getLong(1))
+      IndexMerge.resetRange(spark, path, idr.getLong(0), idr.getLong(1))
     // A rebuild over an existing path replaces the codebook: sessions
     // with spark.graft.ann.autoRoute=true must not keep routing with
     // the stale cached centroids (probes against old centroids over new
@@ -611,7 +488,7 @@ object IvfVectorIndex {
     * first ([[Manifests.completeMerge]]) so a crashed merge window
     * never leaves a half-absorbed index. */
   def load(spark: SparkSession, path: String): IvfVectorIndex = {
-    Manifests.completeMerge(spark, path)
+    Manifests.completeMerge(spark, path, Storage)
     val m = Manifests.require(spark, path)
     val book = m.book.getOrElse(throw new IndexNotFoundException(
       s"No IVF codebook recorded in the manifest at $path"))

@@ -1,7 +1,11 @@
 package graft.index
 
 import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.parquet.example.data.Group
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.{col, lit}
+
+import graft.operators.IndexMerge
 
 /** Snapshot storage for the PARTITION-LAYOUT index families — the
   * vector indexes ([[IvfVectorIndex]], [[LshVectorIndex]]) and, since
@@ -50,7 +54,16 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * retained manifest references. A reader must be younger than
   * `retain` maintenance COMMITS (not wall-clock) — the same contract
   * as any lakehouse snapshot expiry; size `retain` to the longest
-  * scan overlapping the busiest maintenance cadence. */
+  * scan overlapping the busiest maintenance cadence.
+  *
+  * The index LIFECYCLE all five families share is written here once:
+  * one generation write ([[writeGeneration]]), one
+  * [[ManifestIndex.compact]], one file footprint behind
+  * [[ManifestIndex.shouldCompact]], one [[completeMerge]] roll-forward
+  * and one [[ManifestIndex.mergeAll]] driver. A family supplies only what differs — its [[Family]]
+  * (partition and sort columns, what a merge writes back) and the
+  * [[ManifestIndex]] hooks (ideal partition count, parameter check,
+  * marker stats). */
 object Manifests {
 
   /** One committed snapshot: `parts` are `gen=…/<prefix>=…` partition
@@ -75,9 +88,8 @@ object Manifests {
   val DefaultRetain = 3
 
   private[index] def manifestName(n: Long) = f"m-$n%010d"
-  /** Generation-directory name for commit `n` — public because the
-    * postings lakes ([[graft.operators.Bm25Index]] and siblings)
-    * share the storage convention (r17). */
+  /** Generation-directory name for commit `n` (written only by
+    * [[writeGeneration]]). */
   def genDirName(n: Long) = f"gen=g-$n%010d"
   private[index] def bookName(n: Long) = f"b-$n%010d"
 
@@ -264,7 +276,6 @@ object Manifests {
 
   private def resolveDataFrame(
       spark: SparkSession, path: String, m: Manifest): DataFrame = {
-    import org.apache.spark.sql.functions.{col, lit}
     val head = m.parts.head
     val sub = head.substring(head.indexOf('/') + 1)
     val partCol = sub.substring(0, sub.indexOf('='))
@@ -311,42 +322,6 @@ object Manifests {
     "gen=g-m" + md.take(5).map(b => f"$b%02x").mkString
   }
 
-  /** Roll an interrupted shard merge forward — called by the vector
-    * families' `load` and at every `mergeAll` entry (where it is also
-    * the RESUME: the fresh marker written just before makes the
-    * mainline merge a roll-forward too). Protocol state on disk is a
-    * `_merge_pending` marker listing the owned source paths; every
-    * step is idempotent: generation moves skip already-moved dirs,
-    * the manifest commit dedups part lines, source deletes and the
-    * marker delete are no-ops when already done. */
-  def completeMerge(spark: SparkSession, path: String): Unit = {
-    val dst = new Path(path)
-    val fs = fsOf(spark, path)
-    if (!fs.exists(dst)) return
-    graft.operators.IndexMerge.readMarker(fs, dst).foreach {
-      case (srcLine, _) =>
-        val srcs = graft.operators.IndexMerge.splitSrcs(srcLine)
-        val m = require(spark, path)
-        val moved = srcs.flatMap { s =>
-          // a source is movable while its manifest store survives; a
-          // tree already drained (or torn by a crashed delete) is
-          // finished by the delete below
-          if (current(spark, s).isDefined) moveGenerations(spark, s, path)
-          else Vector.empty
-        }
-        if (moved.nonEmpty)
-          commit(spark, path, m.book, m.parts ++ moved)
-        srcs.foreach { s =>
-          val sp = new Path(s)
-          sp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-            .delete(sp, true)
-          ()
-        }
-        graft.operators.IndexMerge.deleteMarker(fs, dst)
-        graft.plans.AnnRouteRule.invalidate(path)
-    }
-  }
-
   /** Move every generation a source manifest references into `dst`
     * under [[mergedGenName]] names (whole-directory renames, skipped
     * when already moved) and return the source's part lines rebased
@@ -373,5 +348,234 @@ object Manifests {
     src.parts.map { p =>
       s"${mergedGenName(srcPath, genOf(p))}/${p.substring(p.indexOf('/') + 1)}"
     }
+  }
+
+  /** Rows per file in every generation write: a hot partition is split
+    * into files of this many rows instead of one oversized file. */
+  val MaxRecordsPerFile = 5000000L
+
+  /** What a family's generations look like and what its shard merge
+    * writes back. Rows are partitioned on `partCol` and sorted on
+    * `sortCol` within each partition, so parquet row-group min/max
+    * stats on the sort key are disjoint ranges a filter prunes on. */
+  class Family(val partCol: String, val sortCol: String) {
+    /** Settle a merge whose generations are committed, before its
+      * sources are deleted: take over the sources' flat sidecars and
+      * write back the post-merge `stats` the marker carries.
+      * Idempotent. Nothing to settle by default. */
+    def settle(spark: SparkSession, path: String, srcs: Seq[String],
+        stats: Seq[Long]): Unit = ()
+  }
+
+  /** The one generation write: `rows` repartitioned on the partition
+    * column (one task per partition writes whole-partition files, not
+    * tasks × partitions slivers), sorted on (partition, sort key),
+    * written whole into the `gen=` dir after `base` (None: a fresh
+    * build) and committed beside the `keep` part lines with codebook
+    * `book`. A crash before the commit leaves an invisible orphan the
+    * next commit reaps. */
+  def writeGeneration(
+      spark: SparkSession, path: String, family: Family, rows: DataFrame,
+      base: Option[Manifest], keep: Seq[String], book: Option[String],
+      maxRecordsPerFile: Long = MaxRecordsPerFile): Manifest = {
+    val gen = genDirName(base.fold(0L)(_.n) + 1)
+    rows.repartition(col(family.partCol))
+      .sortWithinPartitions(family.partCol, family.sortCol)
+      .write.mode("overwrite")
+      .option("maxRecordsPerFile", maxRecordsPerFile)
+      .partitionBy(family.partCol)
+      .parquet(s"$path/$gen")
+    commit(spark, path, book, keep ++ listParts(spark, path, gen))
+  }
+
+  /** [[writeGeneration]] of a batch beside the whole current snapshot. */
+  def appendGeneration(spark: SparkSession, path: String, family: Family,
+      rows: DataFrame): Manifest = {
+    val m = require(spark, path)
+    writeGeneration(spark, path, family, rows, Some(m), m.parts, m.book)
+  }
+
+  /** The one-row `_stats` sidecar of a family that keeps one, read on
+    * the driver ([[DriverParquet.single]]: no Spark job, and anything
+    * but exactly one row fails loudly). A path without it is not an
+    * index. */
+  def readStats(spark: SparkSession, path: String): Group = {
+    val dir = new Path(path, "_stats")
+    if (!fsOf(spark, path).exists(dir))
+      throw new IndexNotFoundException(s"No index at $path (no $dir)")
+    DriverParquet.single(spark, dir.toString)
+  }
+
+  /** Roll an interrupted shard merge forward — the one roll-forward
+    * every family's `load`, [[ManifestIndex.compact]] and
+    * [[ManifestIndex.mergeAll]] call (where the marker written just before makes the mainline
+    * merge a roll-forward too). Protocol state on disk is a
+    * `_merge_pending` marker listing the owned source paths and the
+    * post-merge stats; every step is idempotent: generation moves skip
+    * already-moved dirs, the manifest commit dedups part lines, the
+    * family's settle rewrites the same stats, source deletes and the
+    * marker delete are no-ops when already done. */
+  def completeMerge(spark: SparkSession, path: String, family: Family): Unit = {
+    val dst = new Path(path)
+    val fs = fsOf(spark, path)
+    IndexMerge.readMarker(fs, dst).foreach { case (srcLine, stats) =>
+      val srcs = IndexMerge.splitSrcs(srcLine)
+      val m = require(spark, path)
+      val moved = srcs.flatMap { s =>
+        // a source is movable while its manifest store survives; a
+        // tree already drained (or torn by a crashed delete) is
+        // finished by the delete below
+        if (current(spark, s).isDefined) moveGenerations(spark, s, path)
+        else Vector.empty
+      }
+      if (moved.nonEmpty)
+        commit(spark, path, m.book, m.parts ++ moved)
+      family.settle(spark, path, srcs, stats)
+      srcs.foreach(s => fsOf(spark, s).delete(new Path(s), true))
+      IndexMerge.deleteMarker(fs, dst)
+    }
+  }
+}
+
+/** A handle on one manifest-partitioned index ([[Manifests]]). The
+  * lifecycle is written here once; a family implements the hooks.
+  * Writers are single-writer per index; readers are snapshot-safe. */
+trait ManifestIndex[I <: ManifestIndex[I]] { this: I =>
+  def spark: SparkSession
+  def path: String
+
+  /** The family's layout and merge write-back. */
+  protected def family: Manifests.Family
+
+  /** Partition count of the ideal compacted layout: one file per
+    * partition until partitions outgrow the target file size. */
+  protected def idealPartitions: Int
+
+  /** Refuse a merge source built with different parameters: its rows
+    * would sit in partitions that do not mean the same thing. */
+  protected def requireMergeable(other: I): Unit
+
+  /** The post-merge stats row a `_merge_pending` marker carries for
+    * merging `others` into this index; the family's settle writes it
+    * back. A family without stats carries a single 0. */
+  protected def mergedStats(others: Seq[I]): Seq[Long] = Seq(0L)
+
+  /** This index with the stats now on disk: the family's `load` (the
+    * handle itself for a family without stats). */
+  protected def reloaded: I = this
+
+  /** `(fileCount, bytes)` of the current snapshot's data files — what
+    * appends and shard merges fragment and [[compact]] folds. Sidecars
+    * are driver-side reads, never scan inputs, and are not counted. */
+  def storageFootprint(): (Long, Long) = {
+    val fs = new Path(path)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val files = Manifests.require(spark, path).parts.flatMap { p =>
+      val d = new Path(path, p)
+      if (fs.exists(d)) fs.listStatus(d).filter(_.isFile).toSeq
+      else Seq.empty
+    }
+    (files.length.toLong, files.map(_.getLen).sum)
+  }
+
+  /** The auto-compaction trigger: compact when the file count exceeds
+    * `slack ×` the ideal layout's count, ideal = `max(partitions,
+    * bytes / targetFileBytes)`. The rule self-scales: a growing index
+    * raises the ideal count, so compaction (a full rewrite, cost ∝
+    * index size) fires ever less often while the small-file tax per
+    * read stays bounded at `slack ×` optimal.
+    *
+    * `slack = 16` is calibrated from the r14 probe sweeps
+    * (BASELINE.md): with bucket-repartitioned writes (one file per
+    * partition per append) the measured per-probe tax is ~0.5 ms/file
+    * while a rewrite costs seconds per 10⁷ postings, putting the
+    * break-even at ~20+ appends — slack 4 fired too early and paid
+    * rewrites that saved nothing (106 vs 76 s at the 1M shape). 16
+    * sits just under the break-even: a clean-append stream compacts
+    * every ~16 batches, while a sliver-fragmented lake still triggers
+    * almost immediately. */
+  def shouldCompact(
+      slack: Double = 16.0,
+      targetFileBytes: Long = 256L << 20): Boolean = {
+    val (files, bytes) = storageFootprint()
+    val ideal = math.max(idealPartitions.toLong,
+      (bytes + targetFileBytes - 1) / targetFileBytes)
+    files > slack * ideal
+  }
+
+  /** Offline maintenance after appends and merges fragment the
+    * partitions: settle a pending merge (compacting under its marker
+    * would fold moved-in generations the roll-forward still expects to
+    * commit), then rewrite the whole snapshot into one fresh generation
+    * that replaces it. Readers pinned to the fragmented snapshot finish
+    * undisturbed; sidecars never move. */
+  def compact(maxRecordsPerFile: Long = Manifests.MaxRecordsPerFile): I = {
+    Manifests.completeMerge(spark, path, family)
+    val m = Manifests.require(spark, path)
+    Manifests.writeGeneration(spark, path, family,
+      Manifests.dataFrame(spark, path, m), Some(m), Nil, m.book,
+      maxRecordsPerFile)
+    reloaded
+  }
+
+  /** Absorb `other` — a shard built with the same parameters over a
+    * disjoint docid range ([[mergeAll]]). */
+  def merge(other: I): I = mergeAll(Seq(other))
+
+  /** Absorb many shards by whole-generation directory moves: every
+    * family partitions by a content hash (or nearest centroid) that is
+    * identical across shards built with the same parameters, so the
+    * merged snapshot is just all part sets under one manifest — no row
+    * is read or rewritten, and the merge costs O(generations) renames
+    * plus one manifest commit ([[IndexMerge]]'s shard-parallel build).
+    * Any number of shards share one claims pass, one marker and one
+    * stats write: a pairwise chain paid ~0.6 s of small metadata jobs
+    * per shard (36 s at 64 shards, BASELINE r15).
+    *
+    * Crash protocol: sources are owned by rename
+    * ([[IndexMerge.takeOwnership]]) before any claim is read; every
+    * source's docid-range claims land in one validated append
+    * ([[IndexMerge.claimRangesAll]] — overlaps throw); the
+    * `_merge_pending` marker carries the owned source list and the
+    * post-merge stats; [[Manifests.completeMerge]] then runs the merge
+    * to the end. A marker for a DIFFERENT source set is an older
+    * interrupted merge and is settled first; the SAME set means this
+    * call re-runs an interrupted merge and resumes from the marker's
+    * stats. The post-merge stats are computed from the destination's
+    * stats on disk (the family's `load`, before any source is owned or
+    * claimed), never from this handle's fields, so a handle gone stale
+    * — across a settled older merge or otherwise — cannot drop counts,
+    * and a malformed `_stats` refuses the merge before it starts.
+    *
+    * `compact = true` wires the shouldCompact → compact cycle into the
+    * merge: a hundreds-of-shards fan-in leaves per-shard file
+    * fragmentation, a measured ~3× probe tax at S=256 (BASELINE r15)
+    * until compaction folds it. */
+  def mergeAll(others: Seq[I], compact: Boolean = false): I = {
+    if (others.isEmpty) return this
+    others.foreach(requireMergeable)
+    val srcs = others.map(_.path)
+    IndexMerge.requireDistinctSources(spark, path, srcs)
+    IndexMerge.requireQuiesced(spark, path, srcs)
+    val dst = new Path(path)
+    val fs = dst.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val owned = srcs.map(IndexMerge.ownedPath)
+    def pending = IndexMerge.readMarker(fs, dst)
+      .map(m => IndexMerge.splitSrcs(m._1).toSet == owned.toSet)
+    if (pending.contains(false)) Manifests.completeMerge(spark, path, family)
+    val resume = pending.contains(true)
+    val stats = if (resume) Nil else reloaded.mergedStats(others)
+    IndexMerge.takeOwnership(spark, srcs, allowMissing = resume)
+    if (!resume) try {
+      IndexMerge.claimRangesAll(spark, path, owned)
+      IndexMerge.writeMarker(fs, dst, IndexMerge.joinSrcs(owned), stats)
+    } catch {
+      case e: Throwable => // refused before any move: hand back
+        srcs.foreach(IndexMerge.releaseOwnership(spark, _))
+        throw e
+    }
+    Manifests.completeMerge(spark, path, family)
+    val merged = reloaded
+    if (compact && merged.shouldCompact()) merged.compact() else merged
   }
 }

@@ -417,13 +417,38 @@ object Bm25 {
   * unversioned: they are resolved at load/maintenance time, never by
   * a pinned scan — a [[Bm25Index]] handle captures (n, Σdl) at load,
   * so a concurrent append moves neither a pinned plan nor a pinned
-  * handle's scoring. */
+  * handle's scoring.
+  *
+  * Compact and shard merge are the shared lifecycle
+  * ([[graft.index.ManifestIndex]]). BM25 scoring stays exact through a
+  * merge by construction: per-term df is computed from the merged
+  * postings at query time, and the global (n, Σdl) sum into `_stats`
+  * through the merge marker. The `_meta` sidecars concatenate at file
+  * level too — shards hold disjoint docid ranges, so their
+  * docid-sorted meta files keep row-group min/max pruning intact. */
 class Bm25Index private (
     val spark: SparkSession,
     val path: String,
     val n: Long,
     val sumdl: Long,
-    val nBuckets: Int) extends org.apache.spark.internal.Logging {
+    val nBuckets: Int)
+    extends graft.index.ManifestIndex[Bm25Index]
+    with org.apache.spark.internal.Logging {
+
+  protected def family: graft.index.Manifests.Family = Bm25Index.Storage
+
+  protected def idealPartitions: Int = nBuckets
+
+  protected def requireMergeable(o: Bm25Index): Unit =
+    require(o.nBuckets == nBuckets,
+      s"bm25 merge: bucket-count mismatch ($nBuckets vs " +
+      s"${o.nBuckets}); shards must be built with the same buckets")
+
+  override protected def mergedStats(others: Seq[Bm25Index]): Seq[Long] =
+    Seq(n + others.map(_.n).sum, sumdl + others.map(_.sumdl).sum,
+      nBuckets.toLong)
+
+  override protected def reloaded: Bm25Index = Bm25Index.load(spark, path)
 
   /** Derived exactly as a full rebuild would: one double division over
     * the exact long totals — so build(A)+append(B) scores are
@@ -558,16 +583,8 @@ class Bm25Index private (
 
   private def writeBatchPostings(
       docs: DataFrame, textCol: String, idCol: String): Unit = {
-    val m = graft.index.Manifests.require(spark, path)
-    val gen = graft.index.Manifests.genDirName(m.n + 1)
-    Bm25.postings(docs, textCol, idCol)
-      .withColumn("bucket", pmod(hash(col("term")), lit(nBuckets)))
-      .repartition(col("bucket"))
-      .sortWithinPartitions("bucket", "term")
-      .write.mode("overwrite").partitionBy("bucket")
-      .parquet(s"$path/$gen")
-    graft.index.Manifests.commit(spark, path, m.book,
-      m.parts ++ graft.index.Manifests.listParts(spark, path, gen))
+    graft.index.Manifests.appendGeneration(spark, path, family,
+      Bm25Index.rows(docs, textCol, idCol, nBuckets))
     ()
   }
 
@@ -738,160 +755,6 @@ class Bm25Index private (
       Bm25Index.deletePendingStats(spark, path, lo, hi) }
     graft.Keyword.invalidateIndex(path)
     new Bm25Index(spark, path, n + nNew, sumdl + sumdlNew, nBuckets)
-  }
-
-  /** `(fileCount, bytes)` of the current snapshot's postings tree —
-    * the part a many-shard merge or append cadence fragments
-    * ([[graft.index.IvfVectorIndex.storageFootprint]]). */
-  def storageFootprint(): (Long, Long) = {
-    val m = graft.index.Manifests.require(spark, path)
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val stats = m.parts.flatMap { p =>
-      val d = new org.apache.hadoop.fs.Path(s"$path/$p")
-      if (fs.exists(d)) fs.listStatus(d).filter(_.isFile).toSeq
-      else Seq.empty
-    }
-    (stats.length.toLong, stats.map(_.getLen).sum)
-  }
-
-  /** The auto-compaction trigger ([[ShingleIndex.shouldCompact]]'s
-    * rule over the keyword lake — same measured calibration, BASELINE
-    * r14). */
-  def shouldCompact(
-      slack: Double = 16.0,
-      targetFileBytes: Long = 256L << 20): Boolean = {
-    val (files, bytes) = storageFootprint()
-    IndexMerge.needsCompact(files, bytes, nBuckets, slack, targetFileBytes)
-  }
-
-  /** Offline maintenance after repeated [[append]]s (each leaves one
-    * small file per touched bucket; small files tax listing and lose
-    * the term-sorted row-group layout across files): rewrite the
-    * whole lake term-sorted into ONE fresh generation and commit —
-    * readers pinned to the fragmented snapshot finish undisturbed
-    * (r17, [[graft.index.Manifests]]; until then this swapped the
-    * live directory and was documented "maintenance windows only").
-    * Sidecars never move: they live beside the generations, not
-    * inside them — the pre-r17 compact had to copy six of them and a
-    * missed one was a latent bug class, now structurally gone. */
-  def compact(maxRecordsPerFile: Long = 5000000L): Bm25Index = {
-    // settle any interrupted merge first — compacting under a pending
-    // marker would fold moved-in generations the roll-forward still
-    // expects to commit (ShingleIndex.compact's note)
-    Bm25Index.completeMerge(spark, path)
-    val m = graft.index.Manifests.require(spark, path)
-    val gen = graft.index.Manifests.genDirName(m.n + 1)
-    // bucket-repartitioned first — see ShingleIndex.compact (r13)
-    graft.index.Manifests.dataFrame(spark, path, m)
-      .repartition(col("bucket"))
-      .sortWithinPartitions("bucket", "term")
-      .write.mode("overwrite")
-      .option("maxRecordsPerFile", maxRecordsPerFile)
-      .partitionBy("bucket")
-      .parquet(s"$path/$gen")
-    graft.index.Manifests.commit(spark, path, m.book,
-      graft.index.Manifests.listParts(spark, path, gen))
-    new Bm25Index(spark, path, n, sumdl, nBuckets)
-  }
-
-  /** Absorb `other` — a shard built with the SAME bucket count over a
-    * DISJOINT docid range — by whole-generation directory moves
-    * (r17, was per-bucket file moves; [[IndexMerge]]'s shard-parallel
-    * build story: terms bucket by the same content hash in every
-    * shard, so the merged snapshot is just both part sets). BM25
-    * scoring stays exact through the merge by construction: per-term
-    * df is computed from the merged postings at query time, and the
-    * global (n, Σdl) sum into `_stats` via the crash-safe marker
-    * protocol (claim ranges → `_merge_pending` with the post-merge
-    * stats → move generations → ONE manifest commit → move `_meta`
-    * shard files → rewrite stats → delete source → delete marker;
-    * every load rolls an interrupted merge forward). The `_meta`
-    * sidecars concatenate at file level too — shards hold disjoint
-    * docid ranges, so their docid-sorted meta files keep row-group
-    * min/max pruning intact. */
-  def merge(other: Bm25Index): Bm25Index = mergeAll(Seq(other))
-
-  /** Multi-way [[merge]] (r15): absorb MANY shards under ONE claims
-    * pass, ONE marker, ONE stats write. The pairwise chain pays
-    * ~4-5 small metadata Spark jobs per shard (measured ~0.6 s/call:
-    * 36 s of pure metadata for a 64-shard merge — BASELINE r15);
-    * the 100 TB build merges hundreds of segment shards, so the
-    * metadata must amortize. Crash protocol unchanged in shape: all
-    * sources' range claims land in one validated append
-    * ([[IndexMerge.claimRangesAll]] — partial overlaps between
-    * shards throw), the `_merge_pending` marker carries the FULL
-    * source list (tab-joined) plus the post-merge stats, then
-    * per-source moves + deletes (each idempotent — a re-run skips
-    * drained sources), stats rewrite, marker delete; every load
-    * rolls an interrupted multi-way merge forward exactly like a
-    * pairwise one. */
-  def mergeAll(others: Seq[Bm25Index],
-      compact: Boolean = false): Bm25Index = {
-    if (others.isEmpty) return this
-    others.foreach { o => require(o.nBuckets == nBuckets,
-      s"bm25 merge: bucket-count mismatch ($nBuckets vs " +
-      s"${o.nBuckets}); shards must be built with the same buckets") }
-    val dst = new org.apache.hadoop.fs.Path(path)
-    val fs = dst.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val srcs = others.map(_.path)
-    graft.operators.IndexMerge.requireDistinctSources(spark, path, srcs)
-    IndexMerge.requireQuiesced(spark, path, srcs)
-    // a pending marker for a DIFFERENT source set is an older
-    // interrupted merge: settle it before starting this one; the SAME
-    // set (markers record the OWNED sibling names since r17) means
-    // this call is the interrupted merge's re-run — resume with the
-    // marker's post-stats. Settling REWRITES `_stats` on disk, so the
-    // handle's (n, sumdl) are stale past it — re-read rather than
-    // computing the new post-merge totals from stale fields (ADVICE
-    // r15: the old marker's contribution was silently dropped from
-    // the new totals).
-    val ownedSet = srcs.map(IndexMerge.ownedPath).toSet
-    var (curN, curSum) = (n, sumdl)
-    IndexMerge.readMarker(fs, dst).foreach { case (src, _) =>
-      if (IndexMerge.splitSrcs(src).toSet != ownedSet) {
-        Bm25Index.completeMerge(spark, path)
-        val st = spark.read.parquet(s"$path/_stats").head()
-        curN = st.getLong(0); curSum = st.getLong(1)
-      }
-    }
-    // take ownership BEFORE reading any claim (r17 — the rename is
-    // the atomic point a restarted source stream can no longer race
-    // past; a resume tolerates already-drained sources)
-    val resume = IndexMerge.readMarker(fs, dst)
-      .exists(m => IndexMerge.splitSrcs(m._1).toSet == ownedSet)
-    val owned = IndexMerge.takeOwnership(spark, srcs,
-      allowMissing = resume)
-    val (postN, postSum) = IndexMerge.readMarker(fs, dst) match {
-      case Some((_, stats)) => (stats(0), stats(1))
-      case None =>
-        try {
-          IndexMerge.claimRangesAll(spark, path, owned)
-          val s = (curN + others.map(_.n).sum,
-            curSum + others.map(_.sumdl).sum)
-          IndexMerge.writeMarker(fs, dst, IndexMerge.joinSrcs(owned),
-            Seq(s._1, s._2, nBuckets.toLong))
-          s
-        } catch {
-          case e: Throwable => // refused before any move: hand back
-            srcs.foreach(s => IndexMerge.releaseOwnership(spark, s))
-            throw e
-        }
-    }
-    // runs THIS merge to the end (the marker makes the mainline a
-    // roll-forward too, r17 — [[graft.index.Manifests.completeMerge]]
-    // shape): move each source's generations whole, ONE manifest
-    // commit (the destination's readers see the absorbed shards
-    // atomically; pinned readers are undisturbed), move `_meta` shard
-    // files, write the post-merge stats, delete sources + marker
-    Bm25Index.completeMerge(spark, path)
-    val merged = new Bm25Index(spark, path, postN, postSum, nBuckets)
-    // opt-in post-step (r16): a hundreds-of-shards merge leaves the
-    // lake with per-shard file fragmentation — a measured ~3× probe
-    // tax at S=256 (BASELINE r15) until compaction folds it. The flag
-    // wires the existing shouldCompact→compact cycle into the merge
-    // itself so a big fan-in cannot silently stay in the taxed state.
-    if (compact && merged.shouldCompact()) merged.compact() else merged
   }
 
   /** Docid-sorted metadata sidecar (`path/_meta`): `cols` keyed by
@@ -1140,6 +1003,32 @@ class Bm25Index private (
 
 object Bm25Index {
 
+  /** Bucket-partitioned, term-sorted postings: row-group min/max stats
+    * on term then carve each bucket into disjoint term ranges, so a
+    * query's term filter prunes row groups INSIDE its matched buckets
+    * too. A settled merge moves the sources' `_meta` files in, writes
+    * the post-merge (n, Σdl, buckets) into `_stats` and drops
+    * `keyword_score` registrations of the path (its stats changed). */
+  private[operators] val Storage: graft.index.Manifests.Family =
+    new graft.index.Manifests.Family("bucket", "term") {
+      override def settle(spark: SparkSession, path: String,
+          srcs: Seq[String], stats: Seq[Long]): Unit = {
+        val dst = new org.apache.hadoop.fs.Path(path)
+        val fs = dst.getFileSystem(spark.sparkContext.hadoopConfiguration)
+        srcs.foreach(s => IndexMerge.moveFlatFiles(fs,
+          new org.apache.hadoop.fs.Path(s, "_meta"),
+          new org.apache.hadoop.fs.Path(dst, "_meta")))
+        writeStats(spark, path, stats(0), stats(1), stats(2).toInt)
+        graft.Keyword.invalidateIndex(path)
+      }
+    }
+
+  /** `docs` as postings rows under `nBuckets` term buckets. */
+  private def rows(docs: DataFrame, textCol: String, idCol: String,
+      nBuckets: Int): DataFrame =
+    Bm25.postings(docs, textCol, idCol)
+      .withColumn("bucket", pmod(hash(col("term")), lit(nBuckets)))
+
   /** Engine-side twin of the storage bucketing: Spark's `hash` (Murmur3
     * seed 42) mod nBuckets, computed driver-side for pruning. */
   private[operators] def bucketOf(term: String, nBuckets: Int): Int = {
@@ -1292,82 +1181,26 @@ object Bm25Index {
       s"bm25: every value of id column '$idCol' casts to null")
     val nb = if (nBuckets == AutoBuckets) autoBuckets(st.getLong(1))
       else nBuckets
-    // term-sorted files: row-group min/max stats on term then carve the
-    // bucket into disjoint term ranges, so a query's term filter prunes
-    // row groups INSIDE its matched buckets too (partition pruning
-    // picks the buckets; the sort makes the within-bucket read
-    // proportional to the matched posting lists). The write is
-    // bucket-repartitioned (r14): without it every task writes a
-    // sliver into every bucket dir — tasks x buckets files, which at
-    // cluster scale (1e5 tasks x 4096 buckets) is a catastrophic file
-    // count. One postings shuffle buys whole-bucket term-sorted files;
-    // the bucket count scales cube-root with the corpus, so write
-    // parallelism scales too.
-    // a rebuild over an existing path replaces the index whole
-    // (pre-r17 behavior via mode=overwrite; now an explicit reset so
-    // the manifest store restarts at generation 1)
+    // the bucket count scales cube-root with the corpus, so the
+    // bucket-repartitioned write's parallelism scales too. A rebuild
+    // over an existing path replaces the index whole (an explicit
+    // reset, so the manifest store restarts at generation 1)
     graft.index.Manifests.reset(spark, path)
-    val gen = graft.index.Manifests.genDirName(1L)
-    Bm25.postings(docs, textCol, idCol)
-      .withColumn("bucket", pmod(hash(col("term")), lit(nb)))
-      .repartition(col("bucket"))
-      .sortWithinPartitions("bucket", "term")
-      .write.mode("overwrite").partitionBy("bucket")
-      .parquet(s"$path/$gen")
-    graft.index.Manifests.commit(spark, path, None,
-      graft.index.Manifests.listParts(spark, path, gen))
+    graft.index.Manifests.writeGeneration(spark, path, Storage,
+      rows(docs, textCol, idCol, nb), None, Nil, None)
     writeStats(spark, path, st.getLong(0), st.getLong(1), nb)
     // fresh build: reset the range log to exactly this corpus's interval
     appendRange(spark, path, st.getLong(2), st.getLong(3))
     new Bm25Index(spark, path, st.getLong(0), st.getLong(1), nb)
   }
 
-  /** Roll an interrupted [[Bm25Index.merge]]/[[Bm25Index.mergeAll]]
-    * forward — called by every [[load]] (and by `mergeAll` itself,
-    * where the just-written marker makes the mainline merge a
-    * roll-forward too). [[graft.index.Manifests.completeMerge]]'s
-    * shape plus the lake's own two steps (`_meta` shard-file moves
-    * and the post-merge stats rewrite the marker carries); every step
-    * is idempotent from any crash point: generation moves skip
-    * already-moved dirs, the manifest commit dedups part lines,
-    * `_meta` moves skip moved files, drained sources skip, and the
-    * stats write repeats the same totals. */
-  private[operators] def completeMerge(
-      spark: SparkSession, path: String): Unit = {
-    val dst = new org.apache.hadoop.fs.Path(path)
-    val fs = dst.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    IndexMerge.readMarker(fs, dst).foreach { case (src, stats) =>
-      val srcs = IndexMerge.splitSrcs(src)
-      val m = graft.index.Manifests.require(spark, path)
-      val moved = srcs.flatMap { s =>
-        // a source is movable while its manifest store survives; a
-        // tree already drained (or torn by a crashed delete) is
-        // finished by the delete below
-        if (graft.index.Manifests.current(spark, s).isDefined)
-          graft.index.Manifests.moveGenerations(spark, s, path)
-        else Vector.empty
-      }
-      if (moved.nonEmpty)
-        graft.index.Manifests.commit(spark, path, m.book, m.parts ++ moved)
-      srcs.foreach { sp =>
-        val srcP = new org.apache.hadoop.fs.Path(sp)
-        IndexMerge.moveFlatFiles(fs,
-          new org.apache.hadoop.fs.Path(srcP, "_meta"),
-          new org.apache.hadoop.fs.Path(dst, "_meta"))
-        fs.delete(srcP, true)
-      }
-      writeStats(spark, path, stats(0), stats(1), stats(2).toInt)
-      IndexMerge.deleteMarker(fs, dst)
-      graft.Keyword.invalidateIndex(path) // stats changed under the path
-    }
-  }
-
+  /** Open an index: roll an interrupted shard merge forward, then read
+    * `_stats` on the driver (no Spark job per load — the index-routed
+    * query family constructs an index per query; re-read every call,
+    * never cached). */
   def load(spark: SparkSession, path: String): Bm25Index = {
-    completeMerge(spark, path) // mid-merge crash roll-forward
-    // one-row sidecar: driver-direct read (no Spark job per load —
-    // the index-routed query family constructs an index per query,
-    // r17 optimization round). Re-read every call, never cached.
-    val st = graft.index.DriverParquet.single(spark, s"$path/_stats")
+    graft.index.Manifests.completeMerge(spark, path, Storage)
+    val st = graft.index.Manifests.readStats(spark, path)
     new Bm25Index(spark, path, st.getLong("n", 0), st.getLong("sumdl", 0),
       st.getInteger("n_buckets", 0))
   }

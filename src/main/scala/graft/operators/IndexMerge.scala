@@ -26,10 +26,14 @@ import org.apache.spark.sql.SparkSession
   *
   * Crash safety mirrors [[graft.index.IvfVectorIndex]]'s staged
   * retrain: a `_merge_pending` marker written BEFORE any moves
-  * carries the post-merge stats and the source path, every step
+  * carries the post-merge stats and the source paths, and every step
   * (generation move, manifest commit, stats overwrite, source
-  * delete) is idempotent, and each family's `load` rolls an
-  * interrupted merge forward. */
+  * delete) is idempotent. ONE roll-forward,
+  * [[graft.index.Manifests.completeMerge]], serves every family: the
+  * one merge driver ([[graft.index.ManifestIndex.mergeAll]]) runs it
+  * as its mainline, and every `load` and `compact` runs it to finish
+  * an interrupted merge. This object holds the protocol's pieces:
+  * markers, source ownership, quiesce and range-claim guards. */
 object IndexMerge {
 
   /** Move the plain data files directly under `src` into `dst`
@@ -410,18 +414,6 @@ object IndexMerge {
       }
     }
     if (fresh.nonEmpty) Bm25Index.appendRanges(spark, dstPath, fresh)
-  }
-
-  /** The auto-compaction trigger shared by the bucket-partitioned
-    * lakes: compact when the file count exceeds `slack ×` the IDEAL
-    * layout's count, ideal = `max(nBuckets, bytes/targetFileBytes)`.
-    * Self-scaling — see [[ShingleIndex.shouldCompact]] for the
-    * measured curve (BASELINE r14). */
-  private[graft] def needsCompact(files: Long, bytes: Long,
-      nBuckets: Int, slack: Double, targetFileBytes: Long): Boolean = {
-    val ideal = math.max(nBuckets.toLong,
-      (bytes + targetFileBytes - 1) / targetFileBytes)
-    files > slack * ideal
   }
 
   /** Reset a lake's `_ranges` ledger to exactly one claim — the

@@ -38,6 +38,11 @@ import org.apache.spark.sql.functions._
   * north-star extension's production-lifecycle form: build the lake
   * index once, probe it per crawl, append each accepted batch's own
   * shingles, never re-shingle the lake.
+  *
+  * Compact and shard merge are the shared lifecycle
+  * ([[graft.index.ManifestIndex]]): shards with IDENTICAL shingle
+  * parameters over disjoint docid ranges bucket by the same content
+  * hash, so the merged snapshot is just both part sets.
   */
 class ShingleIndex private (
     val spark: SparkSession,
@@ -45,7 +50,26 @@ class ShingleIndex private (
     val nDocs: Long,
     val ngram: Int,
     val nBuckets: Int,
-    val hashKeys: Boolean) {
+    val hashKeys: Boolean) extends graft.index.ManifestIndex[ShingleIndex] {
+
+  protected def family: graft.index.Manifests.Family = ShingleIndex.Storage
+
+  protected def idealPartitions: Int = nBuckets
+
+  protected def requireMergeable(other: ShingleIndex): Unit =
+    require(other.ngram == ngram && other.nBuckets == nBuckets &&
+      other.hashKeys == hashKeys,
+      s"shingle merge: parameter mismatch — this=(ngram=$ngram," +
+      s"buckets=$nBuckets,hashKeys=$hashKeys) other=(ngram=${other.ngram}," +
+      s"buckets=${other.nBuckets},hashKeys=${other.hashKeys}); shards " +
+      "must be built with identical parameters")
+
+  override protected def mergedStats(others: Seq[ShingleIndex]): Seq[Long] =
+    Seq(nDocs + others.map(_.nDocs).sum, ngram.toLong, nBuckets.toLong,
+      if (hashKeys) 1L else 0L)
+
+  override protected def reloaded: ShingleIndex =
+    ShingleIndex.load(spark, path)
 
   /** The CURRENT committed snapshot's postings (r17 — manifest-pinned
     * like [[Bm25Index.postings]]: maintenance is safe against
@@ -56,24 +80,12 @@ class ShingleIndex private (
     graft.index.Manifests.dataFrame(spark, path, m)
   }
 
-  /** Land a batch's keyed postings whole in a fresh generation and
-    * commit (r17 — the batch becomes visible atomically; an
-    * interrupted write leaves an orphan the next commit reaps). */
-  private def writePostingsGeneration(
-      docs: DataFrame, idCol: String, textCol: String): Unit = {
-    val m = graft.index.Manifests.require(spark, path)
-    val gen = graft.index.Manifests.genDirName(m.n + 1)
+  /** `docs` as postings rows `(key, old_id, nsh, bucket)`. */
+  private def postingRows(
+      docs: DataFrame, idCol: String, textCol: String): DataFrame =
     keyed(docs, idCol, textCol)
       .select(col("key"), col("id").as("old_id"), col("nsh"))
       .withColumn("bucket", pmod(hash(col("key")), lit(nBuckets)))
-      .repartition(col("bucket"))
-      .sortWithinPartitions("bucket", "key")
-      .write.mode("overwrite").partitionBy("bucket")
-      .parquet(s"$path/$gen")
-    graft.index.Manifests.commit(spark, path, m.book,
-      m.parts ++ graft.index.Manifests.listParts(spark, path, gen))
-    ()
-  }
 
   /** Exploded keyed shingles of `docs`: (key, id, nsh) under THIS
     * index's shingle parameters. */
@@ -251,7 +263,8 @@ class ShingleIndex private (
     // 10k-doc batch), which is the fragmentation the compact cadence
     // then has to clean. One small shuffle of the batch's postings
     // buys one file per touched bucket per append.
-    writePostingsGeneration(docs, idCol, textCol)
+    graft.index.Manifests.appendGeneration(spark, path, family,
+      postingRows(docs, idCol, textCol))
     ShingleIndex.writeStats(spark, path, nDocs + nNew, ngram, nBuckets,
       hashKeys)
     new ShingleIndex(spark, path, nDocs + nNew, ngram, nBuckets, hashKeys)
@@ -318,7 +331,8 @@ class ShingleIndex private (
       .reduce(_ || _)
     val docs = recovery.filter(inRange)
     val nNew = docs.count()
-    writePostingsGeneration(docs, idCol, textCol)
+    graft.index.Manifests.appendGeneration(spark, path, family,
+      postingRows(docs, idCol, textCol))
     ShingleIndex.writeStats(spark, path, nDocs + nNew, ngram, nBuckets,
       hashKeys)
     new ShingleIndex(spark, path, nDocs + nNew, ngram, nBuckets, hashKeys)
@@ -339,168 +353,6 @@ class ShingleIndex private (
       .localCheckpoint()
     (surv, appendBatch(surv, idCol, textCol))
   }
-
-  /** `(fileCount, bytes)` of the current snapshot's postings tree —
-    * the part of the lake [[compact]] can actually defragment (the
-    * `_ranges` / `_batches` sidecars also grow a tiny file per
-    * append, but they are driver-side reads, never scan inputs, and a
-    * post-compact lake must read as "no compaction needed"). One
-    * listing over the manifest's part dirs — the same walk every
-    * post-append probe already pays, so reading it once per batch
-    * adds nothing asymptotic. */
-  def storageFootprint(): (Long, Long) = {
-    val m = graft.index.Manifests.require(spark, path)
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val stats = m.parts.flatMap { p =>
-      val d = new org.apache.hadoop.fs.Path(s"$path/$p")
-      if (fs.exists(d)) fs.listStatus(d).filter(_.isFile).toSeq
-      else Seq.empty
-    }
-    (stats.length.toLong, stats.map(_.getLen).sum)
-  }
-
-  /** The auto-compaction trigger ([[IngestStream]]'s `AutoCompact`
-    * cadence, r14 — the [[Bm25Index.autoBuckets]] pattern applied to
-    * WHEN instead of HOW MANY): compact when the on-disk file count
-    * exceeds `slack ×` the IDEAL layout's file count, where ideal =
-    * `max(nBuckets, bytes / targetFileBytes)` — one file per bucket
-    * until buckets outgrow the target file size, then size-bounded
-    * files. The rule self-scales: a growing lake raises the ideal
-    * count, so compaction (a full rewrite, cost ∝ lake size) fires
-    * ever less often while the small-file tax per probe stays bounded
-    * at `slack ×` optimal.
-    *
-    * `slack = 16` is calibrated from BOTH r14 probe sweeps
-    * (BASELINE.md): with the old sliver writes (tasks × buckets files
-    * per append) the tax was so steep that ANY cadence won and slack 4
-    * matched the measured optimum; with the bucket-repartitioned
-    * writes (exactly one file per bucket per append) the measured
-    * per-probe tax is ~0.5 ms/file while a rewrite costs seconds per
-    * 10⁷ postings, putting the break-even at ~20+ appends — slack 4
-    * then FIRES TOO EARLY and pays rewrites that save nothing (106 vs
-    * 76 s at the 1M shape). 16 sits just under the measured
-    * break-even: a clean-append stream compacts every ~16 batches,
-    * while a legacy sliver-fragmented lake (32× the file growth)
-    * still triggers almost immediately. */
-  def shouldCompact(
-      slack: Double = 16.0,
-      targetFileBytes: Long = 256L << 20): Boolean = {
-    val (files, bytes) = storageFootprint()
-    IndexMerge.needsCompact(files, bytes, nBuckets, slack, targetFileBytes)
-  }
-
-  /** Absorb `other` — a shard built with IDENTICAL shingle parameters
-    * over a DISJOINT docid range — into this index by whole-generation
-    * directory moves (r17, was per-bucket file moves): shard postings
-    * bucket by the same content hash, so the merged snapshot is just
-    * both part sets. No posting is read or rewritten; the merge costs
-    * O(generations) renames + ONE manifest commit however big the
-    * shards are — the 100 TB build shape (shards build in parallel
-    * with local sorts, merge is metadata).
-    *
-    * Crash-safe roll-forward: `other`'s ranges are claimed in
-    * `_ranges` first (value-idempotent), then a `_merge_pending`
-    * marker carrying the post-merge stats row and the source path is
-    * the point of no return — every load completes an interrupted
-    * merge ([[ShingleIndex.completeMerge]]). `other`'s directory is
-    * deleted on completion; re-using its handle is an error. */
-  def merge(other: ShingleIndex): ShingleIndex = mergeAll(Seq(other))
-
-  /** Multi-way [[merge]] (r15) — [[Bm25Index.mergeAll]]'s one-claims-
-    * pass / one-marker / one-stats-write shape over the shingle lake;
-    * the pairwise chain's per-call metadata jobs dominate a
-    * many-shard merge (BASELINE r15). */
-  def mergeAll(others: Seq[ShingleIndex],
-      compact: Boolean = false): ShingleIndex = {
-    if (others.isEmpty) return this
-    others.foreach { other =>
-      require(other.ngram == ngram && other.nBuckets == nBuckets &&
-        other.hashKeys == hashKeys,
-        s"shingle merge: parameter mismatch — this=(ngram=$ngram," +
-        s"buckets=$nBuckets,hashKeys=$hashKeys) other=(ngram=${other.ngram}," +
-        s"buckets=${other.nBuckets},hashKeys=${other.hashKeys}); shards " +
-        "must be built with identical parameters")
-    }
-    val dst = new org.apache.hadoop.fs.Path(path)
-    val fs = dst.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val srcs = others.map(_.path)
-    graft.operators.IndexMerge.requireDistinctSources(spark, path, srcs)
-    IndexMerge.requireQuiesced(spark, path, srcs)
-    // an interrupted merge of a DIFFERENT source set must finish
-    // first; settling rewrites `_stats`, so re-read rather than trust
-    // the handle's nDocs past it (ADVICE r15 — Bm25Index.mergeAll's
-    // note)
-    val ownedSet = srcs.map(IndexMerge.ownedPath).toSet
-    var curN = nDocs
-    IndexMerge.readMarker(fs, dst).foreach { case (src, _) =>
-      if (IndexMerge.splitSrcs(src).toSet != ownedSet) {
-        ShingleIndex.completeMerge(spark, path)
-        curN = spark.read.parquet(s"$path/_stats").head().getLong(0)
-      }
-    }
-    // ownership rename BEFORE the claims read (r17 — see
-    // [[IndexMerge.takeOwnership]]); markers record the owned names
-    val resume = IndexMerge.readMarker(fs, dst)
-      .exists(m => IndexMerge.splitSrcs(m._1).toSet == ownedSet)
-    val owned = IndexMerge.takeOwnership(spark, srcs,
-      allowMissing = resume)
-    val postN = IndexMerge.readMarker(fs, dst) match {
-      case Some((_, stats)) => stats.head // resuming: post-stats fixed
-      case None =>
-        try {
-          IndexMerge.claimRangesAll(spark, path, owned)
-          val n = curN + others.map(_.nDocs).sum
-          IndexMerge.writeMarker(fs, dst, IndexMerge.joinSrcs(owned),
-            Seq(n, ngram.toLong, nBuckets.toLong,
-              if (hashKeys) 1L else 0L))
-          n
-        } catch {
-          case e: Throwable => // refused before any move: hand back
-            srcs.foreach(s => IndexMerge.releaseOwnership(spark, s))
-            throw e
-        }
-    }
-    // runs THIS merge to the end (r17 — whole-generation moves + ONE
-    // manifest commit; pinned readers of the destination are
-    // undisturbed, new readers see the absorbed shards atomically)
-    ShingleIndex.completeMerge(spark, path)
-    val merged = new ShingleIndex(spark, path, postN, ngram, nBuckets,
-      hashKeys)
-    // opt-in post-step (r16) — see Bm25Index.mergeAll's note
-    if (compact && merged.shouldCompact()) merged.compact() else merged
-  }
-
-  /** Offline maintenance after repeated [[appendBatch]]es: rewrite
-    * the whole lake key-sorted into ONE fresh generation and commit —
-    * [[Bm25Index.compact]]'s r17 contract (safe against concurrent
-    * readers: a probe pinned to the fragmented snapshot finishes
-    * undisturbed; sidecars — `_stats`, `_ranges`, `_batches`,
-    * `_quiesced` — never move, so nothing can be forgotten by a
-    * copy list). */
-  def compact(maxRecordsPerFile: Long = 5000000L): ShingleIndex = {
-    // settle any interrupted merge first: compacting under a pending
-    // marker would fold moved-in generations the roll-forward still
-    // expects to commit
-    ShingleIndex.completeMerge(spark, path)
-    val m = graft.index.Manifests.require(spark, path)
-    val gen = graft.index.Manifests.genDirName(m.n + 1)
-    // repartition ON the bucket first (r13): without it each read
-    // task writes its own slice into every bucket dir it holds rows
-    // for, and "compaction" barely reduced the file count — now a
-    // bucket's rows land in one task, giving whole-bucket key-sorted
-    // files (split only by maxRecordsPerFile)
-    graft.index.Manifests.dataFrame(spark, path, m)
-      .repartition(col("bucket"))
-      .sortWithinPartitions("bucket", "key")
-      .write.mode("overwrite")
-      .option("maxRecordsPerFile", maxRecordsPerFile)
-      .partitionBy("bucket")
-      .parquet(s"$path/$gen")
-    graft.index.Manifests.commit(spark, path, m.book,
-      graft.index.Manifests.listParts(spark, path, gen))
-    new ShingleIndex(spark, path, nDocs, ngram, nBuckets, hashKeys)
-  }
 }
 
 object ShingleIndex {
@@ -515,6 +367,17 @@ object ShingleIndex {
     * the standard "dimension fits memory" budget). Above it the probe
     * degrades to a shuffle join instead of risking executor OOM. */
   val MaxBroadcastKeys: Long = 4000000L
+
+  /** Bucket-partitioned, key-sorted postings (a probe row-group-skips
+    * on key min/max inside its buckets). A settled merge writes the
+    * post-merge stats row into `_stats`. */
+  private[operators] val Storage: graft.index.Manifests.Family =
+    new graft.index.Manifests.Family("bucket", "key") {
+      override def settle(spark: SparkSession, path: String,
+          srcs: Seq[String], stats: Seq[Long]): Unit =
+        writeStats(spark, path, stats(0), stats(1).toInt, stats(2).toInt,
+          stats(3) == 1L)
+    }
 
   private def writeStats(spark: SparkSession, path: String, nDocs: Long,
       ngram: Int, nBuckets: Int, hashKeys: Boolean): Unit = {
@@ -550,59 +413,19 @@ object ShingleIndex {
     // a rebuild over an existing path replaces the index whole (r17:
     // explicit reset so the manifest store restarts at generation 1)
     graft.index.Manifests.reset(spark, path)
-    val gen = graft.index.Manifests.genDirName(1L)
     val idx = new ShingleIndex(spark, path, 0L, ngram, nb, hashKeys)
-    idx.keyed(docs, idCol, textCol)
-      .select(col("key"), col("id").as("old_id"), col("nsh"))
-      .withColumn("bucket", pmod(hash(col("key")), lit(nb)))
-      .repartition(col("bucket")) // r14: see Bm25Index.build's note
-      .sortWithinPartitions("bucket", "key")
-      .write.mode("overwrite").partitionBy("bucket")
-      .parquet(s"$path/$gen")
-    graft.index.Manifests.commit(spark, path, None,
-      graft.index.Manifests.listParts(spark, path, gen))
+    graft.index.Manifests.writeGeneration(spark, path, Storage,
+      idx.postingRows(docs, idCol, textCol), None, Nil, None)
     writeStats(spark, path, st.getLong(0), ngram, nb, hashKeys)
     Bm25Index.appendRange(spark, path, st.getLong(2), st.getLong(3))
     new ShingleIndex(spark, path, st.getLong(0), ngram, nb, hashKeys)
   }
 
-  /** Roll an interrupted [[ShingleIndex.merge]] forward — called by
-    * every [[load]]: the marker carries the full post-merge stats row
-    * and the source path, so every step (move remaining files, rewrite
-    * `_stats` from the marker, delete the drained source, delete the
-    * marker) is idempotent from any crash point. No-op without a
-    * marker. */
-  private[operators] def completeMerge(
-      spark: SparkSession, path: String): Unit = {
-    val dst = new org.apache.hadoop.fs.Path(path)
-    val fs = dst.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    IndexMerge.readMarker(fs, dst).foreach { case (src, stats) =>
-      val srcs = IndexMerge.splitSrcs(src)
-      val m = graft.index.Manifests.require(spark, path)
-      val moved = srcs.flatMap { s =>
-        if (graft.index.Manifests.current(spark, s).isDefined)
-          graft.index.Manifests.moveGenerations(spark, s, path)
-        else Vector.empty
-      }
-      if (moved.nonEmpty)
-        graft.index.Manifests.commit(spark, path, m.book, m.parts ++ moved)
-      srcs.foreach(sp =>
-        fs.delete(new org.apache.hadoop.fs.Path(sp), true))
-      writeStats(spark, path, stats(0), stats(1).toInt, stats(2).toInt,
-        stats(3) == 1L)
-      IndexMerge.deleteMarker(fs, dst)
-    }
-  }
-
+  /** Open an index: roll an interrupted shard merge forward, then read
+    * `_stats` on the driver. */
   def load(spark: SparkSession, path: String): ShingleIndex = {
-    completeMerge(spark, path) // mid-merge crash roll-forward
-    val dir = new org.apache.hadoop.fs.Path(s"$path/_stats")
-    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(dir))
-      throw new graft.index.IndexNotFoundException(
-        s"no shingle index at $path")
-    // one-row sidecar: driver-direct read (no Spark job per load, r17)
-    val st = graft.index.DriverParquet.single(spark, dir.toString)
+    graft.index.Manifests.completeMerge(spark, path, Storage)
+    val st = graft.index.Manifests.readStats(spark, path)
     new ShingleIndex(spark, path, st.getLong("n_docs", 0),
       st.getInteger("ngram", 0), st.getInteger("n_buckets", 0),
       st.getBoolean("hash_keys", 0))

@@ -27,7 +27,11 @@ import org.apache.spark.sql.functions._
   * hash, so the df computed there is the exact lake-wide df — no
   * separate sidecar to keep consistent across appends, and a hash
   * that crosses the cap through growth starts being dropped
-  * automatically on the next probe. */
+  * automatically on the next probe — a shard merge keeps it exact for
+  * the same reason.
+  *
+  * Compact and shard merge are the shared lifecycle
+  * ([[graft.index.ManifestIndex]]), as for [[ShingleIndex]]. */
 class WinnowIndex private (
     val spark: SparkSession,
     val path: String,
@@ -35,7 +39,23 @@ class WinnowIndex private (
     val k: Int,
     val w: Int,
     val dfCap: Int,
-    val nBuckets: Int) {
+    val nBuckets: Int) extends graft.index.ManifestIndex[WinnowIndex] {
+
+  protected def family: graft.index.Manifests.Family = WinnowIndex.Storage
+
+  protected def idealPartitions: Int = nBuckets
+
+  protected def requireMergeable(other: WinnowIndex): Unit =
+    require(other.k == k && other.w == w && other.dfCap == dfCap &&
+      other.nBuckets == nBuckets,
+      s"winnow merge: parameter mismatch — this=($k,$w,$dfCap,$nBuckets) " +
+      s"other=(${other.k},${other.w},${other.dfCap},${other.nBuckets})")
+
+  override protected def mergedStats(others: Seq[WinnowIndex]): Seq[Long] =
+    Seq(nDocs + others.map(_.nDocs).sum, k.toLong, w.toLong, dfCap.toLong,
+      nBuckets.toLong)
+
+  override protected def reloaded: WinnowIndex = WinnowIndex.load(spark, path)
 
   /** The CURRENT committed snapshot's fingerprints (r17 —
     * manifest-pinned like [[Bm25Index.postings]]: maintenance is safe
@@ -44,6 +64,13 @@ class WinnowIndex private (
     val m = graft.index.Manifests.require(spark, path)
     graft.index.Manifests.dataFrame(spark, path, m)
   }
+
+  /** `docs` as postings rows `(hash, old_id, bucket)`. */
+  private def postingRows(
+      docs: DataFrame, idCol: String, textCol: String): DataFrame =
+    fps(docs, idCol, textCol)
+      .select(col("hash"), col("id").as("old_id"))
+      .withColumn("bucket", pmod(hash(col("hash")), lit(nBuckets)))
 
   /** DISTINCT (id, hash) winnow fingerprints of `docs` under THIS
     * index's parameters (the `winnow` codegen expression rides the
@@ -152,133 +179,24 @@ class WinnowIndex private (
         "use force=true only if the overlap is intentional")
       }
     Bm25Index.appendRange(spark, path, lo, hi)
-    val m = graft.index.Manifests.require(spark, path)
-    val gen = graft.index.Manifests.genDirName(m.n + 1)
-    fps(docs, idCol, textCol)
-      .select(col("hash"), col("id").as("old_id"))
-      .withColumn("bucket", pmod(hash(col("hash")), lit(nBuckets)))
-      .repartition(col("bucket")) // r14: see ShingleIndex.appendBatch
-      .sortWithinPartitions("bucket", "hash")
-      .write.mode("overwrite").partitionBy("bucket")
-      .parquet(s"$path/$gen")
-    graft.index.Manifests.commit(spark, path, m.book,
-      m.parts ++ graft.index.Manifests.listParts(spark, path, gen))
+    graft.index.Manifests.appendGeneration(spark, path, family,
+      postingRows(docs, idCol, textCol))
     WinnowIndex.writeStats(spark, path, nDocs + nNew, k, w, dfCap, nBuckets)
     new WinnowIndex(spark, path, nDocs + nNew, k, w, dfCap, nBuckets)
-  }
-
-  /** Offline maintenance after repeated [[appendBatch]]es: rewrite
-    * the whole lake hash-sorted into ONE fresh generation and commit
-    * — [[ShingleIndex.compact]]'s r17 contract (safe against
-    * concurrent readers; sidecars never move). */
-  def compact(maxRecordsPerFile: Long = 5000000L): WinnowIndex = {
-    // settle any interrupted merge first (ShingleIndex.compact's note)
-    WinnowIndex.completeMerge(spark, path)
-    val m = graft.index.Manifests.require(spark, path)
-    val gen = graft.index.Manifests.genDirName(m.n + 1)
-    // bucket-repartitioned first — see ShingleIndex.compact (r13)
-    graft.index.Manifests.dataFrame(spark, path, m)
-      .repartition(col("bucket"))
-      .sortWithinPartitions("bucket", "hash")
-      .write.mode("overwrite")
-      .option("maxRecordsPerFile", maxRecordsPerFile)
-      .partitionBy("bucket")
-      .parquet(s"$path/$gen")
-    graft.index.Manifests.commit(spark, path, m.book,
-      graft.index.Manifests.listParts(spark, path, gen))
-    new WinnowIndex(spark, path, nDocs, k, w, dfCap, nBuckets)
-  }
-
-  /** Absorb `other` — a shard with IDENTICAL winnowing parameters over
-    * a DISJOINT docid range — by whole-generation directory moves
-    * (r17): [[ShingleIndex.merge]]'s protocol over the fingerprint
-    * lake (same marker roll-forward, same range claims; the
-    * probe-time df cap stays exact because lake-wide df is computed
-    * from the merged postings at probe time, never stored). */
-  def merge(other: WinnowIndex): WinnowIndex = mergeAll(Seq(other))
-
-  /** Multi-way [[merge]] (r15) — [[Bm25Index.mergeAll]]'s one-claims-
-    * pass / one-marker / one-stats-write shape over the fingerprint
-    * lake; the pairwise chain's per-call metadata jobs dominate a
-    * many-shard merge (BASELINE r15). */
-  def mergeAll(others: Seq[WinnowIndex],
-      compact: Boolean = false): WinnowIndex = {
-    if (others.isEmpty) return this
-    others.foreach { other =>
-      require(other.k == k && other.w == w && other.dfCap == dfCap &&
-        other.nBuckets == nBuckets,
-        s"winnow merge: parameter mismatch — this=($k,$w,$dfCap,$nBuckets) " +
-        s"other=(${other.k},${other.w},${other.dfCap},${other.nBuckets})")
-    }
-    val dst = new org.apache.hadoop.fs.Path(path)
-    val fs = dst.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val srcs = others.map(_.path)
-    graft.operators.IndexMerge.requireDistinctSources(spark, path, srcs)
-    IndexMerge.requireQuiesced(spark, path, srcs)
-    // settling an older interrupted merge rewrites `_stats` — re-read
-    // rather than trust the handle's nDocs past it (ADVICE r15)
-    val ownedSet = srcs.map(IndexMerge.ownedPath).toSet
-    var curN = nDocs
-    IndexMerge.readMarker(fs, dst).foreach { case (src, _) =>
-      if (IndexMerge.splitSrcs(src).toSet != ownedSet) {
-        WinnowIndex.completeMerge(spark, path)
-        curN = spark.read.parquet(s"$path/_stats").head().getLong(0)
-      }
-    }
-    // ownership rename BEFORE the claims read (r17 — see
-    // [[IndexMerge.takeOwnership]]); markers record the owned names
-    val resume = IndexMerge.readMarker(fs, dst)
-      .exists(m => IndexMerge.splitSrcs(m._1).toSet == ownedSet)
-    val owned = IndexMerge.takeOwnership(spark, srcs,
-      allowMissing = resume)
-    val postN = IndexMerge.readMarker(fs, dst) match {
-      case Some((_, stats)) => stats.head
-      case None =>
-        try {
-          IndexMerge.claimRangesAll(spark, path, owned)
-          val n = curN + others.map(_.nDocs).sum
-          IndexMerge.writeMarker(fs, dst, IndexMerge.joinSrcs(owned),
-            Seq(n, k.toLong, w.toLong, dfCap.toLong, nBuckets.toLong))
-          n
-        } catch {
-          case e: Throwable => // refused before any move: hand back
-            srcs.foreach(s => IndexMerge.releaseOwnership(spark, s))
-            throw e
-        }
-    }
-    // runs THIS merge to the end (r17 — whole-generation moves + ONE
-    // manifest commit; pinned destination readers undisturbed)
-    WinnowIndex.completeMerge(spark, path)
-    val merged = new WinnowIndex(spark, path, postN, k, w, dfCap, nBuckets)
-    // opt-in post-step (r16) — see Bm25Index.mergeAll's note
-    if (compact && merged.shouldCompact()) merged.compact() else merged
-  }
-
-  /** `(fileCount, bytes)` of the current snapshot's fingerprint tree
-    * ([[ShingleIndex.storageFootprint]]). */
-  def storageFootprint(): (Long, Long) = {
-    val m = graft.index.Manifests.require(spark, path)
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val stats = m.parts.flatMap { p =>
-      val d = new org.apache.hadoop.fs.Path(s"$path/$p")
-      if (fs.exists(d)) fs.listStatus(d).filter(_.isFile).toSeq
-      else Seq.empty
-    }
-    (stats.length.toLong, stats.map(_.getLen).sum)
-  }
-
-  /** The auto-compaction trigger ([[ShingleIndex.shouldCompact]]'s
-    * measured rule over the fingerprint lake). */
-  def shouldCompact(
-      slack: Double = 16.0,
-      targetFileBytes: Long = 256L << 20): Boolean = {
-    val (files, bytes) = storageFootprint()
-    IndexMerge.needsCompact(files, bytes, nBuckets, slack, targetFileBytes)
   }
 }
 
 object WinnowIndex {
+
+  /** Bucket-partitioned, hash-sorted fingerprints. A settled merge
+    * writes the post-merge stats row into `_stats`. */
+  private[operators] val Storage: graft.index.Manifests.Family =
+    new graft.index.Manifests.Family("bucket", "hash") {
+      override def settle(spark: SparkSession, path: String,
+          srcs: Seq[String], stats: Seq[Long]): Unit =
+        writeStats(spark, path, stats(0), stats(1).toInt, stats(2).toInt,
+          stats(3).toInt, stats(4).toInt)
+    }
 
   private def writeStats(spark: SparkSession, path: String, nDocs: Long,
       k: Int, w: Int, dfCap: Int, nBuckets: Int): Unit = {
@@ -317,56 +235,19 @@ object WinnowIndex {
     // a rebuild over an existing path replaces the index whole (r17:
     // explicit reset so the manifest store restarts at generation 1)
     graft.index.Manifests.reset(spark, path)
-    val gen = graft.index.Manifests.genDirName(1L)
     val idx = new WinnowIndex(spark, path, 0L, k, w, dfCap, nb)
-    idx.fps(docs, idCol, textCol)
-      .select(col("hash"), col("id").as("old_id"))
-      .withColumn("bucket", pmod(hash(col("hash")), lit(nb)))
-      .repartition(col("bucket")) // r14: see Bm25Index.build's note
-      .sortWithinPartitions("bucket", "hash")
-      .write.mode("overwrite").partitionBy("bucket")
-      .parquet(s"$path/$gen")
-    graft.index.Manifests.commit(spark, path, None,
-      graft.index.Manifests.listParts(spark, path, gen))
+    graft.index.Manifests.writeGeneration(spark, path, Storage,
+      idx.postingRows(docs, idCol, textCol), None, Nil, None)
     writeStats(spark, path, st.getLong(0), k, w, dfCap, nb)
     Bm25Index.appendRange(spark, path, st.getLong(2), st.getLong(3))
     new WinnowIndex(spark, path, st.getLong(0), k, w, dfCap, nb)
   }
 
-  /** Roll an interrupted [[WinnowIndex.merge]] forward — called by
-    * every [[load]] ([[ShingleIndex.completeMerge]]'s idempotent
-    * steps with the winnow stats row). */
-  private[operators] def completeMerge(
-      spark: SparkSession, path: String): Unit = {
-    val dst = new org.apache.hadoop.fs.Path(path)
-    val fs = dst.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    IndexMerge.readMarker(fs, dst).foreach { case (src, stats) =>
-      val srcs = IndexMerge.splitSrcs(src)
-      val m = graft.index.Manifests.require(spark, path)
-      val moved = srcs.flatMap { s =>
-        if (graft.index.Manifests.current(spark, s).isDefined)
-          graft.index.Manifests.moveGenerations(spark, s, path)
-        else Vector.empty
-      }
-      if (moved.nonEmpty)
-        graft.index.Manifests.commit(spark, path, m.book, m.parts ++ moved)
-      srcs.foreach(sp =>
-        fs.delete(new org.apache.hadoop.fs.Path(sp), true))
-      writeStats(spark, path, stats(0), stats(1).toInt, stats(2).toInt,
-        stats(3).toInt, stats(4).toInt)
-      IndexMerge.deleteMarker(fs, dst)
-    }
-  }
-
+  /** Open an index: roll an interrupted shard merge forward, then read
+    * `_stats` on the driver. */
   def load(spark: SparkSession, path: String): WinnowIndex = {
-    completeMerge(spark, path) // mid-merge crash roll-forward
-    val dir = new org.apache.hadoop.fs.Path(s"$path/_stats")
-    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(dir))
-      throw new graft.index.IndexNotFoundException(
-        s"no winnow index at $path")
-    // one-row sidecar: driver-direct read (no Spark job per load, r17)
-    val st = graft.index.DriverParquet.single(spark, dir.toString)
+    graft.index.Manifests.completeMerge(spark, path, Storage)
+    val st = graft.index.Manifests.readStats(spark, path)
     new WinnowIndex(spark, path, st.getLong("n_docs", 0),
       st.getInteger("k", 0), st.getInteger("w", 0),
       st.getInteger("df_cap", 0), st.getInteger("n_buckets", 0))

@@ -27,6 +27,24 @@ class LshVectorIndexSpec extends SparkTestBase {
     }
   }
 
+  test("LSH metadata that does not parse is an error, not absent: " +
+    "load refuses even with caller-supplied planes") {
+    val lsh = HyperplaneLsh(dim = 64, nbits = 4, seed = 13L)
+    val dir = Files.createTempDirectory("lshgarbled").toString
+    LshVectorIndex.build(emb, "embedding", "vec_id", dir, lsh)
+    // a torn write, through Hadoop so the checksum sidecar matches
+    val meta = new org.apache.hadoop.fs.Path(dir, "_lsh_meta.json")
+    val out = meta.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      .create(meta, true)
+    try out.write("{\"dim\":64,\"nbits\":".getBytes("UTF-8"))
+    finally out.close()
+    val e = intercept[IllegalStateException] {
+      LshVectorIndex.load(spark, dir, Some(lsh))
+    }
+    assert(e.getMessage.contains("_lsh_meta.json"), e.getMessage)
+    intercept[IllegalStateException] { LshVectorIndex.load(spark, dir) }
+  }
+
   test("bucket-partitioned build + pruned search (PartitionFilters visible)") {
     val lsh = HyperplaneLsh(dim = 64, nbits = 5, seed = 7L)
     val dir = Files.createTempDirectory("lshidx").toString

@@ -134,6 +134,14 @@ class ContractErrorsSpec extends SparkTestBase {
     }
   }
 
+  test("Bm25Index: load of a missing index fails with " +
+    "IndexNotFoundException") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-err").toString
+    intercept[graft.index.IndexNotFoundException] {
+      Bm25Index.load(spark, dir + "-nope")
+    }
+  }
+
   test("searchBatch refuses a query side past the broadcast contract " +
     "BEFORE materializing it (driver holds at most cap+1 rows)") {
     val index = Seq((1L, Seq(1.0f, 0.0f)), (2L, Seq(0.0f, 1.0f)))
