@@ -223,9 +223,7 @@ object Keyword {
     }
 
   private[graft] def model(text: String): Bm25QueryModel = synchronized {
-    val terms = Bm25.TokenPattern.r
-      .findAllIn(text.toLowerCase(java.util.Locale.ROOT)).toSeq.distinct
-    require(terms.nonEmpty, s"keyword_score: no query terms in '$text'")
+    val terms = Bm25.termsOf(text, "keyword_score:")
     val reg = current()
     val (n, avgdl) = stats(reg)
     if (reg.dfCache.size >= MaxDfEntries) reg.dfCache.clear()

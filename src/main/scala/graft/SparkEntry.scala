@@ -1945,10 +1945,10 @@ object SparkEntry {
         .orderBy("qid", "rank")
     }),
 
-    // the last cell of the hybrid matrix: BATCH + INDEXED — three
-    // queries served from one bucket-pruned postings read, candidate
-    // vectors fetched by one In(docid) scan over the IVF+PQ index
-    // files; per-qid results bit-identical to hybrid_index's path
+    // batch + indexed hybrid — three queries served from one
+    // bucket-pruned postings read, candidate vectors fetched by one
+    // In(docid) scan over the IVF+PQ index files; hybrid_index is this
+    // same body at one qid
     "hybrid_index_batch" -> ((s, dir) => {
       Graft.init(s)
       val emb = t(s, dir, "embeddings")

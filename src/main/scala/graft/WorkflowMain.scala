@@ -84,7 +84,11 @@ object WorkflowMain {
     Graft.init(spark)
     val name = req.name
     val elements = req.elements
-    def esc(s: String) = s.replace("\\", "\\\\").replace("\"", "\\\"")
+    // one search hit as JSON, from the row's (uid, docid, score) at `at`
+    def hit(r: org.apache.spark.sql.Row, at: Int) = {
+      val uid = r.getString(at).replace("\\", "\\\\").replace("\"", "\\\"")
+      s"""{"uid":"$uid","docid":${r.getLong(at + 1)},"score":${r.getDouble(at + 2)}}"""
+    }
     name match {
       case "index" =>
         import spark.implicits._
@@ -100,71 +104,46 @@ object WorkflowMain {
         val results = elements.map { q =>
           val hits = idx.search(TextEncoder.encode(q), k)
             .select(col("uid"), col("docid"), round(col("score"), 6).as("score"))
-            .collect()
-            .map(r => s"""{"uid":"${esc(r.getString(0))}","docid":${r.getLong(1)},""" +
-              s""""score":${r.getDouble(2)}}""")
+            .collect().map(hit(_, 0))
           hits.mkString("[", ",", "]")
         }
         s"""{"name":"search","results":${results.mkString("[", ",", "]")}}"""
-      case "hybrid" =>
-        val idx = VectorIndex.load(spark, indexPath)
-        val data = idx.df // (docid, uid, text, vector, …props)
-        require(data.schema.fieldNames.contains("text"),
-          "hybrid workflow requires an index built over a 'text' column")
-        // packed-binary indexes unpack for the cosine half (same floats)
-        val emb =
-          if (data.schema("vector").dataType ==
-              org.apache.spark.sql.types.BinaryType)
-            data.withColumn("vector", Graft.unpackVector(col("vector")))
-          else data
-        val alpha = req.alpha.getOrElse(0.5)
+      case "hybrid" | "keyword" =>
+        // keyword is the txtai scoring="bm25" config without the
+        // semantic half: BM25 over the indexed text column. Either way
         // the whole element list is served by ONE batch plan (shared
-        // postings pass, per-qid bounds + heap top-k) instead of one
-        // job per element; rankings are bit-identical per element
-        val hits = Workflows.hybridSearchBatch(data, "text", "docid",
-            emb, "docid", "vector", elements, k, alpha)
-          .join(data.select(col("docid"), col("uid")), "docid")
-          .select(col("qid"), col("rank"), col("uid"), col("docid"),
-            round(col("hybrid_micros") / 1000000.0, 6).as("score"))
-          .orderBy(col("qid"), col("rank"))
-          .collect()
-        val results = elements.indices.map { i =>
-          hits.filter(_.getLong(0) == i.toLong)
-            .map(r => s"""{"uid":"${esc(r.getString(2))}","docid":${r.getLong(3)},""" +
-              s""""score":${r.getDouble(4)}}""")
-            .mkString("[", ",", "]")
-        }
-        s"""{"name":"hybrid","results":${results.mkString("[", ",", "]")}}"""
-      case "keyword" =>
-        // keyword-only ranking (the txtai scoring="bm25" config without
-        // the semantic half): BM25 over the indexed text column, scores
-        // reported as micros/1e6 like the hybrid action
-        val idx = VectorIndex.load(spark, indexPath)
-        val data = idx.df
+        // postings pass, per-qid heap top-k) instead of one job per
+        // element, and scores are reported as micros/1e6
+        val data = VectorIndex.load(spark, indexPath).df // (docid, uid, text, vector, …props)
         require(data.schema.fieldNames.contains("text"),
-          "keyword workflow requires an index built over a 'text' column")
-        // one batch plan for the whole element list (shared postings
-        // pass + per-qid heap top-k), like the hybrid action
-        val queries = elements.zipWithIndex.map { case (q, i) =>
-          val terms = operators.Bm25.TokenPattern.r
-            .findAllIn(q.toLowerCase(java.util.Locale.ROOT)).toSeq.distinct
-          require(terms.nonEmpty, s"keyword: no query terms in '$q'")
-          (i.toLong, terms)
-        }
-        val hits = operators.Bm25
-          .topKBatch(data, "text", "docid", queries, k)
+          s"$name workflow requires an index built over a 'text' column")
+        val (ranked, micros) =
+          if (name == "hybrid") {
+            // packed-binary indexes unpack for the cosine half (same floats)
+            val emb =
+              if (data.schema("vector").dataType ==
+                  org.apache.spark.sql.types.BinaryType)
+                data.withColumn("vector", Graft.unpackVector(col("vector")))
+              else data
+            (Workflows.hybridSearchBatch(data, "text", "docid", emb, "docid",
+              "vector", elements, k, req.alpha.getOrElse(0.5)), "hybrid_micros")
+          } else {
+            val queries = elements.zipWithIndex.map { case (q, i) =>
+              (i.toLong, operators.Bm25.termsOf(q, "keyword:")) }
+            (operators.Bm25.topKBatch(data, "text", "docid", queries, k),
+              "bm25_micros")
+          }
+        val hits = ranked
           .join(data.select(col("docid"), col("uid")), "docid")
           .select(col("qid"), col("rank"), col("uid"), col("docid"),
-            round(col("bm25_micros") / 1000000.0, 6).as("score"))
+            round(col(micros) / 1000000.0, 6).as("score"))
           .orderBy(col("qid"), col("rank"))
           .collect()
         val results = elements.indices.map { i =>
-          hits.filter(_.getLong(0) == i.toLong)
-            .map(r => s"""{"uid":"${esc(r.getString(2))}","docid":${r.getLong(3)},""" +
-              s""""score":${r.getDouble(4)}}""")
+          hits.filter(_.getLong(0) == i.toLong).map(hit(_, 2))
             .mkString("[", ",", "]")
         }
-        s"""{"name":"keyword","results":${results.mkString("[", ",", "]")}}"""
+        s"""{"name":"$name","results":${results.mkString("[", ",", "]")}}"""
       case other => throw new IllegalArgumentException(
         s"unknown workflow '$other' (expected 'index', 'search', " +
         "'keyword' or 'hybrid')")

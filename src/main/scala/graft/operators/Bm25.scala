@@ -20,6 +20,13 @@ import org.apache.spark.sql.functions._
   *    pruning — unmatched buckets are never opened), which is the
   *    inverted-index read pattern at 100 TB.
   *
+  * One body per step serves every (single/batch) × (ad-hoc/indexed)
+  * form: one scorer per source ([[scoreBatch]] over a corpus,
+  * `Bm25Index.termScores` over the index), one per-qid min-max
+  * [[blendMinMax]], one per-qid top-k ([[rankPerQuery]]) and one query
+  * tokenizer ([[termsOf]]). A single-query form is its batch form at
+  * qid 0, so single and batch results agree by construction.
+  *
   * Scoring is Okapi BM25 with the Lucene idf (ln(1 + (N-df+0.5)/(df+0.5)),
   * always positive). Per-term contributions are rounded to integer
   * MICROS before the per-doc sum so the aggregate is associative —
@@ -36,6 +43,28 @@ object Bm25 {
 
   def tokens(text: Column): Column =
     regexp_extract_all(lower(text), lit(TokenPattern), lit(0))
+
+  /** Query text → its distinct terms, tokenized like the corpus. Text
+    * without a term throws, the message led by the caller's `prefix`
+    * (`hybrid:`, `keyword:`, `keyword_score:`). */
+  private[graft] def termsOf(text: String, prefix: String): Seq[String] = {
+    val terms = Bm25.TokenPattern.r
+      .findAllIn(text.toLowerCase(java.util.Locale.ROOT)).toSeq.distinct
+    require(terms.nonEmpty, s"$prefix no query terms in '$text'")
+    terms
+  }
+
+  /** Query terms lower-cased and deduplicated; none left throws `empty`. */
+  private[operators] def normTerms(terms: Seq[String], empty: => String)
+      : Seq[String] = {
+    val t = terms.map(_.toLowerCase(java.util.Locale.ROOT)).distinct
+    require(t.nonEmpty, empty)
+    t
+  }
+
+  /** A result count below one throws, naming the argument. */
+  private[operators] def requireAtLeastOne(n: Int, name: String): Unit =
+    require(n >= 1, s"bm25: $name must be at least 1, got $n")
 
   /** Inverted-index rows: (docid, dl, term, tf) — one row per distinct
     * (document, term), `dl` the document's token count carried
@@ -115,62 +144,15 @@ object Bm25 {
   }
 
   /** Ad-hoc BM25: (docid, bm25_micros) for every document matching at
-    * least one query term, scored in ONE declarative plan that scans
-    * and tokenizes the corpus exactly ONCE. Use [[Bm25Index]] when the
-    * corpus is indexed ahead of time.
-    *
-    * Single-scan mechanics (the naive formulation re-tokenized the
-    * corpus three times — once each for matched postings, per-term df,
-    * and n/avgdl stats):
-    *  - [[postingsWithMarker]] carries corpus stats IN the postings
-    *    (one un-matchable marker row per doc), so n/avgdl derive from
-    *    the same shuffled postings;
-    *  - both consumers keep the postings exchange byte-identical so
-    *    Spark's ReuseExchange runs it once: term matching is a
-    *    broadcast JOIN (an `isin` filter would push below the
-    *    aggregate and fork the exchange into a filtered twin) and the
-    *    stats aggregate consumes every posting column (column pruning
-    *    would otherwise rewrite the shared subtree per-branch);
-    *  - per-term df is a window count over the matched rows (a
-    *    separate groupBy branch would be a third consumer shape and,
-    *    pre-reuse, was the second corpus scan).
-    * The full-postings shuffle this shares is the same volume the
-    * matched-side aggregation already paid; what disappears is two
-    * extra corpus scans + regex tokenization passes — the measured
-    * cost driver for text pipelines. */
+    * least one query term — [[scoreBatch]] at qid 0. Use [[Bm25Index]]
+    * when the corpus is indexed ahead of time. */
   def score(
       docs: DataFrame,
       textCol: String,
       idCol: String,
       queryTerms: Seq[String]): DataFrame = {
     require(queryTerms.nonEmpty, "bm25: empty query")
-    val terms = queryTerms.map(_.toLowerCase(java.util.Locale.ROOT)).distinct.filter(_ != DocMarker)
-    require(terms.nonEmpty, "bm25: empty query")
-    val spark = docs.sparkSession
-    import spark.implicits._
-    val p = postingsWithMarker(docs, textCol, idCol)
-    val st = p
-      .join(broadcast(Seq(DocMarker).toDF("term")), "term")
-      // count(docid) + sum(dl*tf), not count(*) + sum(dl): a marker
-      // row's tf is exactly 1, so the numbers are identical — but this
-      // form consumes all four posting columns, which keeps the
-      // postings aggregate byte-identical to the matched branch's (the
-      // optimizer prunes unused aggregate functions per-branch, and a
-      // pruned twin would fork the shared exchange — see reuse note)
-      .agg(count(col("docid")).as("n"),
-        sum(col("dl") * col("tf")).as("__sumdl"))
-      .select(col("n"),
-        (col("__sumdl").cast("double") / col("n")).as("avgdl"))
-    val matched = p.join(broadcast(terms.toDF("term")), "term")
-    matched
-      .withColumn("df", count(lit(1)).over(
-        org.apache.spark.sql.expressions.Window.partitionBy("term")))
-      .crossJoin(broadcast(st))
-      .select(col("docid"),
-        termMicros(col("tf"), col("dl"), col("df"), col("n"),
-          col("avgdl")).as("__micros"))
-      .groupBy("docid")
-      .agg(sum("__micros").as("bm25_micros"))
+    scoreBatch(docs, textCol, idCol, Seq((0L, queryTerms))).drop("qid")
   }
 
   /** Top-k convenience over [[score]]: deterministic ties on docid;
@@ -180,31 +162,17 @@ object Bm25 {
       textCol: String,
       idCol: String,
       queryTerms: Seq[String],
-      k: Int): DataFrame =
+      k: Int): DataFrame = {
+    requireAtLeastOne(k, "k")
     score(docs, textCol, idCol, queryTerms)
       .orderBy(desc("bm25_micros"), col("docid").asc)
       .limit(k)
+  }
 
-  /** Hybrid lexical+semantic ranking — txtai's `hybrid: true` blend.
-    * BM25 micro-scores and cosine similarities are min-max normalized
-    * over the MATCHED candidate set (deterministic: both aggregates are
-    * order-independent) and blended `alpha*semantic + (1-alpha)*lexical`
-    * (txtai's weight convention). Output (docid, hybrid_micros) rounded
-    * so ordering is reproducible.
-    *
-    * `embeddings` supplies (embIdCol, embVecCol); candidates missing an
-    * embedding drop out (inner join) — at scale both sides shuffle on
-    * the id, and the candidate side is already pruned to term matches.
-    *
-    * The cosine projection sits ABOVE the candidate join, so the
-    * semantic side scores only the keyword-matched survivors — never a
-    * full-corpus scan of the embedding table (the join itself prunes:
-    * column pruning reaches the embedding scan, and Catalyst never
-    * pushes expression projections below a join). The candidate set is
-    * read twice (min/max bounds + final blend) but its expensive
-    * lineage — postings shuffle, BM25 aggregation, embedding scan — is
-    * shared via ReuseExchange; only the candidate-bounded join and
-    * cosine re-run. */
+  /** Hybrid lexical+semantic ranking — txtai's `hybrid: true` blend
+    * ([[blendMinMax]] over every matched candidate, no top-k) at qid 0:
+    * (docid, hybrid_micros). `embeddings` supplies (embIdCol,
+    * embVecCol); candidates missing an embedding drop out. */
   def hybrid(
       docs: DataFrame,
       textCol: String,
@@ -215,13 +183,10 @@ object Bm25 {
       queryTerms: Seq[String],
       queryVec: Array[Float],
       alpha: Double = 0.5): DataFrame = {
-    val lex = score(docs, textCol, idCol, queryTerms)
-    val emb = embeddings.select(
-      col(embIdCol).cast("long").as("docid"), col(embVecCol).as("__v"))
-    val cand = lex.join(emb, "docid")
-      .select(col("docid"), col("bm25_micros"),
-        graft.Graft.cosineSim(col("__v"), typedlit(queryVec)).as("__cos"))
-    blendMinMax(cand, alpha)
+    require(queryTerms.nonEmpty, "bm25: empty query")
+    blendMinMax(scoreBatch(docs, textCol, idCol, Seq((0L, queryTerms))),
+        embeddings, embIdCol, embVecCol, Seq((0L, queryTerms, queryVec)), alpha)
+      .select(col("docid"), col("hybrid_micros").cast("long").as("hybrid_micros"))
   }
 
   /** Faceted keyword search — the reference family's
@@ -250,11 +215,28 @@ object Bm25 {
         max("bm25_micros").as("max_micros"))
   }
 
-  /** Batch keyword scoring — the lexical half of [[hybridBatch]] as
-    * its own operator: (qid, docid, bm25_micros) for every document
-    * matching at least one of its query's terms, all queries served by
-    * ONE shared postings pass. Per-qid scores are bit-identical to
-    * [[score]] with that query's terms. */
+  /** The ad-hoc scorer: (qid, docid, bm25_micros) for every document
+    * matching at least one of its query's terms, every query served by
+    * ONE declarative plan that scans and tokenizes the corpus exactly
+    * ONCE.
+    *
+    * Single-scan mechanics (the naive formulation re-tokenized the
+    * corpus three times — once each for matched postings, per-term df,
+    * and n/avgdl stats):
+    *  - [[postingsWithMarker]] carries corpus stats IN the postings
+    *    (one un-matchable marker row per doc), so n/avgdl derive from
+    *    the same shuffled postings;
+    *  - both consumers keep the postings exchange byte-identical so
+    *    Spark's ReuseExchange runs it once: term matching is a
+    *    broadcast JOIN on a (qid, term) table (an `isin` filter would
+    *    push below the aggregate and fork the exchange into a filtered
+    *    twin; a posting matched by m queries fans out m-fold AFTER the
+    *    shared exchange) and the stats aggregate consumes every posting
+    *    column (column pruning would otherwise rewrite the shared
+    *    subtree per-branch);
+    *  - per-(qid, term) df is a window count over the matched rows (a
+    *    separate groupBy branch would be a third consumer shape and,
+    *    pre-reuse, was the second corpus scan). */
   def scoreBatch(
       docs: DataFrame,
       textCol: String,
@@ -264,13 +246,18 @@ object Bm25 {
     val spark = docs.sparkSession
     import spark.implicits._
     val qTerms = queries.flatMap { case (qid, terms) =>
-      val t = terms.map(_.toLowerCase(java.util.Locale.ROOT)).distinct.filter(_ != DocMarker)
-      require(t.nonEmpty, s"bm25: empty query $qid")
-      t.map(term => (qid, term))
+      normTerms(terms.filter(_ != DocMarker), s"bm25: empty query $qid")
+        .map(term => (qid, term))
     }.toDF("qid", "term")
     val p = postingsWithMarker(docs, textCol, idCol)
     val st = p
       .join(broadcast(Seq(DocMarker).toDF("term")), "term")
+      // count(docid) + sum(dl*tf), not count(*) + sum(dl): a marker
+      // row's tf is exactly 1, so the numbers are identical — but this
+      // form consumes all four posting columns, which keeps the
+      // postings aggregate byte-identical to the matched branch's (the
+      // optimizer prunes unused aggregate functions per-branch, and a
+      // pruned twin would fork the shared exchange — see reuse note)
       .agg(count(col("docid")).as("n"),
         sum(col("dl") * col("tf")).as("__sumdl"))
       .select(col("n"),
@@ -294,41 +281,21 @@ object Bm25 {
       idCol: String,
       queries: Seq[(Long, Seq[String])],
       k: Int): DataFrame = {
-    val spark = docs.sparkSession
-    Knn.ensureHashAggCapacity(spark, queries.length)
-    Knn.topKPerQuery(
-        scoreBatch(docs, textCol, idCol, queries)
-          .select(col("qid"), col("docid").as("__id"),
-            col("bm25_micros").cast("double").as("__score")),
-        k)
-      .select(col("qid"), col("rank").cast("long").as("rank"),
-        col("id").as("docid"), col("score").cast("long").as("bm25_micros"))
+    requireAtLeastOne(k, "k")
+    rankPerQuery(scoreBatch(docs, textCol, idCol, queries), "bm25_micros",
+      k, queries.length)
   }
 
   /** Batch hybrid — N queries in ONE declarative plan (the reference's
     * workflow surface serves element LISTS; a per-element driver loop
-    * runs N full jobs and re-tokenizes the corpus N times):
-    *
-    *  - the corpus postings pass runs ONCE and is shared by every
-    *    query: matching joins a broadcast (qid, term) table, so a
-    *    posting matched by m queries fans out m-fold AFTER the shared
-    *    exchange, never by re-scanning;
-    *  - per-(qid, term) document frequency is a window count over the
-    *    matched rows — identical to [[score]]'s df (each (term, docid)
-    *    posting appears exactly once per matching qid);
-    *  - the semantic half joins candidates to embeddings once and
-    *    scores each row against its own query's vector (broadcast
-    *    (qid, qvec) table) — Σq |cand(q)| cosine evaluations, never
-    *    queries × corpus;
-    *  - per-qid min-max bounds ride a broadcast groupBy join (the
-    *    batch twin of [[blendMinMax]], same literal math), and the
-    *    final top-k is the bounded-heap partial aggregate shared with
-    *    [[Knn.searchBatch]] — the shuffle carries per-partition heaps,
-    *    not scored candidates.
+    * runs N full jobs and re-tokenizes the corpus N times): the lexical
+    * half is [[scoreBatch]]'s shared postings pass, the blend is
+    * [[blendMinMax]], and the final top-k is [[rankPerQuery]]'s
+    * bounded heap — the shuffle carries per-partition heaps, not
+    * scored candidates.
     *
     * Output (qid, rank, docid, hybrid_micros), rank 1-based, ties on
-    * docid ascending — bit-identical per qid to [[hybrid]] over the
-    * same corpus. */
+    * docid ascending — per qid, [[hybrid]]'s top-k. */
   def hybridBatch(
       docs: DataFrame,
       textCol: String,
@@ -339,22 +306,48 @@ object Bm25 {
       queries: Seq[(Long, Seq[String], Array[Float])],
       k: Int,
       alpha: Double = 0.5): DataFrame = {
-    require(queries.nonEmpty, "bm25: empty query batch")
-    val spark = docs.sparkSession
-    import spark.implicits._
-    // the r2 scale lesson (BASELINE.md): ObjectHashAggregate falls back
-    // to sort-based at 128 distinct keys per partition, which would
-    // sort-and-spill every scored candidate — raise the threshold to
-    // the batch size like Knn.searchBatch does
-    Knn.ensureHashAggCapacity(spark, queries.length)
+    requireAtLeastOne(k, "k")
     val lex = scoreBatch(docs, textCol, idCol,
       queries.map { case (qid, terms, _) => (qid, terms) })
+    rankPerQuery(blendMinMax(lex, embeddings, embIdCol, embVecCol, queries,
+      alpha), "hybrid_micros", k, queries.length)
+  }
+
+  /** The one hybrid blend. Each lexical candidate `(qid, docid,
+    * bm25_micros)` joins its vector from `vectors` (`vecIdCol`,
+    * `vecCol`; a candidate without one drops out — at scale both sides
+    * shuffle on the id, and the candidate side is already pruned to
+    * term matches) and its query's vector from a broadcast
+    * (qid, qvec) table, so cosine runs over Σq |cand(q)| rows, never
+    * queries × corpus. BM25 micros and cosines are then min-max
+    * normalized over each qid's candidates (order-independent
+    * aggregates, riding a broadcast groupBy join) and blended
+    * `alpha*semantic + (1-alpha)*lexical` (txtai's weight convention);
+    * a qid whose bounds coincide scores 1.0 on that side.
+    * Output (qid, docid, hybrid_micros) with the micros a rounded
+    * double, so ordering is reproducible.
+    *
+    * The cosine projection sits ABOVE the candidate join (column
+    * pruning reaches the vector scan, and Catalyst never pushes
+    * expression projections below a join); the candidates are read
+    * twice (bounds + blend) but their lineage is shared via
+    * ReuseExchange. */
+  private[operators] def blendMinMax(
+      lex: DataFrame,
+      vectors: DataFrame,
+      vecIdCol: String,
+      vecCol: String,
+      queries: Seq[(Long, Seq[String], Array[Float])],
+      alpha: Double): DataFrame = {
+    val spark = lex.sparkSession
+    import spark.implicits._
     val qVecs = queries.map { case (qid, _, v) => (qid, v.toSeq) }
       .toDF("qid", "__qvec")
       .select(col("qid"), col("__qvec").cast("array<float>").as("__qvec"))
-    val emb = embeddings.select(
-      col(embIdCol).cast("long").as("docid"), col(embVecCol).as("__v"))
-    val cand = lex.join(emb, "docid").join(broadcast(qVecs), "qid")
+    val cand = lex
+      .join(vectors.select(col(vecIdCol).cast("long").as("docid"),
+        col(vecCol).as("__v")), "docid")
+      .join(broadcast(qVecs), "qid")
       .select(col("qid"), col("docid"), col("bm25_micros"),
         graft.Graft.cosineSim(col("__v"), col("__qvec")).as("__cos"))
     val bounds = cand.groupBy("qid").agg(
@@ -366,34 +359,38 @@ object Bm25 {
     val normC = when(col("__cmax") === col("__cmin"), lit(1.0))
       .otherwise((col("__cos") - col("__cmin")) /
         (col("__cmax") - col("__cmin")))
-    val blended = cand.join(broadcast(bounds), "qid")
-      .select(col("qid"), col("docid").as("__id"),
+    cand.join(broadcast(bounds), "qid")
+      .select(col("qid"), col("docid"),
         round((lit(alpha) * normC + lit(1.0 - alpha) * normB) *
-          lit(1000000.0), 0).as("__score"))
-    Knn.topKPerQuery(blended, k)
-      .select(col("qid"), col("rank").cast("long").as("rank"),
-        col("id").as("docid"), col("score").cast("long").as("hybrid_micros"))
+          lit(1000000.0), 0).as("hybrid_micros"))
   }
 
-  /** Min-max blend over a candidate set `(docid, bm25_micros, __cos)` —
-    * the shared tail of [[hybrid]] and [[Bm25Index.hybridSearch]]; both
-    * therefore produce bit-identical micros for the same candidates. */
-  private[operators] def blendMinMax(
-      cand: DataFrame, alpha: Double): DataFrame = {
-    val bounds = cand.agg(
-      min("bm25_micros").as("__bmin"), max("bm25_micros").as("__bmax"),
-      min("__cos").as("__cmin"), max("__cos").as("__cmax"))
-    val normB = when(col("__bmax") === col("__bmin"), lit(1.0))
-      .otherwise((col("bm25_micros") - col("__bmin")).cast("double") /
-        (col("__bmax") - col("__bmin")).cast("double"))
-    val normC = when(col("__cmax") === col("__cmin"), lit(1.0))
-      .otherwise((col("__cos") - col("__cmin")) /
-        (col("__cmax") - col("__cmin")))
-    cand.crossJoin(broadcast(bounds))
-      .select(col("docid"),
-        round((lit(alpha) * normC + lit(1.0 - alpha) * normB) *
-          lit(1000000.0), 0).cast("long").as("hybrid_micros"))
+  /** Bounded-heap top-k per qid (the partial aggregate shared with
+    * [[Knn.searchBatch]]) over `(qid, docid, <scoreCol>)` →
+    * (qid, rank, docid, <scoreCol> as long), rank 1-based, ties on
+    * docid ascending. The r2 scale lesson (BASELINE.md):
+    * ObjectHashAggregate falls back to sort-based at 128 distinct keys
+    * per partition, which would sort-and-spill every scored candidate,
+    * so the threshold is raised to the `nQueries` batch size first. */
+  private[operators] def rankPerQuery(scored: DataFrame, scoreCol: String,
+      k: Int, nQueries: Int): DataFrame = {
+    Knn.ensureHashAggCapacity(scored.sparkSession, nQueries)
+    Knn.topKPerQuery(
+        scored.select(col("qid"), col("docid").as("__id"),
+          col(scoreCol).cast("double").as("__score")),
+        k)
+      .select(col("qid"), col("rank").cast("long").as("rank"),
+        col("id").as("docid"), col("score").cast("long").as(scoreCol))
   }
+
+  /** One qid's ranked rows in rank order, projected to
+    * `(docid, <scoreCol>)` — how a single-query form reads its batch
+    * form. The rows are few, so they sort in one partition (no range
+    * exchange, no sampling job). */
+  private[operators] def oneQuery(ranked: DataFrame, scoreCol: String)
+      : DataFrame =
+    ranked.coalesce(1).sortWithinPartitions("rank")
+      .select(col("docid"), col(scoreCol))
 }
 
 /** Persisted inverted index: postings stored partitioned by
@@ -819,69 +816,73 @@ class Bm25Index private (
         max("bm25_micros").as("max_micros"))
   }
 
-  /** Partition-pruned BM25 scores for EVERY matching document (no
-    * top-k) — the candidate source for [[hybridSearch]]. df is computed
-    * from the pruned postings themselves (exact: every posting of a
-    * matched term lives in the matched bucket). */
-  def scores(queryTerms: Seq[String]): DataFrame = {
-    require(queryTerms.nonEmpty, "bm25: empty query")
-    val terms = queryTerms.map(_.toLowerCase(java.util.Locale.ROOT)).distinct
-    val buckets = terms.map(t => Bm25Index.bucketOf(t, nBuckets)).distinct
-    val matched = postings
-      .filter(col("bucket").isin(buckets: _*))
-      .filter(col("term").isin(terms: _*))
-    val dfs = matched.groupBy("term").agg(count(lit(1)).as("df"))
+  /** The index scorer: (term, docid, __micros) for every posting of
+    * `terms` (already normalized), reading ONLY their hashed bucket
+    * partitions. df is computed from the pruned postings themselves
+    * (exact: every posting of a term lives in its bucket) and is
+    * qid-independent, so one read serves a whole batch. */
+  private def termScores(terms: Seq[String]): DataFrame = {
+    val matched = termPostings(terms)
     matched
-      .join(broadcast(dfs), "term")
-      .select(col("docid"),
+      .join(broadcast(termDfs(matched)), "term")
+      .select(col("term"), col("docid"),
         Bm25.termMicros(col("tf"), col("dl"), col("df"), lit(n),
           lit(avgdl)).as("__micros"))
-      .groupBy("docid")
-      .agg(sum("__micros").as("bm25_micros"))
   }
 
-  /** Per-term document frequencies, reading ONLY the query terms'
-    * bucket partitions (exact: every posting of a term lives in its
-    * hashed bucket) — the stats source behind index-registered
-    * `keyword_score` ([[graft.Keyword.registerIndex]]); terms absent
-    * from the corpus are absent from the map. */
-  def dfOf(queryTerms: Seq[String]): Map[String, Long] = {
-    require(queryTerms.nonEmpty, "bm25: empty query")
-    val terms = queryTerms.map(_.toLowerCase(java.util.Locale.ROOT)).distinct
+  private def termPostings(terms: Seq[String]): DataFrame = {
     val buckets = terms.map(t => Bm25Index.bucketOf(t, nBuckets)).distinct
     postings
       .filter(col("bucket").isin(buckets: _*))
       .filter(col("term").isin(terms: _*))
-      .groupBy("term").agg(count(lit(1)).as("df"))
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
   }
 
+  private def termDfs(matched: DataFrame): DataFrame =
+    matched.groupBy("term").agg(count(lit(1)).as("df"))
+
+  /** Partition-pruned BM25 scores for EVERY matching document (no
+    * top-k): [[termScores]] summed per doc. */
+  def scores(queryTerms: Seq[String]): DataFrame =
+    termScores(Bm25.normTerms(queryTerms, "bm25: empty query"))
+      .groupBy("docid")
+      .agg(sum("__micros").as("bm25_micros"))
+
+  /** Per-term document frequencies, reading ONLY the query terms'
+    * bucket partitions — the stats source behind index-registered
+    * `keyword_score` ([[graft.Keyword.registerIndex]]); terms absent
+    * from the corpus are absent from the map. */
+  def dfOf(queryTerms: Seq[String]): Map[String, Long] =
+    termDfs(termPostings(Bm25.normTerms(queryTerms, "bm25: empty query")))
+      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+
   /** Partition-pruned BM25 top-k over [[scores]]. */
-  def search(queryTerms: Seq[String], k: Int): DataFrame =
+  def search(queryTerms: Seq[String], k: Int): DataFrame = {
+    Bm25.requireAtLeastOne(k, "k")
     scores(queryTerms)
       .orderBy(desc("bm25_micros"), col("docid").asc)
       .limit(k)
+  }
 
-  /** Batch form of [[hybridSearch]] — the last cell of the
-    * (single/batch) × (ad-hoc/indexed) matrix: N hybrid queries where
-    * BOTH halves read index storage and the postings open ONCE for the
-    * whole batch.
+  /** Index-routed hybrid — txtai `hybrid: true` shaped for 100 TB, N
+    * queries at once: BOTH halves read index storage, neither scans a
+    * full table.
     *
-    *  - one partition-pruned postings read covers the UNION of every
-    *    query's term buckets; per-term df comes from those pruned
-    *    postings (qid-independent, exact — same stats as [[scores]]);
-    *  - per-qid candidate selection is the bounded-heap top-`candidates`
-    *    (ties on docid ascending — the same order [[search]] produces),
-    *    collected once as a bounded boundary set (≤ queries ×
-    *    candidates rows);
-    *  - the union of candidate ids fetches vectors in ONE In(docid)
-    *    scan (row groups outside the id set skip on min/max stats —
-    *    the sorted-write layout);
-    *  - per-qid min-max blend (literal-identical math to
-    *    [[Bm25.blendMinMax]]) and bounded-heap top-k finish the job.
+    *  - lexical: [[termScores]] over the UNION of every query's term
+    *    buckets (the postings open ONCE for the batch), matched to its
+    *    queries by a broadcast (qid, term) join like
+    *    [[Bm25.scoreBatch]]'s, then the per-qid top-`candidates` ([[Bm25.rankPerQuery]]: ties on docid
+    *    ascending, the order [[search]] produces), collected once as a
+    *    bounded boundary set (≤ queries × candidates rows, like
+    *    [[graft.index.IvfVectorIndex.searchAdc]]'s shortlist);
+    *  - semantic: the union of candidate ids fetches its vectors from
+    *    `vectors` — e.g. an IVF index's `df` — in ONE `In(docid)` scan
+    *    the parquet reader pushes down (row groups outside the id set
+    *    skip on min/max stats), never a full-corpus embedding scan;
+    *  - blend: [[Bm25.blendMinMax]], the ad-hoc hybrid's own blend, so
+    *    scores equal the ad-hoc hybrid restricted to the same
+    *    candidates — which keeps the result SQL-oracle-derivable.
     *
-    * Output (qid, rank, docid, hybrid_micros); per-qid results are
-    * bit-identical to [[hybridSearch]] with that query's terms/vector. */
+    * Output (qid, rank, docid, hybrid_micros). */
   def hybridSearchBatch(
       vectors: DataFrame,
       vecIdCol: String,
@@ -892,87 +893,30 @@ class Bm25Index private (
       candidates: Int = 50): DataFrame = {
     import spark.implicits._
     require(queries.nonEmpty, "bm25: empty query batch")
-    Knn.ensureHashAggCapacity(spark, queries.length)
-    val qt = queries.flatMap { case (qid, ts, _) =>
-      val t = ts.map(_.toLowerCase(java.util.Locale.ROOT)).distinct
-      require(t.nonEmpty, s"bm25: empty query $qid")
-      t.map(term => (qid, term))
+    Bm25.requireAtLeastOne(k, "k")
+    Bm25.requireAtLeastOne(candidates, "candidates")
+    val qTerms = queries.flatMap { case (qid, ts, _) =>
+      Bm25.normTerms(ts, s"bm25: empty query $qid").map(term => (qid, term))
     }
-    val terms = qt.map(_._2).distinct
-    val buckets = terms.map(t => Bm25Index.bucketOf(t, nBuckets)).distinct
-    val matched = postings
-      .filter(col("bucket").isin(buckets: _*))
-      .filter(col("term").isin(terms: _*))
-    val dfs = matched.groupBy("term").agg(count(lit(1)).as("df"))
-    val perTerm = matched
-      .join(broadcast(dfs), "term")
-      .select(col("term"), col("docid"),
-        Bm25.termMicros(col("tf"), col("dl"), col("df"), lit(n),
-          lit(avgdl)).as("__micros"))
-    val lex = perTerm
-      .join(broadcast(qt.toDF("qid", "term")), "term")
+    val lex = termScores(qTerms.map(_._2).distinct)
+      .join(broadcast(qTerms.toDF("qid", "term")), "term")
       .groupBy("qid", "docid")
       .agg(sum("__micros").as("bm25_micros"))
-    val candRows = Knn.topKPerQuery(
-        lex.select(col("qid"), col("docid").as("__id"),
-          col("bm25_micros").cast("double").as("__score")),
-        candidates)
-      .select(col("qid"), col("id").as("docid"),
-        col("score").cast("long").as("bm25_micros"))
-      .collect()
-    if (candRows.isEmpty)
-      return Seq.empty[(Long, Long, Long, Long)]
-        .toDF("qid", "rank", "docid", "hybrid_micros")
+    val candRows = Bm25.rankPerQuery(lex, "bm25_micros", candidates,
+        queries.length)
+      .select("qid", "docid", "bm25_micros").collect()
     val cand = candRows.toIndexedSeq
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
       .toDF("qid", "docid", "bm25_micros")
     val ids = candRows.map(_.getLong(1)).distinct.toIndexedSeq
-    val fetched = vectors
-      .select(col(vecIdCol).cast("long").as("docid"), col(vecCol).as("__v"))
-      .filter(col("docid").isin(ids: _*))
-    val qVecs = queries.map { case (qid, _, v) => (qid, v.toSeq) }
-      .toDF("qid", "__qvec")
-      .select(col("qid"), col("__qvec").cast("array<float>").as("__qvec"))
-    val scored = cand.join(fetched, "docid").join(broadcast(qVecs), "qid")
-      .select(col("qid"), col("docid"), col("bm25_micros"),
-        graft.Graft.cosineSim(col("__v"), col("__qvec")).as("__cos"))
-    val bounds = scored.groupBy("qid").agg(
-      min("bm25_micros").as("__bmin"), max("bm25_micros").as("__bmax"),
-      min("__cos").as("__cmin"), max("__cos").as("__cmax"))
-    val normB = when(col("__bmax") === col("__bmin"), lit(1.0))
-      .otherwise((col("bm25_micros") - col("__bmin")).cast("double") /
-        (col("__bmax") - col("__bmin")).cast("double"))
-    val normC = when(col("__cmax") === col("__cmin"), lit(1.0))
-      .otherwise((col("__cos") - col("__cmin")) /
-        (col("__cmax") - col("__cmin")))
-    val blended = scored.join(broadcast(bounds), "qid")
-      .select(col("qid"), col("docid").as("__id"),
-        round((lit(alpha) * normC + lit(1.0 - alpha) * normB) *
-          lit(1000000.0), 0).as("__score"))
-    Knn.topKPerQuery(blended, k)
-      .select(col("qid"), col("rank").cast("long").as("rank"),
-        col("id").as("docid"), col("score").cast("long").as("hybrid_micros"))
+    val fetched = vectors.filter(col(vecIdCol).cast("long").isin(ids: _*))
+    Bm25.rankPerQuery(Bm25.blendMinMax(cand, fetched, vecIdCol, vecCol,
+      queries, alpha), "hybrid_micros", k, queries.length)
   }
 
-  /** Index-routed hybrid — txtai `hybrid: true` shaped for 100 TB:
-    * BOTH halves read index storage, neither scans a full table.
-    *
-    *  - lexical: top-`candidates` from the bucket-pruned postings (only
-    *    the query terms' partitions open — same read path as [[search]]);
-    *  - semantic: the candidate ids (a bounded boundary set, collected
-    *    once like [[graft.index.IvfVectorIndex.searchAdc]]'s shortlist)
-    *    fetch their vectors from `vectors` — e.g. an IVF index's `df` —
-    *    via an `In` predicate the parquet scan pushes down (row groups
-    *    outside the id set are skipped by min/max stats), never a
-    *    full-corpus embedding scan;
-    *  - blend: exact cosine + the SAME min-max blend as [[Bm25.hybrid]]
-    *    ([[Bm25.blendMinMax]]), so scores are bit-identical to the
-    *    ad-hoc hybrid restricted to the same candidate set — which is
-    *    what keeps the result SQL-oracle-derivable.
-    *
-    * The lexical candidates replay as a ≤`candidates`-row local
-    * relation in the final plan (the postings lineage runs exactly
-    * once, at the collect). */
+  /** [[hybridSearchBatch]] at qid 0, in rank order: (docid,
+    * hybrid_micros), the top-k of the query's top-`candidates` lexical
+    * matches. */
   def hybridSearch(
       vectors: DataFrame,
       vecIdCol: String,
@@ -982,22 +926,9 @@ class Bm25Index private (
       k: Int,
       alpha: Double = 0.5,
       candidates: Int = 50): DataFrame = {
-    import spark.implicits._
-    val lexRows = search(queryTerms, candidates).collect()
-    if (lexRows.isEmpty)
-      return Seq.empty[(Long, Long)].toDF("docid", "hybrid_micros")
-    val lex = lexRows.toIndexedSeq
-      .map(r => (r.getLong(0), r.getLong(1))).toDF("docid", "bm25_micros")
-    val ids = lexRows.map(_.getLong(0)).toIndexedSeq
-    val fetched = vectors
-      .select(col(vecIdCol).cast("long").as("docid"), col(vecCol).as("__v"))
-      .filter(col("docid").isin(ids: _*))
-    val cand = lex.join(fetched, "docid")
-      .select(col("docid"), col("bm25_micros"),
-        graft.Graft.cosineSim(col("__v"), typedlit(queryVec)).as("__cos"))
-    Bm25.blendMinMax(cand, alpha)
-      .orderBy(desc("hybrid_micros"), col("docid").asc)
-      .limit(k)
+    require(queryTerms.nonEmpty, "bm25: empty query")
+    Bm25.oneQuery(hybridSearchBatch(vectors, vecIdCol, vecCol,
+      Seq((0L, queryTerms, queryVec)), k, alpha, candidates), "hybrid_micros")
   }
 }
 
@@ -1072,14 +1003,15 @@ object Bm25Index {
 
   /** `_ranges` sidecar: one (lo, hi) docid interval per build/append —
     * the [[Bm25Index.append]] overlap guard's memory. Tiny (O(appends)
-    * rows), read driver-side only. */
+    * rows), read on the driver ([[graft.index.DriverParquet]]: no
+    * Spark job). */
   private[operators] def readRanges(spark: SparkSession, path: String)
       : Seq[(Long, Long)] = {
     val dir = new org.apache.hadoop.fs.Path(s"$path/_ranges")
     val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(dir)) return Seq.empty // pre-guard index: unknowable
-    spark.read.parquet(dir.toString)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toIndexedSeq
+    graft.index.DriverParquet.groups(spark, dir.toString)
+      .map(g => (g.getLong("lo", 0), g.getLong("hi", 0)))
   }
 
   private[operators] def appendRange(spark: SparkSession, path: String,

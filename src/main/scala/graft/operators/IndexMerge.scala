@@ -319,9 +319,9 @@ object IndexMerge {
   }
 
   /** The multi-way claims step: every (lo, hi) docid claim of every
-    * source lands in `dst`'s `_ranges` in ONE append (the sources'
-    * ledgers are read in one multi-path scan, attributed back to
-    * their source via `input_file_name`), after in-memory validation.
+    * source lands in `dst`'s `_ranges` in ONE append (each source's
+    * ledger is read on the driver on its own, so every claim's source
+    * is known from the start), after in-memory validation.
     * The overlap rules are SOURCE-AWARE (r16, both ADVICE r15
     * findings):
     *
@@ -337,44 +337,18 @@ object IndexMerge {
     *    same docid slice merged without error, duplicating every
     *    docid's postings and double-counting stats);
     *  - against the DESTINATION's claims, exact duplicates are
-    *    skipped (value-level idempotence for interrupted re-runs,
-    *    same contract as [[claimRanges]]) and partial overlaps throw. */
+    *    skipped (value-level idempotence for interrupted re-runs) and
+    *    partial overlaps throw. */
   private[graft] def claimRangesAll(
       spark: SparkSession, dstPath: String, srcPaths: Seq[String]): Unit = {
     val mine = Bm25Index.readRanges(spark, dstPath)
-    val conf = spark.sparkContext.hadoopConfiguration
-    val dirs = srcPaths
-      .map(s => (s, new Path(s"$s/_ranges")))
-      .filter { case (_, d) => d.getFileSystem(conf).exists(d) }
-    if (dirs.isEmpty) return
-    // scheme-insensitive URI paths: input_file_name() reports
-    // `file:///…` where makeQualified says `file:/…` — compare the
-    // path component only
-    def uriPath(s: String): String = new Path(s).toUri.getPath
-    val dirPaths = dirs.map { case (src, d) =>
-      (src, uriPath(d.getFileSystem(conf).makeQualified(d).toString))
-    }
-    val attributed = spark.read
-      .parquet(dirs.map(_._2.toString): _*)
-      .select(org.apache.spark.sql.functions.col("lo"),
-        org.apache.spark.sql.functions.col("hi"),
-        org.apache.spark.sql.functions.input_file_name().as("file"))
-      .collect().map { r =>
-        val f = uriPath(r.getString(2))
-        val src = dirPaths.collectFirst {
-          case (s, dp) if f.startsWith(dp + "/") => s
-        }.getOrElse(throw new IllegalStateException(
-          s"index merge: claim file $f matches no source ledger dir " +
-          s"of ${dirPaths.map(_._2)}"))
-        (r.getLong(0), r.getLong(1), src)
-      }.toIndexedSeq
     // per-source distinct: a replay artifact may duplicate a row
     // inside ONE ledger; that is never a cross-shard double-index
-    val bySrc = attributed.groupBy(_._3)
-      .map { case (src, rs) => src -> rs.map(t => (t._1, t._2)).distinct }
+    val bySrc = srcPaths.distinct
+      .map(src => src -> Bm25Index.readRanges(spark, src).distinct)
     // exact duplicates across two DIFFERENT sources — never a replay
     // (replay dedup applies only against the destination's claims)
-    bySrc.toSeq.flatMap { case (src, rs) => rs.map(r => (r, src)) }
+    bySrc.flatMap { case (src, rs) => rs.map(r => (r, src)) }
       .groupBy(_._1)
       .collectFirst { case ((lo, hi), owners) if owners.size > 1 =>
         throw new IllegalArgumentException(
@@ -387,7 +361,7 @@ object IndexMerge {
     // sweep for any overlap between ranges of DIFFERENT sources:
     // sorted by lo, tracking each source's running max hi — O(R·S)
     // driver-side over ledger rows (O(appends), never corpus-sized)
-    val sorted = bySrc.toSeq
+    val sorted = bySrc
       .flatMap { case (src, rs) => rs.map { case (lo, hi) => (lo, hi, src) } }
       .sortBy(t => (t._1, t._2))
     val maxHi = scala.collection.mutable.Map.empty[String, (Long, Long)]
@@ -431,26 +405,4 @@ object IndexMerge {
   private[graft] def recordRange(
       spark: SparkSession, path: String, lo: Long, hi: Long): Unit =
     Bm25Index.appendRange(spark, path, lo, hi)
-
-  /** The shared range-ledger step: every (lo, hi) docid claim of
-    * `src` is appended to `dst`'s `_ranges` unless already there
-    * (value-level idempotence for replays); a PARTIAL overlap with
-    * dst's existing claims throws — merging an already-indexed doc
-    * range would double its postings. */
-  private[graft] def claimRanges(
-      spark: SparkSession, dstPath: String, srcPath: String): Unit = {
-    val mine = Bm25Index.readRanges(spark, dstPath)
-    val theirs = Bm25Index.readRanges(spark, srcPath)
-    theirs.foreach { case (lo, hi) =>
-      if (!mine.contains((lo, hi))) {
-        mine.find { case (l, h) => lo <= h && l <= hi }.foreach {
-          case (l, h) => throw new IllegalArgumentException(
-            s"index merge: source range [$lo,$hi] intersects " +
-            s"already-indexed [$l,$h] — shards must cover disjoint " +
-            "docid ranges")
-        }
-        Bm25Index.appendRange(spark, dstPath, lo, hi)
-      }
-    }
-  }
 }

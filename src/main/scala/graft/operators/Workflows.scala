@@ -68,10 +68,7 @@ object Workflows {
   /** Hybrid search over raw query TEXT — the engine face of txtai's
     * `hybrid: true` config (one `search(text)` entry scoring both
     * lexically and semantically; the reference family delegates the
-    * keyword half to its server). The text is used twice, both
-    * driver-side: tokenized with the engine's BM25 tokenizer for the
-    * lexical half, and encoded with the registered [[graft.TextEncoder]]
-    * (pluggable; hashing encoder by default) for the semantic half.
+    * keyword half to its server): [[hybridSearchBatch]] at qid 0.
     * Returns the top-k (docid, hybrid_micros), ties on ascending docid. */
   def hybridSearch(
       docs: DataFrame,
@@ -84,23 +81,18 @@ object Workflows {
       k: Int,
       alpha: Double = 0.5,
       encode: String => Array[Float] = graft.TextEncoder.registered)
-      : DataFrame = {
-    import org.apache.spark.sql.functions.{col, desc}
-    val terms = Bm25.TokenPattern.r
-      .findAllIn(queryText.toLowerCase(java.util.Locale.ROOT)).toSeq.distinct
-    require(terms.nonEmpty, s"hybrid: no query terms in '$queryText'")
-    Bm25.hybrid(docs, textCol, idCol, embeddings, embIdCol, embVecCol,
-        terms, encode(queryText), alpha)
-      .orderBy(desc("hybrid_micros"), col("docid").asc)
-      .limit(k)
-  }
+      : DataFrame =
+    Bm25.oneQuery(hybridSearchBatch(docs, textCol, idCol, embeddings,
+      embIdCol, embVecCol, Seq(queryText), k, alpha, encode), "hybrid_micros")
 
-  /** Batch form of [[hybridSearch]]: tokenize + encode every query
-    * text driver-side, serve the whole list from ONE
-    * [[Bm25.hybridBatch]] plan (qid = position in `queryTexts`).
-    * Output (qid, rank, docid, hybrid_micros) — per-qid rankings
-    * bit-identical to N separate [[hybridSearch]] calls, at one
-    * corpus-tokenization instead of N. */
+  /** Hybrid search over a LIST of query texts, served by ONE
+    * [[Bm25.hybridBatch]] plan (qid = position in `queryTexts`). Each
+    * text is used twice, both driver-side: tokenized with the engine's
+    * BM25 tokenizer ([[Bm25.termsOf]]) for the lexical half, and
+    * encoded with the registered [[graft.TextEncoder]] (pluggable;
+    * hashing encoder by default) for the semantic half. Output (qid,
+    * rank, docid, hybrid_micros), at one corpus tokenization for the
+    * whole list. */
   def hybridSearchBatch(
       docs: DataFrame,
       textCol: String,
@@ -115,10 +107,7 @@ object Workflows {
       : DataFrame = {
     require(queryTexts.nonEmpty, "hybrid: empty query batch")
     val queries = queryTexts.zipWithIndex.map { case (q, i) =>
-      val terms = Bm25.TokenPattern.r
-        .findAllIn(q.toLowerCase(java.util.Locale.ROOT)).toSeq.distinct
-      require(terms.nonEmpty, s"hybrid: no query terms in '$q'")
-      (i.toLong, terms, encode(q))
+      (i.toLong, Bm25.termsOf(q, "hybrid:"), encode(q))
     }
     Bm25.hybridBatch(docs, textCol, idCol, embeddings, embIdCol,
       embVecCol, queries, k, alpha)

@@ -325,4 +325,58 @@ class Bm25Spec extends SparkTestBase {
       Bm25.score(docs, "text", "doc_id", Seq.empty)
     }
   }
+
+  /** A 2-d embedding for each of [[docs]]' four documents. */
+  private def emb2: DataFrame = {
+    import spark.implicits._
+    Seq((1L, Array(1f, 0f)), (2L, Array(0.6f, 0.8f)),
+      (3L, Array(0.8f, 0.6f)), (4L, Array(0f, 1f))).toDF("vec_id", "embedding")
+  }
+
+  private def pairs(df: DataFrame): Seq[(Long, Long)] =
+    df.collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
+
+  test("single hybrid edge cases, ad-hoc and indexed: no matching term " +
+    "gives an empty (docid, hybrid_micros) frame; a lone candidate hits " +
+    "the degenerate bounds and scores 1,000,000 micros") {
+    val emb = emb2
+    val qv = Array(1f, 0f)
+    val dir = Files.createTempDirectory("bm25edge").toString
+    val idx = Bm25Index.build(docs, "text", "doc_id", s"$dir/idx", 8)
+    def adHoc(terms: Seq[String]) = Bm25.hybrid(docs, "text", "doc_id",
+      emb, "vec_id", "embedding", terms, qv)
+    def indexed(terms: Seq[String]) = idx.hybridSearch(emb, "vec_id",
+      "embedding", terms, qv, k = 5)
+    Seq(adHoc(Seq("zebra")), indexed(Seq("zebra"))).foreach { none =>
+      assert(none.columns.toSeq == Seq("docid", "hybrid_micros"))
+      assert(none.collect().isEmpty)
+    }
+    // "quick" occurs in doc 3 only: min == max on both sides
+    assert(pairs(adHoc(Seq("quick"))) == Seq((3L, 1000000L)))
+    assert(pairs(indexed(Seq("quick"))) == Seq((3L, 1000000L)))
+  }
+
+  test("a batch qid that matches nothing yields no rows while the other " +
+    "qid ranks exactly as its single form, ad-hoc and indexed") {
+    val emb = emb2
+    val (qv0, qv1) = (Array(1f, 0f), Array(0f, 1f))
+    val dir = Files.createTempDirectory("bm25miss").toString
+    val idx = Bm25Index.build(docs, "text", "doc_id", s"$dir/idx", 8)
+    val terms = Seq("vector", "hash")
+    val queries = Seq((0L, Seq("zebra"), qv0), (1L, terms, qv1))
+    def rows(df: DataFrame) = df.collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
+      .toSeq.sortBy(_._2)
+    def ranked(single: DataFrame) = pairs(single).zipWithIndex
+      .map { case ((d, s), i) => (1L, i + 1L, d, s) }
+    val adHoc = rows(Bm25.hybridBatch(docs, "text", "doc_id",
+      emb, "vec_id", "embedding", queries, k = 5))
+    assert(adHoc.nonEmpty && adHoc == ranked(Bm25.hybrid(docs, "text",
+        "doc_id", emb, "vec_id", "embedding", terms, qv1)
+      .orderBy(desc("hybrid_micros"), col("docid").asc).limit(5)))
+    val indexed = rows(idx.hybridSearchBatch(emb, "vec_id", "embedding",
+      queries, k = 5))
+    assert(indexed.nonEmpty && indexed == ranked(idx.hybridSearch(emb,
+      "vec_id", "embedding", terms, qv1, k = 5)))
+  }
 }

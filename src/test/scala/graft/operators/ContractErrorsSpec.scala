@@ -182,4 +182,45 @@ class ContractErrorsSpec extends SparkTestBase {
       .orderBy("k").collect().toSeq
     assert(a == b)
   }
+
+  /** `f` throws IllegalArgumentException naming `arg` as below one. */
+  private def rejectsBelowOne(arg: String)(f: => Any): Unit = {
+    val e = intercept[IllegalArgumentException](f)
+    assert(e.getMessage.contains(s"$arg must be at least 1"), e.getMessage)
+  }
+
+  test("every BM25 and hybrid top-k form rejects k < 1, naming k") {
+    val docs = Seq((1L, "vector hash join"), (2L, "sort merge"))
+      .toDF("doc_id", "text")
+    val dir = java.nio.file.Files
+      .createTempDirectory("graft-err-k").toString
+    val idx = Bm25Index.build(docs, "text", "doc_id", s"$dir/idx", 4)
+    val terms = Seq("vector")
+    val qv = new Array[Float](64)
+    rejectsBelowOne("k")(Bm25.topK(docs, "text", "doc_id", terms, 0))
+    rejectsBelowOne("k")(
+      Bm25.topKBatch(docs, "text", "doc_id", Seq((0L, terms)), 0))
+    rejectsBelowOne("k")(Bm25.hybridBatch(docs, "text", "doc_id",
+      emb, "vec_id", "embedding", Seq((0L, terms, qv)), k = 0))
+    rejectsBelowOne("k")(Workflows.hybridSearch(docs, "text", "doc_id",
+      emb, "vec_id", "embedding", "vector", k = 0))
+    rejectsBelowOne("k")(idx.search(terms, 0))
+    rejectsBelowOne("k")(
+      idx.hybridSearch(emb, "vec_id", "embedding", terms, qv, k = -1))
+    rejectsBelowOne("k")(idx.hybridSearchBatch(emb, "vec_id", "embedding",
+      Seq((0L, terms, qv)), k = 0))
+  }
+
+  test("the index hybrid forms reject candidates < 1, naming candidates") {
+    val docs = Seq((1L, "vector hash join"), (2L, "sort merge"))
+      .toDF("doc_id", "text")
+    val dir = java.nio.file.Files
+      .createTempDirectory("graft-err-cand").toString
+    val idx = Bm25Index.build(docs, "text", "doc_id", s"$dir/idx", 4)
+    val qv = new Array[Float](64)
+    rejectsBelowOne("candidates")(idx.hybridSearch(emb, "vec_id",
+      "embedding", Seq("vector"), qv, k = 5, candidates = 0))
+    rejectsBelowOne("candidates")(idx.hybridSearchBatch(emb, "vec_id",
+      "embedding", Seq((0L, Seq("vector"), qv)), k = 5, candidates = 0))
+  }
 }

@@ -1,5 +1,11 @@
 package graft.operators
 
+import java.util.concurrent.atomic.AtomicInteger
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.graftshim.Shim
+
 import graft.SparkTestBase
 
 /** Shard-parallel build + file-level merge for the persisted index
@@ -24,6 +30,28 @@ class IndexMergeSpec extends SparkTestBase {
 
   private def scratch(tag: String): String =
     java.nio.file.Files.createTempDirectory(s"graft-merge-$tag").toString
+
+  /** The pairwise claims step, used to plant crash footprints by
+    * hand: every (lo, hi) docid claim of `src` is appended to `dst`'s
+    * `_ranges` unless already there (value-level idempotence for
+    * replays); a PARTIAL overlap with dst's existing claims throws —
+    * merging an already-indexed doc range would double its postings. */
+  private def claimRanges(
+      spark: SparkSession, dstPath: String, srcPath: String): Unit = {
+    val mine = Bm25Index.readRanges(spark, dstPath)
+    val theirs = Bm25Index.readRanges(spark, srcPath)
+    theirs.foreach { case (lo, hi) =>
+      if (!mine.contains((lo, hi))) {
+        mine.find { case (l, h) => lo <= h && l <= hi }.foreach {
+          case (l, h) => throw new IllegalArgumentException(
+            s"index merge: source range [$lo,$hi] intersects " +
+            s"already-indexed [$l,$h] — shards must cover disjoint " +
+            "docid ranges")
+        }
+        Bm25Index.appendRange(spark, dstPath, lo, hi)
+      }
+    }
+  }
 
   private def postingRows(path: String): Set[String] = {
     // through the manifest (r17): the raw tree now carries the
@@ -268,7 +296,7 @@ class IndexMergeSpec extends SparkTestBase {
     // that would make them visible (the moved data sits unreferenced)
     val fs = new org.apache.hadoop.fs.Path(s"$root/a")
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    IndexMerge.claimRanges(spark, s"$root/a", s"$root/b")
+    claimRanges(spark, s"$root/a", s"$root/b")
     IndexMerge.writeMarker(fs, new org.apache.hadoop.fs.Path(s"$root/a"),
       s"$root/b", Seq(8L, 3L, 8L, 1L))
     graft.index.Manifests.moveGenerations(spark, s"$root/b", s"$root/a")
@@ -289,7 +317,7 @@ class IndexMergeSpec extends SparkTestBase {
     val b = ShingleIndex.build(corpus.filter($"doc_id" >= 10),
       "doc_id", "text", s"$root/b", ngram = 3, nBuckets = 8)
     // crash DURING the marker write: ranges already claimed, marker torn
-    IndexMerge.claimRanges(spark, s"$root/a", s"$root/b")
+    claimRanges(spark, s"$root/a", s"$root/b")
     java.nio.file.Files.write(
       java.nio.file.Paths.get(s"$root/a/_merge_pending"),
       "gar\nbage\nnot-a-long\n".getBytes)
@@ -425,7 +453,7 @@ class IndexMergeSpec extends SparkTestBase {
       "doc_id", "text", s"$root/a", ngram = 3, nBuckets = 8)
     val b = ShingleIndex.build(corpus.filter($"doc_id" >= 10),
       "doc_id", "text", s"$root/b", ngram = 3, nBuckets = 8)
-    IndexMerge.claimRanges(spark, s"$root/a", s"$root/b")
+    claimRanges(spark, s"$root/a", s"$root/b")
     // the crash landed exactly after the first stat's newline: every
     // line parses, but the stats list is short — under the pre-r15
     // rules this read as a VALID marker and completeMerge indexed
@@ -440,5 +468,33 @@ class IndexMergeSpec extends SparkTestBase {
     val merged = reloaded.merge(ShingleIndex.load(spark, s"$root/b"))
     assert(merged.nDocs == 8)
     a.hashCode(); b.hashCode()
+  }
+
+  test("the _ranges ledger is read on the driver: readRanges and a " +
+    "claims pass over two sources submit no Spark job") {
+    val root = scratch("ledgerjobs")
+    Bm25Index.appendRanges(spark, s"$root/a", Seq((1L, 50L)))
+    Bm25Index.appendRanges(spark, s"$root/s1", Seq((100L, 198L), (101L, 199L)))
+    Bm25Index.appendRanges(spark, s"$root/s2", Seq((300L, 399L)))
+    val srcs = Seq(s"$root/s1", s"$root/s2")
+    // the first pass lands the claims (one ledger write); the re-run
+    // finds them all present, so it only reads
+    IndexMerge.claimRangesAll(spark, s"$root/a", srcs)
+    val jobs = new AtomicInteger()
+    val counter = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = {
+        jobs.incrementAndGet(); ()
+      }
+    }
+    Shim.waitUntilEmpty(spark)
+    spark.sparkContext.addSparkListener(counter)
+    try {
+      val claimed = Bm25Index.readRanges(spark, s"$root/a")
+      IndexMerge.claimRangesAll(spark, s"$root/a", srcs)
+      Shim.waitUntilEmpty(spark)
+      assert(jobs.get() == 0)
+      assert(claimed.toSet == Set((1L, 50L), (100L, 198L), (101L, 199L),
+        (300L, 399L)))
+    } finally spark.sparkContext.removeSparkListener(counter)
   }
 }
