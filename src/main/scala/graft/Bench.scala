@@ -23,7 +23,8 @@ object Bench {
       // pass 2 reaches a query, pass 1's classes are evicted and every
       // run pays janino recompilation + fresh JIT (measured: 5.5s
       // in-sweep vs 3.5s with the cache sized to the suite —
-      // tools/DedupIncProbe.scala). A production driver executing
+      // BASELINE.md "Round-12: `dedup_incremental` 4.4→7.7 s
+      // attributed"). A production driver executing
       // hundreds of distinct queries per session would set exactly
       // this; it also removes the dominant pass-to-pass spread source.
       .config("spark.sql.codegen.cache.maxEntries", "10000")

@@ -30,9 +30,13 @@ object DriverParquet {
     * deterministic (sorted part name, file order) row order. */
   def groups(spark: SparkSession, dir: String): Vector[Group] = {
     val p = new Path(dir)
+    read(spark, dataFiles(
+      p.getFileSystem(spark.sparkContext.hadoopConfiguration).listStatus(p)))
+  }
+
+  /** Every row of `files`, in the given file order. */
+  def read(spark: SparkSession, files: Seq[Path]): Vector[Group] = {
     val conf = spark.sparkContext.hadoopConfiguration
-    val fs = p.getFileSystem(conf)
-    val files = dataFiles(fs.listStatus(p))
     files.iterator.flatMap { f =>
       val reader = ParquetReader
         .builder(new GroupReadSupport(), f)

@@ -149,10 +149,7 @@ class IvfVectorIndex private (
   def append(docs: DataFrame, vecCol: String, idCol: String): IvfVectorIndex = {
     Manifests.appendGeneration(spark, path, family,
       IvfVectorIndex.rows(docs, vecCol, idCol, model, pqModel))
-    val Array(idr) = docs.agg(
-      min(col(idCol).cast("long")), max(col(idCol).cast("long"))).collect()
-    if (!idr.isNullAt(0))
-      IndexMerge.recordRange(spark, path, idr.getLong(0), idr.getLong(1))
+    RangeLedger.recordSpan(spark, path, docs, idCol)
     this
   }
 
@@ -435,12 +432,10 @@ object IvfVectorIndex {
     Manifests.writeGeneration(spark, path, Storage,
       rows(docs, vecCol, idCol, model, pqModel), None, Nil, Some(book),
       maxRecordsPerFile)
-    // fresh build: reset the docid-range ledger to this corpus's
-    // interval (r15) — [[mergeAll]]'s shard-disjointness guard
-    val Array(idr) = docs.agg(
-      min(col(idCol).cast("long")), max(col(idCol).cast("long"))).collect()
-    if (!idr.isNullAt(0))
-      IndexMerge.resetRange(spark, path, idr.getLong(0), idr.getLong(1))
+    // fresh build (the reset removed the old ledger): the docid-range
+    // ledger holds this corpus's interval — [[mergeAll]]'s
+    // shard-disjointness guard
+    RangeLedger.recordSpan(spark, path, docs, idCol)
     // A rebuild over an existing path replaces the codebook: sessions
     // with spark.graft.ann.autoRoute=true must not keep routing with
     // the stale cached centroids (probes against old centroids over new

@@ -73,11 +73,7 @@ class LshVectorIndex private (
     // docid-interval note for the shard-merge disjointness guard
     // (r15) — after the commit, same contract as
     // [[IvfVectorIndex.append]]
-    val Array(idr) = docs.agg(
-      min(col(idCol).cast("long")), max(col(idCol).cast("long"))).collect()
-    if (!idr.isNullAt(0))
-      graft.operators.IndexMerge.recordRange(
-        spark, path, idr.getLong(0), idr.getLong(1))
+    RangeLedger.recordSpan(spark, path, docs, idCol)
     this
   }
 
@@ -119,13 +115,10 @@ object LshVectorIndex {
     Manifests.reset(spark, path)
     Manifests.writeGeneration(spark, path, Storage,
       rows(docs, vecCol, idCol, lsh), None, Nil, None, maxRecordsPerFile)
-    // fresh build: reset the docid-range ledger (r15) — the
-    // [[LshVectorIndex.mergeAll]] shard-disjointness guard's memory
-    val Array(idr) = docs.agg(
-      min(col(idCol).cast("long")), max(col(idCol).cast("long"))).collect()
-    if (!idr.isNullAt(0))
-      graft.operators.IndexMerge.resetRange(
-        spark, path, idr.getLong(0), idr.getLong(1))
+    // fresh build (the reset removed the old ledger): the docid-range
+    // ledger (r15) — the [[LshVectorIndex.mergeAll]] shard-disjointness
+    // guard's memory
+    RangeLedger.recordSpan(spark, path, docs, idCol)
     val meta = metaPath(path)
     val out = meta.getFileSystem(spark.sparkContext.hadoopConfiguration)
       .create(meta, true)

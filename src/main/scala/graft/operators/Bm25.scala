@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.index.RangeLedger
+
 /** BM25 keyword relevance — the lexical half of a txtai-family hybrid
   * engine (the reference family's `scoring="bm25"` / hybrid search
   * config; the studied repo itself delegates keyword scoring to the
@@ -497,13 +499,8 @@ class Bm25Index private (
     require(!st.isNullAt(2),
       s"bm25 append: every value of id column '$idCol' casts to null")
     val (lo, hi) = (st.getLong(2), st.getLong(3))
-    if (!force) Bm25Index.readRanges(spark, path)
-      .find { case (l, h) => lo <= h && l <= hi }
-      .foreach { case (l, h) => throw new IllegalArgumentException(
-        s"bm25 append: id range [$lo,$hi] intersects already-indexed " +
-        s"[$l,$h] — re-appending an indexed doc double-counts its " +
-        "postings; use force=true only if the overlap is intentional")
-      }
+    if (!force) RangeLedger.requireDisjoint(
+      RangeLedger.read(spark, path), "bm25 append", lo, hi)
     // repartition ON the bucket (r14) — one file per touched bucket
     // per append instead of tasks x buckets slivers (ShingleIndex
     // .appendBatch's note; the batch-sized shuffle is the cheap side).
@@ -516,7 +513,7 @@ class Bm25Index private (
     // sidecar undercounting (scores slightly conservative), never a
     // stats-without-postings index
     Bm25Index.writeStats(spark, path, n + nNew, sumdl + sumdlNew, nBuckets)
-    Bm25Index.appendRange(spark, path, lo, hi)
+    RangeLedger.record(spark, path, (lo, hi))
     graft.Keyword.invalidateIndex(path)
     new Bm25Index(spark, path, n + nNew, sumdl + sumdlNew, nBuckets)
   }
@@ -560,17 +557,11 @@ class Bm25Index private (
     require(!st.isNullAt(2),
       s"bm25 append: every value of id column '$idCol' casts to null")
     val (lo, hi) = (st.getLong(2), st.getLong(3))
-    val claimed = Bm25Index.readRanges(spark, path)
-    if (claimed.contains((lo, hi))) // replay: already ours — finish it
+    if (RangeLedger.replayed(spark, path, "bm25 append", lo, hi))
       return finishReplayedAppend(docs, textCol, idCol, lo, hi)
-    claimed.find { case (l, h) => lo <= h && l <= hi }
-      .foreach { case (l, h) => throw new IllegalArgumentException(
-        s"bm25 append: id range [$lo,$hi] intersects already-indexed " +
-        s"[$l,$h] — a partial overlap is never a replay")
-      }
     Bm25Index.writePendingStats(spark, path, lo, hi,
       n, sumdl, n + nNew, sumdl + sumdlNew)
-    Bm25Index.appendRange(spark, path, lo, hi) // claim BEFORE postings
+    RangeLedger.record(spark, path, (lo, hi)) // claim BEFORE postings
     writeBatchPostings(docs, textCol, idCol)
     Bm25Index.writeStats(spark, path, n + nNew, sumdl + sumdlNew, nBuckets)
     Bm25Index.deletePendingStats(spark, path, lo, hi)
@@ -618,17 +609,8 @@ class Bm25Index private (
     * and its postings write ([[ShingleIndex.missingRanges]]'s check
     * over the keyword lake; one pruned pass, the lake never
     * shuffles). */
-  def missingRanges(): Seq[(Long, Long)] = {
-    val claimed = Bm25Index.readRanges(spark, path)
-    if (claimed.isEmpty) return Seq.empty
-    import spark.implicits._
-    val ranges = broadcast(claimed.toDF("lo", "hi"))
-    val present = ranges.join(postings,
-        col("docid").between(col("lo"), col("hi")), "left_semi")
-      .select("lo", "hi").distinct()
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    claimed.filterNot(present)
-  }
+  def missingRanges(): Seq[(Long, Long)] =
+    RangeLedger.missing(spark, path, postings, "docid")
 
   /** Settle orphaned `_stats_pending` flags for the OTHER crash
     * window — postings LANDED but the stats write crashed (r16,
@@ -1001,32 +983,6 @@ object Bm25Index {
       .coalesce(1).write.mode("overwrite").parquet(s"$path/_stats")
   }
 
-  /** `_ranges` sidecar: one (lo, hi) docid interval per build/append —
-    * the [[Bm25Index.append]] overlap guard's memory. Tiny (O(appends)
-    * rows), read on the driver ([[graft.index.DriverParquet]]: no
-    * Spark job). */
-  private[operators] def readRanges(spark: SparkSession, path: String)
-      : Seq[(Long, Long)] = {
-    val dir = new org.apache.hadoop.fs.Path(s"$path/_ranges")
-    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(dir)) return Seq.empty // pre-guard index: unknowable
-    graft.index.DriverParquet.groups(spark, dir.toString)
-      .map(g => (g.getLong("lo", 0), g.getLong("hi", 0)))
-  }
-
-  private[operators] def appendRange(spark: SparkSession, path: String,
-      lo: Long, hi: Long): Unit =
-    appendRanges(spark, path, Seq((lo, hi)))
-
-  /** Batch form of [[appendRange]] — one parquet append regardless of
-    * how many claims land (the multi-way merge's one-write claims). */
-  private[operators] def appendRanges(spark: SparkSession, path: String,
-      ranges: Seq[(Long, Long)]): Unit = {
-    import spark.implicits._
-    ranges.toDF("lo", "hi")
-      .coalesce(1).write.mode("append").parquet(s"$path/_ranges")
-  }
-
   private def pendingStatsPath(path: String, lo: Long, hi: Long) =
     new org.apache.hadoop.fs.Path(path, s"_stats_pending/r_${lo}_$hi")
 
@@ -1121,8 +1077,9 @@ object Bm25Index {
     graft.index.Manifests.writeGeneration(spark, path, Storage,
       rows(docs, textCol, idCol, nb), None, Nil, None)
     writeStats(spark, path, st.getLong(0), st.getLong(1), nb)
-    // fresh build: reset the range log to exactly this corpus's interval
-    appendRange(spark, path, st.getLong(2), st.getLong(3))
+    // fresh build (the reset above removed the old ledger): the range
+    // log holds exactly this corpus's interval
+    RangeLedger.record(spark, path, (st.getLong(2), st.getLong(3)))
     new Bm25Index(spark, path, st.getLong(0), st.getLong(1), nb)
   }
 

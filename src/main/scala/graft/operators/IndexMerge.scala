@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.SparkSession
 
+import graft.index.RangeLedger
+
 /** Shard-merge machinery for the hash-partitioned index families —
   * the 100 TB INDEX BUILD story. A monolithic build of any of the
   * lakes shuffles the whole corpus's postings once; at petabyte scale
@@ -33,7 +35,8 @@ import org.apache.spark.sql.SparkSession
   * one merge driver ([[graft.index.ManifestIndex.mergeAll]]) runs it
   * as its mainline, and every `load` and `compact` runs it to finish
   * an interrupted merge. This object holds the protocol's pieces:
-  * markers, source ownership, quiesce and range-claim guards. */
+  * markers, source ownership, quiesce and the multi-source claims
+  * pass over the [[graft.index.RangeLedger]] docid-claim ledger. */
 object IndexMerge {
 
   /** Move the plain data files directly under `src` into `dst`
@@ -341,11 +344,11 @@ object IndexMerge {
     *    partial overlaps throw. */
   private[graft] def claimRangesAll(
       spark: SparkSession, dstPath: String, srcPaths: Seq[String]): Unit = {
-    val mine = Bm25Index.readRanges(spark, dstPath)
+    val mine = RangeLedger.read(spark, dstPath)
     // per-source distinct: a replay artifact may duplicate a row
     // inside ONE ledger; that is never a cross-shard double-index
     val bySrc = srcPaths.distinct
-      .map(src => src -> Bm25Index.readRanges(spark, src).distinct)
+      .map(src => src -> RangeLedger.read(spark, src).distinct)
     // exact duplicates across two DIFFERENT sources — never a replay
     // (replay dedup applies only against the destination's claims)
     bySrc.flatMap { case (src, rs) => rs.map(r => (r, src)) }
@@ -380,29 +383,7 @@ object IndexMerge {
     val mineSet = mine.toSet
     val fresh = sorted.map(t => (t._1, t._2)).distinct.filterNot(mineSet)
     fresh.foreach { case (lo, hi) =>
-      mine.find { case (l, h) => lo <= h && l <= hi }.foreach {
-        case (l, h) => throw new IllegalArgumentException(
-          s"index merge: source range [$lo,$hi] intersects " +
-          s"already-indexed [$l,$h] — shards must cover disjoint " +
-          "docid ranges")
-      }
-    }
-    if (fresh.nonEmpty) Bm25Index.appendRanges(spark, dstPath, fresh)
+      RangeLedger.requireDisjoint(mine, "index merge", lo, hi) }
+    if (fresh.nonEmpty) RangeLedger.record(spark, dstPath, fresh: _*)
   }
-
-  /** Reset a lake's `_ranges` ledger to exactly one claim — the
-    * build-time step (exposed here for the vector indexes, which live
-    * outside the operators package). */
-  private[graft] def resetRange(
-      spark: SparkSession, path: String, lo: Long, hi: Long): Unit = {
-    val dir = new Path(s"$path/_ranges")
-    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(dir)) fs.delete(dir, true)
-    Bm25Index.appendRange(spark, path, lo, hi)
-  }
-
-  /** Append one claim — the vector indexes' append-time step. */
-  private[graft] def recordRange(
-      spark: SparkSession, path: String, lo: Long, hi: Long): Unit =
-    Bm25Index.appendRange(spark, path, lo, hi)
 }

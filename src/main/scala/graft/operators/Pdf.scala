@@ -583,30 +583,6 @@ object Pdf {
       (pages.length, sb.toString)
     }
 
-  /** Probe-only phase split of [[extract]] (tools/PdfProbe, r13):
-    * total decoded content-stream bytes WITHOUT running the operator
-    * interpreter — isolates xref + object graph + page tree + inflate
-    * from [[runContent]]'s cost. */
-  private[graft] def contentLength(bytes: Array[Byte]): Option[Long] =
-    withDoc(bytes) { doc =>
-      var total = 0L
-      collectPages(doc).foreach { page =>
-        doc.dictGet(page, "Contents").foreach {
-          case PStream(d, data) =>
-            total += decodeStream(d, data, doc).length
-          case PArr(items) => items.foreach { it =>
-            doc.resolve(it) match {
-              case PStream(d, data) =>
-                total += decodeStream(d, data, doc).length
-              case _ => throw new Bad
-            }
-          }
-          case _ => throw new Bad
-        }
-      }
-      total
-    }
-
   /** One embedded image XObject. `data` keeps the DCTDecode payload
     * in its transfer encoding — a complete JPEG file, routable
     * straight to [[JpegDc]] — and holds DECODED raw samples for
@@ -721,7 +697,8 @@ object Pdf {
   // (r13): a PDF decode inflates SEVERAL streams per file (an xref
   // stream, object streams, one content stream per page), and
   // Inflater construction/end() is a native malloc/free pair — the
-  // PdfProbe phase split showed it as a measurable slice of both the
+  // r13 phase split (BASELINE.md, Round-8 fourth-pass `pdf_text`
+  // row) showed it as a measurable slice of both the
   // object-graph and content phases. reset() reuses the native
   // buffer; a corrupt stream that leaves the inflater mid-state is
   // handled by reset() on the NEXT use (reset is unconditional).

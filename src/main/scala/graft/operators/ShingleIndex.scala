@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.index.RangeLedger
+
 /** Persisted inverted shingle index — the storage half of incremental
   * ingest dedup.
   *
@@ -21,10 +23,11 @@ import org.apache.spark.sql.functions._
   *  - `_stats` sidecar pins the shingle parameters (ngram width, key
   *    hashing, bucket count) so a probe can never silently run with
   *    mismatched shingling;
-  *  - `_ranges` sidecar records every build/append's docid interval —
-  *    re-appending an indexed doc would double its postings, so an
-  *    overlapping append throws (same guard, and same `force` escape
-  *    hatch, as [[Bm25Index.append]]).
+  *  - the `_ranges` ledger ([[graft.index.RangeLedger]]) records
+  *    every build/append's docid interval — re-appending an indexed
+  *    doc would double its postings, so an overlapping append throws
+  *    (the one overlap guard, with the same `force` escape hatch, as
+  *    [[Bm25Index.append]]).
   *
   * Keys are 8-byte `xxhash64(shingle)` by default — the
   * [[SubstrDedup]] precedent: word-trigram strings average ~20 bytes
@@ -242,21 +245,14 @@ class ShingleIndex private (
     require(!st.isNullAt(1),
       s"shingle append: every value of id column '$idCol' casts to null")
     val (lo, hi) = (st.getLong(1), st.getLong(2))
-    if (!force) Bm25Index.readRanges(spark, path)
-      .find { case (l, h) => lo <= h && l <= hi }
-      .foreach { case (l, h) => throw new IllegalArgumentException(
-        s"shingle append: id range [$lo,$hi] intersects already-indexed " +
-        s"[$l,$h] — re-appending an indexed doc doubles its postings; " +
-        "use force=true only if the overlap is intentional")
-      }
-    // the INTENDED range is recorded BEFORE the postings write: a crash
+    // the INTENDED range is claimed BEFORE the postings write: a crash
     // (or task retry of this driver step) between the two leaves a range
     // claim with missing postings, so a blind re-run of the same batch
     // FAILS the overlap guard loudly — repair is explicit (re-append the
     // named range with force=true, or remove its _ranges row) instead of
     // the old ordering's silent posting-doubling. Stats stay last: a
     // crash before them only undercounts nDocs (cosmetic).
-    Bm25Index.appendRange(spark, path, lo, hi)
+    RangeLedger.claim(spark, path, "shingle append", lo, hi, force)
     // repartition ON the bucket (r14): without it every shuffle task
     // writes its own sliver into every bucket dir it holds rows for —
     // tasks x buckets small files PER APPEND (measured 2k+ files per
@@ -297,7 +293,7 @@ class ShingleIndex private (
       .collect()
     if (st.isNullAt(0)) return this // empty batch: nothing to claim
     val (lo, hi) = (st.getLong(0), st.getLong(1))
-    if (Bm25Index.readRanges(spark, path).contains((lo, hi))) this
+    if (RangeLedger.replayed(spark, path, "shingle append", lo, hi)) this
     else appendBatch(docs, idCol, textCol)
   }
 
@@ -305,17 +301,8 @@ class ShingleIndex private (
     * footprint of a crash between [[appendBatch]]'s range claim and its
     * postings write. One pruned pass over the postings (broadcast
     * range-interval join, lake never shuffles). */
-  def missingRanges(): Seq[(Long, Long)] = {
-    val claimed = Bm25Index.readRanges(spark, path)
-    if (claimed.isEmpty) return Seq.empty
-    import spark.implicits._
-    val ranges = broadcast(claimed.toDF("lo", "hi"))
-    val present = ranges.join(postings,
-        col("old_id").cast("long").between(col("lo"), col("hi")), "left_semi")
-      .select("lo", "hi").distinct()
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    claimed.filterNot(present)
-  }
+  def missingRanges(): Seq[(Long, Long)] =
+    RangeLedger.missing(spark, path, postings, "old_id")
 
   /** Repair [[missingRanges]] from a recovery corpus (e.g. the
     * delivered-survivors store the streaming path writes BEFORE it
@@ -417,7 +404,7 @@ object ShingleIndex {
     graft.index.Manifests.writeGeneration(spark, path, Storage,
       idx.postingRows(docs, idCol, textCol), None, Nil, None)
     writeStats(spark, path, st.getLong(0), ngram, nb, hashKeys)
-    Bm25Index.appendRange(spark, path, st.getLong(2), st.getLong(3))
+    RangeLedger.record(spark, path, (st.getLong(2), st.getLong(3)))
     new ShingleIndex(spark, path, st.getLong(0), ngram, nb, hashKeys)
   }
 

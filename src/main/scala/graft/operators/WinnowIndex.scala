@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.index.RangeLedger
+
 /** Persisted winnowing-fingerprint index — [[ShingleIndex]]'s storage
   * pattern applied to the MOSS near-copy matcher ([[Winnow]]):
   * `winnow_pairs` proves the matching semantics, but as a pure
@@ -16,9 +18,9 @@ import org.apache.spark.sql.functions._
   *    fingerprints' buckets and row-group-skips inside them;
   *  - `_stats` pins the fingerprint parameters (k, w, dfCap,
   *    buckets) so a probe can never run with mismatched winnowing;
-  *  - `_ranges` records every build/append's docid interval with the
-  *    same claim-before-write ordering and overlap guard as
-  *    [[ShingleIndex.appendBatch]].
+  *  - the `_ranges` ledger ([[graft.index.RangeLedger]]) records every
+  *    build/append's docid interval with the same claim-before-write
+  *    ordering and overlap guard as [[ShingleIndex.appendBatch]].
   *
   * The stop-fingerprint cap (document frequency > `dfCap`, the bound
   * that keeps a boilerplate fingerprint from fanning the join out)
@@ -171,14 +173,7 @@ class WinnowIndex private (
     require(!st.isNullAt(1),
       s"winnow append: every value of id column '$idCol' casts to null")
     val (lo, hi) = (st.getLong(1), st.getLong(2))
-    if (!force) Bm25Index.readRanges(spark, path)
-      .find { case (l, h) => lo <= h && l <= hi }
-      .foreach { case (l, h) => throw new IllegalArgumentException(
-        s"winnow append: id range [$lo,$hi] intersects already-indexed " +
-        s"[$l,$h] — re-appending an indexed doc doubles its postings; " +
-        "use force=true only if the overlap is intentional")
-      }
-    Bm25Index.appendRange(spark, path, lo, hi)
+    RangeLedger.claim(spark, path, "winnow append", lo, hi, force)
     graft.index.Manifests.appendGeneration(spark, path, family,
       postingRows(docs, idCol, textCol))
     WinnowIndex.writeStats(spark, path, nDocs + nNew, k, w, dfCap, nBuckets)
@@ -239,7 +234,7 @@ object WinnowIndex {
     graft.index.Manifests.writeGeneration(spark, path, Storage,
       idx.postingRows(docs, idCol, textCol), None, Nil, None)
     writeStats(spark, path, st.getLong(0), k, w, dfCap, nb)
-    Bm25Index.appendRange(spark, path, st.getLong(2), st.getLong(3))
+    RangeLedger.record(spark, path, (st.getLong(2), st.getLong(3)))
     new WinnowIndex(spark, path, st.getLong(0), k, w, dfCap, nb)
   }
 

@@ -8,10 +8,11 @@ import org.apache.spark.sql.SparkSession
   * at-least-once — the window is a crash AFTER the batch's effects
   * landed but BEFORE the checkpoint commit, which replays the same
   * batchId on restart. Recording the id as the LAST step of the batch
-  * and skipping already-recorded ids on entry closes exactly that
-  * window; a crash in the middle of a batch's effects still needs the
-  * sink's own story (range guards + reconcile for [[IngestStream]],
-  * uid upsert or compact-time dedup for [[IndexStream]]).
+  * and skipping already-recorded ids on entry (both in [[Delivery]])
+  * closes exactly that window; a crash in the middle of a batch's
+  * effects still needs the sink's own story (range guards +
+  * reconcile for [[IngestStream]], uid upsert or compact-time dedup
+  * for [[IndexStream]]).
   *
   * Keys are (streamId, batchId) — batch ids restart from 0 for every
   * new checkpoint, so a bare-batchId ledger would silently swallow the
@@ -56,13 +57,16 @@ object BatchLedger {
     * driver-side at batch start; one bounded directory, O(#batches
     * since the last compaction) files). */
   def delivered(spark: SparkSession, storePath: String,
-      streamId: String): Set[Long] = {
-    val parts = listParts(spark, streamDir(storePath, streamId))
-    if (parts.isEmpty) return Set.empty
-    spark.read.parquet(parts.map(_.toString): _*)
-      .select("batch_id")
-      .collect().map(_.getLong(0)).toSet
-  }
+      streamId: String): Set[Long] =
+    rows(spark, listParts(spark, streamDir(storePath, streamId))).map(_._2)
+
+  /** The distinct (stream_id, batch_id) rows of `parts`, read on the
+    * driver ([[graft.index.DriverParquet]]: no Spark job per batch). */
+  private def rows(spark: SparkSession,
+      parts: Seq[org.apache.hadoop.fs.Path]): Set[(String, Long)] =
+    graft.index.DriverParquet.read(spark, parts)
+      .map(g => (g.getString("stream_id", 0), g.getLong("batch_id", 0)))
+      .toSet
 
   /** Record a batch as fully delivered (the batch's LAST step), then
     * compact the stream's ledger directory if it has accumulated
@@ -76,9 +80,8 @@ object BatchLedger {
     val parts = listParts(spark, dir)
     if (parts.length >= compactEvery) {
       // snapshot-first, delete-after: never a moment without the rows
-      val snapshot = spark.read.parquet(parts.map(_.toString): _*)
-        .select("stream_id", "batch_id").distinct()
-      snapshot.coalesce(1).write.mode("append").parquet(dir)
+      rows(spark, parts).toSeq.toDF("stream_id", "batch_id")
+        .coalesce(1).write.mode("append").parquet(dir)
       val fs = new org.apache.hadoop.fs.Path(dir)
         .getFileSystem(spark.sparkContext.hadoopConfiguration)
       parts.foreach(p => fs.delete(p, false))

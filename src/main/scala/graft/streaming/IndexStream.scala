@@ -36,7 +36,11 @@ import graft.index.VectorIndex
   * a merge-on-read delta log is deliberately out of scope. Append-mode
   * state never re-shuffles existing data. Checkpointing is the
   * standard Structured Streaming contract — the stream resumes from
-  * the last committed source offsets after a crash. */
+  * the last committed source offsets after a crash.
+  *
+  * Every sink here hands its effect to the one delivery step,
+  * [[Delivery]]: un-quiesce at entry, the [[BatchLedger]] replay skip,
+  * the record after the effect, and the `compactEvery` cadence. */
 object IndexStream {
 
   /** Start ingesting `docs` (a STREAMING DataFrame with the index row
@@ -56,23 +60,21 @@ object IndexStream {
       .option("checkpointLocation", checkpointDir)
       .trigger(trigger)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // un-quiesce first — a concurrent merge must refuse, not race
-        Quiesce.clear(batch.sparkSession, index.path)
         // append mode keys on the batch id: a replayed COMMITTED batch
         // is skipped instead of double-appending (upsert is naturally
-        // idempotent and skips the ledger read)
-        // ledger at the STABLE index root (dataDir moves per version)
-        val replay = mode == "append" &&
-          BatchLedger.delivered(batch.sparkSession, index.path,
-            checkpointDir).contains(batchId)
-        if (!batch.isEmpty && !replay) {
-          // first batch into an empty index bootstraps it (docids from 0)
-          if (!index.exists) index.index(batch)
-          else if (mode == "upsert") index.upsert(batch)
-          else index.append(batch)
-          if (mode == "append")
-            BatchLedger.record(batch.sparkSession, index.path,
-              checkpointDir, batchId)
+        // idempotent and keeps no ledger). The ledger sits at the
+        // STABLE index root (dataDir moves per version)
+        val ledger = if (mode == "append") Some(checkpointDir) else None
+        Delivery(batch.sparkSession, index.path, ledger, batchId) {
+          if (batch.isEmpty) None
+          else {
+            // first batch into an empty index bootstraps it (docids
+            // from 0)
+            if (!index.exists) index.index(batch)
+            else if (mode == "upsert") index.upsert(batch)
+            else index.append(batch)
+            Some(())
+          }
         }
         () // Unit: the scala-2.13 foreachBatch overload is Unit-typed
       }
@@ -126,19 +128,16 @@ object IndexStream {
     * costless: [[graft.index.IvfVectorIndex.search]] ranks probes
     * over OCCUPIED cells only. Measured trajectory (k, recall, epoch
     * cost, cumulative grow vs one rebuild) over ten drift epochs:
-    * tools/DriftEpochsProbe.scala, BASELINE r17.
+    * BASELINE.md "Round-17: SUSTAINED drift".
     *
-    * `compactEvery` is [[ingestKeyword]]'s in-stream compaction knob
-    * brought to this sink (r17): under manifest storage every
-    * delivered batch commits one generation, so an uncompacted
-    * long-running stream grows the snapshot's file count AND the
-    * manifest part-list linearly with batches (per-query listing
-    * cost, measured: tools/ManifestTailProbe, BASELINE r17). `N > 0`
-    * compacts after every Nth delivered batch;
-    * [[IngestStream.AutoCompact]] applies [[graft.index
-    * .IvfVectorIndex.shouldCompact]]'s measured fragmentation rule;
-    * `0` (default) leaves compaction to offline maintenance.
-    * Correctness never depends on the cadence. */
+    * `compactEvery` is [[Delivery.compacting]]'s cadence, after the
+    * drift response: under manifest storage every delivered batch
+    * commits one generation, so an uncompacted long-running stream
+    * grows the snapshot's file count AND the manifest part-list
+    * linearly with batches (per-query listing cost, measured:
+    * BASELINE.md "Round-17: the MANIFEST TAIL of an uncompacted ingest
+    * stream"). `0` (default) leaves compaction to offline
+    * maintenance. */
   def ingestIvf(
       docs: DataFrame,
       index: graft.index.IvfVectorIndex,
@@ -160,7 +159,7 @@ object IndexStream {
     var live = index
     // the SEED cell budget — what the operator sized the index at.
     // `maxCells > 0` bounds sustained-drift growth (r17, the measured
-    // policy: DriftEpochsProbe/BASELINE r17): when a grow would push
+    // policy: BASELINE.md "Round-17: SUSTAINED drift"): when a grow would push
     // k past the bound, the stream REBUILDS instead — one re-fit of
     // the seed budget over everything the lake now holds, resetting k
     // and retiring dead cells, instead of an ever-longer codebook
@@ -170,96 +169,90 @@ object IndexStream {
       .option("checkpointLocation", checkpointDir)
       .trigger(trigger)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // un-quiesce first — a concurrent merge must refuse, not race
-        Quiesce.clear(batch.sparkSession, live.path)
-        val replay = BatchLedger
-          .delivered(batch.sparkSession, live.path, checkpointDir)
-          .contains(batchId)
-        if (!batch.isEmpty && !replay) {
-          live.append(batch, vecCol, idCol)
-          BatchLedger.record(batch.sparkSession, live.path,
-            checkpointDir, batchId)
-          if (retrainEvery > 0 && (batchId + 1) % retrainEvery == 0) {
-            val report = graft.operators.Ivf.drift(
-              live.df.withColumnRenamed("vector", vecCol),
-              batch, vecCol, live.model)
-            // flag on drift_frac AND incoming mass share (r15,
-            // RetrainRecallProbe's finding): frac alone also flags
-            // low-mass clusters a few strays landed in, and retraining
-            // those moves their centroids toward the strays — queries
-            // then probe the refined strays-cluster while the actual
-            // drifted mass sits in an unretrained one, COSTING recall
-            // (measured 0.56 → 0.24 @ nprobe=1). Retrain only where a
-            // meaningful share of the batch actually lives.
-            val batchN = math.max(1L, batch.count())
-            val drifted = report
-              .filter(org.apache.spark.sql.functions.col("n_new") >=
-                org.apache.spark.sql.functions.lit(minShare * batchN) &&
-                org.apache.spark.sql.functions.col("drift_frac") >=
-                  driftFrac)
-              .select("cluster", "ref_mean_cos", "new_mean_cos")
-              .collect()
-              .map(r => (r.getInt(0),
-                if (r.isNullAt(1)) Double.NaN else r.getDouble(1),
-                if (r.isNullAt(2)) Double.NaN else r.getDouble(2)))
-              .toSeq
-            // choose the RESPONSE from the report's shape (r16, the
-            // r15/r16 probe's finding): NOVEL mass sits far outside
-            // the cluster's own tightness — its incoming mean cosine
-            // collapses relative to the reference mean (measured
-            // ~0.2 vs ~0.65 for new modes, ~0.68 vs ~0.75 for a
-            // gradual shift of the cluster's own mass). Moving a
-            // centroid toward novel mass costs recall even
-            // mass-gated (0.564 no-maintenance vs 0.413 relocated
-            // @ nprobe=1, BASELINE r15) — GROW new cells for it
-            // (frozen-book capture, recall-safe by construction);
-            // keep the relocate response for mid-band drift, where
-            // the cluster's own mass is what moved. A cluster with
-            // no reference mass at all is novel by definition.
-            val (novel, moved) = drifted.partition { case (_, rm, nm) =>
-              rm.isNaN || nm < growMeanRatio * rm
-            }
-            var rebuilt = false
-            if (novel.nonEmpty) {
-              val k0 = live.model.centroids.length
-              if (maxCells > 0 && k0 + novel.size > maxCells) {
-                // the bound says stop growing: re-fit the seed budget
-                // to the whole lake (dead cells retire, novel modes
-                // get first-class cells, k resets to seedK)
-                val refit = graft.operators.Ivf.trainDistributed(
-                  live.df, "vector", k = seedK, iters = 5)
-                live = live.rebuild(refit)
-                rebuilt = true
-              } else
-                live = live.growClusters(novel.map(_._1),
-                  add = novel.size)
-            }
-            // after a rebuild the report's cluster ids belong to the
-            // retired book — and the re-fit already re-homed the
-            // moved mass, so the relocate response is moot
-            if (moved.nonEmpty && !rebuilt)
-              live = live.retrainInPlace(moved.map(_._1))
-          }
-          // in-stream compaction cadence (r17 — [[ingestKeyword]]'s
-          // knob brought to the IVF sink): under manifest storage
-          // every delivered batch commits a new generation, so the
-          // snapshot's file count AND its manifest part-list grow
-          // linearly with batches until a compact folds them — at
-          // high batch counts that is per-query listing cost, not
-          // just small-file tax (measured: tools/ManifestTailProbe,
-          // BASELINE r17). AutoCompact applies the measured
-          // fragmentation rule; correctness never depends on the
-          // cadence.
-          if (compactEvery == IngestStream.AutoCompact) {
-            if (live.shouldCompact()) live = live.compact()
-          } else if (compactEvery > 0 &&
-              (batchId + 1) % compactEvery == 0) {
-            live = live.compact()
-          }
-        }
-        ()
+        Delivery.compacting[graft.index.IvfVectorIndex](batch.sparkSession,
+          live.path, checkpointDir, batchId, compactEvery,
+          maintain = idx =>
+            if (retrainEvery > 0 && (batchId + 1) % retrainEvery == 0)
+              respondToDrift(idx, batch, vecCol, seedK, driftFrac,
+                minShare, growMeanRatio, maxCells)
+            else idx) {
+          if (batch.isEmpty) None else Some(live.append(batch, vecCol, idCol))
+        }.foreach(live = _)
       }
       .start()
+  }
+
+  /** The IVF sink's drift response, run after a delivered batch is
+    * recorded: drift-score `batch` against the lake and respond per
+    * flagged cluster — GROW a cell for novel mass (or REBUILD at the
+    * seed budget when a grow would cross `maxCells`), relocate for
+    * mid-band drift. Returns the index with the codebook later
+    * batches must assign with. */
+  private def respondToDrift(
+      idx: graft.index.IvfVectorIndex,
+      batch: DataFrame,
+      vecCol: String,
+      seedK: Int,
+      driftFrac: Double,
+      minShare: Double,
+      growMeanRatio: Double,
+      maxCells: Int): graft.index.IvfVectorIndex = {
+    import org.apache.spark.sql.functions.{col, lit}
+    var live = idx
+    val report = graft.operators.Ivf.drift(
+      live.df.withColumnRenamed("vector", vecCol), batch, vecCol, live.model)
+    // flag on drift_frac AND incoming mass share (r15, BASELINE.md
+    // "Round-15: IVF retrain-in-place recall probe"): frac alone also
+    // flags low-mass clusters a few strays landed in, and retraining
+    // those moves their centroids toward the strays — queries then
+    // probe the refined strays-cluster while the actual drifted mass
+    // sits in an unretrained one, COSTING recall (measured 0.56 → 0.24
+    // @ nprobe=1). Retrain only where a meaningful share of the batch
+    // actually lives.
+    val batchN = math.max(1L, batch.count())
+    val drifted = report
+      .filter(col("n_new") >= lit(minShare * batchN) &&
+        col("drift_frac") >= driftFrac)
+      .select("cluster", "ref_mean_cos", "new_mean_cos")
+      .collect()
+      .map(r => (r.getInt(0),
+        if (r.isNullAt(1)) Double.NaN else r.getDouble(1),
+        if (r.isNullAt(2)) Double.NaN else r.getDouble(2)))
+      .toSeq
+    // choose the RESPONSE from the report's shape (r16, the r15/r16
+    // probe's finding): NOVEL mass sits far outside the cluster's own
+    // tightness — its incoming mean cosine collapses relative to the
+    // reference mean (measured ~0.2 vs ~0.65 for new modes, ~0.68 vs
+    // ~0.75 for a gradual shift of the cluster's own mass). Moving a
+    // centroid toward novel mass costs recall even mass-gated (0.564
+    // no-maintenance vs 0.413 relocated @ nprobe=1, BASELINE r15) —
+    // GROW new cells for it (frozen-book capture, recall-safe by
+    // construction); keep the relocate response for mid-band drift,
+    // where the cluster's own mass is what moved. A cluster with no
+    // reference mass at all is novel by definition.
+    val (novel, moved) = drifted.partition { case (_, rm, nm) =>
+      rm.isNaN || nm < growMeanRatio * rm
+    }
+    var rebuilt = false
+    if (novel.nonEmpty) {
+      val k0 = live.model.centroids.length
+      if (maxCells > 0 && k0 + novel.size > maxCells) {
+        // the bound says stop growing: re-fit the seed budget to the
+        // whole lake (dead cells retire, novel modes get first-class
+        // cells, k resets to seedK)
+        val refit = graft.operators.Ivf.trainDistributed(
+          live.df, "vector", k = seedK, iters = 5)
+        live = live.rebuild(refit)
+        rebuilt = true
+      } else
+        live = live.growClusters(novel.map(_._1), add = novel.size)
+    }
+    // after a rebuild the report's cluster ids belong to the retired
+    // book — and the re-fit already re-homed the moved mass, so the
+    // relocate response is moot
+    if (moved.nonEmpty && !rebuilt)
+      live = live.retrainInPlace(moved.map(_._1))
+    live
   }
 
   /** Continuous ingestion into a BUCKET-partitioned LSH index
@@ -271,17 +264,14 @@ object IndexStream {
     * maintenance, no grow/relocate policy, no codebook lifecycle —
     * data-distribution shift costs LSH balance, not correctness, and
     * rebalancing means building a new index, an offline decision.
-    * What remains is exactly the ingest contract: [[BatchLedger]]
-    * replay protection (at-least-once delivery, effects-once), the
-    * quiesce handshake (un-quiesce at batch ENTRY so a concurrent
-    * merge refuses instead of racing), and `compactEvery` —
-    * [[ingestIvf]]'s in-stream cadence with the same semantics
-    * (0 never, N = every N delivered batches, [[IngestStream
-    * .AutoCompact]] = the measured fragmentation rule) against the
-    * same measured manifest tail (tools/ManifestTailProbe, BASELINE
-    * r17). Maintenance runs inside the serialized `foreachBatch`, so
-    * fold-vs-append races are excluded by construction; concurrent
-    * readers are snapshot-pinned (r17 manifest storage). */
+    * What remains is exactly the ingest contract of [[Delivery]]:
+    * [[BatchLedger]] replay protection (at-least-once delivery,
+    * effects-once), the quiesce handshake, and the `compactEvery`
+    * cadence against the same measured manifest tail as
+    * [[ingestIvf]]. Maintenance runs inside the serialized
+    * `foreachBatch`, so fold-vs-append races are excluded by
+    * construction; concurrent readers are snapshot-pinned (r17
+    * manifest storage). */
   def ingestLsh(
       docs: DataFrame,
       index: graft.index.LshVectorIndex,
@@ -296,22 +286,10 @@ object IndexStream {
       .option("checkpointLocation", checkpointDir)
       .trigger(trigger)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        Quiesce.clear(batch.sparkSession, live.path)
-        val replay = BatchLedger
-          .delivered(batch.sparkSession, live.path, checkpointDir)
-          .contains(batchId)
-        if (!batch.isEmpty && !replay) {
-          live = live.append(batch, vecCol, idCol)
-          BatchLedger.record(batch.sparkSession, live.path,
-            checkpointDir, batchId)
-          if (compactEvery == IngestStream.AutoCompact) {
-            if (live.shouldCompact()) live = live.compact()
-          } else if (compactEvery > 0 &&
-              (batchId + 1) % compactEvery == 0) {
-            live = live.compact()
-          }
-        }
-        ()
+        Delivery.compacting[graft.index.LshVectorIndex](batch.sparkSession,
+          live.path, checkpointDir, batchId, compactEvery) {
+          if (batch.isEmpty) None else Some(live.append(batch, vecCol, idCol))
+        }.foreach(live = _)
       }
       .start()
   }
@@ -332,13 +310,9 @@ object IndexStream {
     * `missingRanges`/`reconcile` remain the out-of-band repair when
     * the stream itself is gone.
     *
-    * `compactEvery` — [[IngestStream]]'s in-stream maintenance knob,
-    * same semantics: 0 never, N = every N delivered batches,
-    * [[IngestStream.AutoCompact]] = when the lake's own fragmentation
-    * crosses the measured rule ([[graft.operators.Bm25Index
-    * .shouldCompact]]). Scoring correctness does not depend on the
-    * cadence — df/n/Σdl are exact at every point — only probe cost
-    * does. */
+    * `compactEvery`/`compactSlack` — [[Delivery.compacting]]'s
+    * cadence. Scoring correctness does not depend on it — df/n/Σdl
+    * are exact at every point — only probe cost does. */
   def ingestKeyword(
       docs: DataFrame,
       textCol: String,
@@ -373,33 +347,26 @@ object IndexStream {
       compactEvery: Int = 0,
       compactSlack: Double = 16.0): Unit = {
     val spark = batch.sparkSession
-    // un-quiesce FIRST — before any effect lands — so a concurrent
-    // shard merge refuses this lake instead of racing the append
-    // ([[Quiesce]], r16)
-    Quiesce.clear(spark, indexPath)
-    if (BatchLedger.delivered(spark, indexPath, streamId)
-      .contains(batchId)) return
-    // bootstrap a FRESH lake when none exists (r17): the first-ever
-    // delivery, or — the documented merge lifecycle — a checkpoint
-    // restarted against a shard path the merge renamed away and
-    // deleted: the restart re-delivers from its offsets into a fresh,
-    // unmerged lake here and never touches the merged destination
-    val statsP = new org.apache.hadoop.fs.Path(indexPath, "_stats")
-    val lakeFs = statsP.getFileSystem(
-      spark.sparkContext.hadoopConfiguration)
-    val grown =
+    Delivery.compacting[graft.operators.Bm25Index](spark, indexPath,
+      streamId, batchId, compactEvery, compactSlack) {
+      // bootstrap a FRESH lake when none exists (r17): the first-ever
+      // delivery, or — the documented merge lifecycle — a checkpoint
+      // restarted against a shard path the merge renamed away and
+      // deleted: the restart re-delivers from its offsets into a
+      // fresh, unmerged lake here and never touches the merged
+      // destination. An empty batch into an existing lake is
+      // recorded; with no lake there is nothing to bootstrap from.
+      val statsP = new org.apache.hadoop.fs.Path(indexPath, "_stats")
+      val lakeFs = statsP.getFileSystem(
+        spark.sparkContext.hadoopConfiguration)
       if (!lakeFs.exists(statsP)) {
-        if (batch.isEmpty) return // nothing to bootstrap from
-        graft.operators.Bm25Index.build(batch, textCol, idCol, indexPath)
-      } else graft.operators.Bm25Index.load(spark, indexPath)
-        .appendIfAbsent(batch, textCol, idCol)
-    BatchLedger.record(spark, indexPath, streamId, batchId)
-    if (compactEvery == IngestStream.AutoCompact) {
-      if (grown.shouldCompact(compactSlack)) { grown.compact(); () }
-    } else if (compactEvery > 0 && (batchId + 1) % compactEvery == 0) {
-      grown.compact()
-      ()
+        if (batch.isEmpty) None
+        else Some(graft.operators.Bm25Index.build(
+          batch, textCol, idCol, indexPath))
+      } else Some(graft.operators.Bm25Index.load(spark, indexPath)
+        .appendIfAbsent(batch, textCol, idCol))
     }
+    ()
   }
 
   /** Drain and retire a lake's ingest stream ahead of a shard merge

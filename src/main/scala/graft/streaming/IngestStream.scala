@@ -25,7 +25,8 @@ import graft.operators.{ShingleIndex, SimHash}
   * sequentially.
   *
   * Delivery semantics: EXACTLY-ONCE-EFFECTIVE under Spark's
-  * at-least-once foreachBatch retries, keyed on the micro-batch id:
+  * at-least-once foreachBatch retries, keyed on the micro-batch id
+  * (each batch runs through the shared delivery step, [[Delivery]]):
   *
   *  1. a `_batches` sidecar next to the index records every batch id
   *     whose delivery fully committed (keyed by stream id = the
@@ -130,38 +131,23 @@ object IngestStream {
       compactEvery: Int = 0,
       compactSlack: Double = 16.0): Unit = {
     val spark = batch.sparkSession
-    // un-quiesce FIRST — before any effect lands — so a concurrent
-    // shard merge refuses this lake instead of racing the append
-    // ([[Quiesce]], r16)
-    Quiesce.clear(spark, indexPath)
-    if (BatchLedger.delivered(spark, indexPath, streamId)
-      .contains(batchId)) return
-    // reload per batch: cheap (one sidecar row) and always consistent
-    // with the appends earlier batches made
-    val idx = ShingleIndex.load(spark, indexPath)
-    val surv = idx
-      .survivors(batch, idCol, textCol, threshold, excludeSelf = true)
-      .localCheckpoint() // pin BEFORE storage mutates under the plan
-    surv.write.mode("overwrite").parquet(s"$outPath/batch=$batchId")
-    val grown = idx.appendBatchIfAbsent(surv, idCol, textCol)
-    BatchLedger.record(spark, indexPath, streamId, batchId)
     // in-stream lake maintenance (r13): every append leaves one small
     // file per touched bucket, so a long-lived micro-batched stream
-    // fragments its own postings and every later probe pays the file
-    // listing. With the compaction swap now crash-safe (two renames,
-    // old generation retained, load-time repair) it can run AT BATCH
-    // BOUNDARIES inside the single writer: after every
-    // `compactEvery`-th delivered batch, AFTER the ledger records the
-    // delivery — a kill mid-compact replays as an already-delivered
-    // batch whose compact simply re-runs. 0 disables (the default:
-    // offline maintenance windows); [[AutoCompact]] (r14) lets the
-    // lake's own fragmentation decide.
-    if (compactEvery == AutoCompact) {
-      if (grown.shouldCompact(compactSlack)) { grown.compact(); () }
-    } else if (compactEvery > 0 && (batchId + 1) % compactEvery == 0) {
-      grown.compact()
-      ()
+    // fragments its own postings; [[Delivery.compacting]] folds them
+    // at batch boundaries inside the single writer, after the ledger
+    // records the delivery
+    Delivery.compacting[ShingleIndex](spark, indexPath, streamId, batchId,
+      compactEvery, compactSlack) {
+      // reload per batch: cheap (one sidecar row) and always
+      // consistent with the appends earlier batches made
+      val idx = ShingleIndex.load(spark, indexPath)
+      val surv = idx
+        .survivors(batch, idCol, textCol, threshold, excludeSelf = true)
+        .localCheckpoint() // pin BEFORE storage mutates under the plan
+      surv.write.mode("overwrite").parquet(s"$outPath/batch=$batchId")
+      Some(idx.appendBatchIfAbsent(surv, idCol, textCol))
     }
+    ()
   }
 
   /** Batch ids whose delivery fully committed ([[BatchLedger]]). */

@@ -7,6 +7,7 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.graftshim.Shim
 
 import graft.SparkTestBase
+import graft.index.RangeLedger
 
 /** Shard-parallel build + file-level merge for the persisted index
   * families (r14): shards built with identical parameters over
@@ -38,8 +39,8 @@ class IndexMergeSpec extends SparkTestBase {
     * merging an already-indexed doc range would double its postings. */
   private def claimRanges(
       spark: SparkSession, dstPath: String, srcPath: String): Unit = {
-    val mine = Bm25Index.readRanges(spark, dstPath)
-    val theirs = Bm25Index.readRanges(spark, srcPath)
+    val mine = RangeLedger.read(spark, dstPath)
+    val theirs = RangeLedger.read(spark, srcPath)
     theirs.foreach { case (lo, hi) =>
       if (!mine.contains((lo, hi))) {
         mine.find { case (l, h) => lo <= h && l <= hi }.foreach {
@@ -48,7 +49,7 @@ class IndexMergeSpec extends SparkTestBase {
             s"already-indexed [$l,$h] — shards must cover disjoint " +
             "docid ranges")
         }
-        Bm25Index.appendRange(spark, dstPath, lo, hi)
+        RangeLedger.record(spark, dstPath, (lo, hi))
       }
     }
   }
@@ -473,9 +474,9 @@ class IndexMergeSpec extends SparkTestBase {
   test("the _ranges ledger is read on the driver: readRanges and a " +
     "claims pass over two sources submit no Spark job") {
     val root = scratch("ledgerjobs")
-    Bm25Index.appendRanges(spark, s"$root/a", Seq((1L, 50L)))
-    Bm25Index.appendRanges(spark, s"$root/s1", Seq((100L, 198L), (101L, 199L)))
-    Bm25Index.appendRanges(spark, s"$root/s2", Seq((300L, 399L)))
+    RangeLedger.record(spark, s"$root/a", (1L, 50L))
+    RangeLedger.record(spark, s"$root/s1", (100L, 198L), (101L, 199L))
+    RangeLedger.record(spark, s"$root/s2", (300L, 399L))
     val srcs = Seq(s"$root/s1", s"$root/s2")
     // the first pass lands the claims (one ledger write); the re-run
     // finds them all present, so it only reads
@@ -489,7 +490,7 @@ class IndexMergeSpec extends SparkTestBase {
     Shim.waitUntilEmpty(spark)
     spark.sparkContext.addSparkListener(counter)
     try {
-      val claimed = Bm25Index.readRanges(spark, s"$root/a")
+      val claimed = RangeLedger.read(spark, s"$root/a")
       IndexMerge.claimRangesAll(spark, s"$root/a", srcs)
       Shim.waitUntilEmpty(spark)
       assert(jobs.get() == 0)

@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.SparkTestBase
-import graft.index.LshVectorIndex
+import graft.index.{LshVectorIndex, RangeLedger}
 import graft.streaming.{IndexStream, Quiesce}
 
 /** The r16 merge-surface guards, each test reproducing one ADVICE-r15
@@ -30,7 +30,7 @@ class MergeGuardSpec extends SparkTestBase {
     java.nio.file.Files.createTempDirectory(s"graft-guard-$tag").toString
 
   private def mkLedger(path: String, ranges: Seq[(Long, Long)]): String = {
-    Bm25Index.appendRanges(spark, path, ranges)
+    RangeLedger.record(spark, path, ranges: _*)
     path
   }
 
@@ -73,13 +73,13 @@ class MergeGuardSpec extends SparkTestBase {
     mkLedger(s"$root/s2", Seq((300L, 399L)))
     IndexMerge.claimRangesAll(spark, s"$root/a",
       Seq(s"$root/s1", s"$root/s2")) // must NOT throw
-    val claimed = Bm25Index.readRanges(spark, s"$root/a").toSet
+    val claimed = RangeLedger.read(spark, s"$root/a").toSet
     assert(claimed == Set((1L, 50L), (100L, 198L), (101L, 199L),
       (300L, 399L)))
     // and the claims pass is value-idempotent on a resume re-run
     IndexMerge.claimRangesAll(spark, s"$root/a",
       Seq(s"$root/s1", s"$root/s2"))
-    assert(Bm25Index.readRanges(spark, s"$root/a").size == 4)
+    assert(RangeLedger.read(spark, s"$root/a").size == 4)
   }
 
   test("an LSH shard appended in interleaved id batches MERGES and " +

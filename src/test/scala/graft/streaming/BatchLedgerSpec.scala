@@ -1,6 +1,10 @@
 package graft.streaming
 
 import java.nio.file.Files
+import java.util.concurrent.atomic.AtomicInteger
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.graftshim.Shim
 
 import graft.SparkTestBase
 
@@ -63,5 +67,29 @@ class BatchLedgerSpec extends SparkTestBase {
     BatchLedger.record(spark, store, "/cp/s", 7L)
     BatchLedger.record(spark, store, "/cp/s", 8L)
     assert(BatchLedger.delivered(spark, store, "/cp/s") == Set(7L, 8L))
+  }
+
+  test("the delivered set is read on the driver: delivered submits no " +
+    "Spark job, before and after a compaction") {
+    val store = Files.createTempDirectory("graft-ledger-jobs").toString
+    (0L until 3L).foreach(id =>
+      BatchLedger.record(spark, store, "/cp/j", id, compactEvery = 3))
+    BatchLedger.record(spark, store, "/cp/j", 3L, compactEvery = 3)
+    val jobs = new AtomicInteger()
+    val counter = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = {
+        jobs.incrementAndGet(); ()
+      }
+    }
+    Shim.waitUntilEmpty(spark)
+    spark.sparkContext.addSparkListener(counter)
+    try {
+      val got = BatchLedger.delivered(spark, store, "/cp/j")
+      val none = BatchLedger.delivered(spark, store, "/cp/other")
+      Shim.waitUntilEmpty(spark)
+      assert(jobs.get() == 0)
+      assert(got == (0L until 4L).toSet)
+      assert(none.isEmpty)
+    } finally spark.sparkContext.removeSparkListener(counter)
   }
 }
