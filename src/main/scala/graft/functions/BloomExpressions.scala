@@ -2,9 +2,8 @@ package graft.functions
 
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.types._
 
 /** Bloom filter bits with a self-describing header. Layout:
@@ -146,36 +145,12 @@ case class BloomBuild(
   * test against a [[BloomBuild]] filter (m and k read from the
   * self-describing header). Malformed filter bytes → null. */
 case class BloomContains(left: Expression, right: Expression)
-    extends BinaryExpression {
+    extends BinaryKernelExpression {
 
   override def dataType: DataType = BooleanType
   override def prettyName: String = "bloom_contains"
   override def nullable: Boolean = true
-  override def checkInputDataTypes(): TypeCheckResult =
-    (left.dataType, right.dataType) match {
-      case (BinaryType, LongType) => TypeCheckResult.TypeCheckSuccess
-      case (l, r) => TypeCheckResult.TypeCheckFailure(
-        s"$prettyName requires (binary, bigint), got " +
-          s"${l.simpleString}, ${r.simpleString}")
-    }
-
-  override def nullSafeEval(f: Any, h: Any): Any =
-    BloomContains.compute(f.asInstanceOf[Array[Byte]],
-      h.asInstanceOf[Long])
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (f, h) => {
-      // ev.value is a PRIMITIVE boolean for BooleanType — the boxed
-      // kernel result needs a temp or codegen fails (and Spark would
-      // silently fall back to the interpreter)
-      val tmp = ctx.freshName("bloomRes")
-      s"""
-        |java.lang.Boolean $tmp =
-        |  graft.functions.BloomContains$$.MODULE$$.test($f, $h);
-        |${ev.isNull} = $tmp == null;
-        |${ev.value} = $tmp != null && $tmp.booleanValue();
-        |""".stripMargin
-    })
+  override def kernel: Kernel = Kernel(BloomContains, "test")
 
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): Expression =
@@ -183,8 +158,6 @@ case class BloomContains(left: Expression, right: Expression)
 }
 
 object BloomContains {
-  def compute(filter: Array[Byte], hash: Long): Any = test(filter, hash)
-
   /** The kernel; boxed so malformed filters yield null, not a throw.
     * Probes the serialized bytes IN PLACE — a deserialize here would
     * copy the whole filter per row, turning a broadcast probe into a

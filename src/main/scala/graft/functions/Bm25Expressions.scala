@@ -1,7 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -95,7 +94,7 @@ case class ShingleSetRef(shingles: Seq[String], n: Int) {
 
   /** Count of DISTINCT shingles of `text` present in the set —
     * tokenization and windowing identical to
-    * [[NgramShingles.nullSafeEval]] (split on single spaces, windows
+    * [[NgramShingles.compute]] (split on single spaces, windows
     * joined by single spaces, distinct), so batch and streaming
     * decontamination agree on every row. */
   def hits(text: UTF8String): Int = {
@@ -121,62 +120,29 @@ case class ShingleSetRef(shingles: Seq[String], n: Int) {
 }
 
 /** `shingle_hits(text)` under a [[ShingleSetRef]] → INT: how many
-  * distinct n-grams of the row appear in the benchmark set. Codegen'd
-  * like [[Bm25Score]]; null text → null. */
+  * distinct n-grams of the row appear in the benchmark set. Null text
+  * → null. */
 case class ShingleHits(child: Expression, set: ShingleSetRef)
-    extends UnaryExpression {
+    extends KernelExpression {
 
   override def dataType: DataType = IntegerType
   override def prettyName: String = "shingle_hits"
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires string, got ${other.simpleString}")
-  }
-
-  override def nullSafeEval(input: Any): Any =
-    set.hits(input.asInstanceOf[UTF8String])
-
-  override def doGenCode(
-      ctx: org.apache.spark.sql.catalyst.expressions.codegen.CodegenContext,
-      ev: org.apache.spark.sql.catalyst.expressions.codegen.ExprCode)
-      : org.apache.spark.sql.catalyst.expressions.codegen.ExprCode = {
-    val ref = ctx.addReferenceObj("shingleSet", set,
-      classOf[ShingleSetRef].getName)
-    defineCodeGen(ctx, ev, c => s"$ref.hits($c)")
-  }
+  override def kernel: Kernel = Kernel(set, "hits")
 
   override protected def withNewChildInternal(c: Expression): Expression =
     copy(child = c)
 }
 
 /** `keyword_score(text)` under a resolved [[Bm25QueryModel]] → BIGINT
-  * micros (0 = no query term present). Codegen'd: the model rides as a
-  * codegen reference object and the generated code calls the kernel
-  * directly, so scoring composes into the surrounding WholeStageCodegen
-  * like [[Fingerprint]]. */
+  * micros (0 = no query term present). The model is the kernel owner,
+  * so the generated code calls it directly and scoring composes into
+  * the surrounding WholeStageCodegen like [[Fingerprint]]. */
 case class Bm25Score(child: Expression, model: Bm25QueryModel)
-    extends UnaryExpression {
+    extends KernelExpression {
 
   override def dataType: DataType = LongType
   override def prettyName: String = "keyword_score"
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires string, got ${other.simpleString}")
-  }
-
-  override def nullSafeEval(input: Any): Any =
-    model.score(input.asInstanceOf[UTF8String])
-
-  override def doGenCode(
-      ctx: org.apache.spark.sql.catalyst.expressions.codegen.CodegenContext,
-      ev: org.apache.spark.sql.catalyst.expressions.codegen.ExprCode)
-      : org.apache.spark.sql.catalyst.expressions.codegen.ExprCode = {
-    val ref = ctx.addReferenceObj("bm25QueryModel", model,
-      classOf[Bm25QueryModel].getName)
-    defineCodeGen(ctx, ev, c => s"$ref.score($c)")
-  }
+  override def kernel: Kernel = Kernel(model, "score")
 
   override protected def withNewChildInternal(c: Expression): Expression =
     copy(child = c)

@@ -1,8 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.types.{BinaryType => _, _}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -10,33 +8,20 @@ import org.apache.spark.unsafe.types.UTF8String
   * byte-pair-encoding merge list ([[graft.operators.Bpe]]) — every
   * word reduced to its BPE symbols by canonical single-pass merge
   * application, all symbols joined by single spaces. A pure map (the
-  * merge list rides the expression as a codegen reference object, the
+  * [[BpeCodec]] over the merge list is the kernel owner, the
   * [[UnigramBits]]/[[BigramBits]] deployment shape), so the same call
   * tokenizes a structured stream. A bounded per-expression memo caches
   * word encodings — natural-language corpora repeat words heavily, so
   * the O(merges x len) inner loop runs once per distinct word, not
   * once per occurrence. */
 case class BpeEncode(child: Expression, merges: Array[(String, String)])
-    extends UnaryExpression {
+    extends KernelExpression {
 
   override def dataType: DataType = StringType
   override def prettyName: String = "bpe_encode"
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires string, got ${other.simpleString}")
-  }
 
   @transient private lazy val codec = new BpeCodec(merges)
-
-  override def nullSafeEval(input: Any): Any =
-    codec.encodeDoc(input.asInstanceOf[UTF8String])
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("bpeCodec", codec,
-      classOf[BpeCodec].getName)
-    defineCodeGen(ctx, ev, c => s"$ref.encodeDoc($c)")
-  }
+  override def kernel: Kernel = Kernel(codec, "encodeDoc")
 
   override protected def withNewChildInternal(c: Expression): Expression =
     copy(child = c)

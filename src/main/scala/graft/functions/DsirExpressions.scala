@@ -1,7 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
@@ -92,30 +91,13 @@ case class DsirModelRef(logRatio: Array[Double]) {
 }
 
 /** `dsir_log_weight(text)` under a [[DsirModelRef]] → DOUBLE total
-  * log2 importance weight. Codegen'd like [[NbLogOdds]]; null text →
-  * null. */
+  * log2 importance weight. Null text → null. */
 case class DsirLogWeight(child: Expression, model: DsirModelRef)
-    extends UnaryExpression {
+    extends KernelExpression {
 
   override def dataType: DataType = DoubleType
   override def prettyName: String = "dsir_log_weight"
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires string, got ${other.simpleString}")
-  }
-
-  override def nullSafeEval(input: Any): Any =
-    model.logWeight(input.asInstanceOf[UTF8String])
-
-  override def doGenCode(
-      ctx: org.apache.spark.sql.catalyst.expressions.codegen.CodegenContext,
-      ev: org.apache.spark.sql.catalyst.expressions.codegen.ExprCode)
-      : org.apache.spark.sql.catalyst.expressions.codegen.ExprCode = {
-    val ref = ctx.addReferenceObj("dsirModel", model,
-      classOf[DsirModelRef].getName)
-    defineCodeGen(ctx, ev, c => s"$ref.logWeight($c)")
-  }
+  override def kernel: Kernel = Kernel(model, "logWeight")
 
   override protected def withNewChildInternal(c: Expression): Expression =
     copy(child = c)

@@ -1,9 +1,7 @@
 package graft.functions
 
 import graft.operators.EditDedup
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow}
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
@@ -25,33 +23,27 @@ private[functions] object EditKeySchema {
     }
     new GenericArrayData(out)
   }
+
+  /** The [[EditSegments]] kernel. */
+  def segments(text: UTF8String, k: Int): GenericArrayData =
+    rows(EditDedup.segments(text.toString, k))
+
+  /** The [[EditProbes]] kernel. */
+  def probes(text: UTF8String, k: Int): GenericArrayData =
+    rows(EditDedup.probes(text.toString, k))
 }
 
 /** edit_segments(text) -> array<struct<la,i,seg>>: the k+1 PassJoin
   * segment keys of a string ([[EditDedup.segments]]); `k` is bound at
   * construction. Too-short strings yield an empty array. */
 case class EditSegments(child: Expression, k: Int)
-    extends UnaryExpression {
+    extends KernelExpression {
   require(k >= 1 && k <= 4)
 
   override def dataType: DataType =
     ArrayType(EditKeySchema.schema, containsNull = false)
   override def prettyName: String = "edit_segments"
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires string, got ${other.simpleString}")
-  }
-
-  override def nullSafeEval(input: Any): Any =
-    EditKeySchema.rows(
-      EditDedup.segments(input.asInstanceOf[UTF8String].toString, k))
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => s"""
-      |${ev.value} = graft.functions.EditKeySchema$$.MODULE$$.rows(
-      |  graft.operators.EditDedup$$.MODULE$$.segments($c.toString(), $k));
-      |""".stripMargin)
+  override def kernel: Kernel = Kernel(EditKeySchema, "segments", k)
 
   override protected def withNewChildInternal(c: Expression): Expression =
     copy(child = c)
@@ -61,27 +53,13 @@ case class EditSegments(child: Expression, k: Int)
   * could match a segment of a ±k-length neighbor
   * ([[EditDedup.probes]] — bounded (2k+1)(k+1)(2k+1) keys). */
 case class EditProbes(child: Expression, k: Int)
-    extends UnaryExpression {
+    extends KernelExpression {
   require(k >= 1 && k <= 4)
 
   override def dataType: DataType =
     ArrayType(EditKeySchema.schema, containsNull = false)
   override def prettyName: String = "edit_probes"
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires string, got ${other.simpleString}")
-  }
-
-  override def nullSafeEval(input: Any): Any =
-    EditKeySchema.rows(
-      EditDedup.probes(input.asInstanceOf[UTF8String].toString, k))
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => s"""
-      |${ev.value} = graft.functions.EditKeySchema$$.MODULE$$.rows(
-      |  graft.operators.EditDedup$$.MODULE$$.probes($c.toString(), $k));
-      |""".stripMargin)
+  override def kernel: Kernel = Kernel(EditKeySchema, "probes", k)
 
   override protected def withNewChildInternal(c: Expression): Expression =
     copy(child = c)

@@ -1,8 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -66,28 +65,12 @@ case class GateSignalsKernel(stopwords: Seq[String]) {
 /** `gate_signals(text)` under a [[GateSignalsKernel]] →
   * struct<n_tokens:bigint, n_distinct:bigint, n_stopwords:bigint,
   * n_chars:bigint, top_bigram:bigint>. Null text → null. */
-case class GateSignals(child: Expression, kernel: GateSignalsKernel)
-    extends UnaryExpression {
+case class GateSignals(child: Expression, signals: GateSignalsKernel)
+    extends KernelExpression {
 
   override def dataType: DataType = GateSignals.schema
   override def prettyName: String = "gate_signals"
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires string, got ${other.simpleString}")
-  }
-
-  override def nullSafeEval(input: Any): Any =
-    kernel.compute(input.asInstanceOf[UTF8String])
-
-  override def doGenCode(
-      ctx: org.apache.spark.sql.catalyst.expressions.codegen.CodegenContext,
-      ev: org.apache.spark.sql.catalyst.expressions.codegen.ExprCode)
-      : org.apache.spark.sql.catalyst.expressions.codegen.ExprCode = {
-    val ref = ctx.addReferenceObj("gateSignalsKernel", kernel,
-      classOf[GateSignalsKernel].getName)
-    defineCodeGen(ctx, ev, c => s"$ref.compute($c)")
-  }
+  override def kernel: Kernel = Kernel(signals, "compute")
 
   override protected def withNewChildInternal(c: Expression): Expression =
     copy(child = c)

@@ -1,8 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.catalyst.expressions.XXH64
 import org.apache.spark.sql.types._
@@ -90,7 +88,7 @@ private[graft] object HashMix {
   * higher-order formulation evaluates interpreted lambdas per shingle).
   * Fewer than n tokens → null. */
 case class NgramShingles(child: Expression, n: Int)
-    extends UnaryExpression with CodegenFallback {
+    extends KernelExpression {
   require(n >= 1)
 
   override def dataType: DataType =
@@ -99,16 +97,18 @@ case class NgramShingles(child: Expression, n: Int)
   // returns null for sub-threshold/empty inputs even when the
   // child is non-nullable
   override def nullable: Boolean = true
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires string, got ${other.simpleString}")
-  }
+  override def kernel: Kernel = Kernel(NgramShingles, "compute", n)
 
+  override protected def withNewChildInternal(c: Expression): Expression =
+    copy(child = c)
+}
+
+object NgramShingles {
   private val space = UTF8String.fromString(" ")
 
-  override def nullSafeEval(input: Any): Any = {
-    val toks = input.asInstanceOf[UTF8String].split(space, -1)
+  /** The kernel; public so generated code can call it. */
+  def compute(text: UTF8String, n: Int): GenericArrayData = {
+    val toks = text.split(space, -1)
     if (toks.length < n) return null
     val seen = new java.util.LinkedHashSet[UTF8String]()
     var i = 0
@@ -129,9 +129,6 @@ case class NgramShingles(child: Expression, n: Int)
     while (it.hasNext) { arr(k) = it.next(); k += 1 }
     new GenericArrayData(arr)
   }
-
-  override protected def withNewChildInternal(c: Expression): Expression =
-    copy(child = c)
 }
 
 /** hash_embed(text, dim) -> array<float>: L2-normalized hashed
@@ -139,25 +136,13 @@ case class NgramShingles(child: Expression, n: Int)
   * `xxhash64(t) mod dim`. One pass, tight loop; model-free stand-in
   * for the out-of-engine encode step (SURVEY S6). */
 case class HashEmbed(child: Expression, dim: Int)
-    extends UnaryExpression with CodegenFallback {
+    extends KernelExpression {
   require(dim > 0)
 
   override def dataType: DataType =
     ArrayType(FloatType, containsNull = false)
   override def prettyName: String = "hash_embed"
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires string, got ${other.simpleString}")
-  }
-
-  override def nullSafeEval(input: Any): Any = {
-    val floats = HashEmbed.compute(input.asInstanceOf[UTF8String], dim)
-    val out = new Array[Any](dim)
-    var j = 0
-    while (j < dim) { out(j) = floats(j); j += 1 }
-    new GenericArrayData(out)
-  }
+  override def kernel: Kernel = Kernel(HashEmbed, "embed", dim)
 
   override protected def withNewChildInternal(c: Expression): Expression =
     copy(child = c)
@@ -166,8 +151,13 @@ case class HashEmbed(child: Expression, dim: Int)
 object HashEmbed {
   private val space = UTF8String.fromString(" ")
 
-  /** The kernel, exposed so the driver-side / mapPartitions text-encoder
-    * seam ([[graft.TextEncoder]]) computes bit-identical embeddings. */
+  /** The kernel; public so generated code can call it. */
+  def embed(text: UTF8String, dim: Int): GenericArrayData =
+    new GenericArrayData(compute(text, dim))
+
+  /** The embedding, exposed so the driver-side / mapPartitions
+    * text-encoder seam ([[graft.TextEncoder]]) computes bit-identical
+    * embeddings. */
   def compute(text: UTF8String, dim: Int): Array[Float] = {
     val toks = text.split(space, -1)
     val acc = new Array[Double](dim)
@@ -188,28 +178,13 @@ object HashEmbed {
   }
 }
 
-/** minhash_signature(shingles array<string>, k) -> array<bigint>:
-  * the k-position MinHash signature. Null shingle elements are skipped;
-  * an empty/null array yields null. */
-case class MinHashSignature(child: Expression, numHashes: Int)
-    extends UnaryExpression with CodegenFallback {
-  require(numHashes > 0)
-
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def prettyName: String = "minhash_signature"
-  // returns null for sub-threshold/empty inputs even when the
-  // child is non-nullable
-  override def nullable: Boolean = true
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(StringType, _) => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires array<string>, got ${other.simpleString}")
-  }
-
+/** The k-member MinHash family of [[MinHashSignature]]: its per-member
+  * mixing constants, derived once per (deserialized) expression. */
+final case class MinHashFamily(numHashes: Int) {
   @transient private lazy val (consA, consB) = HashMix.constants(numHashes)
 
-  override def nullSafeEval(input: Any): Any = {
-    val arr = input.asInstanceOf[ArrayData]
+  /** The signature of a shingle array; null for an empty array. */
+  def signature(arr: ArrayData): GenericArrayData = {
     val n = arr.numElements()
     if (n == 0) return null
     val mins = Array.fill(numHashes)(Long.MaxValue)
@@ -228,6 +203,24 @@ case class MinHashSignature(child: Expression, numHashes: Int)
     }
     new GenericArrayData(mins)
   }
+}
+
+/** minhash_signature(shingles array<string>, k) -> array<bigint>:
+  * the k-position MinHash signature. Null shingle elements are skipped;
+  * an empty/null array yields null. */
+case class MinHashSignature(child: Expression, numHashes: Int)
+    extends KernelExpression {
+  require(numHashes > 0)
+
+  override def dataType: DataType = ArrayType(LongType, containsNull = false)
+  override def prettyName: String = "minhash_signature"
+  // returns null for sub-threshold/empty inputs even when the
+  // child is non-nullable
+  override def nullable: Boolean = true
+  override def inputTypes: Seq[Seq[DataType]] = Seq(Seq(ArrayType(StringType)))
+
+  @transient private lazy val family = MinHashFamily(numHashes)
+  override def kernel: Kernel = Kernel(family, "signature")
 
   override protected def withNewChildInternal(c: Expression): Expression =
     copy(child = c)
@@ -240,22 +233,24 @@ case class MinHashSignature(child: Expression, numHashes: Int)
   * Token hashes are [[HashMix.portableHash61]] (61 effective bits; bits
   * 61-63 are always 0) so an external SQL oracle can recompute identical
   * fingerprints and brute-force-verify the pigeonhole pair search. */
-case class SimHash64(child: Expression)
-    extends UnaryExpression with CodegenFallback {
+case class SimHash64(child: Expression) extends KernelExpression {
 
   override def dataType: DataType = LongType
   override def prettyName: String = "simhash64"
   // returns null for sub-threshold/empty inputs even when the
   // child is non-nullable
   override def nullable: Boolean = true
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(StringType, _) => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires array<string>, got ${other.simpleString}")
-  }
+  override def inputTypes: Seq[Seq[DataType]] = Seq(Seq(ArrayType(StringType)))
+  override def kernel: Kernel = Kernel(SimHash64, "compute")
 
-  override def nullSafeEval(input: Any): Any = {
-    val arr = input.asInstanceOf[ArrayData]
+  override protected def withNewChildInternal(c: Expression): Expression =
+    copy(child = c)
+}
+
+object SimHash64 {
+  /** The kernel; boxed so an empty array yields null. Public so
+    * generated code can call it. */
+  def compute(arr: ArrayData): java.lang.Long = {
     val n = arr.numElements()
     if (n == 0) return null
     val counters = new Array[Int](64)
@@ -279,9 +274,6 @@ case class SimHash64(child: Expression)
     }
     result
   }
-
-  override protected def withNewChildInternal(c: Expression): Expression =
-    copy(child = c)
 }
 
 /** fingerprint(text) -> bigint: deterministic polynomial rolling hash of

@@ -1,7 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
@@ -164,58 +163,26 @@ case class BigramModelRef(
 }
 
 /** `bigram_bits(text)` under a [[BigramModelRef]] → DOUBLE total
-  * bits. Codegen'd like [[UnigramBits]]; null text → null. */
+  * bits. Null text → null. */
 case class BigramBits(child: Expression, model: BigramModelRef)
-    extends UnaryExpression {
+    extends KernelExpression {
 
   override def dataType: DataType = DoubleType
   override def prettyName: String = "bigram_bits"
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires string, got ${other.simpleString}")
-  }
-
-  override def nullSafeEval(input: Any): Any =
-    model.bits(input.asInstanceOf[UTF8String])
-
-  override def doGenCode(
-      ctx: org.apache.spark.sql.catalyst.expressions.codegen.CodegenContext,
-      ev: org.apache.spark.sql.catalyst.expressions.codegen.ExprCode)
-      : org.apache.spark.sql.catalyst.expressions.codegen.ExprCode = {
-    val ref = ctx.addReferenceObj("bigramModel", model,
-      classOf[BigramModelRef].getName)
-    defineCodeGen(ctx, ev, c => s"$ref.bits($c)")
-  }
+  override def kernel: Kernel = Kernel(model, "bits")
 
   override protected def withNewChildInternal(c: Expression): Expression =
     copy(child = c)
 }
 
 /** `unigram_bits(text)` under a [[UnigramModelRef]] → DOUBLE total
-  * bits. Codegen'd like [[Bm25Score]]; null text → null. */
+  * bits. Null text → null. */
 case class UnigramBits(child: Expression, model: UnigramModelRef)
-    extends UnaryExpression {
+    extends KernelExpression {
 
   override def dataType: DataType = DoubleType
   override def prettyName: String = "unigram_bits"
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires string, got ${other.simpleString}")
-  }
-
-  override def nullSafeEval(input: Any): Any =
-    model.bits(input.asInstanceOf[UTF8String])
-
-  override def doGenCode(
-      ctx: org.apache.spark.sql.catalyst.expressions.codegen.CodegenContext,
-      ev: org.apache.spark.sql.catalyst.expressions.codegen.ExprCode)
-      : org.apache.spark.sql.catalyst.expressions.codegen.ExprCode = {
-    val ref = ctx.addReferenceObj("unigramModel", model,
-      classOf[UnigramModelRef].getName)
-    defineCodeGen(ctx, ev, c => s"$ref.bits($c)")
-  }
+  override def kernel: Kernel = Kernel(model, "bits")
 
   override protected def withNewChildInternal(c: Expression): Expression =
     copy(child = c)

@@ -1,7 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -77,30 +76,13 @@ case class NbModelRef(
 }
 
 /** `nb_log_odds(text)` under a [[NbModelRef]] → DOUBLE total log-odds
-  * (prior included). Codegen'd like [[UnigramBits]]; null text →
-  * null. */
+  * (prior included). Null text → null. */
 case class NbLogOdds(child: Expression, model: NbModelRef)
-    extends UnaryExpression {
+    extends KernelExpression {
 
   override def dataType: DataType = DoubleType
   override def prettyName: String = "nb_log_odds"
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires string, got ${other.simpleString}")
-  }
-
-  override def nullSafeEval(input: Any): Any =
-    model.logOdds(input.asInstanceOf[UTF8String])
-
-  override def doGenCode(
-      ctx: org.apache.spark.sql.catalyst.expressions.codegen.CodegenContext,
-      ev: org.apache.spark.sql.catalyst.expressions.codegen.ExprCode)
-      : org.apache.spark.sql.catalyst.expressions.codegen.ExprCode = {
-    val ref = ctx.addReferenceObj("nbModel", model,
-      classOf[NbModelRef].getName)
-    defineCodeGen(ctx, ev, c => s"$ref.logOdds($c)")
-  }
+  override def kernel: Kernel = Kernel(model, "logOdds")
 
   override protected def withNewChildInternal(c: Expression): Expression =
     copy(child = c)

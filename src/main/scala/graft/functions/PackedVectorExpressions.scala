@@ -1,7 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
@@ -57,6 +57,17 @@ object PackedVectors {
     out
   }
 
+  def unpack(bytes: Array[Byte]): GenericArrayData = {
+    val n = bytes.length / 4
+    val out = new Array[Any](n)
+    var i = 0
+    while (i < n) {
+      out(i) = getFloatLE(bytes, i)
+      i += 1
+    }
+    new GenericArrayData(out)
+  }
+
   def packFloats(v: Array[Float]): Array[Byte] = {
     val out = new Array[Byte](v.length * 4)
     var i = 0
@@ -66,48 +77,21 @@ object PackedVectors {
 }
 
 /** pack_vector(array<float>) -> binary. */
-case class PackVector(child: Expression) extends UnaryExpression {
+case class PackVector(child: Expression) extends KernelExpression {
   override def dataType: DataType = BinaryType
   override def prettyName: String = "pack_vector"
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(FloatType, _) => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires array<float>, got ${other.simpleString}")
-  }
-
-  override def nullSafeEval(input: Any): Any =
-    PackedVectors.pack(input.asInstanceOf[ArrayData])
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, a =>
-      s"graft.functions.PackedVectors.pack($a)")
+  override def inputTypes: Seq[Seq[DataType]] = Seq(Seq(ArrayType(FloatType)))
+  override def kernel: Kernel = Kernel(PackedVectors, "pack")
 
   override protected def withNewChildInternal(c: Expression): Expression =
     copy(child = c)
 }
 
 /** unpack_vector(binary) -> array<float>. */
-case class UnpackVector(child: Expression) extends UnaryExpression
-    with org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback {
+case class UnpackVector(child: Expression) extends KernelExpression {
   override def dataType: DataType = ArrayType(FloatType, containsNull = false)
   override def prettyName: String = "unpack_vector"
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case BinaryType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires binary, got ${other.simpleString}")
-  }
-
-  override def nullSafeEval(input: Any): Any = {
-    val bytes = input.asInstanceOf[Array[Byte]]
-    val n = bytes.length / 4
-    val out = new Array[Any](n)
-    var i = 0
-    while (i < n) {
-      out(i) = PackedVectors.getFloatLE(bytes, i)
-      i += 1
-    }
-    new GenericArrayData(out)
-  }
+  override def kernel: Kernel = Kernel(PackedVectors, "unpack")
 
   override protected def withNewChildInternal(c: Expression): Expression =
     copy(child = c)

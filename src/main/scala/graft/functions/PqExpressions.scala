@@ -2,7 +2,7 @@ package graft.functions
 
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, CodegenFallback, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
 
@@ -20,7 +20,7 @@ import org.apache.spark.sql.types._
   * m*dsub yields null (same loud-mismatch contract as the cosine
   * kernels). */
 case class PqEncode(child: Expression, codebooks: Array[Array[Array[Float]]])
-    extends UnaryExpression with CodegenFallback {
+    extends KernelExpression {
   require(codebooks.nonEmpty && codebooks(0).nonEmpty &&
     codebooks(0)(0).nonEmpty, "pq_encode: empty codebook")
   require(codebooks(0).length <= 256,
@@ -29,20 +29,22 @@ case class PqEncode(child: Expression, codebooks: Array[Array[Array[Float]]])
   override def dataType: DataType = BinaryType
   override def prettyName: String = "pq_encode"
   override def nullable: Boolean = true
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(FloatType, _) | ArrayType(DoubleType, _) =>
-      TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires array<float> or array<double>, got ${other.simpleString}")
-  }
+  override def inputTypes: Seq[Seq[DataType]] = Seq(KernelCall.Vector)
 
-  @transient private lazy val isFloat = child.dataType match {
-    case ArrayType(FloatType, _) => true
-    case _ => false
-  }
+  @transient private lazy val quantizer = PqQuantizer(codebooks)
+  override def kernel: Kernel =
+    Kernel(quantizer, "encode", KernelCall.floatElems(child))
 
-  override def nullSafeEval(input: Any): Any = {
-    val v = input.asInstanceOf[ArrayData]
+  override protected def withNewChildInternal(c: Expression): Expression =
+    copy(child = c)
+}
+
+/** The sub-codebooks of [[PqEncode]] as its kernel owner. */
+final case class PqQuantizer(codebooks: Array[Array[Array[Float]]]) {
+
+  /** The code of `v`: per subvector the id of its L2-nearest
+    * sub-centroid; null when `v` is not m*dsub long. */
+  def encode(v: ArrayData, floatElems: Int): Array[Byte] = {
     val m = codebooks.length
     val dsub = codebooks(0)(0).length
     if (v.numElements() != m * dsub) return null
@@ -59,7 +61,7 @@ case class PqEncode(child: Expression, codebooks: Array[Array[Array[Float]]])
         var dist = 0.0
         var i = 0
         while (i < dsub) {
-          val x = if (isFloat) v.getFloat(off + i).toDouble
+          val x = if (floatElems == 1) v.getFloat(off + i).toDouble
                   else v.getDouble(off + i)
           val d = x - cen(i)
           dist += d * d
@@ -73,9 +75,6 @@ case class PqEncode(child: Expression, codebooks: Array[Array[Array[Float]]])
     }
     code
   }
-
-  override protected def withNewChildInternal(c: Expression): Expression =
-    copy(child = c)
 }
 
 /** pq_adc_score(code) -> double: asymmetric distance computation — the

@@ -4,7 +4,7 @@ import java.io.{ByteArrayInputStream, ByteArrayOutputStream, DataInputStream, Da
 
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
@@ -147,63 +147,18 @@ case class VectorMinMax(
 case class Sq8Model(mins: Array[Double], scales: Array[Double]) {
   require(mins.length == scales.length && mins.nonEmpty, "bad model")
   def dim: Int = mins.length
-}
 
-/** `sq8_encode(vec)` under a [[Sq8Model]] → BINARY of `dim` bytes:
-  * code_i = round((v_i − min_i) / scale_i), the faiss SQ8 recipe —
-  * 4× smaller than float32 at near-full recall. Null vector → null;
-  * dimension mismatch → null (the dirty-input contract). */
-case class Sq8Encode(child: Expression, model: Sq8Model)
-    extends UnaryExpression {
-
-  override def dataType: DataType = BinaryType
-  override def nullable: Boolean = true
-  override def prettyName: String = "sq8_encode"
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(FloatType, _) | ArrayType(DoubleType, _) =>
-      TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires array<float> or array<double>, got ${other.simpleString}")
-  }
-
-  private lazy val isFloat: Boolean = child.dataType match {
-    case ArrayType(FloatType, _) => true
-    case _ => false
-  }
-
-  override def nullSafeEval(input: Any): Any =
-    Sq8Encode.compute(input.asInstanceOf[ArrayData], model, isFloat)
-
-  override def doGenCode(
-      ctx: org.apache.spark.sql.catalyst.expressions.codegen.CodegenContext,
-      ev: org.apache.spark.sql.catalyst.expressions.codegen.ExprCode)
-      : org.apache.spark.sql.catalyst.expressions.codegen.ExprCode = {
-    val m = ctx.addReferenceObj("sq8Model", model, classOf[Sq8Model].getName)
-    val fl = if (isFloat) "true" else "false"
-    nullSafeCodeGen(ctx, ev, c => s"""
-      byte[] enc = graft.functions.Sq8Encode$$.MODULE$$.compute($c, $m, $fl);
-      ${ev.isNull} = enc == null;
-      if (!${ev.isNull}) ${ev.value} = enc;""")
-  }
-
-  override protected def withNewChildInternal(c: Expression): Expression =
-    copy(child = c)
-}
-
-object Sq8Encode {
-  /** The kernel; public so generated code can call it. Returns null on
-    * dimension mismatch. */
-  def compute(arr: org.apache.spark.sql.catalyst.util.ArrayData,
-      m: Sq8Model, isFloat: Boolean): Array[Byte] = {
-    if (arr.numElements() != m.dim) return null
-    val out = new Array[Byte](m.dim)
+  /** The [[Sq8Encode]] kernel: null on dimension mismatch. */
+  def encode(arr: ArrayData, floatElems: Int): Array[Byte] = {
+    if (arr.numElements() != dim) return null
+    val out = new Array[Byte](dim)
     var i = 0
-    while (i < m.dim) {
-      val v = if (isFloat) arr.getFloat(i).toDouble else arr.getDouble(i)
+    while (i < dim) {
+      val v = if (floatElems == 1) arr.getFloat(i).toDouble else arr.getDouble(i)
       val code =
-        if (m.scales(i) == 0.0) 0L
+        if (scales(i) == 0.0) 0L
         else {
-          val c = Math.round((v - m.mins(i)) / m.scales(i))
+          val c = Math.round((v - mins(i)) / scales(i))
           if (c < 0L) 0L else if (c > 255L) 255L else c
         }
       out(i) = code.toByte
@@ -213,56 +168,57 @@ object Sq8Encode {
   }
 }
 
-/** `sq8_cosine(code)` under a [[Sq8Model]] and a full-precision query
-  * → DOUBLE asymmetric cosine (query exact, corpus dequantized) —
-  * the ADC evaluation of the SQ family. Codegen'd; null/short code →
-  * null. */
-case class Sq8Cosine(child: Expression, model: Sq8Model, query: Array[Double])
-    extends UnaryExpression {
-  require(query.length == model.dim, "query dimension mismatch")
+/** `sq8_encode(vec)` under a [[Sq8Model]] → BINARY of `dim` bytes:
+  * code_i = round((v_i − min_i) / scale_i), the faiss SQ8 recipe —
+  * 4× smaller than float32 at near-full recall. Null vector → null;
+  * dimension mismatch → null (the dirty-input contract). */
+case class Sq8Encode(child: Expression, model: Sq8Model)
+    extends KernelExpression {
 
-  override def dataType: DataType = DoubleType
+  override def dataType: DataType = BinaryType
   override def nullable: Boolean = true
-  override def prettyName: String = "sq8_cosine"
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case BinaryType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires binary, got ${other.simpleString}")
-  }
-
-  override def nullSafeEval(input: Any): Any = {
-    val code = input.asInstanceOf[Array[Byte]]
-    if (code.length != model.dim) null else Sq8Cosine.compute(code, model, query)
-  }
-
-  override def doGenCode(
-      ctx: org.apache.spark.sql.catalyst.expressions.codegen.CodegenContext,
-      ev: org.apache.spark.sql.catalyst.expressions.codegen.ExprCode)
-      : org.apache.spark.sql.catalyst.expressions.codegen.ExprCode = {
-    val m = ctx.addReferenceObj("sq8Model", model, classOf[Sq8Model].getName)
-    val q = ctx.addReferenceObj("sq8Query", query, "double[]")
-    nullSafeCodeGen(ctx, ev, c => s"""
-      if ($c.length != $m.dim()) {
-        ${ev.isNull} = true;
-      } else {
-        ${ev.value} = graft.functions.Sq8Cosine$$.MODULE$$.compute($c, $m, $q);
-      }""")
-  }
+  override def prettyName: String = "sq8_encode"
+  override def inputTypes: Seq[Seq[DataType]] = Seq(KernelCall.Vector)
+  override def kernel: Kernel =
+    Kernel(model, "encode", KernelCall.floatElems(child))
 
   override protected def withNewChildInternal(c: Expression): Expression =
     copy(child = c)
 }
 
-object Sq8Cosine {
-  /** The kernel; public so generated code can call it. */
-  def compute(code: Array[Byte], m: Sq8Model, q: Array[Double]): Double = {
+/** An [[Sq8Model]] bound to one full-precision query: the
+  * [[Sq8Cosine]] kernel owner. */
+final case class Sq8Query(model: Sq8Model, query: Array[Double]) {
+
+  /** Asymmetric cosine of a code to the query; null for a code of the
+    * wrong length. */
+  def cosine(code: Array[Byte]): java.lang.Double = {
+    if (code.length != model.dim) return null
     var dot = 0.0; var na = 0.0; var nb = 0.0
     var i = 0
     while (i < code.length) {
-      val x = m.mins(i) + (code(i) & 0xff).toDouble * m.scales(i)
-      dot += x * q(i); na += x * x; nb += q(i) * q(i)
+      val x = model.mins(i) + (code(i) & 0xff).toDouble * model.scales(i)
+      dot += x * query(i); na += x * x; nb += query(i) * query(i)
       i += 1
     }
     if (na == 0.0 || nb == 0.0) 0.0 else dot / (math.sqrt(na) * math.sqrt(nb))
   }
+}
+
+/** `sq8_cosine(code)` under a [[Sq8Model]] and a full-precision query
+  * → DOUBLE asymmetric cosine (query exact, corpus dequantized) —
+  * the ADC evaluation of the SQ family. Null/short code → null. */
+case class Sq8Cosine(child: Expression, model: Sq8Model, query: Array[Double])
+    extends KernelExpression {
+  require(query.length == model.dim, "query dimension mismatch")
+
+  override def dataType: DataType = DoubleType
+  override def nullable: Boolean = true
+  override def prettyName: String = "sq8_cosine"
+
+  @transient private lazy val scorer = Sq8Query(model, query)
+  override def kernel: Kernel = Kernel(scorer, "cosine")
+
+  override protected def withNewChildInternal(c: Expression): Expression =
+    copy(child = c)
 }

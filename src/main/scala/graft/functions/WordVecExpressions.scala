@@ -5,7 +5,7 @@ import java.util.regex.Pattern
 
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
@@ -135,7 +135,7 @@ case class TokenWindowPairs(child: Expression, window: Int)
     ArrayType(StringType, containsNull = false)
   override def prettyName: String = "token_window_pairs"
   // the kernel takes `ArrayData`, which does not name its element type
-  override def inputTypes: Seq[DataType] = Seq(ArrayType(StringType))
+  override def inputTypes: Seq[Seq[DataType]] = Seq(Seq(ArrayType(StringType)))
   override def kernel: Kernel = Kernel(TokenWindowPairs, "compute", window)
 
   override protected def withNewChildInternal(c: Expression): Expression =
@@ -300,33 +300,13 @@ case class WordVecModelRef(vocab: Seq[(String, Array[Float])]) {
   * mapPartitions seam ([[graft.TextEncoder.encodeColumn]] with the
   * same model) and to the driver-side `similar('text')` encode. */
 case class WordVecEmbed(child: Expression, model: WordVecModelRef)
-    extends UnaryExpression {
+    extends KernelExpression {
 
   override def dataType: DataType =
     ArrayType(FloatType, containsNull = false)
   override def nullable: Boolean = true
   override def prettyName: String = "wordvec_embed"
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires string, got ${other.simpleString}")
-  }
-
-  override def nullSafeEval(input: Any): Any =
-    model.encode(input.asInstanceOf[UTF8String])
-
-  override def doGenCode(
-      ctx: org.apache.spark.sql.catalyst.expressions.codegen.CodegenContext,
-      ev: org.apache.spark.sql.catalyst.expressions.codegen.ExprCode)
-      : org.apache.spark.sql.catalyst.expressions.codegen.ExprCode = {
-    val ref = ctx.addReferenceObj("wordVecModel", model,
-      classOf[WordVecModelRef].getName)
-    nullSafeCodeGen(ctx, ev, c => s"""
-      ${ev.value} = $ref.encode($c);
-      ${ev.isNull} = (${ev.value} == null);
-    """)
-  }
+  override def kernel: Kernel = Kernel(model, "encode")
 
   override protected def withNewChildInternal(c: Expression): Expression =
     copy(child = c)

@@ -1,7 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.types._
 
 /** `z_value(x, y)` → BIGINT: Morton (Z-order) interleave of the low
@@ -20,34 +20,19 @@ import org.apache.spark.sql.types._
   * (the dirty-input contract: out-of-domain rows drop out of the
   * layout rather than folding into wrong buckets). */
 case class ZValue(left: Expression, right: Expression)
-    extends BinaryExpression {
+    extends BinaryKernelExpression {
 
   override def dataType: DataType = LongType
   override def nullable: Boolean = true
   override def prettyName: String = "z_value"
+  // an int input widens to the kernel's long on both paths
+  override def inputTypes: Seq[Seq[DataType]] =
+    Seq.fill(2)(Seq(LongType, IntegerType))
   override def checkInputDataTypes(): TypeCheckResult =
-    (left.dataType, right.dataType) match {
-      case (LongType, LongType) | (IntegerType, LongType) |
-           (LongType, IntegerType) | (IntegerType, IntegerType) =>
-        TypeCheckResult.TypeCheckSuccess
-      case other => TypeCheckResult.TypeCheckFailure(
-        s"$prettyName requires integral inputs, got $other")
-    }
-
-  override def nullSafeEval(a: Any, b: Any): Any = {
-    val x = a match { case i: Int => i.toLong; case l: Long => l }
-    val y = b match { case i: Int => i.toLong; case l: Long => l }
-    ZValue.interleave(x, y)
-  }
-
-  override def doGenCode(
-      ctx: org.apache.spark.sql.catalyst.expressions.codegen.CodegenContext,
-      ev: org.apache.spark.sql.catalyst.expressions.codegen.ExprCode)
-      : org.apache.spark.sql.catalyst.expressions.codegen.ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => s"""
-      Object zr = graft.functions.ZValue$$.MODULE$$.interleave((long) $a, (long) $b);
-      ${ev.isNull} = zr == null;
-      if (!${ev.isNull}) ${ev.value} = ((Long) zr).longValue();""")
+    if (super.checkInputDataTypes().isSuccess) TypeCheckResult.TypeCheckSuccess
+    else TypeCheckResult.TypeCheckFailure(s"$prettyName requires integral " +
+      s"inputs, got ${(left.dataType, right.dataType)}")
+  override def kernel: Kernel = Kernel(ZValue, "interleave")
 
   override protected def withNewChildrenInternal(
       l: Expression, r: Expression): Expression = copy(left = l, right = r)

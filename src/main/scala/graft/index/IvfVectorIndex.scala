@@ -318,13 +318,6 @@ class IvfVectorIndex private (
     // competitive Lloyd: assign candidates against frozen ∪ new, then
     // recompute ONLY the new cells from the rows they won — one
     // codegen'd map + one add-row aggregate per round
-    val dim = model.dim
-    def normalize(v: Array[Double]): Array[Float] = {
-      var s = 0.0; var i = 0
-      while (i < dim) { s += v(i) * v(i); i += 1 }
-      val n = if (s > 0) math.sqrt(s) else 1.0
-      Array.tabulate(dim)(i => (v(i) / n).toFloat)
-    }
     var newC: Array[Array[Float]] = newSeeds.toArray
     var it = 0
     while (it < iters) {
@@ -336,7 +329,7 @@ class IvfVectorIndex private (
         .collect()
         .map(r => r.getInt(0) -> r.getSeq[Double](1).toArray).toMap
       newC = Array.tabulate(add) { i =>
-        won.get(k0 + i).map(normalize).getOrElse(newC(i))
+        won.get(k0 + i).map(Ivf.normalize).getOrElse(newC(i))
       }
       it += 1
     }

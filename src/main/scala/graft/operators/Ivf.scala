@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-import graft.functions.NearestCentroid
+import graft.functions.{CentroidBook, NearestCentroid}
 
 /** IVF (inverted-file) approximate nearest neighbor — the k-means twin
   * of [[AnnLsh]]'s hyperplane bucketing, and the second scale path the
@@ -32,22 +32,13 @@ object Ivf {
     require(centroids.nonEmpty)
     val dim: Int = centroids(0).length
 
-    private def cosine(a: Array[Float], b: Array[Float]): Double = {
-      var dot = 0.0; var na = 0.0; var nb = 0.0
-      var i = 0
-      while (i < a.length) {
-        dot += a(i).toDouble * b(i); na += a(i).toDouble * a(i)
-        nb += b(i).toDouble * b(i); i += 1
-      }
-      if (na == 0.0 || nb == 0.0) 0.0 else dot / (math.sqrt(na) * math.sqrt(nb))
-    }
+    // the row kernels' scoring loop: a query probes exactly the cells
+    // its own row would be assigned to
+    @transient private lazy val book = CentroidBook(centroids)
 
     /** The `n` centroid ids nearest to `v` (cosine desc, ties by id). */
     def nearest(v: Array[Float], n: Int = 1): Seq[Int] =
-      centroids.indices
-        .map(c => (cosine(v, centroids(c)), c))
-        .sortBy { case (s, c) => (-s, c) }
-        .take(n).map(_._2)
+      book.ranked(v, n, _ => true)
 
     /** [[nearest]] restricted to `allowed` cells — the query-time
       * DEAD-CELL skip (r17): under sustained drift maintenance a cell
@@ -57,11 +48,19 @@ object Ivf {
       * the same nprobe. */
     def nearestAmong(
         v: Array[Float], n: Int, allowed: Int => Boolean): Seq[Int] =
-      centroids.indices
-        .filter(allowed)
-        .map(c => (cosine(v, centroids(c)), c))
-        .sortBy { case (s, c) => (-s, c) }
-        .take(n).map(_._2)
+      book.ranked(v, n, allowed)
+  }
+
+  /** `v` scaled to unit L2 norm (a zero vector stays zero): the
+    * spherical k-means centroid update of every IVF trainer. */
+  private[graft] def normalize(v: Array[Double]): Array[Float] = {
+    var s = 0.0; var i = 0
+    while (i < v.length) { s += v(i) * v(i); i += 1 }
+    val n = if (s > 0) math.sqrt(s) else 1.0
+    val out = new Array[Float](v.length)
+    i = 0
+    while (i < v.length) { out(i) = (v(i) / n).toFloat; i += 1 }
+    out
   }
 
   /** Train a k-cluster spherical-k-means codebook on the first
@@ -79,16 +78,6 @@ object Ivf {
     require(sample.length >= k,
       s"ivf train: need at least k=$k sample vectors, got ${sample.length}")
     val dim = sample(0).length
-
-    def normalize(v: Array[Double]): Array[Float] = {
-      var s = 0.0; var i = 0
-      while (i < dim) { s += v(i) * v(i); i += 1 }
-      val n = if (s > 0) math.sqrt(s) else 1.0
-      val out = new Array[Float](dim)
-      i = 0
-      while (i < dim) { out(i) = (v(i) / n).toFloat; i += 1 }
-      out
-    }
 
     // evenly-spaced seeds: spread across the sample, deterministic
     var model = Model(Array.tabulate(k) { c =>
@@ -188,13 +177,6 @@ object Ivf {
         .collect().map(_.getSeq[Float](0).toArray))
     require(seedSample.length >= k,
       s"ivf trainDistributed: need at least k=$k seed vectors, got ${seedSample.length}")
-    val dim = seedSample(0).length
-    def normalize(v: Array[Double]): Array[Float] = {
-      var s = 0.0; var i = 0
-      while (i < dim) { s += v(i) * v(i); i += 1 }
-      val n = if (s > 0) math.sqrt(s) else 1.0
-      Array.tabulate(dim)(i => (v(i) / n).toFloat)
-    }
     var model = Model(Array.tabulate(k) { c =>
       normalize(seedSample((c.toLong * seedSample.length / k).toInt)
         .map(_.toDouble))

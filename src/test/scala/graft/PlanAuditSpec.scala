@@ -1035,4 +1035,47 @@ class PlanAuditSpec extends SparkTestBase {
     assert(!plan.contains("SerializeFromObject") &&
       !plan.contains("MapPartitions"), plan)
   }
+  test("dedup_batch and index_churn kernels run inside WholeStageCodegen: " +
+    "the TextDedup.shingles, MinHashLsh.signatures and Ivf.assign " +
+    "projections each sit in a codegen stage") {
+    import org.apache.spark.sql.execution.{InputAdapter, ProjectExec, SparkPlan, WholeStageCodegenExec}
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import spark.implicits._
+    import graft.functions.{MinHashSignature, NearestCentroid, NgramShingles}
+    import graft.operators.{Ivf, MinHashLsh, TextDedup}
+    // every node of the final plan, through AQE's query stages
+    def nodes(p: SparkPlan): Seq[SparkPlan] = p match {
+      case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
+      case q: QueryStageExec => q +: nodes(q.plan)
+      case _ => p +: p.children.flatMap(nodes)
+    }
+    // the nodes one codegen stage compiles (its inputs are adapters)
+    def stage(p: SparkPlan): Seq[SparkPlan] = p match {
+      case _: InputAdapter => Nil
+      case _ => p +: p.children.flatMap(stage)
+    }
+    def projects(p: SparkPlan, cls: Class[_]): Boolean = p match {
+      case pr: ProjectExec => pr.projectList.exists(_.exists(_.getClass == cls))
+      case _ => false
+    }
+    val docs = Seq((1L, "a b c d"), (2L, "a b c e")).toDF("id", "text")
+    // a range, not a local Seq: a local relation folds the projection away
+    val vecs = spark.range(4).select(col("id"),
+      array(col("id").cast("float"), lit(1f)).as("vec"))
+    val model = Ivf.Model(Array(Array(1f, 0f), Array(0f, 1f)))
+    for ((df, cls) <- Seq(
+        TextDedup.shingles(docs, "id", "text", 2) -> classOf[NgramShingles],
+        MinHashLsh.signatures(docs, "id", "text", 2, 8) ->
+          classOf[MinHashSignature],
+        Ivf.assign(vecs, "vec", model) -> classOf[NearestCentroid])) {
+      df.collect()
+      val all = nodes(df.queryExecution.executedPlan)
+      assert(all.exists(projects(_, cls)), all.mkString("\n"))
+      val staged = all.collect { case w: WholeStageCodegenExec => w }
+        .flatMap(w => stage(w.child))
+      assert(staged.exists(projects(_, cls)),
+        s"${cls.getSimpleName} projection outside codegen:\n" +
+          df.queryExecution.executedPlan)
+    }
+  }
 }
