@@ -60,6 +60,22 @@ object BatchLedger {
       streamId: String): Set[Long] =
     rows(spark, listParts(spark, streamDir(storePath, streamId))).map(_._2)
 
+  /** Every row of the store's ledger, all streams, as (stream_id,
+    * batch_id, stream) — the columns a parquet read of `_batches`
+    * discovers (`stream` is the per-stream directory value), read on the
+    * driver with no Spark job. */
+  def all(spark: SparkSession,
+      storePath: String): Seq[(String, Long, String)] = {
+    val root = new org.apache.hadoop.fs.Path(s"$storePath/_batches")
+    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (!fs.exists(root)) Seq.empty
+    else fs.listStatus(root).toSeq.filter(_.isDirectory).flatMap { d =>
+      val stream = d.getPath.getName.stripPrefix("stream=")
+      graft.index.DriverParquet.read(spark, listParts(spark, d.getPath.toString))
+        .map(g => (g.getString("stream_id", 0), g.getLong("batch_id", 0), stream))
+    }
+  }
+
   /** The distinct (stream_id, batch_id) rows of `parts`, read on the
     * driver ([[graft.index.DriverParquet]]: no Spark job per batch). */
   private def rows(spark: SparkSession,

@@ -127,7 +127,8 @@ object StreamParity {
       outPath, Threshold, streamId = checkpoint)
 
     val sink = spark.read.parquet(outPath)
-    val ledger = spark.read.parquet(s"$indexPath/_batches")
+    val ledger = spark.createDataFrame(BatchLedger.all(spark, indexPath))
+      .toDF("stream_id", "batch_id", "stream")
     val delivered =
       BatchLedger.delivered(spark, indexPath, checkpoint).size.toLong
     Run(sink, ledger, delivered)

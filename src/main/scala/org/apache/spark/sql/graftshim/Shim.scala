@@ -30,6 +30,25 @@ object Shim {
   def waitUntilEmpty(spark: SparkSession): Unit =
     spark.sparkContext.listenerBus.waitUntilEmpty()
 
+  /** `checkpoint` (a `localCheckpoint` result: one `LogicalRDD`) with its
+    * plan statistics set from a measured row count. A checkpoint carries
+    * the size ESTIMATE of the plan that computed it (a join's estimate is
+    * the product of its inputs'), so without this a join against a small
+    * materialized table can be planned as a shuffle of the other side. */
+  def withRowCount(checkpoint: DataFrame, rows: Long): DataFrame = {
+    val session = checkpoint.sparkSession.asInstanceOf[classic.SparkSession]
+    checkpoint.queryExecution.logical match {
+      case r: execution.LogicalRDD =>
+        val bytes = catalyst.plans.logical.statsEstimation.EstimationUtils
+          .getSizePerRow(r.output) * rows
+        classic.Dataset.ofRows(session, execution.LogicalRDD(r.output, r.rdd,
+            r.outputPartitioning, r.outputOrdering, r.isStreaming)(session,
+          Some(catalyst.plans.logical.Statistics(bytes, Some(BigInt(rows))))))
+      case p => throw new IllegalArgumentException(
+        s"withRowCount expects a checkpoint, got ${p.nodeName}")
+    }
+  }
+
   /** Register a native expression builder under `name` (idempotent and
     * silent: re-registering an already-present function would log a
     * "replaced a temporary function" warning per call, which pollutes
