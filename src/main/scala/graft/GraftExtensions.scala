@@ -72,6 +72,8 @@ object GraftExtensions {
       MinHashSignature(es(0), intLit(es(1), "minhash_signature"))),
     "simhash64" -> (es => SimHash64(es.head)),
     "ngram_shingles" -> (es => NgramShingles(es(0), intLit(es(1), "ngram_shingles"))),
+    "shingle_hashes" -> (es => ShingleHashes(es(0), intLit(es(1), "shingle_hashes"))),
+    "band_keys" -> (es => BandKeys(es(0), intLit(es(1), "band_keys"))),
     "token_bigrams" -> (es => TokenBigrams(es.head)),
     "normalize_text" -> (es => NormalizeText(es.head)),
     "html_text" -> (es => HtmlText(es.head)),

@@ -1,9 +1,9 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnsafeArrayData, XXH64}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.catalyst.expressions.XXH64
 import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.Platform
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Native hashing kernels for the dedup operators.
@@ -131,6 +131,82 @@ object NgramShingles {
   }
 }
 
+/** shingle_hashes(text, n) -> array<bigint>: the XXH64 (seed 42) of
+  * each distinct [[NgramShingles]] shingle, in its first-occurrence
+  * order — `transform(ngram_shingles(text, n), s -> xxhash64(s))`
+  * without building a string. Tokens split on the byte 0x20 with empty
+  * tokens kept (`NgramShingles`' `split(" ", -1)`), so the shingle of
+  * tokens i..i+n-1 is the byte range from token i's start to token
+  * i+n-1's end, hashed in place. Distinct by hash: two distinct
+  * shingles of one text that collide in 64 bits count once.
+  * Fewer than n tokens → null. */
+case class ShingleHashes(child: Expression, n: Int)
+    extends KernelExpression {
+  require(n >= 1)
+
+  override def dataType: DataType = ArrayType(LongType, containsNull = false)
+  override def prettyName: String = "shingle_hashes"
+  // returns null for sub-threshold inputs even when the child is
+  // non-nullable
+  override def nullable: Boolean = true
+  override def kernel: Kernel = Kernel(ShingleHashes, "compute", n)
+
+  override protected def withNewChildInternal(c: Expression): Expression =
+    copy(child = c)
+}
+
+object ShingleHashes {
+
+  /** The kernel; public so generated code can call it. */
+  def compute(text: UTF8String, n: Int): ArrayData = {
+    val base = text.getBaseObject
+    val off = text.getBaseOffset
+    val len = text.numBytes
+    var spaces = 0
+    var p = 0
+    while (p < len) {
+      if (Platform.getByte(base, off + p) == ' ') spaces += 1
+      p += 1
+    }
+    val tokens = spaces + 1
+    if (tokens < n) return null
+    // token t is the byte range [cut(t) + 1, cut(t + 1))
+    val cut = new Array[Int](tokens + 1)
+    cut(0) = -1
+    cut(tokens) = len
+    var t = 1
+    p = 0
+    while (t < tokens) {
+      if (Platform.getByte(base, off + p) == ' ') { cut(t) = p; t += 1 }
+      p += 1
+    }
+    val shingles = tokens - n + 1
+    // distinct hashes, first occurrence first: an open-addressing set
+    // over primitive longs at load ≤ 1/2
+    val mask = Integer.highestOneBit(shingles * 2) * 2 - 1
+    val slots = new Array[Long](mask + 1)
+    val used = new Array[Boolean](mask + 1)
+    val out = new Array[Long](shingles)
+    var m = 0
+    var i = 0
+    while (i < shingles) {
+      val from = cut(i) + 1
+      val h = XXH64.hashUnsafeBytes(base, off + from, cut(i + n) - from, 42L)
+      var s = (h ^ (h >>> 32)).toInt & mask
+      while (used(s) && slots(s) != h) s = (s + 1) & mask
+      if (!used(s)) {
+        used(s) = true
+        slots(s) = h
+        out(m) = h
+        m += 1
+      }
+      i += 1
+    }
+    UnsafeArrayData.fromPrimitiveArray(
+      if (m == shingles) out else java.util.Arrays.copyOf(out, m))
+  }
+}
+
 /** hash_embed(text, dim) -> array<float>: L2-normalized hashed
   * bag-of-words embedding (HashingTF-style) — token t increments slot
   * `xxhash64(t) mod dim`. One pass, tight loop; model-free stand-in
@@ -181,19 +257,24 @@ object HashEmbed {
 /** The k-member MinHash family of [[MinHashSignature]]: its per-member
   * mixing constants, derived once per (deserialized) expression. */
 final case class MinHashFamily(numHashes: Int) {
-  @transient private lazy val (consA, consB) = HashMix.constants(numHashes)
+  @transient private lazy val constants = HashMix.constants(numHashes)
 
-  /** The signature of a shingle array; null for an empty array. */
-  def signature(arr: ArrayData): GenericArrayData = {
+  /** The signature of a shingle array — strings when `hashed` is 0,
+    * their XXH64 hashes when 1; null for an empty array. */
+  def signature(arr: ArrayData, hashed: Int): ArrayData = {
     val n = arr.numElements()
     if (n == 0) return null
-    val mins = Array.fill(numHashes)(Long.MaxValue)
+    val (consA, consB) = constants
+    val k = numHashes
+    val mins = Array.fill(k)(Long.MaxValue)
     var i = 0
     while (i < n) {
       if (!arr.isNullAt(i)) {
-        val h = HashMix.hashUtf8(arr.getUTF8String(i))
+        val h =
+          if (hashed == 1) arr.getLong(i)
+          else HashMix.hashUtf8(arr.getUTF8String(i))
         var j = 0
-        while (j < numHashes) {
+        while (j < k) {
           val v = h * consA(j) + consB(j)
           if (v < mins(j)) mins(j) = v
           j += 1
@@ -201,13 +282,15 @@ final case class MinHashFamily(numHashes: Int) {
       }
       i += 1
     }
-    new GenericArrayData(mins)
+    UnsafeArrayData.fromPrimitiveArray(mins)
   }
 }
 
-/** minhash_signature(shingles array<string>, k) -> array<bigint>:
-  * the k-position MinHash signature. Null shingle elements are skipped;
-  * an empty/null array yields null. */
+/** minhash_signature(shingles, k) -> array<bigint>: the k-position
+  * MinHash signature of an `array<string>` of shingles, or of their
+  * XXH64 hashes as an `array<bigint>` ([[ShingleHashes]]) — the same
+  * signature either way. Null elements are skipped; an empty/null
+  * array yields null. */
 case class MinHashSignature(child: Expression, numHashes: Int)
     extends KernelExpression {
   require(numHashes > 0)
@@ -217,13 +300,59 @@ case class MinHashSignature(child: Expression, numHashes: Int)
   // returns null for sub-threshold/empty inputs even when the
   // child is non-nullable
   override def nullable: Boolean = true
-  override def inputTypes: Seq[Seq[DataType]] = Seq(Seq(ArrayType(StringType)))
+  override def inputTypes: Seq[Seq[DataType]] =
+    Seq(Seq(ArrayType(StringType), ArrayType(LongType)))
 
   @transient private lazy val family = MinHashFamily(numHashes)
-  override def kernel: Kernel = Kernel(family, "signature")
+  override def kernel: Kernel = Kernel(family, "signature",
+    child.dataType match {
+      case ArrayType(LongType, _) => 1
+      case _ => 0
+    })
 
   override protected def withNewChildInternal(c: Expression): Expression =
     copy(child = c)
+}
+
+/** band_keys(sig array<bigint>, bands) -> array<bigint>: one 64-bit key
+  * per LSH band of a MinHash signature. With r = size(sig) div bands,
+  * key b folds `h = XXH64.hashLong(sig[j], h)` from h = 42 over
+  * j ∈ [b·r, b·r + r) — bit-identical to Spark's
+  * `xxhash64(slice(sig, b * r + 1, r))`, without the interpreted
+  * `transform(sequence(…))` lambda. Null elements are skipped, as
+  * `xxhash64` skips them. */
+case class BandKeys(child: Expression, bands: Int) extends KernelExpression {
+  require(bands >= 1)
+
+  override def dataType: DataType = ArrayType(LongType, containsNull = false)
+  override def prettyName: String = "band_keys"
+  override def inputTypes: Seq[Seq[DataType]] = Seq(Seq(ArrayType(LongType)))
+  override def kernel: Kernel = Kernel(BandKeys, "compute", bands)
+
+  override protected def withNewChildInternal(c: Expression): Expression =
+    copy(child = c)
+}
+
+object BandKeys {
+
+  /** The kernel; public so generated code can call it. */
+  def compute(sig: ArrayData, bands: Int): ArrayData = {
+    val r = sig.numElements() / bands
+    val keys = new Array[Long](bands)
+    var b = 0
+    while (b < bands) {
+      var h = 42L
+      var j = b * r
+      val end = j + r
+      while (j < end) {
+        if (!sig.isNullAt(j)) h = XXH64.hashLong(sig.getLong(j), h)
+        j += 1
+      }
+      keys(b) = h
+      b += 1
+    }
+    UnsafeArrayData.fromPrimitiveArray(keys)
+  }
 }
 
 /** simhash64(tokens array<string>) -> bigint: Charikar fingerprint —

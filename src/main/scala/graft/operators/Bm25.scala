@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.index.RangeLedger
+import graft.index.{DriverParquet, RangeLedger}
 
 /** BM25 keyword relevance — the lexical half of a txtai-family hybrid
   * engine (the reference family's `scoring="bm25"` / hybrid search
@@ -756,8 +756,17 @@ class Bm25Index private (
     this
   }
 
-  /** The [[writeMeta]] store (throws if never written). */
-  def meta: DataFrame = spark.read.parquet(s"$path/_meta")
+  /** The [[writeMeta]] store (throws if never written). Read by its
+    * part files with the schema of the first one's footer
+    * ([[graft.index.DriverParquet.reader]]): no schema-inference job,
+    * and no directory read that Spark would skip as hidden (`_meta`). */
+  def meta: DataFrame = {
+    val dir = new org.apache.hadoop.fs.Path(path, "_meta")
+    val files = DriverParquet.dataFiles(dir.getFileSystem(
+      spark.sparkContext.hadoopConfiguration).listStatus(dir))
+    DriverParquet.reader(spark, files.headOption)
+      .parquet(files.map(_.toString): _*)
+  }
 
   /** Index-routed faceted search — [[Bm25.facets]]' Aggregate-over-
     * search (Weaviate's filtered `Aggregate`, api.http:26-57) without

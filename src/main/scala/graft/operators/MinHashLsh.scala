@@ -1,67 +1,84 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftshim.Shim
+
+import graft.functions.{BandKeys, MinHashSignature}
 
 /** MinHash + banded LSH near-duplicate detection — the scale path for
   * n-gram Jaccard dedup when even the inverted-index join is too wide.
   *
   * Work per document is bounded by the signature size (numHashes), not
   * the document length × corpus overlap, and candidate generation is a
-  * hash-partitioned self-join on (band index, band signature) — no
-  * all-pairs stage anywhere. Candidates are then verified with the exact
+  * hash-partitioned self-join on (band index, band key) — no all-pairs
+  * stage anywhere. Candidates are then verified with the exact
   * Jaccard, so false positives never escape; false-negative probability
   * for a pair with true Jaccard j is (1 - j^r)^b (standard LSH bound —
   * e.g. r=4, b=16: j=0.8 → 0.1%, j=0.9 → ~0).
   *
-  * Hash family: `xxhash64(shingle, i)` for i in [0, numHashes) — Spark's
-  * codegen'd 64-bit hash seeded per-position via the extra column.
+  * Shingles travel as their 64-bit XXH64 hashes
+  * ([[TextDedup.hashedShingles]]), computed once from the text's bytes:
+  * the signature mixes them into the k family members
+  * ([[graft.functions.MinHashSignature]]), and verification intersects
+  * the hash arrays. Signatures and band keys are bit-identical to the
+  * string path's, so the candidate set is too; the verified Jaccard
+  * over hashes equals the one over strings unless two distinct
+  * shingles of one pair collide in 64 bits (about |A∪B|²/2⁶⁴, ~10⁻¹⁵
+  * for 100-shingle documents) — the trade [[TextDedup.ngramJaccardPairs]]
+  * and [[ShingleIndex]] already make with `xxhash64` keys.
+  * `MinHashLshHashSpec` pins the kernels to the string formulas and the
+  * pairs to a string-verified reference.
   */
 object MinHashLsh {
 
+  private def signature(sh: Column, numHashes: Int): Column =
+    Shim.column(MinHashSignature(Shim.expression(sh), numHashes))
+
+  private def bandKeys(sig: Column, bands: Int): Column =
+    Shim.column(BandKeys(Shim.expression(sig), bands))
+
   /** MinHash signatures: (id, sig array<bigint> of length numHashes).
-    * One native-expression pass: each shingle is hashed once and the k
-    * family members derive by multiply-add mixing
-    * ([[graft.functions.MinHashSignature]]). */
+    * One native-expression pass: each shingle is hashed once from the
+    * text's bytes and the k family members derive by multiply-add
+    * mixing. */
   def signatures(
       docs: DataFrame,
       idCol: String,
       textCol: String,
       n: Int = 3,
       numHashes: Int = 64): DataFrame =
-    // no sig-null filter (r17 optimization round): shingles() now
+    // no sig-null filter (r17 optimization round): hashedShingles()
     // guarantees sh non-null and non-empty, which is exactly
     // MinHashSignature's null domain — the old filter re-evaluated
     // the signature below its own projection once Catalyst pushed
     // the aliased predicate down
-    TextDedup.shingles(docs, idCol, textCol, n)
-      .select(col("id"), org.apache.spark.sql.graftshim.Shim.column(
-        graft.functions.MinHashSignature(
-          org.apache.spark.sql.graftshim.Shim.expression(col("sh")),
-          numHashes)).as("sig"))
+    TextDedup.hashedShingles(docs, idCol, textCol, n)
+      .select(col("id"), signature(col("sh"), numHashes).as("sig"))
 
   /** Candidate pairs from banded LSH: any pair agreeing on at least one
     * full band of the signature. rows = numHashes / bands. The band
-    * content is collapsed to one 64-bit key (`xxhash64` over the band
-    * slice) so the self-join is a plain long-keyed hash join instead of
-    * an array-equality sort-merge; a hash collision can only ADD a
-    * candidate, and the exact verify step removes false positives. */
-  def candidatePairs(signatures: DataFrame, bands: Int): DataFrame = {
-    val bandKeys = expr(
-      s"transform(sequence(0, ${bands - 1}), b -> " +
-        s"xxhash64(slice(sig, b * (size(sig) div $bands) + 1, size(sig) div $bands)))")
-    // materialized (r17 optimization round): the self-join consumes
-    // banded TWICE, and without the checkpoint each side re-executed
-    // the whole upstream subtree (for a raw-docs caller that was the
-    // corpus scan + shingle + signature pass, twice — plan-verified).
-    // The materialization is (id, band, band_sig) — three fixed-width
-    // columns, numHashes/rows-per-band rows per doc, far narrower
+    * content is collapsed to one 64-bit key
+    * ([[graft.functions.BandKeys]]) so the self-join is a plain
+    * long-keyed hash join instead of an array-equality sort-merge; a
+    * hash collision can only ADD a candidate, and the exact verify step
+    * removes false positives. */
+  def candidatePairs(signatures: DataFrame, bands: Int): DataFrame =
+    // materialized (r17 optimization round): the self-join consumes the
+    // keys TWICE, and without the checkpoint each side re-executed the
+    // whole upstream subtree (for a raw-docs caller that was the corpus
+    // scan + shingle + signature pass, twice — plan-verified). The
+    // materialization is (id, keys): bands longs per doc, far narrower
     // than the pass it saves.
-    val banded = signatures
-      .select(col("id"), posexplode(bandKeys))
-      .withColumnRenamed("pos", "band")
-      .withColumnRenamed("col", "band_sig")
-      .localCheckpoint()
+    bandPairs(signatures
+      .select(col("id"), bandKeys(col("sig"), bands).as("keys"))
+      .localCheckpoint())
+
+  /** The (id_a < id_b) pairs sharing a band key, over materialized
+    * (id, keys) rows. */
+  private def bandPairs(keyed: DataFrame): DataFrame = {
+    val banded = keyed
+      .select(col("id"), posexplode(col("keys")).as(Seq("band", "band_sig")))
     val a = banded.select(col("band"), col("band_sig"), col("id").as("id_a"))
     val b = banded.select(col("band"), col("band_sig"), col("id").as("id_b"))
     a.join(b, Seq("band", "band_sig"))
@@ -80,25 +97,20 @@ object MinHashLsh {
       numHashes: Int = 64,
       bands: Int = 16,
       threshold: Double = 0.5): DataFrame = {
-    // ONE shingle pass, materialized (r17 optimization round): the
-    // signature branch and BOTH verify joins consume sh, and the old
-    // repartition-and-hope-for-ReuseExchange shape still re-scanned
-    // the corpus once per subtree in the captured plan (4 parquet
-    // scans, each with the shingle expression in a pushed-down null
-    // filter). The checkpoint sits ABOVE the id-keyed repartition, so
-    // the materialized RDD keeps hashpartitioning(id) and the verify
-    // joins attach to it without re-exchanging the shingle arrays.
-    // No sig-null filter: shingles() guarantees sh non-null/non-empty.
-    val sh = TextDedup.shingles(docs, idCol, textCol, n)
-      .select(col("id"), col("sh"), col("nsh"))
+    // ONE shingle pass, ONE materialization: (id, sh, nsh, keys). The
+    // band self-join and BOTH verify joins read it (the old
+    // repartition-and-hope-for-ReuseExchange shape re-scanned the
+    // corpus once per subtree). The checkpoint sits ABOVE the id-keyed
+    // repartition, so the materialized RDD keeps hashpartitioning(id)
+    // and the verify joins attach to it without re-exchanging the
+    // shingle hashes; the band keys are computed after that exchange,
+    // so it does not carry them. No sig-null filter: hashedShingles()
+    // guarantees sh non-null/non-empty.
+    val sh = TextDedup.hashedShingles(docs, idCol, textCol, n)
       .repartition(col("id"))
+      .withColumn("keys", bandKeys(signature(col("sh"), numHashes), bands))
       .localCheckpoint()
-    val sigs = sh.select(col("id"), org.apache.spark.sql.graftshim.Shim.column(
-      graft.functions.MinHashSignature(
-        org.apache.spark.sql.graftshim.Shim.expression(col("sh")),
-        numHashes)).as("sig"))
-    val cands = candidatePairs(sigs, bands)
-    cands
+    bandPairs(sh.select(col("id"), col("keys")))
       .join(sh.select(col("id").as("id_a"), col("sh").as("sha"),
         col("nsh").as("nsh_a")), Seq("id_a"))
       .join(sh.select(col("id").as("id_b"), col("sh").as("shb"),

@@ -1,7 +1,9 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftshim.Shim
 
 /** Text near-duplicate detection operators for LLM-data pipelines.
   *
@@ -13,7 +15,23 @@ import org.apache.spark.sql.functions._
 object TextDedup {
 
   /** Distinct word n-gram shingles per document:
-    * (id, sh array<string>, nsh).
+    * (id, sh array<string>, nsh). */
+  def shingles(
+      docs: DataFrame, idCol: String, textCol: String, n: Int): DataFrame =
+    shingled(docs, idCol, textCol, graft.functions.NgramShingles(_, n), n)
+
+  /** [[shingles]] as their 64-bit XXH64 hashes: (id, sh array<bigint>,
+    * nsh), element for element `xxhash64` of [[shingles]]' strings
+    * ([[graft.functions.ShingleHashes]]: each shingle hashed in place
+    * from the text's bytes, no string built). `nsh` counts distinct
+    * hashes, which equals the distinct shingle count unless two
+    * shingles of one document collide in 64 bits. */
+  private[graft] def hashedShingles(
+      docs: DataFrame, idCol: String, textCol: String, n: Int): DataFrame =
+    shingled(docs, idCol, textCol, graft.functions.ShingleHashes(_, n), n)
+
+  /** (id, sh = `kernel(text)`, nsh = size(sh)) over the rows with at
+    * least n tokens — the one pre-filter of every shingle kernel.
     *
     * Repartitions to the session default parallelism ONLY when the
     * source has fewer partitions: shingle consumers are compute-heavy
@@ -23,33 +41,34 @@ object TextDedup {
     * (at 100 TB that shuffle would dominate the job). The partition
     * count probe converts the plan to an RDD lineage (no job runs);
     * that one-time planning cost buys skipping the shuffle entirely. */
-  def shingles(
-      docs: DataFrame, idCol: String, textCol: String, n: Int): DataFrame = {
+  private def shingled(docs: DataFrame, idCol: String, textCol: String,
+      kernel: Expression => Expression, n: Int): DataFrame = {
     val target = docs.sparkSession.sparkContext.defaultParallelism
     val cur = docs.rdd.getNumPartitions
+    val text = col(textCol)
     (if (cur < target) docs.repartition(target) else docs)
-      // drop sub-threshold rows with a CHEAP tokenize predicate
+      // drop sub-threshold rows with a CHEAP token-count predicate
       // instead of filtering on the computed shingle column (r17
-      // optimization round): `sh IS NOT NULL` referenced the
-      // NgramShingles projection, so Catalyst substituted the alias
-      // and pushed `isnotnull(ngram_shingles(text))` below the
-      // repartition INTO THE SCAN — the full shingle computation ran
-      // once in the (narrow, often single-task) scan stage just to
-      // test for null, then again in the post-shuffle projection
-      // (plan-verified: the old Filter(2) at the scan carried
-      // ngram_shingles). NgramShingles is null exactly when the text
-      // is null or has fewer than n tokens (HashingExpressions.scala),
-      // so this predicate keeps the identical row set while the scan
-      // stage only splits, never shingles. NgramShingles also never
-      // returns an EMPTY array (>= n tokens yields >= 1 shingle), so
-      // downstream consumers may rely on sh non-null AND non-empty.
-      .filter(size(split(col(textCol), " ")) >= n)
+      // optimization round): `sh IS NOT NULL` referenced the kernel
+      // projection, so Catalyst substituted the alias and pushed
+      // `isnotnull(ngram_shingles(text))` below the repartition INTO
+      // THE SCAN — the full shingle computation ran once in the
+      // (narrow, often single-task) scan stage just to test for null,
+      // then again in the post-shuffle projection (plan-verified: the
+      // old Filter(2) at the scan carried ngram_shingles). Both
+      // kernels split on the single byte 0x20 keeping empty tokens,
+      // so a text has (spaces + 1) tokens, and both are null exactly
+      // when the text is null or has fewer than n tokens
+      // (HashingExpressions.scala): this predicate keeps the identical
+      // row set while the scan stage only counts spaces, never
+      // shingles. Neither kernel returns an EMPTY array (>= n tokens
+      // yields >= 1 shingle), so downstream consumers may rely on sh
+      // non-null AND non-empty.
+      .filter(octet_length(text) -
+        octet_length(replace(text, lit(" "), lit(""))) >= n - 1)
       .select(
         col(idCol).as("id"),
-        org.apache.spark.sql.graftshim.Shim.column(
-          graft.functions.NgramShingles(
-            org.apache.spark.sql.graftshim.Shim.expression(col(textCol)), n))
-          .as("sh"))
+        Shim.column(kernel(Shim.expression(text))).as("sh"))
       .withColumn("nsh", size(col("sh")))
   }
 

@@ -1041,7 +1041,7 @@ class PlanAuditSpec extends SparkTestBase {
     import org.apache.spark.sql.execution.{InputAdapter, ProjectExec, SparkPlan, WholeStageCodegenExec}
     import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
     import spark.implicits._
-    import graft.functions.{MinHashSignature, NearestCentroid, NgramShingles}
+    import graft.functions.{BandKeys, MinHashSignature, NearestCentroid, NgramShingles, ShingleHashes}
     import graft.operators.{Ivf, MinHashLsh, TextDedup}
     // every node of the final plan, through AQE's query stages
     def nodes(p: SparkPlan): Seq[SparkPlan] = p match {
@@ -1067,6 +1067,10 @@ class PlanAuditSpec extends SparkTestBase {
         TextDedup.shingles(docs, "id", "text", 2) -> classOf[NgramShingles],
         MinHashLsh.signatures(docs, "id", "text", 2, 8) ->
           classOf[MinHashSignature],
+        TextDedup.hashedShingles(docs, "id", "text", 2) ->
+          classOf[ShingleHashes],
+        MinHashLsh.signatures(docs, "id", "text", 2, 8)
+          .selectExpr("id", "band_keys(sig, 4) AS keys") -> classOf[BandKeys],
         Ivf.assign(vecs, "vec", model) -> classOf[NearestCentroid])) {
       df.collect()
       val all = nodes(df.queryExecution.executedPlan)

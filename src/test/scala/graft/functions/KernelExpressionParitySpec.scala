@@ -53,6 +53,8 @@ class KernelExpressionParitySpec extends SparkTestBase {
     classOf[RiContrib] -> (es => RiContrib(es(0), es(1), 8)),
     classOf[NgramShingles] -> (es => NgramShingles(es(0), 2)),
     classOf[MinHashSignature] -> (es => MinHashSignature(es(0), 8)),
+    classOf[ShingleHashes] -> (es => ShingleHashes(es(0), 2)),
+    classOf[BandKeys] -> (es => BandKeys(es(0), 2)),
     classOf[HashEmbed] -> (es => HashEmbed(es(0), 8)),
     classOf[EditSegments] -> (es => EditSegments(es(0), 2)),
     classOf[EditProbes] -> (es => EditProbes(es(0), 1)),
@@ -147,6 +149,10 @@ class KernelExpressionParitySpec extends SparkTestBase {
   private val tokenArrays: Seq[Any] = Seq(Seq("a", "b", "c", "d"), Seq.empty)
     .map(ts => new GenericArrayData(ts.map(UTF8String.fromString).toArray[Any]))
 
+  // shingle hashes or a signature, with a repeat, and an empty one
+  private val longArrays: Seq[Any] = Seq(Seq(1L, -5L, 7L, 1L, Long.MaxValue),
+    Seq.empty[Long]).map(xs => new GenericArrayData(xs.toArray[Any]))
+
   /** Dim-4 vectors (a zero vector among them), a dim-3 mismatch and an
     * empty one. */
   private val vectors: Seq[Seq[Double]] = Seq(Seq(1, 2, 3, 4),
@@ -186,6 +192,7 @@ class KernelExpressionParitySpec extends SparkTestBase {
     case StringType => strings
     case BinaryType => blobs
     case ArrayType(StringType, _) => tokenArrays
+    case ArrayType(LongType, _) => longArrays
     case ArrayType(FloatType, _) => floatVectors
     case ArrayType(DoubleType, _) => doubleVectors
     case other => fail(s"no samples for $other")
@@ -194,7 +201,7 @@ class KernelExpressionParitySpec extends SparkTestBase {
   private def outcome(f: => InternalRow): Try[Any] = Try(f.copy())
 
   test("the discovered set is every single-kernel function") {
-    assert(kernelClasses.size == 156,
+    assert(kernelClasses.size == 158,
       kernelClasses.map(_.getSimpleName).mkString(", "))
   }
 

@@ -1,9 +1,13 @@
 package graft.operators
 
 import java.nio.file.Files
+import java.util.concurrent.atomic.AtomicInteger
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+
+import org.apache.spark.sql.graftshim.Shim
 
 import graft.SparkTestBase
 
@@ -213,6 +217,36 @@ class Bm25Spec extends SparkTestBase {
     assert(got(10000) == want) // In(docid) fetch path
     assert(got(1) == want)     // > maxFetch → distributed-join path
     assert(want.nonEmpty)
+  }
+
+  test("the meta sidecar is read by its part files: building it submits " +
+    "no job, and its rows are the written ones") {
+    val faceted = docs.withColumn("lang",
+      when(col("doc_id") % 2 === 0, "en").otherwise("de"))
+    val dir = Files.createTempDirectory("bm25meta").toString
+    val idx = Bm25Index.build(faceted, "text", "doc_id", dir, nBuckets = 4)
+      .writeMeta(faceted, "doc_id", Seq("lang"))
+    val jobs = new AtomicInteger()
+    val counter = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = {
+        jobs.incrementAndGet(); ()
+      }
+    }
+    Shim.waitUntilEmpty(spark)
+    spark.sparkContext.addSparkListener(counter)
+    val meta =
+      try {
+        val m = idx.meta
+        m.schema
+        Shim.waitUntilEmpty(spark)
+        m
+      } finally spark.sparkContext.removeSparkListener(counter)
+    assert(jobs.get() == 0, s"${jobs.get()} jobs")
+    def rows(df: DataFrame) = df.select("docid", "lang").collect()
+      .map(r => (r.getLong(0), r.getString(1))).toSet
+    assert(rows(meta) == rows(faceted.select(col("doc_id").as("docid"),
+      col("lang"))))
+    assert(meta.count() == 4)
   }
 
   test("compact after appends: identical stats and ranking, fewer files") {
