@@ -39,7 +39,8 @@ case class PqEncode(child: Expression, codebooks: Array[Array[Array[Float]]])
     copy(child = c)
 }
 
-/** The sub-codebooks of [[PqEncode]] as its kernel owner. */
+/** The sub-codebooks of [[PqEncode]] as its kernel owner — also the
+  * loop of the driver-side `Pq.Model.encode`. */
 final case class PqQuantizer(codebooks: Array[Array[Array[Float]]]) {
 
   /** The code of `v`: per subvector the id of its L2-nearest

@@ -79,7 +79,7 @@ object Bm25 {
       // explode over the __toks attribute triggers Catalyst's
       // InferFiltersFromGenerate, whose alias-substituted predicate
       // re-ran the full tokenize in the scan (see
-      // TextDedup.explodedShingles). Row-identical: tokens() elements
+      // TextDedup.exploded). Row-identical: tokens() elements
       // are regexp matches (never null), so the isnotnull(term) filter
       // drops exactly the null/empty-array rows explode dropped.
       .select(col("docid"), size(col("__toks")).cast("long").as("dl"),

@@ -42,7 +42,7 @@ object Decontaminate {
     // non-outer explode's inferred generate filter re-ran the full
     // shingle kernel inside BOTH scans (plan-verified — this was why
     // decontaminate/contamination_frac missed the r17 cheap-predicate
-    // win; see explodedShingles' scaladoc for the equivalence proof)
+    // win; see TextDedup.exploded's scaladoc for the equivalence proof)
     var tr = TextDedup.explodedShingles(train, trainIdCol, trainTextCol, n)
       .select(col("id").as("train_id"), col("shingle"))
     maxShingleDf.foreach { cap =>

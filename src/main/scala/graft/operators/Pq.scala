@@ -1,9 +1,10 @@
 package graft.operators
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
 import org.apache.spark.sql.functions._
 
-import graft.functions.{PqAdcScore, PqEncode}
+import graft.functions.{PqAdcScore, PqEncode, PqQuantizer}
 import org.apache.spark.sql.graftshim.Shim
 
 /** Product quantization (Jegou et al., TPAMI 2011) — the compression
@@ -36,28 +37,13 @@ object Pq {
     val dsub: Int = codebooks(0)(0).length
     val dim: Int = m * dsub
 
-    /** Driver-side encode (the distributed path is [[PqEncode]]). */
+    private val quantizer = PqQuantizer(codebooks)
+
+    /** Driver-side encode: the [[PqEncode]] kernel's own loop, so the
+      * driver and the distributed encode pick the same cells. */
     def encode(v: Array[Float]): Array[Byte] = {
       require(v.length == dim, s"pq encode: dim ${v.length} != $dim")
-      val code = new Array[Byte](m)
-      var j = 0
-      while (j < m) {
-        val off = j * dsub
-        var best = 0
-        var bestDist = Double.MaxValue
-        var c = 0
-        while (c < ksub) {
-          val cen = codebooks(j)(c)
-          var dist = 0.0
-          var i = 0
-          while (i < dsub) { val d = v(off + i) - cen(i); dist += d * d; i += 1 }
-          if (dist < bestDist) { bestDist = dist; best = c }
-          c += 1
-        }
-        code(j) = best.toByte
-        j += 1
-      }
-      code
+      quantizer.encode(UnsafeArrayData.fromPrimitiveArray(v), 1)
     }
 
     /** Reconstruction: concatenate the chosen centroids. */

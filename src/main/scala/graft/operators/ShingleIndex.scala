@@ -29,13 +29,15 @@ import graft.index.RangeLedger
   *    (the one overlap guard, with the same `force` escape hatch, as
   *    [[Bm25Index.append]]).
   *
-  * Keys are 8-byte `xxhash64(shingle)` by default — the
+  * Keys are 8-byte shingle hashes by default ([[TextDedup.explodedHashes]]:
+  * `shingle_hashes`, equal to `xxhash64` of each shingle string) — the
   * [[SubstrDedup]] precedent: word-trigram strings average ~20 bytes
-  * and the hashed index is ~3× smaller and join-cheaper; a 64-bit
-  * collision adds at most 1 to one pair's intersection count
-  * (ShingleIndexSpec pins hashed == exact-string on the test corpus).
-  * `hashKeys = false` stores the shingle verbatim for exact-at-any-
-  * scale semantics.
+  * and the hashed index is ~3× smaller and join-cheaper. `nsh` is the
+  * distinct-hash count; it and a pair's intersection differ from the
+  * string counts only on a 64-bit collision inside one document or one
+  * pair, the trade [[MinHashLsh]] documents (ShingleHashKeySpec pins
+  * hashed == string-keyed). `hashKeys = false` stores the shingle
+  * verbatim for exact-at-any-scale semantics.
   *
   * The reference has no dedup surface (SURVEY §2.5) — this is the
   * north-star extension's production-lifecycle form: build the lake
@@ -90,18 +92,23 @@ class ShingleIndex private (
       .select(col("key"), col("id").as("old_id"), col("nsh"))
       .withColumn("bucket", pmod(hash(col("key")), lit(nBuckets)))
 
-  /** Exploded keyed shingles of `docs`: (key, id, nsh) under THIS
+  /** Exploded keyed shingles of `docs`: (id, key, nsh) under THIS
     * index's shingle parameters. */
   private def keyed(
-      docs: DataFrame, idCol: String, textCol: String): DataFrame = {
-    // explodedShingles, not a bare explode (r18): the non-outer
-    // explode's inferred generate filter re-ran the shingle kernel in
-    // the scan — see TextDedup.explodedShingles' scaladoc
-    val sh = TextDedup.explodedShingles(docs, idCol, textCol, ngram)
-      .withColumnRenamed("shingle", "__shingle")
-    val k = if (hashKeys) xxhash64(col("__shingle")) else col("__shingle")
-    sh.select(k.as("key"), col("id"), col("nsh"))
-  }
+      docs: DataFrame, idCol: String, textCol: String): DataFrame =
+    if (hashKeys) TextDedup.explodedHashes(docs, idCol, textCol, ngram)
+    else TextDedup.explodedShingles(docs, idCol, textCol, ngram)
+      .withColumnRenamed("shingle", "key")
+
+  /** The incoming batch keyed ONCE and materialized: (key, new_id,
+    * nsh_new). The batch is the small side by the ingest contract;
+    * lineage is released by GC when the result's reference drops (the
+    * DataMix localCheckpoint pattern). */
+  private def keyedBatch(
+      incoming: DataFrame, idCol: String, textCol: String): DataFrame =
+    keyed(incoming, idCol, textCol)
+      .select(col("key"), col("id").as("new_id"), col("nsh").as("nsh_new"))
+      .localCheckpoint()
 
   /** Cross-corpus near-dup pairs of an incoming batch against the
     * INDEXED lake: [[TextDedup.matchesAgainst]]'s semantics — output
@@ -110,66 +117,36 @@ class ShingleIndex private (
     * re-shingled (plan-pinned): the probe's cost is the incoming
     * batch's shingling plus a pruned index read.
     *
-    * Bucket pruning: one bounded aggregate (≤ nBuckets rows) computes
-    * the incoming shingles' bucket set; a small crawl batch then opens
-    * only its matched buckets of the lake index — the same
-    * candidates-read story as [[Bm25Index.search]]. A batch whose
-    * shingles touch every bucket skips the filter (it would prune
-    * nothing). */
+    * Bucket pruning ([[ShingleIndex.prunedPostings]]): a small crawl
+    * batch opens only its matched buckets of the lake index — the same
+    * candidates-read story as [[Bm25Index.search]]. */
   def probe(
       incoming: DataFrame,
       idCol: String,
       textCol: String,
-      threshold: Double): DataFrame = {
+      threshold: Double): DataFrame =
     // ONE shingle pass over the batch: the bucket-set aggregate and
-    // the postings join both reuse the materialized keys (the batch is
-    // the small side by the ingest contract; lineage is released by GC
-    // when the result's reference drops — the DataMix localCheckpoint
-    // pattern)
-    val inc = keyed(incoming, idCol, textCol)
-      .select(col("key"), col("id").as("new_id"), col("nsh").as("nsh_new"))
-      .localCheckpoint()
-    probeKeyed(inc, threshold)
-  }
+    // the postings join both reuse the materialized keys
+    probeKeyed(keyedBatch(incoming, idCol, textCol), threshold)
 
   /** [[probe]]'s core over the ALREADY-KEYED batch `(key, new_id,
     * nsh_new)` — split out (r14) so [[survivors]] can shingle the
     * batch once and reuse the checkpointed keys for both the lake
     * probe and the intra-batch pass. */
   private def probeKeyed(inc: DataFrame, threshold: Double): DataFrame = {
-    // ONE bounded aggregate (≤ nBuckets rows) yields BOTH the bucket
-    // prune set and the batch's key count — the broadcast-vs-shuffle
-    // decision used to burn a second count() job on the same
-    // checkpointed batch for a number this aggregate already knows
-    val bStats = inc
-      .groupBy(pmod(hash(col("key")), lit(nBuckets)).as("b"))
-      .agg(count(lit(1)).as("n")).collect()
-    val bSet = bStats.map(_.getInt(0))
-    val nKeys = bStats.map(_.getLong(1)).sum
-    val all = postings
-    val base = if (bSet.length < nBuckets)
-      all.filter(col("bucket").isin(bSet.map(Integer.valueOf).toSeq: _*))
-    else all
+    val (base, fits) =
+      ShingleIndex.prunedPostings(inc, "key", postings, nBuckets)
     // the lake postings NEVER shuffle: when the batch's keyed shingles
     // fit a broadcast (the normal crawl-vs-lake asymmetry), the join is
     // a map-side hash probe riding the pruned postings scan, and the
     // only exchange left is the candidate-pair aggregation — cost
     // proportional to real overlap, not lake size. An oversized batch
     // falls back to the shuffle join rather than OOMing executors.
-    val incJ = if (nKeys <= ShingleIndex.MaxBroadcastKeys)
-      broadcast(inc) else inc
-    incJ.join(
-        base.select(col("key"), col("old_id"), col("nsh").as("nsh_old")),
-        "key")
-      // size-ratio prune, as in TextDedup.ngramJaccardPairs
-      .filter(least(col("nsh_new"), col("nsh_old")) >=
-        lit(threshold) * greatest(col("nsh_new"), col("nsh_old")))
-      .groupBy("new_id", "nsh_new", "old_id", "nsh_old")
-      .agg(count(lit(1)).as("__inter"))
-      .withColumn("jaccard", col("__inter").cast("double") /
-        (col("nsh_new") + col("nsh_old") - col("__inter")))
-      .filter(col("jaccard") >= threshold)
-      .select("new_id", "old_id", "jaccard")
+    val joined = (if (fits) broadcast(inc) else inc).join(
+      base.select(col("key"), col("old_id"), col("nsh").as("nsh_old")),
+      "key")
+    TextDedup.verifyJaccard(joined, "new_id", "nsh_new", "old_id", "nsh_old",
+      threshold)
   }
 
   /** Index-routed [[TextDedup.incrementalSurvivors]]: incoming rows
@@ -199,9 +176,7 @@ class ShingleIndex private (
     // self-join then shuffles 8-byte hashed keys instead of
     // re-shingling the batch and shuffling shingle strings (~40% of
     // the per-crawl survivors cost at the sf0.1 shape)
-    val inc = keyed(incoming, idCol, textCol)
-      .select(col("key"), col("id").as("new_id"), col("nsh").as("nsh_new"))
-      .localCheckpoint()
+    val inc = keyedBatch(incoming, idCol, textCol)
     val matches = probeKeyed(inc, threshold)
     val vsLake = if (!excludeSelf) matches
       else matches.join(
@@ -355,6 +330,26 @@ object ShingleIndex {
     * degrades to a shuffle join instead of risking executor OOM. */
   val MaxBroadcastKeys: Long = 4000000L
 
+  /** The bucket-pruned read of a lake's `postings` (partitioned by
+    * `bucket = pmod(hash(key), nBuckets)`) for a materialized probe
+    * batch keyed by `key`: ONE bounded aggregate (≤ nBuckets rows)
+    * yields both the batch's bucket set and its key count. A batch
+    * that touches every bucket skips the `isin` filter (it would prune
+    * nothing). Returns the pruned postings and whether the batch fits
+    * the [[MaxBroadcastKeys]] budget. The shingle and winnow probes
+    * share it. */
+  private[operators] def prunedPostings(batch: DataFrame, key: String,
+      postings: DataFrame, nBuckets: Int): (DataFrame, Boolean) = {
+    val bStats = batch
+      .groupBy(pmod(hash(col(key)), lit(nBuckets)).as("b"))
+      .agg(count(lit(1)).as("n")).collect()
+    val bSet = bStats.map(_.getInt(0))
+    val pruned = if (bSet.length < nBuckets)
+      postings.filter(col("bucket").isin(bSet.map(Integer.valueOf).toSeq: _*))
+    else postings
+    (pruned, bStats.map(_.getLong(1)).sum <= MaxBroadcastKeys)
+  }
+
   /** Bucket-partitioned, key-sorted postings (a probe row-group-skips
     * on key min/max inside its buckets). A settled merge writes the
     * post-merge stats row into `_stats`. */
@@ -384,9 +379,13 @@ object ShingleIndex {
       hashKeys: Boolean = true): ShingleIndex = {
     val spark = docs.sparkSession
     // stats pass first (and the empty guard BEFORE the postings write
-    // mutates the target path); the shingle lineage runs twice — once
-    // aggregated, once exploded — which a one-time build affords
-    val Array(st) = TextDedup.shingles(docs, idCol, textCol, ngram)
+    // mutates the target path), over the kernel the postings use; the
+    // shingle lineage runs twice — once aggregated, once exploded —
+    // which a one-time build affords
+    val sets =
+      if (hashKeys) TextDedup.hashedShingles(docs, idCol, textCol, ngram)
+      else TextDedup.shingles(docs, idCol, textCol, ngram)
+    val Array(st) = sets
       .agg(count(lit(1)).as("n"), sum(col("nsh")).as("tot"),
         min(col("id").cast("long")).as("lo"),
         max(col("id").cast("long")).as("hi"))

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftshim.Shim
@@ -82,6 +82,14 @@ object TextDedup {
     * cross-join formulation while the cost is Σ_s df(s)² over shingles —
     * proportional to real textual overlap, not corpus size squared.
     *
+    * Shingles are keyed by their 64-bit hashes ([[explodedHashes]]:
+    * `shingle_hashes`, equal to `xxhash64` of each shingle string), so
+    * every exchange moves 8-byte keys instead of ~n-word strings. `nsh`
+    * is the distinct-hash count; it and a pair's intersection differ
+    * from the string counts only on a 64-bit collision inside one
+    * document or one pair (about |A∪B|²/2⁶⁴), the trade [[MinHashLsh]]
+    * documents.
+    *
     * Scale note: an ultra-frequent shingle with document frequency m
     * contributes m² join rows (classic skew). `maxShingleDf` caps it by
     * dropping shingles present in more than that many docs — a standard
@@ -102,52 +110,55 @@ object TextDedup {
       textCol: String,
       n: Int,
       threshold: Double,
-      maxShingleDf: Option[Int] = Some(10000)): DataFrame = {
+      maxShingleDf: Option[Int] = Some(10000)): DataFrame =
     // ONE shingle pass, materialized (r17 optimization round): the
     // hot-shingle cap and BOTH self-join sides consume the same
     // exploded set, and before this the plan recomputed
     // scan→shingle→explode once per consumer (4 subtrees in the
     // captured physical plan — at 100 TB that is four full corpus
-    // scans plus four shingle passes for one logical pass). The keys
-    // are xxhash64(shingle) longs, not shingle strings, so every
-    // downstream exchange moves 8-byte fixed-width keys instead of
-    // ~n-word strings (guide §2.3 "narrower types") — the same
-    // accepted-collision trade as [[ShingleIndex]]'s lake keys and
-    // [[ngramJaccardPairsKeyed]], pinned hashed == exact by
-    // PipelineOpsSpec on real corpora (a false intersection needs a
-    // 64-bit collision INSIDE one candidate pair's shingle sets).
-    // Lineage is released when the result's reference drops (the
-    // DataMix localCheckpoint pattern used across the repo).
-    val keyed = explodedShingles(docs, idCol, textCol, n)
-      .select(xxhash64(col("shingle")).as("key"), col("id"), col("nsh"))
-      .localCheckpoint()
-    ngramJaccardPairsKeyed(keyed, threshold, maxShingleDf)
-  }
+    // scans plus four shingle passes for one logical pass). Lineage is
+    // released when the result's reference drops (the DataMix
+    // localCheckpoint pattern used across the repo).
+    ngramJaccardPairsKeyed(
+      explodedHashes(docs, idCol, textCol, n).localCheckpoint(),
+      threshold, maxShingleDf)
 
   /** [[shingles]] exploded to one row per (doc, shingle):
-    * `(id, shingle, nsh)`.
+    * `(id, shingle, nsh)` — the exact-string key of [[matchesAgainst]],
+    * [[Decontaminate]] and an unhashed [[ShingleIndex]]. */
+  private[operators] def explodedShingles(
+      docs: DataFrame, idCol: String, textCol: String, n: Int): DataFrame =
+    exploded(shingles(docs, idCol, textCol, n), "shingle")
+
+  /** [[hashedShingles]] exploded to one row per (doc, shingle hash):
+    * `(id, key: bigint, nsh)` — the key of every hashed consumer
+    * ([[ngramJaccardPairs]], a hashed [[ShingleIndex]]). */
+  private[operators] def explodedHashes(
+      docs: DataFrame, idCol: String, textCol: String, n: Int): DataFrame =
+    exploded(hashedShingles(docs, idCol, textCol, n), "key")
+
+  /** Shingle sets `(id, sh, nsh)` exploded to `(id, <as>, nsh)`.
     *
-    * Uses `explode_outer` + a cheap `isnotnull(shingle)` filter rather
-    * than plain `explode` (r18 optimization round): Catalyst's
+    * Uses `explode_outer` + a cheap `isnotnull` filter rather than
+    * plain `explode` (r18 optimization round): Catalyst's
     * InferFiltersFromGenerate derives `size(sh) > 0 AND isnotnull(sh)`
     * from a NON-outer explode over an attribute, and predicate
     * pushdown then alias-substitutes it below the shingle projection
-    * INTO THE SCAN — re-evaluating the full `ngram_shingles(text)`
-    * kernel once per row just to test for null, the exact
+    * INTO THE SCAN — re-evaluating the full shingle kernel once per
+    * row just to test for null, the exact
     * expensive-expression-in-scan pattern the r17 cheap tokenize
     * predicate removed (plan-verified: every r18 before-plan of an
     * explode consumer carried `isnotnull(ngram_shingles(text))` in its
     * scan condition). The rule skips OUTER generates, and equivalence
-    * is unconditional on shingles' contract: `sh` is non-null and
-    * non-empty (so outer emits no extra null row) and shingle elements
-    * are never null (a shingle is a concat of split tokens — so the
-    * isnotnull filter drops nothing and explode would never have
-    * emitted a null element either). Row-identical, oracle-verified. */
-  private[operators] def explodedShingles(
-      docs: DataFrame, idCol: String, textCol: String, n: Int): DataFrame =
-    shingles(docs, idCol, textCol, n)
-      .select(col("id"), explode_outer(col("sh")).as("shingle"), col("nsh"))
-      .filter(col("shingle").isNotNull)
+    * is unconditional on [[shingled]]'s contract: `sh` is non-null and
+    * non-empty (so outer emits no extra null row) and its elements are
+    * never null (a shingle is a concat of split tokens, a hash is a
+    * long — so the isnotnull filter drops nothing and explode would
+    * never have emitted a null element either). Row-identical,
+    * oracle-verified. */
+  private def exploded(sets: DataFrame, as: String): DataFrame =
+    sets.select(col("id"), explode_outer(col("sh")).as(as), col("nsh"))
+      .filter(col(as).isNotNull)
 
   /** [[ngramJaccardPairs]] over PRE-KEYED exploded shingles
     * `(key, id, nsh)` — the shape [[ShingleIndex]] already computes
@@ -182,17 +193,26 @@ object TextDedup {
       col("nsh").as("nsh_a"))
     val b = exploded.select(col("key"), col("id").as("id_b"),
       col("nsh").as("nsh_b"))
-    a.join(b, Seq("key"))
-      .filter(col("id_a") < col("id_b") &&
-        least(col("nsh_a"), col("nsh_b")).cast("double") >=
-          greatest(col("nsh_a"), col("nsh_b")) * threshold)
-      .groupBy("id_a", "nsh_a", "id_b", "nsh_b")
-      .agg(count(lit(1)).as("inter"))
-      .withColumn("jaccard", col("inter").cast("double") /
-        (col("nsh_a") + col("nsh_b") - col("inter")))
-      .filter(col("jaccard") >= threshold)
-      .select("id_a", "id_b", "jaccard")
+    verifyJaccard(a.join(b, Seq("key")).filter(col("id_a") < col("id_b")),
+      "id_a", "nsh_a", "id_b", "nsh_b", threshold)
   }
+
+  /** The one Jaccard verifier of the inverted-index operators, over
+    * shingle-join rows that carry each side's id and set size: the
+    * size-ratio prune (jaccard ≥ t needs min size ≥ t · max size), the
+    * per-pair intersection count, jaccard = |A∩B| / (|A|+|B|-|A∩B|)
+    * and the threshold filter. Output `(a, b, jaccard)`. */
+  private[operators] def verifyJaccard(joined: DataFrame, a: String,
+      nshA: String, b: String, nshB: String, threshold: Double): DataFrame =
+    joined
+      .filter(least(col(nshA), col(nshB)) >=
+        lit(threshold) * greatest(col(nshA), col(nshB)))
+      .groupBy(a, nshA, b, nshB)
+      .agg(count(lit(1)).as("__inter"))
+      .withColumn("jaccard", col("__inter").cast("double") /
+        (col(nshA) + col(nshB) - col("__inter")))
+      .filter(col("jaccard") >= threshold)
+      .select(a, b, "jaccard")
 
   /** Exact-duplicate groups by full-text hash: (text-group key, ids).
     * One hash-partitioned groupBy — the trivially-scalable exact dedup. */
@@ -239,24 +259,16 @@ object TextDedup {
       textCol: String,
       n: Int,
       threshold: Double): DataFrame = {
-    // explodedShingles, not explode: see its scaladoc (the inferred
-    // generate filter re-ran the shingle kernel in both scans)
+    // explodedShingles, not explode: see [[exploded]]' scaladoc (the
+    // inferred generate filter re-ran the shingle kernel in both scans)
     val bs = explodedShingles(base, idCol, textCol, n)
       .select(col("id").as("old_id"), col("shingle"),
         col("nsh").as("nsh_old"))
     val is = explodedShingles(incoming, idCol, textCol, n)
       .select(col("id").as("new_id"), col("shingle"),
         col("nsh").as("nsh_new"))
-    is.join(bs, "shingle")
-      // size-ratio prune, as in ngramJaccardPairs
-      .filter(least(col("nsh_new"), col("nsh_old")) >=
-        lit(threshold) * greatest(col("nsh_new"), col("nsh_old")))
-      .groupBy("new_id", "nsh_new", "old_id", "nsh_old")
-      .agg(count(lit(1)).as("__inter"))
-      .withColumn("jaccard", col("__inter").cast("double") /
-        (col("nsh_new") + col("nsh_old") - col("__inter")))
-      .filter(col("jaccard") >= threshold)
-      .select("new_id", "old_id", "jaccard")
+    verifyJaccard(is.join(bs, "shingle"), "new_id", "nsh_new", "old_id",
+      "nsh_old", threshold)
   }
 
   /** The incremental-ingest survivor set: incoming rows that (a) have

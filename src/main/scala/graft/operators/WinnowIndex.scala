@@ -104,15 +104,9 @@ class WinnowIndex private (
     val inc = fps(incoming, idCol, textCol)
       .select(col("hash"), col("id").as("new_id"))
       .localCheckpoint()
-    val bStats = inc
-      .groupBy(pmod(hash(col("hash")), lit(nBuckets)).as("b"))
-      .agg(count(lit(1)).as("n")).collect()
-    val bSet = bStats.map(_.getInt(0))
-    val nKeys = bStats.map(_.getLong(1)).sum
-    val base0 = postings
-    val base = if (bSet.length < nBuckets)
-      base0.filter(col("bucket").isin(bSet.map(Integer.valueOf).toSeq: _*))
-    else base0
+    val (base, fits) =
+      ShingleIndex.prunedPostings(inc, "hash", postings, nBuckets)
+    def bcast(df: DataFrame): DataFrame = if (fits) broadcast(df) else df
     // lake-side df cap, evaluated candidates-first (r11): df only
     // matters for hashes the BATCH carries, so the pruned postings
     // scan semi-joins the batch's hash set before anything shuffles —
@@ -122,9 +116,6 @@ class WinnowIndex private (
     // df(h) over `matched` equals df(h) over `base` for every hash the
     // batch carries, because `matched` keeps ALL lake occurrences of
     // those hashes; non-carried hashes never reached the pair join.
-    val incHashes = inc.select("hash").distinct()
-    val incHashesJ = if (nKeys <= ShingleIndex.MaxBroadcastKeys)
-      broadcast(incHashes) else incHashes
     // candidate postings materialized ONCE (localCheckpoint): both the
     // df aggregate and the join-back read the same blocks instead of
     // re-running the pruned postings scan + semi-join (measured 2x the
@@ -137,20 +128,16 @@ class WinnowIndex private (
     // materialized candidates stay partition-parallel. The survivors
     // are <= the batch's distinct hashes, so the join-back broadcasts
     // under the same budget as the semi-join.
-    val matched = base.join(incHashesJ, Seq("hash"))
+    val matched = base.join(bcast(inc.select("hash").distinct()), Seq("hash"))
       .select("hash", "old_id")
       .localCheckpoint()
-    val dfOk0 = matched.groupBy("hash")
+    val dfOk = matched.groupBy("hash")
       .agg(count(lit(1)).as("__df"))
       .filter(col("__df") <= dfCap)
       .select("hash")
-    val dfOkJ = if (nKeys <= ShingleIndex.MaxBroadcastKeys)
-      broadcast(dfOk0) else dfOk0
-    val kept = matched.join(dfOkJ, Seq("hash"))
+    val kept = matched.join(bcast(dfOk), Seq("hash"))
       .select("hash", "old_id")
-    val incJ = if (nKeys <= ShingleIndex.MaxBroadcastKeys)
-      broadcast(inc) else inc
-    incJ
+    bcast(inc)
       .join(kept, Seq("hash"))
       .groupBy("new_id", "old_id")
       .agg(count(lit(1)).as("n_shared"))

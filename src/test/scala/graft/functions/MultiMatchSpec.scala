@@ -1,10 +1,17 @@
 package graft.functions
 
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{BoundReference, InterpretedUnsafeProjection, Literal}
+import org.apache.spark.sql.catalyst.expressions.codegen.GenerateUnsafeProjection
+import org.apache.spark.sql.types.{ArrayType, StringType}
+import org.apache.spark.unsafe.types.UTF8String
+
 import graft.SparkTestBase
 
 /** Aho-Corasick blocklist matcher: equivalence with brute force over
-  * random corpora, the fail-link cases a naive trie walk misses, and
-  * the foldable-literal contract. */
+  * random corpora, the fail-link cases a naive trie walk misses, the
+  * foldable-literal contract, and `contains_any` interpreted vs
+  * generated. */
 class MultiMatchSpec extends SparkTestBase {
 
   test("fail-link cases: a pattern hidden inside another's prefix, " +
@@ -57,6 +64,26 @@ class MultiMatchSpec extends SparkTestBase {
     intercept[Exception] {
       spark.sql("SELECT contains_any(v, array(v)) FROM VALUES ('x') t(v)")
         .collect()
+    }
+  }
+
+  test("contains_any: interpreted eval and generated code give the same " +
+    "rows over null, empty, overlapping and multi-byte UTF-8 text") {
+    val pats = Seq("he", "she", "hers", "東京", "京都", "🙂", "é", "aa")
+    val texts = Seq(null, "", "ushers", "hi", "東京都", "京都", "東 京",
+      "smile 🙂", "日本語テキスト", "café", "cafe", "aXaa", "aXa", "ελλάδα")
+    for (nullable <- Seq(true, false)) {
+      val e = ContainsAny(BoundReference(0, StringType, nullable),
+        Literal.create(pats, ArrayType(StringType)))
+      val interp = InterpretedUnsafeProjection.createProjection(Seq(e))
+      val gen = GenerateUnsafeProjection.generate(Seq(e))
+      for (t <- texts if nullable || t != null) {
+        val in = InternalRow(if (t == null) null else UTF8String.fromString(t))
+        val (a, b) = (interp(in).copy(), gen(in).copy())
+        assert(a == b, s"nullable=$nullable on '$t'")
+        if (t == null) assert(a.isNullAt(0))
+        else assert(a.getBoolean(0) == pats.exists(t.contains(_)), s"'$t'")
+      }
     }
   }
 }

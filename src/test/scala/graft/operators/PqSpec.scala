@@ -34,6 +34,16 @@ class PqSpec extends SparkTestBase {
       assert(code.length == model.m)
       assert(code.sameElements(model.encode(v)))
     }
+    // a near-tie found by a seeded search: sub-vector 0 sits next to the
+    // bisector of two centroids, where a distance loop in float picks a
+    // different cell than the kernel's loop in double
+    import spark.implicits._
+    val tie = Array(0.053415567f, 0.031415753f, 0.01056752f, 0.061015535f,
+      0.08219046f, -0.12954476f, 0.0074953213f, -0.18963775f) ++
+      Array.fill(56)(0f)
+    val tieCode = Pq.encode(Seq(tie).toDF("embedding"), "embedding", model)
+      .select("code").head().getAs[Array[Byte]](0)
+    assert(tieCode.sameElements(model.encode(tie)))
   }
 
   test("ADC score equals exact cosine against the DECODED vector " +
